@@ -1,8 +1,81 @@
 package graft.lime
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnShim, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+
+/** A value fixed for one query but not for the code that evaluates it:
+  * non-foldable, so ConstantFolding cannot turn it back into a literal,
+  * and its generated code reads the value from the `references` array
+  * once per task into a field instead of writing it into the source.
+  * Plans that differ only in these values generate identical Java and
+  * share one compiled class.
+  */
+private[lime] case class BoundValue(value: Any, dataType: DataType) extends LeafExpression {
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any = value
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val javaType = CodeGenerator.javaType(dataType)
+    val ref = ctx.addReferenceObj("bound", value, CodeGenerator.boxedType(dataType))
+    val read = if (CodeGenerator.isPrimitiveType(dataType)) s"$ref.${javaType}Value()" else ref
+    val v = ctx.addMutableState(javaType, "bound", v => s"$v = $read;", forceInline = true)
+    ev.copy(code = EmptyBlock, isNull = FalseLiteral, value = JavaCode.global(v, dataType))
+  }
+}
+
+/** [[Lime.drawIndex]] as one expression. A chain of `when(u < c, i)`
+  * branches would repeat the uniform's hash once per branch and, at ten
+  * bins or a few dozen categories, push the perturb stage's generated
+  * method past HotSpot's 8,000-byte JIT limit.
+  */
+private[lime] case class DrawIndex(left: Expression, right: Expression) extends BinaryExpression {
+  override def dataType: DataType = IntegerType
+
+  override def nullSafeEval(u: Any, cumFreqs: Any): Any =
+    Lime.drawIndex(u.asInstanceOf[Double], cumFreqs.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (u, c) => s"graft.lime.Lime.drawIndex($u, $c)")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): DrawIndex =
+    copy(left = l, right = r)
+}
+
+/** [[Lime.binIndex]] as one expression, with a null input in bin 0 —
+  * what the chain of `when(x > e, i)` branches it replaces gave, in
+  * one small call instead of a branch per edge.
+  */
+private[lime] case class BinIndex(left: Expression, right: Expression) extends BinaryExpression {
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = left.eval(input) match {
+    case null => 0
+    case x => Lime.binIndex(x.asInstanceOf[Double], right.eval(input).asInstanceOf[ArrayData])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val x = left.genCode(ctx)
+    val edges = right.genCode(ctx)
+    ev.copy(code = code"""
+      ${x.code}
+      ${edges.code}
+      int ${ev.value} = ${x.isNull} ? 0 : graft.lime.Lime.binIndex(${x.value}, ${edges.value});
+      """, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): BinIndex =
+    copy(left = l, right = r)
+}
 
 /** Distributed LIME for tabular data (SURVEY.md §2.7).
   *
@@ -14,7 +87,7 @@ import org.apache.spark.sql.expressions.Window
   * 0.75·√d', weighted Ridge(α=1) surrogate, top-K features by |coef|.
   *
   * Distribution strategy: one stats job (O(features) driver
-  * materialization, broadcast back as plan literals), then a single
+  * materialization, shipped back as run-time plan values), then a single
   * narrow stage for perturb→score→kernel (counter-based RNG — see
   * Rng — keeps it partition-layout-independent), one shuffle on
   * instance_id for the ridge Aggregator, and a shuffle-free window
@@ -55,9 +128,9 @@ object Lime {
       binCumFreqs: Seq[Double])    // cumulative bin frequencies (4, last=1)
 
   /** Categorical feature statistics: distinct values (sorted, so the
-    * sampling when-chain is deterministic) with cumulative training
-    * frequencies. Cardinality must be bounded (it becomes plan
-    * literals) — enforce with `maxCard`.
+    * sampled index maps to the same value on every run) with cumulative
+    * training frequencies. Cardinality must be bounded (the values ride
+    * in the plan) — enforce with `maxCard`.
     */
   case class CatStats(name: String, values: Seq[String], cumFreqs: Seq[Double])
 
@@ -115,12 +188,6 @@ object Lime {
   private def fitStatsInner(df: DataFrame, features: Seq[String], nBins: Int,
                             smallInput: Boolean): Seq[FeatureStats] = {
     def r6(v: Double): Double = round6(v)
-    def ph[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      if (sys.env.contains("GRAFT_PROFILE"))
-        println(f"[fit-phase] $name%-16s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
-    }
     val ps = (1 until nBins).map(_.toDouble / nBins)
     // Exact mean/std in primitive LONG micro-units instead of decimal
     // sums: m = unscaled(cast(x AS DECIMAL(18,6))) — the SAME
@@ -168,19 +235,17 @@ object Lime {
           // interpolation, so quoted/exotic column names keep working
           percentile(col(f), array(ps.map(lit): _*)).as(s"${f}__q")
         }
-        val r = ph("pass1")(df.agg(pass1.head, pass1.tail: _*).head())
+        val r = df.agg(pass1.head, pass1.tail: _*).head()
         (r, r)
       } else {
         implicit val ec: ExecutionContext = ExecutionContext.global
-        ph("populate")(df.count()) // build the cache once, not racily twice
-        val momentsF = Future {
-          ph("moments")(df.agg(momentCols.head, momentCols.tail: _*).head())
-        }
+        df.count() // build the cache once, not racily twice
+        val momentsF = Future(df.agg(momentCols.head, momentCols.tail: _*).head())
         // bracket job (A): approx sketch + the non-null counts the
         // read-off needs (exactQuantilesFromSketch reads `${f}__nx`)
         val sketchCols = features.map(f => count(col(f)).as(s"${f}__nx")) ++
           quantileSketchCols(features, ps)
-        val rs = ph("sketch")(df.agg(sketchCols.head, sketchCols.tail: _*).head())
+        val rs = df.agg(sketchCols.head, sketchCols.tail: _*).head()
         (Await.result(momentsF, Duration.Inf), rs)
       }
     val n = r1.getAs[Long]("__n")
@@ -235,7 +300,7 @@ object Lime {
             s"fitStats: feature $f has no non-null values")
           qs.toVector.map(r6)
         }
-      else ph("sketchReadoff")(exactQuantilesFromSketch(df, features, ps, rSketch)).map(_.map(r6))
+      else exactQuantilesFromSketch(df, features, ps, rSketch).map(_.map(r6))
 
     // Bin means go through the exact-integer firewall (exact per-bin
     // micro-unit sums → one double division), and bin frequencies were
@@ -263,7 +328,7 @@ object Lime {
               sum(when(bin === b, 1L).otherwise(0L)).as(s"${f}__bc$b"))
           }
         }
-        val r2 = ph("pass2")(df.agg(pass2.head, pass2.tail: _*).head())
+        val r2 = df.agg(pass2.head, pass2.tail: _*).head()
         features.map { f =>
           val cnts = (0 until nBins).map(b => r2.getAs[Long](s"${f}__bc$b"))
           val means = (0 until nBins).map { b =>
@@ -285,7 +350,7 @@ object Lime {
               (sum(when(bin === b, 1).otherwise(0)).cast("double") / count(lit(1))).as(s"${f}__bf$b"))
           }
         }
-        val r2 = ph("pass2")(df.agg(pass2.head, pass2.tail: _*).head())
+        val r2 = df.agg(pass2.head, pass2.tail: _*).head()
         features.map { f =>
           f -> ((0 until nBins).map(b => r2.getAs[Double](s"${f}__bm$b")),
             (0 until nBins).map(b => r2.getAs[Double](s"${f}__bf$b")))
@@ -396,13 +461,7 @@ object Lime {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val rBF = Future {
-      val t0 = System.nanoTime()
-      val r = df.agg(aggB.head, aggB.tail: _*).head()
-      if (sys.env.contains("GRAFT_PROFILE"))
-        println(f"[fit-phase] jobB1_below    ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
-    }
+    val rBF = Future(df.agg(aggB.head, aggB.tail: _*).head())
     // ONE scan for every feature's bracket census, not a scan per
     // feature: melt (feature, value) pairs with an explode over
     // struct literals (no SQL-string interpolation, so quoted/exotic
@@ -424,13 +483,7 @@ object Lime {
         .groupBy("feature", "v").agg(count(lit(1)).as("c"))
         .select(col("feature"), col("v"), col("c"))
     }
-    val byFeat = {
-      val t0 = System.nanoTime()
-      val r = inBracket.collect()
-      if (sys.env.contains("GRAFT_PROFILE"))
-        println(f"[fit-phase] jobB2_census   ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
-    }.groupBy(_.getString(0))
+    val byFeat = inBracket.collect().groupBy(_.getString(0))
       .map { case (f, rs) => f -> rs.map(r => (r.getDouble(1), r.getLong(2))).sortBy(_._1) }
     val rB = Await.result(rBF, Duration.Inf)
     def search(f: String, k: Long): Option[Double] = {
@@ -612,13 +665,51 @@ object Lime {
 
   /** Quartile bin id: count of edges strictly below x — matches
     * numpy searchsorted(side='left') used by the public discretizer.
+    * A null x falls in bin 0.
     */
   def binOf(x: Column, edges: Seq[Double]): Column =
-    // ascending fold leaves the HIGHEST edge as the outermost check:
-    // when(x > e_last, n-1).otherwise(when(x > e_{n-2}, ...)...)
-    edges.zipWithIndex.foldLeft(lit(0): Column) {
-      case (acc, (e, i)) => when(x > e, i + 1).otherwise(acc)
-    }
+    GraftColumnShim.column(BinIndex(GraftColumnShim.expression(x.cast("double")),
+      GraftColumnShim.expression(bound(edges))))
+
+  /** [[binOf]] for one value: one past the highest edge that x exceeds
+    * (0 when none does), under the comparison Catalyst's `>` makes on
+    * doubles.
+    */
+  def binIndex(x: Double, edges: ArrayData): Int = {
+    var i = edges.numElements()
+    while (i > 0 && SQLOrderingUtil.compareDoubles(x, edges.getDouble(i - 1)) <= 0) i -= 1
+    i
+  }
+
+  /** A per-request statistic as a run-time value rather than a plan
+    * literal (see [[BoundValue]] and `perturb`).
+    */
+  private def bound(v: Double): Column =
+    GraftColumnShim.column(BoundValue(v, DoubleType))
+
+  private def bound(vs: Seq[Double]): Column =
+    GraftColumnShim.column(BoundValue(UnsafeArrayData.fromPrimitiveArray(vs.toArray),
+      ArrayType(DoubleType, containsNull = false)))
+
+  private def boundStrings(vs: Seq[String]): Column =
+    GraftColumnShim.column(BoundValue(
+      new GenericArrayData(vs.map(UTF8String.fromString).toArray[Any]),
+      ArrayType(StringType, containsNull = false)))
+
+  /** Bin or category drawn by a uniform `u`: the lowest index i with
+    * u < cumFreqs(i), or the last index when there is none, under the
+    * comparison Catalyst's `<` makes on doubles.
+    */
+  def drawIndex(u: Double, cumFreqs: ArrayData): Int = {
+    val last = cumFreqs.numElements() - 1
+    var i = 0
+    while (i < last && SQLOrderingUtil.compareDoubles(u, cumFreqs.getDouble(i)) >= 0) i += 1
+    i
+  }
+
+  private def draw(u: Column, cumFreqs: Seq[Double]): Column =
+    GraftColumnShim.column(DrawIndex(GraftColumnShim.expression(u),
+      GraftColumnShim.expression(bound(cumFreqs))))
 
   /** Proximity kernel π(d) = sqrt(exp(-d²/w²)) (public impl form). */
   def kernel(dist: Column, width: Double): Column =
@@ -633,7 +724,7 @@ object Lime {
 
   def logisticScore(stats: Seq[FeatureStats], values: Seq[Column]): Column = {
     val lin = stats.zip(values).zip(demoCoefs).foldLeft(lit(demoIntercept): Column) {
-      case (acc, ((st, v), b)) => acc + lit(b) * (v - lit(st.mean)) / lit(math.max(st.std, 1e-12))
+      case (acc, ((st, v), b)) => acc + lit(b) * (v - bound(st.mean)) / bound(math.max(st.std, 1e-12))
     }
     lit(1.0) / (lit(1.0) + exp(-lin))
   }
@@ -646,6 +737,15 @@ object Lime {
     *
     * Returns the input columns plus, per feature f:
     * `f__bin`, `f__z`, `f__val`, and `sample_id`.
+    *
+    * Every per-request statistic (bin edges and means, cumulative
+    * frequencies, mean, std, categorical values) enters the plan as a
+    * run-time [[BoundValue]], never as a literal: literals are written
+    * into the generated Java source, so each request's stats would
+    * produce new source text, miss Spark's compiled-class cache and
+    * pay a Janino compile plus a cold JIT on every call. Bound, the
+    * generated code is the same for every request over the same
+    * features and config, and stays compiled and warm across requests.
     */
   def perturb(instances: DataFrame, idCol: String, stats: Seq[FeatureStats], cfg: LimeConfig,
               catStats: Seq[CatStats] = Nil): DataFrame = {
@@ -656,10 +756,7 @@ object Lime {
     // input.
     val base = catStats.foldLeft(base0) { (df, cs) =>
       val u = Rng.u01(lit(cfg.seed), col(idCol), col("sample_id"), lit("cat:" + cs.name))
-      val sampled = cs.values.init.zip(cs.cumFreqs.init).reverse
-        .foldLeft(lit(cs.values.last): Column) { case (acc, (v, c)) =>
-          when(u < c, lit(v)).otherwise(acc)
-        }
+      val sampled = element_at(boundStrings(cs.values), draw(u, cs.cumFreqs) + 1)
       val v = when(col("sample_id") === 0, col(cs.name).cast("string")).otherwise(sampled)
       df.withColumn(s"${cs.name}__val", v)
         .withColumn(s"${cs.name}__z",
@@ -668,20 +765,13 @@ object Lime {
     if (cfg.discretize)
       stats.foldLeft(base) { (df, st) =>
         val u = Rng.u01(lit(cfg.seed), col(idCol), col("sample_id"), lit(st.name))
-        // reverse-nested fold: when(u<c0,0).otherwise(when(u<c1,1)...)
-        // — the LOWEST matching cumulative frequency wins, identical to
-        // the original ascending when-chain for any bin count
-        val sampledBin = st.binCumFreqs.init.zipWithIndex.reverse
-          .foldLeft(lit(st.binCumFreqs.length - 1): Column) { case (acc, (c, i)) =>
-            when(u < c, i).otherwise(acc)
-          }
         val instBin = binOf(col(st.name), st.edges)
-        val bin = when(col("sample_id") === 0, instBin).otherwise(sampledBin)
+        val bin = when(col("sample_id") === 0, instBin).otherwise(draw(u, st.binCumFreqs))
         df.withColumn(s"${st.name}__bin", bin)
           .withColumn(s"${st.name}__z", (col(s"${st.name}__bin") === instBin).cast("double"))
           .withColumn(s"${st.name}__val",
             when(col("sample_id") === 0, col(st.name))
-              .otherwise(element_at(array(st.binMeans.map(lit): _*), col(s"${st.name}__bin") + 1)))
+              .otherwise(element_at(bound(st.binMeans), col(s"${st.name}__bin") + 1)))
       }
     else
       // continuous mode: gaussian around the instance, z-scored
@@ -689,12 +779,36 @@ object Lime {
       stats.foldLeft(base) { (df, st) =>
         val g = Rng.gaussian(lit(cfg.seed), col(idCol) * lit(1000003L) + col("sample_id"), lit(stats.indexOf(st)))
         val v = when(col("sample_id") === 0, col(st.name))
-          .otherwise(col(st.name) + g * lit(st.std))
+          .otherwise(col(st.name) + g * bound(st.std))
         df.withColumn(s"${st.name}__val", v)
           .withColumn(s"${st.name}__bin", binOf(col(s"${st.name}__val"), st.edges))
           .withColumn(s"${st.name}__z",
-            (col(s"${st.name}__val") - lit(st.mean)) / lit(math.max(st.std, 1e-12)))
+            (col(s"${st.name}__val") - bound(st.mean)) / bound(math.max(st.std, 1e-12)))
       }
+  }
+
+  /** RidgeAggregator's buffer as built-in sums over a frame of
+    * (`z`: array of d' doubles, `y`, `w`). Returns the sums to aggregate
+    * and, over their results, the buffer array in the aggregator's
+    * layout [G: m·m | b: m | Σw, Σw·y, Σw·y·y] (m = d' + 1, x₀ = 1).
+    * Each term keeps `reduce`'s multiply order, and G's upper triangle
+    * fills both halves as in `reduce`, so one partition's sums equal
+    * its reduced buffer bit-for-bit.
+    */
+  private[graft] def ridgeBuffer(d: Int): (Seq[Column], Column) = {
+    val m = d + 1
+    def xCol(i: Int): Column = if (i == 0) lit(1.0) else col("z").getItem(i - 1)
+    val g = for { r <- 0 until m; c <- r until m } yield (r, c)
+    val terms: Seq[Column] =
+      g.map { case (r, c) => (col("w") * xCol(r)) * xCol(c) } ++
+      (0 until m).map(r => (col("w") * xCol(r)) * col("y")) ++
+      Seq(col("w"), col("w") * col("y"), col("w") * col("y") * col("y"))
+    val sums = terms.zipWithIndex.map { case (t, i) => sum(t).as(s"__buf$i") }
+    def buf(i: Int): Column = col(s"__buf$i")
+    val layout =
+      (for { r <- 0 until m; c <- 0 until m } yield buf(g.indexOf((r min c, r max c)))) ++
+      (g.size until terms.size).map(buf)
+    (sums, array(layout: _*))
   }
 
   /** End-to-end tabular explanation:
@@ -754,7 +868,7 @@ object Lime {
     val dist2 =
       if (cfg.discretize) allFeatures.map(f => lit(1.0) - col(s"${f}__z")).reduce(_ + _)
       else (stats.map(st =>
-        pow((col(s"${st.name}__val") - col(st.name)) / lit(math.max(st.std, 1e-12)), 2)) ++
+        pow((col(s"${st.name}__val") - col(st.name)) / bound(math.max(st.std, 1e-12)), 2)) ++
         catFeatures.map(f => lit(1.0) - col(s"${f}__z"))).reduce(_ + _)
     val weighted = scored
       .withColumn("kweight", sqrt(exp(-dist2 / lit(width * width))))
@@ -772,30 +886,18 @@ object Lime {
     // typed groupByKey + Aggregator (SerializeFromObject + interpreted
     // ObjectHashAggregate deserializing every sample row). Each buffer
     // cell's per-row term reproduces RidgeAggregator.reduce's exact
-    // multiply order — G(r,c) += (w·x_r)·x_c (BOTH triangles: the two
-    // orders can differ in the last ulp and finish reads the full
-    // matrix), b(r) += (w·x_r)·y, Σw, Σw·y, Σ(w·y)·y — and sums
-    // accumulate per row / merge per partition exactly like the
-    // Aggregator's reduce/merge, so the collected buffers are
-    // bit-identical. The O(d'³) solve itself is one finish call per
-    // INSTANCE row (never per sample), off the hot path.
-    val m = d + 1
-    def xCol(i: Int): Column = if (i == 0) lit(1.0) else col("z").getItem(i - 1)
-    val bufCols: Seq[Column] =
-      (for { r <- 0 until m; c <- 0 until m }
-        yield sum((col("w") * xCol(r)) * xCol(c)).as(s"__g_${r}_$c")) ++
-      (0 until m).map(r => sum((col("w") * xCol(r)) * col("y")).as(s"__b_$r")) ++
-      Seq(sum(col("w")).as("__sw"),
-        sum(col("w") * col("y")).as("__swy"),
-        sum(col("w") * col("y") * col("y")).as("__swyy"))
+    // multiply order — G(r,c) += (w·x_r)·x_c for r ≤ c, mirrored,
+    // b(r) += (w·x_r)·y, Σw, Σw·y, Σ(w·y)·y — and sums accumulate per
+    // row / merge per partition exactly like the Aggregator's
+    // reduce/merge, so the collected buffers are bit-identical
+    // (LimeSpec checks this against a hand-reduced RidgeAggregator
+    // buffer). The O(d'³) solve itself is one finish call per INSTANCE
+    // row (never per sample), off the hot path.
+    val (bufSums, buffer) = ridgeBuffer(d)
     val solveUdf = udf((buf: Seq[Double]) => agg.finish(buf.toArray))
     val fits = weighted.groupBy(col("instance_id"))
-        .agg(bufCols.head, bufCols.tail: _*)
-        .select(col("instance_id"),
-          solveUdf(array(
-            ((for { r <- 0 until m; c <- 0 until m } yield col(s"__g_${r}_$c")) ++
-              (0 until m).map(r => col(s"__b_$r")) ++
-              Seq(col("__sw"), col("__swy"), col("__swyy"))): _*)).as("fit"))
+        .agg(bufSums.head, bufSums.tail: _*)
+        .select(col("instance_id"), solveUdf(buffer).as("fit"))
 
     // In continuous mode the instance's interpretable vector is its
     // z-scored values (not all-ones), so the aggregator's localPred
@@ -806,7 +908,7 @@ object Lime {
       else {
         val zArr = array(
           (stats.map(st =>
-            (col(st.name) - lit(st.mean)) / lit(math.max(st.std, 1e-12))) ++
+            (col(st.name) - bound(st.mean)) / bound(math.max(st.std, 1e-12))) ++
             catFeatures.map(_ => lit(1.0))): _*)
         val instZ = instances.select(col(idCol).as("instance_id"), zArr.as("z_inst"))
         fits.join(instZ, "instance_id")

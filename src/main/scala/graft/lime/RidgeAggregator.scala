@@ -46,11 +46,19 @@ class RidgeAggregator(val d: Int, val lambda: Double,
     x(0) = 1.0
     var i = 0
     while (i < d) { x(i + 1) = s.z(i); i += 1 }
+    // G is symmetric: each upper-triangle term (w·x_r)·x_c, r ≤ c, is
+    // added to both (r, c) and (c, r), so both halves hold the same
+    // sums (the codegen'd SQL form in Lime.ridgeBuffer does the same)
     var r = 0
     while (r < m) {
       val wr = s.w * x(r)
-      var c = 0
-      while (c < m) { buf(gOff + r * m + c) += wr * x(c); c += 1 }
+      var c = r
+      while (c < m) {
+        val t = wr * x(c)
+        buf(gOff + r * m + c) += t
+        if (c != r) buf(gOff + c * m + r) += t
+        c += 1
+      }
       buf(bOff + r) += wr * s.y
       r += 1
     }

@@ -57,6 +57,74 @@ class LimeSpec extends SparkSpec {
     assert(math.abs(k(0) - 1.0) < 1e-12 && k.forall(x => x > 0 && x <= 1.0))
   }
 
+  test("gaussian draws: pinned raw bits in all three Acklam regions, codegen == interpreted") {
+    val s = spark
+    import s.implicits._
+    // doubleToRawLongBits of Rng.gaussian(42, id, 0) as the Column-built
+    // Φ⁻¹ produced them before the scalar kernel replaced it; the ids
+    // cover the lower tail, the central region and the upper tail
+    val pinned = Seq(
+      108L -> 0xc000f1db61f3232dL, 156L -> 0xc0065d28f0bcefa2L,
+      172L -> 0xc00102c04507242bL, 191L -> 0xc0016900cea7b3d9L,
+      0L -> 0xbfed797bce931f56L, 1L -> 0x3ff22d8f1e371ca2L,
+      2L -> 0x3fd5b659c34782a4L, 4L -> 0x3fd86a4bb967c661L,
+      3L -> 0x4006dbafac353614L, 44L -> 0x40003af2d078eecfL,
+      47L -> 0x4001eab7baf096a6L, 81L -> 0x4002a9b4b3355a38L)
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    def draws(n: Long): Map[Long, (Double, Double)] =
+      s.range(0, n)
+        .select(col("id"), Rng.u01(lit(42L), col("id"), lit(0)).as("u"),
+          Rng.gaussian(lit(42L), col("id"), lit(0)).as("g"))
+        .as[(Long, Double, Double)].collect().map(t => t._1 -> (t._2, t._3)).toMap
+    val cg = draws(20000)
+    val us = pinned.map(p => cg(p._1)._1)
+    assert(us.exists(_ < 0.02425) && us.exists(_ > 0.97575) &&
+      us.exists(u => u >= 0.02425 && u <= 0.97575), s"pinned ids miss a region: $us")
+    pinned.foreach { case (id, want) =>
+      val got = bits(cg(id)._2)
+      assert(got == want, f"id $id: bits 0x$got%x, pinned 0x$want%x")
+    }
+    // the interpreted path (no whole-stage codegen, interpreted
+    // expression evaluation) and the scalar kernel called directly
+    // agree with the generated code bit-for-bit
+    val conf = Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    val interp =
+      try { conf.foreach { case (k, v) => s.conf.set(k, v) }; draws(20000) }
+      finally conf.foreach { case (k, _) => s.conf.unset(k) }
+    assert(interp.size == cg.size)
+    cg.foreach { case (id, (u, g)) =>
+      assert(bits(interp(id)._2) == bits(g), s"id $id: interpreted ${interp(id)._2} vs codegen $g")
+      assert(bits(Rng.phiInv(u)) == bits(g), s"id $id: phiInv($u) vs codegen $g")
+    }
+  }
+
+  test("ridge buffer sums equal a hand-reduced RidgeAggregator buffer bit-for-bit") {
+    // one partition, so the SQL sums and the hand fold see each
+    // instance's rows in the same order
+    val d = 3
+    val rows = spark.range(0, 900, 1, 1).select(
+      (col("id") % 7).as("instance_id"),
+      array((0 until d).map(j => Rng.gaussian(lit(5L), col("id"), lit(j))): _*).as("z"),
+      Rng.gaussian(lit(6L), col("id")).as("y"),
+      Rng.u01(lit(7L), col("id")).as("w"))
+    val (sums, buffer) = Lime.ridgeBuffer(d)
+    val agg = new RidgeAggregator(d, 1.0)
+    val viaSql = rows.groupBy("instance_id").agg(sums.head, sums.tail: _*)
+      .select(col("instance_id"), buffer).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
+    val byHand = rows.collect().groupBy(_.getLong(0)).map { case (id, rs) =>
+      id -> agg.merge(agg.zero, rs.foldLeft(agg.zero)((b, r) =>
+        agg.reduce(b, RidgeSample(r.getSeq[Double](1).toArray, r.getDouble(2), r.getDouble(3)))))
+    }
+    assert(viaSql.keySet == byHand.keySet && viaSql.size == 7)
+    def bits(a: Array[Double]) = a.map(java.lang.Double.doubleToRawLongBits).toSeq
+    byHand.foreach { case (id, buf) =>
+      assert(viaSql(id).length == buf.length, s"instance $id: buffer length")
+      assert(bits(viaSql(id)) == bits(buf), s"instance $id: SQL buffer differs from RidgeAggregator")
+    }
+  }
+
   test("explainTabular: deterministic across runs, sensible surrogate") {
     val run1 = LimeOps.limeExplainTabular(spark, dir).collect()
     val run2 = LimeOps.limeExplainTabular(spark, dir).collect()
