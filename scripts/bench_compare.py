@@ -20,7 +20,7 @@ new, base = load(sys.argv[1]), load(sys.argv[2])
 nq, bq = new["queries"], base["queries"]
 # Negative values mark FAILED queries in Bench's output; zero-second
 # entries would poison every ratio below. Both are excluded from the
-# shared comparison set (failures are still listed at the end).
+# shared comparison set (and both are listed at the end).
 shared = [k for k in nq
           if k in bq and not k.startswith("artifact_")
           and nq[k] > 0 and bq[k] > 0]
@@ -47,6 +47,10 @@ if fails:
 base_fails = [k for k, v in bq.items() if v < 0]
 if base_fails:
     print(f"FAILED in base (excluded from ratios): {base_fails}")
+for side, qs in (("new", nq), ("base", bq)):
+    zeros = [k for k, v in qs.items() if v == 0 and not k.startswith("artifact_")]
+    if zeros:
+        print(f"ZERO-valued in {side} (excluded from ratios): {zeros}")
 worst = sorted(shared, key=lambda k: nq[k] / bq[k], reverse=True)[:8]
 print("worst shared ratios:")
 for k in worst:

@@ -709,6 +709,11 @@ object TextKernels {
   * on the cheap double compare — after warm-up nearly every candidate
   * takes that branch, so BigDecimal cost is O(k + near-boundary), not
   * O(n). KnnKernelSpec pins kernel ≡ the higher-order chain.
+  *
+  * Every argument must be non-nullable: the kernel reads its inputs
+  * without null checks, so a nullable argument is rejected when the
+  * plan is analyzed (the Column builder `VectorExprs.knnTopkKeys`
+  * asserts non-null on its nullable inputs instead).
   */
 case class KnnTopkKeys(corpus: Expression, vec: Expression, nrm: Expression,
     selfId: Expression, k: Int) extends Expression {
@@ -741,6 +746,9 @@ case class KnnTopkKeys(corpus: Expression, vec: Expression, nrm: Expression,
       TypeCheckResult.TypeCheckFailure(s"$prettyName: selfId must be bigint")
     else if (k < 1)
       TypeCheckResult.TypeCheckFailure(s"$prettyName: k must be >= 1, got $k")
+    else if (children.exists(_.nullable))
+      TypeCheckResult.TypeCheckFailure(s"$prettyName: arguments must be non-nullable, but " +
+        children.filter(_.nullable).map(_.sql).mkString(", ") + " may be null")
     else TypeCheckResult.TypeCheckSuccess
   }
 
@@ -1368,10 +1376,17 @@ object VectorExprs {
   def langScores(counts: Column, bgs: Array[Long], terms: Array[Array[Long]]): Column =
     GraftColumnShim.column(LangScores(GraftColumnShim.expression(counts), bgs, terms))
 
-  def knnTopkKeys(corpus: Column, vec: Column, nrm: Column, selfId: Column, k: Int): Column =
-    GraftColumnShim.column(KnnTopkKeys(GraftColumnShim.expression(corpus),
-      GraftColumnShim.expression(vec), GraftColumnShim.expression(nrm),
-      GraftColumnShim.expression(selfId), k))
+  /** [[KnnTopkKeys]] over columns that may be declared nullable (a
+    * parquet read declares every column so): each argument is asserted
+    * non-null, so a null fails the task with the argument's name
+    * instead of reaching the kernel. */
+  def knnTopkKeys(corpus: Column, vec: Column, nrm: Column, selfId: Column, k: Int): Column = {
+    def nonNull(c: Column, name: String): Expression =
+      org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull(
+        GraftColumnShim.expression(c), Seq(s"knn_topk_keys argument $name"))
+    GraftColumnShim.column(KnnTopkKeys(nonNull(corpus, "corpus"), nonNull(vec, "vec"),
+      nonNull(nrm, "nrm"), nonNull(selfId, "selfId"), k))
+  }
 
   def dotF64(a: Column, b: Column): Column =
     GraftColumnShim.column(DotProductF64(GraftColumnShim.expression(a), GraftColumnShim.expression(b)))

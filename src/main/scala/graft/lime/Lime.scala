@@ -22,6 +22,10 @@ import org.apache.spark.unsafe.types.UTF8String
 private[lime] case class BoundValue(value: Any, dataType: DataType) extends LeafExpression {
   override def nullable: Boolean = false
   override def eval(input: InternalRow): Any = value
+  // Independent of the value: subexpression elimination orders the
+  // common subexpressions it extracts by hash, so a value-dependent
+  // hash would reorder the generated methods from request to request.
+  override def hashCode(): Int = dataType.hashCode()
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val javaType = CodeGenerator.javaType(dataType)
@@ -90,8 +94,12 @@ private[lime] case class BinIndex(left: Expression, right: Expression) extends B
   * materialization, shipped back as run-time plan values), then a single
   * narrow stage for perturb→score→kernel (counter-based RNG — see
   * Rng — keeps it partition-layout-independent), one shuffle on
-  * instance_id for the ridge Aggregator, and a shuffle-free window
-  * for top-K. Shuffled bytes are O(instances·d'²), not O(instances·N).
+  * instance_id for the ridge aggregate, and one result stage that
+  * solves each instance, ranks its features with a shuffle-free
+  * window and returns the instances·k rows as a single partition
+  * sorted by (instance_id, rank) — the total order, with no range
+  * exchange. A request runs as two jobs, and shuffled bytes are
+  * O(instances·d'²), not O(instances·N).
   */
 object Lime {
 
@@ -746,46 +754,60 @@ object Lime {
     * pay a Janino compile plus a cold JIT on every call. Bound, the
     * generated code is the same for every request over the same
     * features and config, and stays compiled and warm across requests.
+    *
+    * The new columns are built in two projections, one per dependent
+    * layer: the drawn `__val`/`__bin` columns, then the columns derived
+    * from them. Every Dataset call re-analyzes the whole plan built so
+    * far, so a call per column would make the call count, not the work,
+    * dominate building a request's plan.
     */
   def perturb(instances: DataFrame, idCol: String, stats: Seq[FeatureStats], cfg: LimeConfig,
               catStats: Seq[CatStats] = Nil): DataFrame = {
-    val base0 = instances.withColumn("sample_id", explode(sequence(lit(0), lit(cfg.nSamples - 1))))
-    // categorical features: resample from the training frequency table;
+    val base = instances.withColumn("sample_id", explode(sequence(lit(0), lit(cfg.nSamples - 1))))
+    val sample0 = col("sample_id") === 0
+    // Per feature: the drawn column, then the columns derived from it,
+    // each as (name, value).
+    // Categorical features: resample from the training frequency table;
     // z = 1 iff the sampled value equals the instance's (public LIME
     // categorical semantics). The sampled value itself is the score
     // input.
-    val base = catStats.foldLeft(base0) { (df, cs) =>
+    val categorical = catStats.map { cs =>
       val u = Rng.u01(lit(cfg.seed), col(idCol), col("sample_id"), lit("cat:" + cs.name))
       val sampled = element_at(boundStrings(cs.values), draw(u, cs.cumFreqs) + 1)
-      val v = when(col("sample_id") === 0, col(cs.name).cast("string")).otherwise(sampled)
-      df.withColumn(s"${cs.name}__val", v)
-        .withColumn(s"${cs.name}__z",
-          (col(s"${cs.name}__val") === col(cs.name).cast("string")).cast("double"))
+      (s"${cs.name}__val" -> when(sample0, col(cs.name).cast("string")).otherwise(sampled),
+        Seq(s"${cs.name}__z" ->
+          (col(s"${cs.name}__val") === col(cs.name).cast("string")).cast("double")))
     }
-    if (cfg.discretize)
-      stats.foldLeft(base) { (df, st) =>
-        val u = Rng.u01(lit(cfg.seed), col(idCol), col("sample_id"), lit(st.name))
-        val instBin = binOf(col(st.name), st.edges)
-        val bin = when(col("sample_id") === 0, instBin).otherwise(draw(u, st.binCumFreqs))
-        df.withColumn(s"${st.name}__bin", bin)
-          .withColumn(s"${st.name}__z", (col(s"${st.name}__bin") === instBin).cast("double"))
-          .withColumn(s"${st.name}__val",
-            when(col("sample_id") === 0, col(st.name))
-              .otherwise(element_at(bound(st.binMeans), col(s"${st.name}__bin") + 1)))
-      }
-    else
-      // continuous mode: gaussian around the instance, z-scored
-      // interpretable representation; sample 0 stays the instance
-      stats.foldLeft(base) { (df, st) =>
-        val g = Rng.gaussian(lit(cfg.seed), col(idCol) * lit(1000003L) + col("sample_id"), lit(stats.indexOf(st)))
-        val v = when(col("sample_id") === 0, col(st.name))
-          .otherwise(col(st.name) + g * bound(st.std))
-        df.withColumn(s"${st.name}__val", v)
-          .withColumn(s"${st.name}__bin", binOf(col(s"${st.name}__val"), st.edges))
-          .withColumn(s"${st.name}__z",
-            (col(s"${st.name}__val") - bound(st.mean)) / bound(math.max(st.std, 1e-12)))
-      }
+    val numeric =
+      if (cfg.discretize)
+        stats.map { st =>
+          val u = Rng.u01(lit(cfg.seed), col(idCol), col("sample_id"), lit(st.name))
+          val instBin = binOf(col(st.name), st.edges)
+          val bin = col(s"${st.name}__bin")
+          (s"${st.name}__bin" -> when(sample0, instBin).otherwise(draw(u, st.binCumFreqs)),
+            Seq(s"${st.name}__z" -> (bin === instBin).cast("double"),
+              s"${st.name}__val" ->
+                when(sample0, col(st.name)).otherwise(element_at(bound(st.binMeans), bin + 1))))
+        }
+      else
+        // continuous mode: gaussian around the instance, z-scored
+        // interpretable representation; sample 0 stays the instance
+        stats.zipWithIndex.map { case (st, j) =>
+          val g = Rng.gaussian(lit(cfg.seed), col(idCol) * lit(1000003L) + col("sample_id"), lit(j))
+          val v = col(s"${st.name}__val")
+          (s"${st.name}__val" -> when(sample0, col(st.name)).otherwise(col(st.name) + g * bound(st.std)),
+            Seq(s"${st.name}__bin" -> binOf(v, st.edges),
+              s"${st.name}__z" -> (v - bound(st.mean)) / bound(math.max(st.std, 1e-12))))
+        }
+    val layers = categorical ++ numeric
+    val drawn = base.select(col("*") +: layers.map { case ((n, c), _) => c.as(n) }: _*)
+    drawn.select(base.columns.map(quoted) ++ layers.flatMap { case ((n, _), derived) =>
+      quoted(n) +: derived.map { case (dn, c) => c.as(dn) }
+    }: _*)
   }
+
+  /** A column by its exact name, with no dot or backtick parsing. */
+  private[lime] def quoted(name: String): Column = col("`" + name.replace("`", "``") + "`")
 
   /** RidgeAggregator's buffer as built-in sums over a frame of
     * (`z`: array of d' doubles, `y`, `w`). Returns the sums to aggregate
@@ -870,69 +892,62 @@ object Lime {
       else (stats.map(st =>
         pow((col(s"${st.name}__val") - col(st.name)) / bound(math.max(st.std, 1e-12)), 2)) ++
         catFeatures.map(f => lit(1.0) - col(s"${f}__z"))).reduce(_ + _)
-    val weighted = scored
-      .withColumn("kweight", sqrt(exp(-dist2 / lit(width * width))))
-      .select(col(idCol).as("instance_id"),
-        array(allFeatures.map(f => col(s"${f}__z")): _*).as("z"),
-        col("pred").cast("double").as("y"),
-        col("kweight").cast("double").as("w"))
+    val weighted = scored.select(col(idCol).as("instance_id"), col("sample_id"),
+      array(allFeatures.map(f => col(s"${f}__z")): _*).as("z"),
+      col("pred").cast("double").as("y"),
+      sqrt(exp(-dist2 / lit(width * width))).cast("double").as("w"))
 
     val fwd = cfg.selection == "forward_selection" ||
       (cfg.selection == "auto" && d <= 6)
     val agg = new RidgeAggregator(d, cfg.lambda,
       if (fwd) cfg.kFeatures else Int.MaxValue, fwd)
-    // The normal-equations fold runs as BUILT-IN sums — one codegen'd
-    // HashAggregate with map-side partials — instead of the previous
-    // typed groupByKey + Aggregator (SerializeFromObject + interpreted
-    // ObjectHashAggregate deserializing every sample row). Each buffer
-    // cell's per-row term reproduces RidgeAggregator.reduce's exact
-    // multiply order — G(r,c) += (w·x_r)·x_c for r ≤ c, mirrored,
-    // b(r) += (w·x_r)·y, Σw, Σw·y, Σ(w·y)·y — and sums accumulate per
-    // row / merge per partition exactly like the Aggregator's
-    // reduce/merge, so the collected buffers are bit-identical
-    // (LimeSpec checks this against a hand-reduced RidgeAggregator
-    // buffer). The O(d'³) solve itself is one finish call per INSTANCE
-    // row (never per sample), off the hot path.
+    // The normal-equations fold runs as built-in sums: one codegen'd
+    // HashAggregate with map-side partials, whose buffer cells reproduce
+    // RidgeAggregator.reduce bit-for-bit (see ridgeBuffer). The O(d'³)
+    // solve is one finish call per instance row, never per sample.
     val (bufSums, buffer) = ridgeBuffer(d)
-    val solveUdf = udf((buf: Seq[Double]) => agg.finish(buf.toArray))
-    val fits = weighted.groupBy(col("instance_id"))
-        .agg(bufSums.head, bufSums.tail: _*)
-        .select(col("instance_id"), solveUdf(buffer).as("fit"))
-
     // In continuous mode the instance's interpretable vector is its
     // z-scored values (not all-ones), so the aggregator's localPred
-    // (= beta-sum) is replaced with intercept + beta . z_instance,
-    // joined back from the instances frame.
-    val fitsWithPred =
-      if (cfg.discretize) fits.withColumn("local_pred", col("fit.localPred"))
-      else {
-        val zArr = array(
-          (stats.map(st =>
-            (col(st.name) - bound(st.mean)) / bound(math.max(st.std, 1e-12))) ++
-            catFeatures.map(_ => lit(1.0))): _*)
-        val instZ = instances.select(col(idCol).as("instance_id"), zArr.as("z_inst"))
-        fits.join(instZ, "instance_id")
-          .withColumn("local_pred",
-            col("fit.intercept") + aggregate(
-              zip_with(col("fit.coefs"), col("z_inst"), (c, z) => c * z),
-              lit(0.0), (acc, x) => acc + x))
-          .drop("z_inst")
-      }
+    // (= beta-sum) is replaced with intercept + beta . z_instance.
+    // Sample 0 is the instance itself and perturb z-scores it with the
+    // instance's own expression, so each numeric z_instance entry rides
+    // the ridge aggregate as sample 0's z (a plain double each, which
+    // keeps the aggregate hash-based) instead of a join back to
+    // `instances`; categorical entries are 1.0 as in the binary rep.
+    // Like the fit itself, this takes instance ids to be unique.
+    val nNum = if (cfg.discretize) 0 else stats.size
+    val zInst = (0 until nNum).map(j =>
+      min_by(col("z").getItem(j), col("sample_id")).as(s"__z$j"))
+    val solveUdf = udf((buf: Seq[Double]) => agg.finish(buf.toArray)).withName("lime_ridge_solve")
+    val fits = weighted.groupBy(col("instance_id"))
+      .agg(bufSums.head, bufSums.tail ++ zInst: _*)
+      .select(col("instance_id") +: solveUdf(buffer).as("fit") +:
+        (0 until nNum).map(j => col(s"__z$j")): _*)
+    val localPred =
+      if (cfg.discretize) col("fit.localPred")
+      else col("fit.intercept") + aggregate(
+        zip_with(col("fit.coefs"),
+          array((0 until nNum).map(j => col(s"__z$j")) ++ catFeatures.map(_ => lit(1.0)): _*),
+          (c, z) => c * z),
+        lit(0.0), (acc, x) => acc + x)
 
-    val names = array(allFeatures.map(lit): _*)
-    val exploded = fitsWithPred.select(
-      col("instance_id"),
-      col("fit.intercept").as("intercept"),
-      col("fit.r2").as("r2"),
-      col("local_pred"),
-      posexplode(col("fit.coefs")))
-      .withColumn("feature", element_at(names, col("pos") + 1))
-      .withColumnRenamed("col", "weight")
-    val w = Window.partitionBy("instance_id").orderBy(abs(col("weight")).desc, col("feature"))
+    // posexplode_outer, not posexplode: for an inner generator the
+    // optimizer infers a `size(coefs) > 0` filter below it, which
+    // evaluates the solve a second time; coefs always holds d' >= 1
+    // entries, so the two give the same rows
+    val exploded = fits.select(col("instance_id"), col("fit.intercept").as("intercept"),
+      col("fit.r2").as("r2"), localPred.as("local_pred"),
+      posexplode_outer(col("fit.coefs")).as(Seq("pos", "weight")))
+    val feature = element_at(array(allFeatures.map(lit): _*), col("pos") + 1)
+    val w = Window.partitionBy("instance_id").orderBy(abs(col("weight")).desc, feature)
     val keep = if (cfg.selection == "none") Int.MaxValue else cfg.kFeatures
-    exploded.withColumn("rank", row_number().over(w))
+    // The tail after the ridge shuffle holds instances·k rows: one
+    // partition sorted in place gives the total order without the
+    // sampling job and range exchange of a global sort.
+    exploded.select(col("instance_id"), row_number().over(w).as("rank"), feature.as("feature"),
+        col("weight"), col("intercept"), col("r2"), col("local_pred"))
       .filter(col("rank") <= keep)
-      .select("instance_id", "rank", "feature", "weight", "intercept", "r2", "local_pred")
-      .orderBy("instance_id", "rank")
+      .coalesce(1)
+      .sortWithinPartitions("instance_id", "rank")
   }
 }

@@ -29,19 +29,25 @@ object LimeMllib {
       features: Seq[String],
       featuresCol: String = "features",
       probabilityIndex: Option[Int] = Some(1)): DataFrame => DataFrame = { df =>
-    val stashed = features.foldLeft(df)((d, f) =>
-      d.withColumn(s"${f}__orig", col(f)).withColumn(f, col(s"${f}__val")))
+    val orig = features.map(f => f -> s"${f}__orig").toMap
+    // one projection swaps the `f__val` columns in as the features and
+    // stashes the originals (the model's input column is replaced)
+    val stashed = df.select(df.columns.filter(_ != featuresCol).map { c =>
+      if (orig.contains(c)) col(s"${c}__val").as(c) else Lime.quoted(c)
+    } ++ features.map(f => col(f).as(orig(f))): _*)
     val assembled = new VectorAssembler()
       .setInputCols(features.toArray).setOutputCol(featuresCol)
-      .transform(stashed.drop(featuresCol))
+      .transform(stashed)
     val scored = model.transform(assembled)
-    val withPred = probabilityIndex match {
-      case Some(i) => scored.withColumn("pred",
-        element_at(vector_to_array(col("probability")), i + 1))
-      case None => scored.withColumn("pred", col("prediction").cast("double"))
+    val pred = probabilityIndex match {
+      case Some(i) => element_at(vector_to_array(col("probability")), i + 1)
+      case None => col("prediction").cast("double")
     }
-    features.foldLeft(withPred)((d, f) =>
-      d.withColumn(f, col(s"${f}__orig")).drop(s"${f}__orig"))
-      .drop(featuresCol, "rawPrediction", "probability", "prediction")
+    // and one restores them, drops the model's outputs and adds `pred`
+    val dropped = orig.values.toSet ++ Seq(featuresCol, "rawPrediction", "probability",
+      "prediction", "pred")
+    scored.select(scored.columns.filterNot(dropped).map { c =>
+      orig.get(c).fold(Lime.quoted(c))(o => col(o).as(c))
+    } :+ pred.as("pred"): _*)
   }
 }

@@ -402,6 +402,26 @@ class ExtensionsSpec extends SparkSpec {
       s"expected the literal-k validation message, got: ${err.getMessage}")
   }
 
+  test("knn_topk_keys: a nullable argument fails at plan time; the Column builder names a null") {
+    import org.apache.spark.sql.functions._
+    spark.range(2).selectExpr("id", "IF(id = 1, NULL, 1.0D) AS nm")
+      .createOrReplaceTempView("knn_nullable_nrm")
+    val corpus = "array(struct(CAST(7 AS BIGINT) AS id, array(1.0D) AS e, 1.0D AS nm))"
+    val planErr = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql(s"SELECT knn_topk_keys($corpus, array(1.0D), nm, id, 1) FROM knn_nullable_nrm")
+    }
+    assert(planErr.getMessage.contains("knn_topk_keys: arguments must be non-nullable"),
+      planErr.getMessage)
+    // the builder asserts non-null: a non-null row computes, a null
+    // fails the task naming the argument, never an NPE in the kernel
+    def run(id: Long) = spark.table("knn_nullable_nrm").filter(col("id") === id)
+      .select(graft.functions.VectorExprs.knnTopkKeys(expr(corpus), array(lit(1.0)),
+        col("nm"), col("id"), 1)).collect()
+    assert(run(0).head.getSeq[Long](0).map(_ % (1L << 40)) == Seq(7L))
+    val runErr = intercept[Exception](run(1))
+    assert(runErr.getMessage.contains("knn_topk_keys argument nrm"), runErr.getMessage)
+  }
+
   test("minhash_signature: null array elements are skipped like the xxhash chain") {
     val r = spark.sql(
       "SELECT minhash_signature(array('ab cd', CAST(NULL AS STRING), 'ef gh'))," +

@@ -160,6 +160,38 @@ class LimeSpec extends SparkSpec {
       s"l_discount should dominate: ${topFeatures.mkString(",")}")
   }
 
+  test("explainTabular rows come back in (instance_id, rank) order, AQE on and off") {
+    // more instances than shuffle partitions, spread over several input
+    // partitions: the single sorted output partition must give exactly
+    // the rows and order of a global sort
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    val feats = LimeOps.limeFeatures
+    // ids by position: the fixture's (orderkey, linenumber) pairs repeat
+    val rows = Tables.lineitem(spark, dir).filter(col("l_orderkey") <= 40)
+      .select(feats.map(f => col(f).cast("double")): _*).collect()
+      .zipWithIndex.map { case (r, i) => Row.fromSeq(i.toLong +: r.toSeq) }
+    assert(rows.length > spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val schema = StructType(StructField("instance_id", LongType, nullable = false) +:
+      feats.map(StructField(_, DoubleType)))
+    val inst = spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 5), schema)
+    def bits(rs: Array[Row]): Seq[Seq[Any]] = rs.toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case x => x
+    })
+    for (aqe <- Seq("true", "false"); discretize <- Seq(true, false)) {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      try {
+        val df = Lime.explainTabular(inst, "instance_id", feats,
+          LimeConfig(nSamples = 128, discretize = discretize))
+        val got = df.collect()
+        assert(got.length == rows.length * 4)
+        assert(bits(got) == bits(df.orderBy("instance_id", "rank").collect()),
+          s"AQE $aqe, discretize $discretize: rows out of (instance_id, rank) order")
+      } finally spark.conf.unset("spark.sql.adaptive.enabled")
+    }
+  }
+
   test("forward selection keeps exactly K features, dominant signal first") {
     val feats = LimeOps.limeFeatures
     val inst = Tables.lineitem(spark, dir).filter(col("l_orderkey") <= 10)

@@ -1,8 +1,19 @@
 package graft
 
+import graft.lime.{Lime, LimeMllib}
+import graft.lime.Lime.LimeConfig
+import graft.operators.LimeOps
+import org.apache.spark.ml.{Pipeline, PipelineModel}
+import org.apache.spark.ml.classification.LogisticRegression
+import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, ScalaUDF}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+import org.apache.spark.sql.functions.col
 
 /** Mechanical pin of the scale-bearing plan shapes (SURVEY §2's
   * "scale notes" column, made falsifiable): for a set of flagship
@@ -324,5 +335,65 @@ class PlanShapeSpec extends SparkSpec {
     // output sort; ttot/btot ride the aggregated tables as broadcasts
     // (pre-r14 ttot re-exploded the corpus for a count(1))
     pin("q_text_pmi", 4, 4)
+  }
+
+  /** A StandardScaler + LogisticRegression pipeline over the LIME
+    * features, the shape of black box the benchmark explains. */
+  private lazy val mllibScorer: DataFrame => DataFrame = {
+    val feats = LimeOps.limeFeatures
+    val li = Tables.lineitem(spark, dir).limit(2000)
+      .withColumn("label", (col("l_discount") > 0.05).cast("double"))
+    val asm = new VectorAssembler().setInputCols(feats.toArray).setOutputCol("features")
+    val model: PipelineModel = new Pipeline().setStages(Array(
+      new StandardScaler().setInputCol("features").setOutputCol("scaled"),
+      new LogisticRegression().setFeaturesCol("scaled").setMaxIter(10))).fit(asm.transform(li))
+    LimeMllib.scoreFn(model, feats)
+  }
+
+  private def explainRequest(discretize: Boolean): DataFrame = {
+    val inst = Tables.lineitem(spark, dir).filter(col("l_orderkey") <= 10)
+      .withColumn("instance_id", col("l_orderkey") * 10 + col("l_linenumber"))
+      .select((Seq("instance_id") ++ LimeOps.limeFeatures).map(col): _*)
+    Lime.explainTabular(inst, "instance_id", LimeOps.limeFeatures,
+      LimeConfig(nSamples = 64, discretize = discretize), Some(mllibScorer))
+  }
+
+  for (discretize <- Seq(true, false)) {
+    val mode = if (discretize) "discretized" else "continuous"
+
+    test(s"$mode explainTabular with an MLlib scorer: one hash shuffle, no range sort, no broadcast") {
+      spark.catalog.clearCache()
+      val df = explainRequest(discretize)
+      val plan: SparkPlan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      val shuffles = plan.collect { case e: ShuffleExchangeLike => e }
+      assert(shuffles.size == 1, s"want one shuffle, the ridge aggregate's\n$plan")
+      shuffles.head.outputPartitioning match {
+        case h: HashPartitioning =>
+          assert(h.expressions.map { case a: AttributeReference => a.name; case e => e.sql } ==
+            Seq("instance_id"), s"ridge shuffle keyed on ${h.expressions}\n$plan")
+        case p => fail(s"ridge shuffle partitioned by $p, not a hash on instance_id\n$plan")
+      }
+      assert(plan.collect { case e: BroadcastExchangeLike => e }.isEmpty, s"broadcast in\n$plan")
+      assert(!plan.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]),
+        s"range partitioning in\n$plan")
+      // a projection each for the instance frame's two, the perturb
+      // layers, the scorer's swap and restore, the kernel weight, the
+      // solve and the ranking; the rest are MLlib's own transforms
+      val projects = df.queryExecution.analyzed.collect { case p: Project => p }.size
+      assert(projects <= 18, s"$projects Projects in the analyzed plan")
+    }
+
+    test(s"$mode explainTabular evaluates the ridge solve once per instance") {
+      // posexplode's inferred `size(coefs) > 0` filter would sit below
+      // the projection that solves, and solve a second time
+      val solves = explainRequest(discretize).queryExecution.optimizedPlan.flatMap(
+        _.expressions.flatMap(_.collect {
+          case u: ScalaUDF if u.udfName.contains("lime_ridge_solve") => u
+        }))
+      assert(solves.size == 1, s"${solves.size} solve calls in the optimized plan")
+    }
   }
 }
