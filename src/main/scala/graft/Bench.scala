@@ -1,6 +1,16 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
+  /** Runs `body`; a non-fatal failure prints its class and message
+    * under `name` and returns false. */
+  private def succeeded(name: String)(body: => Unit): Boolean =
+    try { body; true } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        false
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -12,8 +22,8 @@ object Bench {
     // charged to whichever queries happen to run first in map order.
     // Fitted-artifact caches are cleared afterwards so the timed pass
     // still measures real computation, not artifact reuse.
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+    SparkEntry.queries.foreach { case (name, fn) =>
+      succeeded(name)(fn(spark, sfDir).count())
     }
     // Cold-start the timed pass: drop fitted-artifact caches so the
     // timed loop measures real computation, not artifact reuse. The
@@ -64,7 +74,7 @@ object Bench {
     ).map { case (name, build) =>
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
-      val ok = try { build().count(); true } catch { case _: Throwable => false }
+      val ok = succeeded(name)(build().count())
       val elapsed = (System.nanoTime() - t0) / 1e9
       name -> (if (ok) elapsed else -elapsed)
     }
@@ -81,7 +91,7 @@ object Bench {
       val t0 = System.nanoTime()
       // A failed query is reported as -elapsed (negative) so a
       // regression that fails fast cannot masquerade as a speedup.
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+      val ok = succeeded(name)(fn(spark, sfDir).count())
       val elapsed = (System.nanoTime() - t0) / 1e9
       name -> (if (ok) elapsed else -elapsed)
     }

@@ -1,15 +1,14 @@
 package graft.lime
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, ObjectType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A value fixed for one query but not for the code that evaluates it:
@@ -81,6 +80,127 @@ private[lime] case class BinIndex(left: Expression, right: Expression) extends B
     copy(left = l, right = r)
 }
 
+/** One discretized request's lattice, everything its per-instance fold
+  * reads that is fixed for the request: the features' RNG tags, bin
+  * edges and cumulative draw frequencies, the category values, the
+  * kernel weight per count of mismatched features, the black box's
+  * score of every lattice cell (one array indexed by the cell's
+  * mixed-radix code) and each instance's own score (keyed by
+  * `xxhash64(seed, id)`, sorted).
+  *
+  * Features are numeric (`edges.length` of them, binned) then
+  * categorical; `radix(j)` is feature j's number of bins or values.
+  */
+private[lime] final class Lattice(
+    nSamples: Int,
+    tags: Array[UTF8String],
+    edges: Array[ArrayData],
+    cumFreqs: Array[ArrayData],
+    catValues: Array[Array[UTF8String]],
+    radix: Array[Int],
+    scores: Array[Double],
+    keys: Array[Long],
+    instanceScores: Array[Double],
+    weights: Array[Double]) extends Serializable {
+
+  /** The ridge buffer (the layout of [[Lime.ridgeBuffer]]) of the
+    * instance whose id hashes to `idHash` and whose feature values are
+    * `inst` (numeric as doubles, then categorical as strings).
+    *
+    * Sample s draws feature j's bin or value from
+    * `Rng.u01(idHash, s, tags(j))` as perturb does, so its z vector and
+    * lattice cell are perturb's; sample 0 is the instance. Each sum
+    * starts from 0.0 and adds the samples in order, then is added to
+    * 0.0 once more: what Spark's `sum` gives for one map-side partial,
+    * so each cell equals the fan-out path's bit for bit.
+    */
+  def fold(idHash: Long, inst: InternalRow): ArrayData = {
+    val nNum = edges.length
+    val d = radix.length
+    val m = d + 1
+    val instBin = Array.tabulate(nNum)(j =>
+      if (inst.isNullAt(j)) 0 else Lime.binIndex(inst.getDouble(j), edges(j)))
+    // categorical z: is value k the instance's? (null is a category)
+    val sameCat = Array.tabulate(d - nNum) { c =>
+      val v = if (inst.isNullAt(nNum + c)) null else inst.getUTF8String(nNum + c)
+      catValues(c).map(k => if (k == null) v == null else k == v)
+    }
+    val at = java.util.Arrays.binarySearch(keys, idHash)
+    if (at < 0) throw new IllegalStateException(
+      "explainTabular: an instance row is not among the rows the request was built from")
+    val x = new Array[Double](m)
+    x(0) = 1.0
+    // G's upper triangle, then b, then Σw, Σw·y, Σw·y·y
+    val buf = new Array[Double](m * m + m + 3)
+    val bOff = m * m
+    var s = 0
+    while (s < nSamples) {
+      var y = 0.0
+      var miss = 0
+      if (s == 0) {
+        java.util.Arrays.fill(x, 1.0)
+        y = instanceScores(at)
+      } else {
+        var code = 0
+        var j = 0
+        while (j < d) {
+          val b = Lime.drawIndex(Rng.u01(idHash, s, tags(j)), cumFreqs(j))
+          code = code * radix(j) + b
+          val same = if (j < nNum) b == instBin(j) else sameCat(j - nNum)(b)
+          x(j + 1) = if (same) 1.0 else 0.0
+          if (!same) miss += 1
+          j += 1
+        }
+        y = scores(code)
+      }
+      val w = weights(miss)
+      var r = 0
+      while (r < m) {
+        var c = r
+        while (c < m) { buf(r * m + c) += (w * x(r)) * x(c); c += 1 }
+        buf(bOff + r) += (w * x(r)) * y
+        r += 1
+      }
+      buf(bOff + m) += w
+      buf(bOff + m + 1) += w * y
+      buf(bOff + m + 2) += w * y * y
+      s += 1
+    }
+    var r = 0
+    while (r < m) {
+      var c = r
+      while (c < m) { buf(r * m + c) = 0.0 + buf(r * m + c); buf(c * m + r) = buf(r * m + c); c += 1 }
+      r += 1
+    }
+    var i = bOff
+    while (i < buf.length) { buf(i) = 0.0 + buf(i); i += 1 }
+    UnsafeArrayData.fromPrimitiveArray(buf)
+  }
+}
+
+/** [[Lattice.fold]] as one expression over (the bound lattice, the
+  * instance's `xxhash64(seed, id)`, its feature values as a struct).
+  */
+private[lime] case class LatticeFold(first: Expression, second: Expression, third: Expression)
+    extends TernaryExpression {
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+
+  override def nullSafeEval(lattice: Any, idHash: Any, inst: Any): Any =
+    lattice.asInstanceOf[Lattice].fold(idHash.asInstanceOf[Long], inst.asInstanceOf[InternalRow])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (l, h, r) => s"$l.fold($h, $r)")
+
+  override protected def withNewChildrenInternal(
+      a: Expression, b: Expression, c: Expression): LatticeFold = copy(a, b, c)
+}
+
+/** One row of an explanation: a feature's rank, name and weight, with
+  * its instance's fit. [[Lime.explainTabular]] returns these rows.
+  */
+private[lime] case class ExplainedFeature(rank: Int, feature: String, weight: Double,
+                            intercept: Double, r2: Double, local_pred: Double)
+
 /** Distributed LIME for tabular data (SURVEY.md §2.7).
   *
   * Semantics follow the public algorithm (Ribeiro, Singh & Guestrin,
@@ -90,16 +210,35 @@ private[lime] case class BinIndex(left: Expression, right: Expression) extends B
   * instance", proximity kernel sqrt(exp(-d²/w²)) with default width
   * 0.75·√d', weighted Ridge(α=1) surrogate, top-K features by |coef|.
   *
-  * Distribution strategy: one stats job (O(features) driver
-  * materialization, shipped back as run-time plan values), then a single
-  * narrow stage for perturb→score→kernel (counter-based RNG — see
-  * Rng — keeps it partition-layout-independent), one shuffle on
-  * instance_id for the ridge aggregate, and one result stage that
-  * solves each instance, ranks its features with a shuffle-free
-  * window and returns the instances·k rows as a single partition
-  * sorted by (instance_id, rank) — the total order, with no range
-  * exchange. A request runs as two jobs, and shuffled bytes are
-  * O(instances·d'²), not O(instances·N).
+  * Distribution strategy. Statistics come from one collect of the
+  * instance rows (O(features) per instance, fitted on the driver) and
+  * enter the plan as run-time values. The RNG is counter-based (see
+  * Rng), so every draw is a pure function of (seed, instance, sample,
+  * feature), independent of partition layout. Then one of two paths:
+  *
+  *  - Lattice (discretized mode, at most [[LatticeGate]] cells, i.e.
+  *    ∏ bins × ∏ category counts). Every non-instance sample's scorer
+  *    input is a lattice cell: a bin mean per numeric feature and a
+  *    value per categorical one. The cells and the instance rows are
+  *    scored once, as one local relation the optimizer evaluates on
+  *    the driver without a job, and bound in a [[Lattice]]. Each
+  *    instance row then regenerates its N samples' draws in one
+  *    expression ([[LatticeFold]]), looks up each score by the cell's
+  *    mixed-radix code, and folds the kernel-weighted normal equations
+  *    in sample order, bit-identical to the fan-out's sums. The request
+  *    is a narrow projection over the instance rows: no ×N rows, no
+  *    exchange, one job. This relies on the `scoreFn` contract: a
+  *    deterministic row-wise function of the `f__val` columns.
+  *  - Fan-out (above the gate, and continuous mode). One narrow stage
+  *    perturbs, scores and weights instances × N rows, and one shuffle
+  *    on instance_id aggregates the ridge buffers with map-side
+  *    partials, so shuffled bytes are O(instances·d'²), not
+  *    O(instances·N). A request runs as two jobs.
+  *
+  * Both paths end alike: one call per instance row solves the ridge
+  * system and ranks the features, and the instances·k rows come back
+  * as a single partition sorted by (instance_id, rank) — the total
+  * order, with no range exchange.
   */
 object Lime {
 
@@ -138,7 +277,9 @@ object Lime {
   /** Categorical feature statistics: distinct values (sorted, so the
     * sampled index maps to the same value on every run) with cumulative
     * training frequencies. Cardinality must be bounded (the values ride
-    * in the plan) — enforce with `maxCard`.
+    * in the plan) — enforce with `maxCard`. A null value is a category
+    * of its own, sorted first (Spark's ascending order): it is drawn
+    * like any other value and matches only a null instance value.
     */
   case class CatStats(name: String, values: Seq[String], cumFreqs: Seq[Double])
 
@@ -149,7 +290,8 @@ object Lime {
         s"categorical feature $f has ${rows.length} distinct values (> $maxCard)")
       val total = rows.map(_.getLong(1)).sum.toDouble
       val cum = rows.map(_.getLong(1) / total).scanLeft(0.0)(_ + _).tail
-      CatStats(f, rows.map(_.get(0).toString).toVector, cum.toVector.updated(rows.length - 1, 1.0))
+      CatStats(f, rows.map(r => if (r.isNullAt(0)) null else r.get(0).toString).toVector,
+        cum.toVector.updated(rows.length - 1, 1.0))
     }
   }
 
@@ -657,17 +799,22 @@ object Lime {
       x.length - y.length
     }
     catFeatures.zipWithIndex.map { case (f, ci) =>
-      val counts = scala.collection.mutable.HashMap.empty[String, Long]
+      val counts = scala.collection.mutable.HashMap.empty[Option[String], Long]
       rows.foreach { r =>
-        val v = r.get(offset + ci).toString
+        val v = if (r.isNullAt(offset + ci)) None else Some(r.get(offset + ci).toString)
         counts.update(v, counts.getOrElse(v, 0L) + 1L)
       }
-      val keys = counts.keys.toArray.sortWith(cmpU8(_, _) < 0)
+      // null first, as Spark sorts it
+      val keys = counts.keys.toArray.sortWith {
+        case (None, b) => b.nonEmpty
+        case (Some(_), None) => false
+        case (Some(a), Some(b)) => cmpU8(a, b) < 0
+      }
       require(keys.length <= maxCard,
         s"categorical feature $f has ${keys.length} distinct values (> $maxCard)")
       val total = counts.valuesIterator.sum.toDouble
       val cum = keys.map(counts(_) / total).scanLeft(0.0)(_ + _).tail
-      CatStats(f, keys.toVector, cum.toVector.updated(keys.length - 1, 1.0))
+      CatStats(f, keys.map(_.orNull).toVector, cum.toVector.updated(keys.length - 1, 1.0))
     }
   }
 
@@ -702,7 +849,7 @@ object Lime {
   private def boundStrings(vs: Seq[String]): Column =
     GraftColumnShim.column(BoundValue(
       new GenericArrayData(vs.map(UTF8String.fromString).toArray[Any]),
-      ArrayType(StringType, containsNull = false)))
+      ArrayType(StringType, containsNull = vs.contains(null))))
 
   /** Bin or category drawn by a uniform `u`: the lowest index i with
     * u < cumFreqs(i), or the last index when there is none, under the
@@ -776,7 +923,7 @@ object Lime {
       val sampled = element_at(boundStrings(cs.values), draw(u, cs.cumFreqs) + 1)
       (s"${cs.name}__val" -> when(sample0, col(cs.name).cast("string")).otherwise(sampled),
         Seq(s"${cs.name}__z" ->
-          (col(s"${cs.name}__val") === col(cs.name).cast("string")).cast("double")))
+          (col(s"${cs.name}__val") <=> col(cs.name).cast("string")).cast("double")))
     }
     val numeric =
       if (cfg.discretize)
@@ -833,12 +980,31 @@ object Lime {
     (sums, array(layout: _*))
   }
 
+  /** The lattice gate: a discretized request whose lattice has at most
+    * this many cells (∏ bins × ∏ category counts; 256 for four
+    * quartile-binned features) scores it once and folds each instance
+    * in-row; a larger one keeps the fan-out.
+    */
+  private[lime] val LatticeGate = 4096
+
+  /** An instance set [[explainTabular]] cannot explain: duplicate ids,
+    * or a null numeric feature in continuous mode. */
+  class InvalidInstancesException(msg: String) extends IllegalArgumentException(msg)
+
   /** End-to-end tabular explanation:
     * stats → perturb → score → kernel → per-instance ridge → top-K.
     *
-    * `scoreFn` maps the perturbed frame (with `f__val` columns) to a
-    * prediction column — closed-form expression for the demo scorer,
-    * or an MLlib Transformer wrapper (see LimeMllib).
+    * `scoreFn` adds a prediction column `pred` to a frame that holds the
+    * `f__val` columns — a closed-form expression for the demo scorer,
+    * or an MLlib Transformer wrapper (see LimeMllib). It must be a
+    * deterministic row-wise function of the `f__val` columns: in
+    * discretized mode the lattice path scores each distinct input once,
+    * on a frame that holds only the feature columns, their `f__val`
+    * twins and a row key.
+    *
+    * Instance ids must be unique (one null id is an id) and, in
+    * continuous mode, no numeric feature may be null; a request that
+    * breaks either fails at build with [[InvalidInstancesException]].
     *
     * Output: (instance_id, rank, feature, weight, intercept, r2,
     * local_pred), kFeatures rows per instance.
@@ -849,26 +1015,44 @@ object Lime {
       features: Seq[String],
       cfg: LimeConfig = LimeConfig(),
       scoreFnOpt: Option[DataFrame => DataFrame] = None,
-      catFeatures: Seq[String] = Nil): DataFrame = {
-    val spark = instances.sparkSession
-    import spark.implicits._
+      catFeatures: Seq[String] = Nil): DataFrame =
+    explainTabular(instances, idCol, features, cfg, scoreFnOpt, catFeatures, lattice = true)
+
+  /** [[explainTabular]]; `lattice = false` keeps a discretized request
+    * on the fan-out path, for specs that compare the two paths.
+    */
+  private[lime] def explainTabular(
+      instances: DataFrame,
+      idCol: String,
+      features: Seq[String],
+      cfg: LimeConfig,
+      scoreFnOpt: Option[DataFrame => DataFrame],
+      catFeatures: Seq[String],
+      lattice: Boolean): DataFrame = {
+    require(cfg.selection == "none" || cfg.kFeatures >= 1,
+      s"kFeatures must be >= 1, got ${cfg.kFeatures}")
     // Explain-time stats gate: instance sets are bounded by contract
     // (tens-to-thousands of rows), so at or below the gate the stats
     // come from ONE collect + the driver-side twins of the two
     // smallInput aggregate jobs (bit-identical arithmetic; the type
     // check keeps exotic fixture schemas on the distributed path).
+    // The collect also carries each id, for the uniqueness check, and
+    // its RNG key xxhash64(seed, id), for the lattice path.
     val statsGate = 65536
     val statCols = features ++ catFeatures
     val localOk =
-      features.forall(f => instances.schema(f).dataType ==
-        org.apache.spark.sql.types.DoubleType) &&
-      catFeatures.forall(f => instances.schema(f).dataType ==
-        org.apache.spark.sql.types.StringType)
+      features.forall(f => instances.schema(f).dataType == DoubleType) &&
+      catFeatures.forall(f => instances.schema(f).dataType == StringType)
+    val idHash = xxhash64(lit(cfg.seed), col(idCol))
     val localRows =
-      if (localOk) instances.select(statCols.map(col): _*).limit(statsGate + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
+      if (localOk) instances.select(statCols.map(col) :+ col(idCol) :+ idHash: _*)
+        .limit(statsGate + 1).collect()
+      else Array.empty[Row]
+    val local = localOk && localRows.nonEmpty && localRows.length <= statsGate
+    if (local) checkInstances(localRows, idCol, features, cfg.discretize)
+    else checkInstances(instances, idCol, features, cfg.discretize)
     val (stats, catStats) =
-      if (localOk && localRows.nonEmpty && localRows.length <= statsGate)
+      if (local)
         (fitStatsLocal(localRows, features, cfg.nBins),
           if (catFeatures.nonEmpty) fitCatStatsLocal(localRows, features.size, catFeatures)
           else Nil)
@@ -878,76 +1062,198 @@ object Lime {
     val allFeatures = features ++ catFeatures
     val d = allFeatures.size
     val width = cfg.kernelWidth.getOrElse(0.75 * math.sqrt(d))
-
-    val perturbed = perturb(instances, idCol, stats, cfg, catStats)
     val scoreFn = scoreFnOpt.getOrElse { df: DataFrame =>
       df.withColumn("pred", logisticScore(stats, features.map(f => col(s"${f}__val"))))
     }
-    val scored = scoreFn(perturbed)
-    // distance in the interpretable space: binary rep → d² = Σ(1 - z)
-    // (instance row is all-ones); continuous rep → scaled euclidean to
-    // the instance
-    val dist2 =
-      if (cfg.discretize) allFeatures.map(f => lit(1.0) - col(s"${f}__z")).reduce(_ + _)
-      else (stats.map(st =>
-        pow((col(s"${st.name}__val") - col(st.name)) / bound(math.max(st.std, 1e-12)), 2)) ++
-        catFeatures.map(f => lit(1.0) - col(s"${f}__z"))).reduce(_ + _)
-    val weighted = scored.select(col(idCol).as("instance_id"), col("sample_id"),
-      array(allFeatures.map(f => col(s"${f}__z")): _*).as("z"),
-      col("pred").cast("double").as("y"),
-      sqrt(exp(-dist2 / lit(width * width))).cast("double").as("w"))
 
     val fwd = cfg.selection == "forward_selection" ||
       (cfg.selection == "auto" && d <= 6)
     val agg = new RidgeAggregator(d, cfg.lambda,
       if (fwd) cfg.kFeatures else Int.MaxValue, fwd)
-    // The normal-equations fold runs as built-in sums: one codegen'd
-    // HashAggregate with map-side partials, whose buffer cells reproduce
-    // RidgeAggregator.reduce bit-for-bit (see ridgeBuffer). The O(d'³)
-    // solve is one finish call per instance row, never per sample.
-    val (bufSums, buffer) = ridgeBuffer(d)
+    val keep = if (cfg.selection == "none") d else cfg.kFeatures
+    // Both paths end in one call per instance row that solves the
+    // O(d'³) ridge system from the buffer and ranks the features.
     // In continuous mode the instance's interpretable vector is its
-    // z-scored values (not all-ones), so the aggregator's localPred
-    // (= beta-sum) is replaced with intercept + beta . z_instance.
-    // Sample 0 is the instance itself and perturb z-scores it with the
-    // instance's own expression, so each numeric z_instance entry rides
-    // the ridge aggregate as sample 0's z (a plain double each, which
-    // keeps the aggregate hash-based) instead of a join back to
-    // `instances`; categorical entries are 1.0 as in the binary rep.
-    // Like the fit itself, this takes instance ids to be unique.
-    val nNum = if (cfg.discretize) 0 else stats.size
-    val zInst = (0 until nNum).map(j =>
-      min_by(col("z").getItem(j), col("sample_id")).as(s"__z$j"))
-    val solveUdf = udf((buf: Seq[Double]) => agg.finish(buf.toArray)).withName("lime_ridge_solve")
-    val fits = weighted.groupBy(col("instance_id"))
-      .agg(bufSums.head, bufSums.tail ++ zInst: _*)
-      .select(col("instance_id") +: solveUdf(buffer).as("fit") +:
-        (0 until nNum).map(j => col(s"__z$j")): _*)
-    val localPred =
-      if (cfg.discretize) col("fit.localPred")
-      else col("fit.intercept") + aggregate(
-        zip_with(col("fit.coefs"),
-          array((0 until nNum).map(j => col(s"__z$j")) ++ catFeatures.map(_ => lit(1.0)): _*),
-          (c, z) => c * z),
-        lit(0.0), (acc, x) => acc + x)
+    // z-scored values (categorical entries 1.0), not all-ones, so the
+    // aggregator's localPred (= beta-sum) becomes intercept + beta . z.
+    val solve = udf { (buf: Seq[Double], zInst: Seq[Double]) =>
+      val fit = agg.finish(buf.toArray)
+      val localPred =
+        if (cfg.discretize) fit.localPred
+        else fit.intercept + fit.coefs.zip(zInst ++ catFeatures.map(_ => 1.0))
+          .foldLeft(0.0) { case (acc, (c, z)) => acc + c * z }
+      rank(fit, localPred, allFeatures, keep)
+    }.withName("lime_ridge_solve")
+    val noZ = typedLit(Seq.empty[Double])
 
-    // posexplode_outer, not posexplode: for an inner generator the
-    // optimizer infers a `size(coefs) > 0` filter below it, which
-    // evaluates the solve a second time; coefs always holds d' >= 1
-    // entries, so the two give the same rows
-    val exploded = fits.select(col("instance_id"), col("fit.intercept").as("intercept"),
-      col("fit.r2").as("r2"), localPred.as("local_pred"),
-      posexplode_outer(col("fit.coefs")).as(Seq("pos", "weight")))
-    val feature = element_at(array(allFeatures.map(lit): _*), col("pos") + 1)
-    val w = Window.partitionBy("instance_id").orderBy(abs(col("weight")).desc, feature)
-    val keep = if (cfg.selection == "none") Int.MaxValue else cfg.kFeatures
-    // The tail after the ridge shuffle holds instances·k rows: one
-    // partition sorted in place gives the total order without the
-    // sampling job and range exchange of a global sort.
-    exploded.select(col("instance_id"), row_number().over(w).as("rank"), feature.as("feature"),
-        col("weight"), col("intercept"), col("r2"), col("local_pred"))
-      .filter(col("rank") <= keep)
+    val fold =
+      if (lattice && local && cfg.discretize)
+        latticeFold(instances.sparkSession, localRows, stats, catStats, cfg, width, scoreFn, idHash)
+      else None
+    val fits = fold match {
+      case Some(f) =>
+        instances.select(col(idCol).as("instance_id"), solve(f, noZ).as("expl"))
+      case None =>
+        val scored = scoreFn(perturb(instances, idCol, stats, cfg, catStats))
+        // distance in the interpretable space: binary rep → d² = Σ(1 - z)
+        // (instance row is all-ones); continuous rep → scaled euclidean
+        // to the instance
+        val dist2 =
+          if (cfg.discretize) allFeatures.map(f => lit(1.0) - col(s"${f}__z")).reduce(_ + _)
+          else (stats.map(st =>
+            pow((col(s"${st.name}__val") - col(st.name)) / bound(math.max(st.std, 1e-12)), 2)) ++
+            catFeatures.map(f => lit(1.0) - col(s"${f}__z"))).reduce(_ + _)
+        val weighted = scored.select(col(idCol).as("instance_id"), col("sample_id"),
+          array(allFeatures.map(f => col(s"${f}__z")): _*).as("z"),
+          col("pred").cast("double").as("y"),
+          sqrt(exp(-dist2 / lit(width * width))).cast("double").as("w"))
+        // The normal-equations fold runs as built-in sums: one codegen'd
+        // HashAggregate with map-side partials, whose buffer cells
+        // reproduce RidgeAggregator.reduce bit-for-bit (see ridgeBuffer).
+        val (bufSums, buffer) = ridgeBuffer(d)
+        // Continuous mode: sample 0 is the instance itself and perturb
+        // z-scores it with the instance's own expression, so each
+        // numeric z_instance entry rides the ridge aggregate as sample
+        // 0's z (a plain double each, which keeps the aggregate
+        // hash-based) instead of a join back to `instances`.
+        val nNum = if (cfg.discretize) 0 else stats.size
+        val zInst = (0 until nNum).map(j =>
+          min_by(col("z").getItem(j), col("sample_id")).as(s"__z$j"))
+        weighted.groupBy(col("instance_id"))
+          .agg(bufSums.head, bufSums.tail ++ zInst: _*)
+          .select(col("instance_id"), solve(buffer,
+            if (nNum == 0) noZ else array((0 until nNum).map(j => col(s"__z$j")): _*)).as("expl"))
+    }
+    // inline_outer, not inline: for an inner generator the optimizer
+    // infers a non-empty filter on `expl` and pushes it below the
+    // projection that solves, which then solves twice; expl always
+    // holds k >= 1 rows, so the two give the same rows. The result is
+    // instances·k rows: one partition sorted in place gives the total
+    // order without the sampling job and range exchange of a global sort.
+    fits.select(col("instance_id"), inline_outer(col("expl")))
       .coalesce(1)
       .sortWithinPartitions("instance_id", "rank")
+  }
+
+  /** Rejects duplicate ids and, in continuous mode, null numeric
+    * features in the collected instance rows (features first, the id
+    * after the stats columns).
+    */
+  private def checkInstances(rows: Array[Row], idCol: String, features: Seq[String],
+                             discretize: Boolean): Unit = {
+    val idAt = rows.head.length - 2
+    val seen = scala.collection.mutable.HashSet.empty[Any]
+    rows.foreach { r =>
+      val id = r.get(idAt) match { case b: Array[Byte] => b.toSeq; case v => v }
+      if (!seen.add(id)) throw new InvalidInstancesException(
+        s"explainTabular: instance id $id appears more than once in `$idCol`; " +
+          "each instance needs its own id")
+    }
+    if (!discretize) features.indices.find(j => rows.exists(_.isNullAt(j))).foreach { j =>
+      throw nullNumeric(features(j))
+    }
+  }
+
+  /** [[checkInstances]] for an instance set past the stats collect: one
+    * aggregate job. */
+  private def checkInstances(instances: DataFrame, idCol: String, features: Seq[String],
+                             discretize: Boolean): Unit = {
+    val nulls = if (discretize) Nil else features.map(f => count(when(col(f).isNull, 1)))
+    val r = instances.agg(count(lit(1)), count_distinct(col(idCol)) +:
+      count(when(col(idCol).isNull, 1)) +: nulls: _*).head()
+    if (r.getLong(1) + math.min(r.getLong(2), 1L) < r.getLong(0))
+      throw new InvalidInstancesException(
+        s"explainTabular: `$idCol` holds duplicate instance ids; each instance needs its own id")
+    features.indices.find(j => nulls.nonEmpty && r.getLong(3 + j) > 0).foreach { j =>
+      throw nullNumeric(features(j))
+    }
+  }
+
+  private def nullNumeric(f: String) = new InvalidInstancesException(
+    s"explainTabular: numeric feature `$f` is null in an instance; continuous sampling " +
+      "needs every numeric value (discretized mode puts a null in bin 0)")
+
+  /** The top `keep` features of one fit by |weight|, largest first under
+    * Spark's double ordering, ties by name: the order the output's
+    * `rank` numbers from 1.
+    */
+  private def rank(fit: RidgeFit, localPred: Double, names: Seq[String],
+                   keep: Int): Seq[ExplainedFeature] = {
+    val utf8 = names.map(UTF8String.fromString)
+    names.indices.sortWith { (a, b) =>
+      val c = SQLOrderingUtil.compareDoubles(math.abs(fit.coefs(b)), math.abs(fit.coefs(a)))
+      if (c != 0) c < 0 else utf8(a).compareTo(utf8(b)) < 0
+    }.take(keep).zipWithIndex.map { case (j, i) =>
+      ExplainedFeature(i + 1, names(j), fit.coefs(j), fit.intercept, fit.r2, localPred)
+    }
+  }
+
+  /** The lattice path's buffer column: scores every lattice cell and
+    * every instance once through `scoreFn`, binds them with the
+    * request's statistics in a [[Lattice]], and folds each instance
+    * row with [[LatticeFold]]. None above [[LatticeGate]], or when a
+    * score is null or two ids share an RNG key: the request then keeps
+    * the fan-out path, whose sums treat those cases as they always did.
+    *
+    * `rows` are the stats collect's: the features, then the id and its
+    * key `idHash`.
+    */
+  private def latticeFold(spark: SparkSession, rows: Array[Row], stats: Seq[FeatureStats],
+                          catStats: Seq[CatStats],
+                          cfg: LimeConfig, width: Double, scoreFn: DataFrame => DataFrame,
+                          idHash: Column): Option[Column] = {
+    val radix = stats.map(_.binMeans.size) ++ catStats.map(_.values.size)
+    val nCells = radix.foldLeft(1L)((n, r) => math.min(n * r, LatticeGate + 1L))
+    val keys = rows.map(_.getLong(radix.size + 1))
+    if (nCells > LatticeGate || keys.distinct.length < keys.length) return None
+    val cells = nCells.toInt
+    val nNum = stats.size
+    val d = radix.size
+    // scorer input: each cell's per-feature bin mean or category value
+    // (mixed-radix digits, the first feature most significant), then
+    // each instance's own values; `__cell` keys the scores
+    val cellRows = (0 until cells).map { code =>
+      val vals = new Array[Any](d)
+      var rest = code
+      for (j <- d - 1 to 0 by -1) {
+        val b = rest % radix(j)
+        vals(j) = if (j < nNum) stats(j).binMeans(b) else catStats(j - nNum).values(b)
+        rest /= radix(j)
+      }
+      Row.fromSeq(vals.toSeq ++ vals :+ code)
+    }
+    val instRows = rows.indices.map { i =>
+      val vals = (0 until d).map(rows(i).get)
+      Row.fromSeq(vals ++ vals :+ (cells + i))
+    }
+    val names = stats.map(_.name) ++ catStats.map(_.name)
+    val schema = StructType((names ++ names.map(_ + "__val")).zipWithIndex.map { case (f, j) =>
+      StructField(f, if (j % d < nNum) DoubleType else StringType)
+    } :+ StructField("__cell", IntegerType, nullable = false))
+    val scored = scoreFn(spark.createDataFrame(
+        java.util.Arrays.asList(cellRows ++ instRows: _*), schema))
+      .select(col("__cell"), col("pred").cast("double")).collect()
+    val y = new Array[Double](cells + rows.length)
+    val have = new java.util.BitSet(y.length)
+    scored.foreach { r =>
+      if (!r.isNullAt(1)) { y(r.getInt(0)) = r.getDouble(1); have.set(r.getInt(0)) }
+    }
+    if (have.cardinality() < y.length) return None
+    val order = keys.indices.sortBy(keys(_))
+    def arrayData(xs: Seq[Double]): ArrayData = UnsafeArrayData.fromPrimitiveArray(xs.toArray)
+    val bound = new Lattice(cfg.nSamples,
+      tags = (stats.map(_.name) ++ catStats.map("cat:" + _.name)).map(UTF8String.fromString).toArray,
+      edges = stats.map(st => arrayData(st.edges)).toArray,
+      cumFreqs = (stats.map(_.binCumFreqs) ++ catStats.map(_.cumFreqs)).map(arrayData).toArray,
+      catValues = catStats.map(_.values.map(UTF8String.fromString).toArray).toArray,
+      radix = radix.toArray,
+      scores = y.take(cells),
+      keys = order.map(keys).toArray,
+      instanceScores = order.map(i => y(cells + i)).toArray,
+      // the fan-out's sqrt(exp(-d² / w²)) at each integer d² = mismatches
+      weights = Array.tabulate(d + 1)(k => math.sqrt(StrictMath.exp(-k.toDouble / (width * width)))))
+    val inst = struct(names.map(col): _*)
+    Some(GraftColumnShim.column(LatticeFold(BoundValue(bound, ObjectType(classOf[Lattice])),
+      GraftColumnShim.expression(idHash), GraftColumnShim.expression(inst))))
   }
 }

@@ -1,10 +1,11 @@
 package graft.lime
 
 import org.apache.spark.sql.{Column, GraftColumnShim}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Counter-based deterministic RNG as Catalyst column expressions.
   *
@@ -32,6 +33,17 @@ object Rng {
     */
   def u01(counters: Column*): Column =
     (shiftrightunsigned(xxhash64(counters: _*), 11).cast("double") + lit(0.5)) / lit(9007199254740992.0) // 2^53
+
+  /** The scalar twin of [[u01]], for the chain `u01(seed, id, sample,
+    * tag)` that perturb draws from: `idHash` is `xxhash64(seed, id)`,
+    * which hashes the id by its column type, and the chain continues
+    * as xxhash64 does with an integer sample id and a string tag.
+    */
+  def u01(idHash: Long, sample: Int, tag: UTF8String): Double = {
+    val h = XXH64.hashUnsafeBytes(tag.getBaseObject, tag.getBaseOffset, tag.numBytes,
+      XXH64.hashInt(sample, idHash))
+    ((h >>> 11).toDouble + 0.5) / 9007199254740992.0
+  }
 
   private val A = Array(-3.969683028665376e+01, 2.209460984245205e+02, -2.759285104469687e+02,
     1.383577518672690e+02, -3.066479806614716e+01, 2.506628277459239e+00)

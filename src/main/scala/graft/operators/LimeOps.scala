@@ -33,12 +33,27 @@ object LimeOps {
     * the stats computation rather than a cache hit. */
   def clearStatsCache(): Unit = statsCache.clear()
 
-  /** Deterministic long instance id for lineitem rows. */
+  /** Deterministic long instance id for lineitem rows, the one the
+    * oracle-checked rows and their SQL use. Not a key: the fixture
+    * repeats (l_orderkey, l_linenumber) pairs.
+    */
   private def withId(df: DataFrame): DataFrame =
     df.withColumn("instance_id", col("l_orderkey") * 10 + col("l_linenumber"))
 
-  private def instances(s: SparkSession, dir: String, maxOrderkey: Int): DataFrame =
-    withId(lineitem(s, dir).filter(col("l_orderkey") <= maxOrderkey))
+  /** The explain rows' instance id: (l_orderkey, l_linenumber,
+    * l_partkey) packed into one long, (l_orderkey·10 + l_linenumber)·10⁶
+    * + l_partkey. It is a key of the l_orderkey ≤ 20 rows at sf0.001,
+    * sf0.01 and sf0.1, and l_partkey < 10⁶ up to sf5; explainTabular
+    * rejects duplicate ids, so a scale where it stops being one fails
+    * by name.
+    */
+  private[graft] def withKey(df: DataFrame): DataFrame =
+    df.withColumn("instance_id",
+      (col("l_orderkey") * 10 + col("l_linenumber")) * 1000000L + col("l_partkey"))
+
+  private def instances(s: SparkSession, dir: String, maxOrderkey: Int,
+                        id: DataFrame => DataFrame = withId): DataFrame =
+    id(lineitem(s, dir).filter(col("l_orderkey") <= maxOrderkey))
       .select((Seq("instance_id") ++ limeFeatures).map(col): _*)
 
   // ===== oracle-checked prefix =====
@@ -255,15 +270,15 @@ object LimeOps {
     "ROUND(bt0 + bt1 + bt2 + bt3 + bt4, 6) AS local_pred")
 
   def limeFitRidge(s: SparkSession, dir: String): DataFrame =
-    Lime.explainTabular(instances(s, dir, 20), "instance_id", limeFeatures,
+    Lime.explainTabular(instances(s, dir, 20, withKey), "instance_id", limeFeatures,
       LimeConfig(nSamples = 256, kFeatures = 4))
 
   def limeSelectTopk(s: SparkSession, dir: String): DataFrame =
-    Lime.explainTabular(instances(s, dir, 20), "instance_id", limeFeatures,
+    Lime.explainTabular(instances(s, dir, 20, withKey), "instance_id", limeFeatures,
       LimeConfig(nSamples = 256, kFeatures = 2))
 
   def limeExplainTabular(s: SparkSession, dir: String): DataFrame =
-    Lime.explainTabular(instances(s, dir, 10), "instance_id", limeFeatures,
+    Lime.explainTabular(instances(s, dir, 10, withKey), "instance_id", limeFeatures,
       LimeConfig(nSamples = 512, kFeatures = 4))
 
   /** Mixed numeric + categorical explanation: l_returnflag /
@@ -274,7 +289,7 @@ object LimeOps {
   def limeExplainCat(s: SparkSession, dir: String): DataFrame = {
     val numFeats = Seq("l_quantity", "l_discount")
     val catFeats = Seq("l_returnflag", "l_linestatus")
-    val inst = withId(lineitem(s, dir).filter(col("l_orderkey") <= 10))
+    val inst = withKey(lineitem(s, dir).filter(col("l_orderkey") <= 10))
       .select((Seq("instance_id") ++ numFeats ++ catFeats).map(col): _*)
     val stats = statsFor(s, dir).filter(st => numFeats.contains(st.name))
     val scoreFn: DataFrame => DataFrame = { df =>
@@ -323,7 +338,7 @@ object LimeOps {
     * drift apart.
     */
   private[graft] def spLimeExplanations(s: SparkSession, dir: String): DataFrame =
-    Lime.explainTabular(instances(s, dir, 10), "instance_id", limeFeatures,
+    Lime.explainTabular(instances(s, dir, 10, withKey), "instance_id", limeFeatures,
       LimeConfig(nSamples = 256, kFeatures = 4))
 
   /** Oracle-less companion to `sp_lime_pick` (`sp_lime_importance`):

@@ -143,8 +143,7 @@ class LimeSpec extends SparkSpec {
     import org.apache.spark.ml.feature.VectorAssembler
     val s = spark
     val feats = LimeOps.limeFeatures
-    val li = Tables.lineitem(s, dir).limit(2000)
-      .withColumn("instance_id", col("l_orderkey") * 10 + col("l_linenumber"))
+    val li = LimeOps.withKey(Tables.lineitem(s, dir).limit(2000))
       .withColumn("label", (col("l_discount") > 0.05).cast("double"))
     val asm = new VectorAssembler().setInputCols(feats.toArray).setOutputCol("features")
     val model = new LogisticRegression().setMaxIter(20).fit(asm.transform(li))
@@ -194,8 +193,7 @@ class LimeSpec extends SparkSpec {
 
   test("forward selection keeps exactly K features, dominant signal first") {
     val feats = LimeOps.limeFeatures
-    val inst = Tables.lineitem(spark, dir).filter(col("l_orderkey") <= 10)
-      .withColumn("instance_id", col("l_orderkey") * 10 + col("l_linenumber"))
+    val inst = LimeOps.withKey(Tables.lineitem(spark, dir).filter(col("l_orderkey") <= 10))
       .select((Seq("instance_id") ++ feats).map(col): _*)
     val fwd = Lime.explainTabular(inst, "instance_id", feats,
       LimeConfig(nSamples = 256, kFeatures = 2, selection = "forward_selection")).collect()
@@ -213,8 +211,7 @@ class LimeSpec extends SparkSpec {
 
   test("selection='none' keeps every feature regardless of kFeatures") {
     val feats = LimeOps.limeFeatures
-    val inst = Tables.lineitem(spark, dir).filter(col("l_orderkey") <= 5)
-      .withColumn("instance_id", col("l_orderkey") * 10 + col("l_linenumber"))
+    val inst = LimeOps.withKey(Tables.lineitem(spark, dir).filter(col("l_orderkey") <= 5))
       .select((Seq("instance_id") ++ feats).map(col): _*)
     val all = Lime.explainTabular(inst, "instance_id", feats,
       LimeConfig(nSamples = 128, kFeatures = 2, selection = "none")).collect()
@@ -226,8 +223,7 @@ class LimeSpec extends SparkSpec {
 
   test("continuous (non-discretized) mode: deterministic, strong local fit") {
     val feats = LimeOps.limeFeatures
-    val inst = Tables.lineitem(spark, dir).filter(col("l_orderkey") <= 10)
-      .withColumn("instance_id", col("l_orderkey") * 10 + col("l_linenumber"))
+    val inst = LimeOps.withKey(Tables.lineitem(spark, dir).filter(col("l_orderkey") <= 10))
       .select((Seq("instance_id") ++ feats).map(col): _*)
     val cfg = LimeConfig(nSamples = 512, kFeatures = 4, discretize = false)
     val run1 = Lime.explainTabular(inst, "instance_id", feats, cfg).collect()
@@ -251,9 +247,8 @@ class LimeSpec extends SparkSpec {
     // +1.5 signal vs the resample mixture, so l_returnflag should rank
     // in the top 2 with a positive weight. (For non-'R' instances the
     // indicator only carries the small mixture effect — no claim.)
-    val rIds = Tables.lineitem(spark, dir)
-      .filter(col("l_orderkey") <= 10 && col("l_returnflag") === "R")
-      .withColumn("instance_id", col("l_orderkey") * 10 + col("l_linenumber"))
+    val rIds = LimeOps.withKey(Tables.lineitem(spark, dir)
+      .filter(col("l_orderkey") <= 10 && col("l_returnflag") === "R"))
       .select("instance_id").collect().map(_.getLong(0)).toSet
     assert(rIds.nonEmpty, "fixture needs at least one 'R' instance")
     val byInst = e1.groupBy(_.getLong(0))
@@ -265,6 +260,55 @@ class LimeSpec extends SparkSpec {
     assert(ws.sum / ws.length > 0.01, s"mean returnflag weight ${ws.sum / ws.length}")
     assert(rfRows.count(_.getInt(1) <= 2) * 2 >= rfRows.length,
       s"ranks: ${rfRows.map(_.getInt(1)).mkString(",")}")
+  }
+
+  test("explainTabular rejects duplicate instance ids at build, by name") {
+    val feats = LimeOps.limeFeatures
+    // the registry id l_orderkey*10 + l_linenumber repeats in the fixture
+    val li = Tables.lineitem(spark, dir).filter(col("l_orderkey") <= 10)
+      .withColumn("instance_id", col("l_orderkey") * 10 + col("l_linenumber"))
+    val dup = li.select((Seq("instance_id") ++ feats).map(col): _*)
+    assert(dup.select("instance_id").distinct().count() < dup.count())
+    intercept[Lime.InvalidInstancesException](
+      Lime.explainTabular(dup, "instance_id", feats, LimeConfig(nSamples = 16)))
+    // a non-double feature keeps the stats, and so the check, distributed
+    val dupInt = li.select((Seq("instance_id", "l_linenumber") ++ feats.tail).map(col): _*)
+    intercept[Lime.InvalidInstancesException](
+      Lime.explainTabular(dupInt, "instance_id", "l_linenumber" +: feats.tail,
+        LimeConfig(nSamples = 16)))
+  }
+
+  test("continuous mode rejects a null numeric feature at build, by name") {
+    val feats = LimeOps.limeFeatures
+    val inst = LimeOps.withKey(Tables.lineitem(spark, dir).filter(col("l_orderkey") <= 5))
+      .select((Seq("instance_id") ++ feats).map(col): _*)
+    val first = inst.agg(min("instance_id")).head().getLong(0)
+    val withNull = inst.withColumn("l_quantity",
+      when(col("instance_id") === first, lit(null).cast("double")).otherwise(col("l_quantity")))
+    val e = intercept[Lime.InvalidInstancesException](
+      Lime.explainTabular(withNull, "instance_id", feats, LimeConfig(nSamples = 16, discretize = false)))
+    assert(e.getMessage.contains("l_quantity"))
+    // discretized mode still puts the null in bin 0
+    assert(Lime.explainTabular(withNull, "instance_id", feats, LimeConfig(nSamples = 16))
+      .collect().length == inst.count() * 4)
+  }
+
+  test("a null categorical value is a category of its own") {
+    val numFeats = Seq("l_quantity", "l_discount")
+    val catFeats = Seq("l_returnflag", "l_linestatus")
+    val inst = LimeOps.withKey(Tables.lineitem(spark, dir).filter(col("l_orderkey") <= 10))
+      .select((Seq("instance_id") ++ numFeats ++ catFeats).map(col): _*)
+    val first = inst.agg(min("instance_id")).head().getLong(0)
+    val withNull = inst.withColumn("l_returnflag",
+      when(col("instance_id") === first, lit(null).cast("string")).otherwise(col("l_returnflag")))
+    val cs = Lime.fitCatStats(withNull, Seq("l_returnflag")).head
+    assert(cs.values == Seq(null, "A", "N", "R"), s"${cs.values}")
+    for (discretize <- Seq(true, false)) {
+      val rows = Lime.explainTabular(withNull, "instance_id", numFeats,
+        LimeConfig(nSamples = 64, discretize = discretize), None, catFeats).collect()
+      assert(rows.length == inst.count() * 4)
+      assert(rows.forall(r => !r.getDouble(3).isNaN && !r.getDouble(6).isNaN))
+    }
   }
 
   test("explainText: deterministic, word weights align with hash-sign scorer") {

@@ -14,6 +14,9 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
 
 /** Mechanical pin of the scale-bearing plan shapes (SURVEY §2's
   * "scale notes" column, made falsifiable): for a set of flagship
@@ -350,44 +353,75 @@ class PlanShapeSpec extends SparkSpec {
     LimeMllib.scoreFn(model, feats)
   }
 
-  private def explainRequest(discretize: Boolean): DataFrame = {
-    val inst = Tables.lineitem(spark, dir).filter(col("l_orderkey") <= 10)
-      .withColumn("instance_id", col("l_orderkey") * 10 + col("l_linenumber"))
+  private def explainInstances: DataFrame =
+    LimeOps.withKey(Tables.lineitem(spark, dir).filter(col("l_orderkey") <= 10))
       .select((Seq("instance_id") ++ LimeOps.limeFeatures).map(col): _*)
+
+  private def explainRequest(discretize: Boolean, inst: DataFrame = explainInstances): DataFrame =
     Lime.explainTabular(inst, "instance_id", LimeOps.limeFeatures,
       LimeConfig(nSamples = 64, discretize = discretize), Some(mllibScorer))
+
+  private def initialPlan(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.initialPlan
+    case p => p
+  }
+
+  /** The ids of the jobs `body` runs, from a listener. */
+  private def jobsOf(body: => Unit): Seq[Int] = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.jobId)
+    }
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; ListenerBusDrain(sc) } finally sc.removeSparkListener(listener)
+    jobs.asScala.toSeq
+  }
+
+  test("discretized explainTabular: no exchange, 0 jobs to build, at most 1 to run") {
+    spark.catalog.clearCache()
+    val plan = initialPlan(explainRequest(discretize = true))
+    assert(plan.collect { case e: ShuffleExchangeLike => e }.isEmpty &&
+      plan.collect { case e: BroadcastExchangeLike => e }.isEmpty, s"exchange in\n$plan")
+    // held in memory, the instances' stats collect runs no job either, so
+    // building the request is the lattice scoring plus driver work
+    val local = spark.createDataFrame(explainInstances.collect().toSeq.asJava,
+      explainInstances.schema)
+    var df: DataFrame = null
+    val built = jobsOf { df = explainRequest(discretize = true, local) }
+    assert(built.isEmpty, s"building the request ran jobs $built")
+    val ran = jobsOf(df.collect())
+    assert(ran.size <= 1, s"the request ran jobs $ran")
+  }
+
+  test("continuous explainTabular with an MLlib scorer: one hash shuffle, no range sort, no broadcast") {
+    spark.catalog.clearCache()
+    val df = explainRequest(discretize = false)
+    val plan = initialPlan(df)
+    val shuffles = plan.collect { case e: ShuffleExchangeLike => e }
+    assert(shuffles.size == 1, s"want one shuffle, the ridge aggregate's\n$plan")
+    shuffles.head.outputPartitioning match {
+      case h: HashPartitioning =>
+        assert(h.expressions.map { case a: AttributeReference => a.name; case e => e.sql } ==
+          Seq("instance_id"), s"ridge shuffle keyed on ${h.expressions}\n$plan")
+      case p => fail(s"ridge shuffle partitioned by $p, not a hash on instance_id\n$plan")
+    }
+    assert(plan.collect { case e: BroadcastExchangeLike => e }.isEmpty, s"broadcast in\n$plan")
+    assert(!plan.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]),
+      s"range partitioning in\n$plan")
+    // a projection each for the instance frame's two, the perturb
+    // layers, the scorer's swap and restore, the kernel weight, the
+    // solve-and-rank and its explode; the rest are MLlib's own transforms
+    val projects = df.queryExecution.analyzed.collect { case p: Project => p }.size
+    assert(projects <= 18, s"$projects Projects in the analyzed plan")
   }
 
   for (discretize <- Seq(true, false)) {
     val mode = if (discretize) "discretized" else "continuous"
 
-    test(s"$mode explainTabular with an MLlib scorer: one hash shuffle, no range sort, no broadcast") {
-      spark.catalog.clearCache()
-      val df = explainRequest(discretize)
-      val plan: SparkPlan = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.initialPlan
-        case p => p
-      }
-      val shuffles = plan.collect { case e: ShuffleExchangeLike => e }
-      assert(shuffles.size == 1, s"want one shuffle, the ridge aggregate's\n$plan")
-      shuffles.head.outputPartitioning match {
-        case h: HashPartitioning =>
-          assert(h.expressions.map { case a: AttributeReference => a.name; case e => e.sql } ==
-            Seq("instance_id"), s"ridge shuffle keyed on ${h.expressions}\n$plan")
-        case p => fail(s"ridge shuffle partitioned by $p, not a hash on instance_id\n$plan")
-      }
-      assert(plan.collect { case e: BroadcastExchangeLike => e }.isEmpty, s"broadcast in\n$plan")
-      assert(!plan.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]),
-        s"range partitioning in\n$plan")
-      // a projection each for the instance frame's two, the perturb
-      // layers, the scorer's swap and restore, the kernel weight, the
-      // solve and the ranking; the rest are MLlib's own transforms
-      val projects = df.queryExecution.analyzed.collect { case p: Project => p }.size
-      assert(projects <= 18, s"$projects Projects in the analyzed plan")
-    }
-
     test(s"$mode explainTabular evaluates the ridge solve once per instance") {
-      // posexplode's inferred `size(coefs) > 0` filter would sit below
+      // an inner generator's inferred non-empty filter would sit below
       // the projection that solves, and solve a second time
       val solves = explainRequest(discretize).queryExecution.optimizedPlan.flatMap(
         _.expressions.flatMap(_.collect {
