@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, ObjectType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import scala.reflect.runtime.universe.TypeTag
 
 /** A value fixed for one query but not for the code that evaluates it:
   * non-foldable, so ConstantFolding cannot turn it back into a literal,
@@ -80,6 +81,31 @@ private[lime] case class BinIndex(left: Expression, right: Expression) extends B
     copy(left = l, right = r)
 }
 
+/** A request's per-row ridge fold: regenerates one row's samples from
+  * the counter RNG, scores and weighs them, and returns the row's ridge
+  * buffer, summed in sample order ([[NormalEquations]]).
+  */
+private[lime] trait SampleFold extends Serializable {
+  def fold(idHash: Long, row: AnyRef): ArrayData
+}
+
+/** [[SampleFold.fold]] as one expression over (the bound fold, the row's
+  * `xxhash64(seed, id)`, its input).
+  */
+private[lime] case class FoldSamples(first: Expression, second: Expression, third: Expression)
+    extends TernaryExpression {
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+
+  override def nullSafeEval(f: Any, idHash: Any, row: Any): Any =
+    f.asInstanceOf[SampleFold].fold(idHash.asInstanceOf[Long], row.asInstanceOf[AnyRef])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (f, h, r) => s"$f.fold($h, $r)")
+
+  override protected def withNewChildrenInternal(
+      a: Expression, b: Expression, c: Expression): FoldSamples = copy(a, b, c)
+}
+
 /** One discretized request's lattice, everything its per-instance fold
   * reads that is fixed for the request: the features' RNG tags, bin
   * edges and cumulative draw frequencies, the category values, the
@@ -101,20 +127,16 @@ private[lime] final class Lattice(
     scores: Array[Double],
     keys: Array[Long],
     instanceScores: Array[Double],
-    weights: Array[Double]) extends Serializable {
+    weights: Array[Double]) extends SampleFold {
 
-  /** The ridge buffer (the layout of [[Lime.ridgeBuffer]]) of the
-    * instance whose id hashes to `idHash` and whose feature values are
-    * `inst` (numeric as doubles, then categorical as strings).
-    *
-    * Sample s draws feature j's bin or value from
-    * `Rng.u01(idHash, s, tags(j))` as perturb does, so its z vector and
-    * lattice cell are perturb's; sample 0 is the instance. Each sum
-    * starts from 0.0 and adds the samples in order, then is added to
-    * 0.0 once more: what Spark's `sum` gives for one map-side partial,
-    * so each cell equals the fan-out path's bit for bit.
+  /** The ridge buffer of the instance whose id hashes to `idHash` and
+    * whose feature values are the struct `row` (numeric as doubles, then
+    * categorical as strings). Sample s draws feature j's bin or value
+    * from `Rng.u01(idHash, s, tags(j))` as perturb does, so its z vector
+    * and lattice cell are perturb's; sample 0 is the instance.
     */
-  def fold(idHash: Long, inst: InternalRow): ArrayData = {
+  def fold(idHash: Long, row: AnyRef): ArrayData = {
+    val inst = row.asInstanceOf[InternalRow]
     val nNum = edges.length
     val d = radix.length
     val m = d + 1
@@ -130,9 +152,7 @@ private[lime] final class Lattice(
       "explainTabular: an instance row is not among the rows the request was built from")
     val x = new Array[Double](m)
     x(0) = 1.0
-    // G's upper triangle, then b, then Σw, Σw·y, Σw·y·y
-    val buf = new Array[Double](m * m + m + 3)
-    val bOff = m * m
+    val buf = NormalEquations.zero(m)
     var s = 0
     while (s < nSamples) {
       var y = 0.0
@@ -153,53 +173,66 @@ private[lime] final class Lattice(
         }
         y = scores(code)
       }
-      val w = weights(miss)
-      var r = 0
-      while (r < m) {
-        var c = r
-        while (c < m) { buf(r * m + c) += (w * x(r)) * x(c); c += 1 }
-        buf(bOff + r) += (w * x(r)) * y
-        r += 1
-      }
-      buf(bOff + m) += w
-      buf(bOff + m + 1) += w * y
-      buf(bOff + m + 2) += w * y * y
+      NormalEquations.add(buf, x, y, weights(miss))
       s += 1
     }
-    var r = 0
-    while (r < m) {
-      var c = r
-      while (c < m) { buf(r * m + c) = 0.0 + buf(r * m + c); buf(c * m + r) = buf(r * m + c); c += 1 }
-      r += 1
-    }
-    var i = bOff
-    while (i < buf.length) { buf(i) = 0.0 + buf(i); i += 1 }
-    UnsafeArrayData.fromPrimitiveArray(buf)
+    NormalEquations.close(buf, m)
   }
 }
 
-/** [[Lattice.fold]] as one expression over (the bound lattice, the
-  * instance's `xxhash64(seed, id)`, its feature values as a struct).
+/** A text document's or image's ridge buffer under the stand-in black
+  * box of [[LimeText]] and [[LimeImage]]. The row is a struct (tags,
+  * c_kept, c_masked, n) over its d' features: the words (null for
+  * superpixels 0 … d' − 1), each feature's score term when kept and when
+  * masked, and the score's normalizing count. Sample s > 0 keeps feature
+  * j when `Rng.u01(idHash, s, tag_j) < 0.5`, scores
+  * 1 / (1 + exp(−Σ_j term_j / √n)) and weighs sqrt(exp(−dist² / width²))
+  * at the cosine distance (1 − √(kept / d'))·100, each step the Java
+  * operation Catalyst compiles it to, in Catalyst's order: the same bits
+  * as those formulas written as Column expressions.
   */
-private[lime] case class LatticeFold(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+private[lime] final class MaskFold(nSamples: Int, width: Double) extends SampleFold {
 
-  override def nullSafeEval(lattice: Any, idHash: Any, inst: Any): Any =
-    lattice.asInstanceOf[Lattice].fold(idHash.asInstanceOf[Long], inst.asInstanceOf[InternalRow])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (l, h, r) => s"$l.fold($h, $r)")
-
-  override protected def withNewChildrenInternal(
-      a: Expression, b: Expression, c: Expression): LatticeFold = copy(a, b, c)
+  def fold(idHash: Long, row: AnyRef): ArrayData = {
+    val r = row.asInstanceOf[InternalRow]
+    val kept = r.getArray(1).toDoubleArray()
+    val masked = r.getArray(2).toDoubleArray()
+    val n = r.getInt(3).toDouble
+    val d = kept.length
+    val words = if (r.isNullAt(0)) null else Array.tabulate(d)(r.getArray(0).getUTF8String)
+    val x = new Array[Double](d + 1)
+    x(0) = 1.0
+    val buf = NormalEquations.zero(d + 1)
+    var s = 0
+    while (s < nSamples) {
+      var lin = 0.0
+      var nKept = 0.0
+      var j = 0
+      while (j < d) {
+        val keep =
+          if (s == 0) 1.0
+          else if ((if (words == null) Rng.u01(idHash, s, j) else Rng.u01(idHash, s, words(j))) < 0.5) 1.0
+          else 0.0
+        x(j + 1) = keep
+        lin += keep * kept(j) + (1.0 - keep) * masked(j)
+        nKept += keep
+        j += 1
+      }
+      val y = 1.0 / (1.0 + StrictMath.exp(-lin / Math.sqrt(n)))
+      val dist = (1.0 - Math.sqrt(nKept / d)) * 100.0
+      NormalEquations.add(buf, x, y, Math.sqrt(StrictMath.exp(-dist * dist / (width * width))))
+      s += 1
+    }
+    NormalEquations.close(buf, d + 1)
+  }
 }
 
-/** One row of an explanation: a feature's rank, name and weight, with
-  * its instance's fit. [[Lime.explainTabular]] returns these rows.
+/** One row of an explanation: a feature's rank, name (a string, or an
+  * image's superpixel) and weight, with its row's fit. Every explain
+  * path's solve returns these.
   */
-private[lime] case class ExplainedFeature(rank: Int, feature: String, weight: Double,
-                            intercept: Double, r2: Double, local_pred: Double)
+private[lime] case class ExplainedFeature[N](rank: Int, feature: N, weight: Double,
+                                             intercept: Double, r2: Double, local_pred: Double)
 
 /** Distributed LIME for tabular data (SURVEY.md §2.7).
   *
@@ -223,22 +256,24 @@ private[lime] case class ExplainedFeature(rank: Int, feature: String, weight: Do
   *    scored once, as one local relation the optimizer evaluates on
   *    the driver without a job, and bound in a [[Lattice]]. Each
   *    instance row then regenerates its N samples' draws in one
-  *    expression ([[LatticeFold]]), looks up each score by the cell's
+  *    expression ([[FoldSamples]]), looks up each score by the cell's
   *    mixed-radix code, and folds the kernel-weighted normal equations
-  *    in sample order, bit-identical to the fan-out's sums. The request
-  *    is a narrow projection over the instance rows: no ×N rows, no
-  *    exchange, one job. This relies on the `scoreFn` contract: a
-  *    deterministic row-wise function of the `f__val` columns.
+  *    in sample order ([[NormalEquations]]), bit-identical to the
+  *    fan-out's sums. The request is a narrow projection over the
+  *    instance rows: no ×N rows, no exchange, one job. This relies on
+  *    the `scoreFn` contract: a deterministic row-wise function of the
+  *    `f__val` columns.
   *  - Fan-out (above the gate, and continuous mode). One narrow stage
   *    perturbs, scores and weights instances × N rows, and one shuffle
   *    on instance_id aggregates the ridge buffers with map-side
   *    partials, so shuffled bytes are O(instances·d'²), not
   *    O(instances·N). A request runs as two jobs.
   *
-  * Both paths end alike: one call per instance row solves the ridge
-  * system and ranks the features, and the instances·k rows come back
-  * as a single partition sorted by (instance_id, rank) — the total
-  * order, with no range exchange.
+  * Text and image requests take the lattice path's shape, their
+  * stand-in black boxes scored in-row ([[MaskFold]]). Every path ends
+  * alike: one call per row solves the ridge system and ranks the
+  * features, and the output comes back as a single partition sorted by
+  * (id, rank) — the total order, with no range exchange.
   */
 object Lime {
 
@@ -514,24 +549,6 @@ object Lime {
     }
   }
 
-  /** Exact quantiles at `ps` per feature via a value-count cumulative
-    * distribution instead of the `percentile` aggregate: Spark's
-    * Percentile builds one value→count OpenHashMap per partition and
-    * merges them generically (the dominant cost of the stats pass at
-    * bench scale), while this shape is one codegen'd melt + hash
-    * aggregate + tiny per-feature window. Order statistics and the
-    * interpolation `(hi−pos)·v_lo + (pos−lo)·v_hi` replicate
-    * Percentile.getPercentile bit-for-bit, so results are unchanged
-    * (and still match DuckDB quantile_cont after round6).
-    *
-    * Scale shape: the shuffle carries one row per DISTINCT value per
-    * feature (not per input row), and the per-feature window sees only
-    * that distinct-value list.
-    */
-  private[graft] def exactQuartiles(df: DataFrame,
-                                    features: Seq[String]): Seq[Vector[Double]] =
-    exactQuantiles(df, features, Seq(0.25, 0.5, 0.75))
-
   /** Sketch-bracket exact quantiles — three shuffle-light jobs, no
     * single-partition window (the value-count CDF below serializes
     * each feature's distinct values through ONE window partition,
@@ -671,7 +688,9 @@ object Lime {
   }
 
   /** Full value-count CDF exact quantiles (fallback path; see
-    * exactQuantiles for why it is no longer the default).
+    * exactQuantiles for why it is no longer the default). Order
+    * statistics and the interpolation `(hi−pos)·v_lo + (pos−lo)·v_hi`
+    * replicate Percentile.getPercentile bit-for-bit.
     */
   private[graft] def exactQuantilesCdf(df: DataFrame, features: Seq[String],
                                        ps: Seq[Double]): Seq[Vector[Double]] = {
@@ -1071,18 +1090,17 @@ object Lime {
     val agg = new RidgeAggregator(d, cfg.lambda,
       if (fwd) cfg.kFeatures else Int.MaxValue, fwd)
     val keep = if (cfg.selection == "none") d else cfg.kFeatures
-    // Both paths end in one call per instance row that solves the
-    // O(d'³) ridge system from the buffer and ranks the features.
     // In continuous mode the instance's interpretable vector is its
     // z-scored values (categorical entries 1.0), not all-ones, so the
     // aggregator's localPred (= beta-sum) becomes intercept + beta . z.
+    val names = allFeatures.map(UTF8String.fromString)
     val solve = udf { (buf: Seq[Double], zInst: Seq[Double]) =>
       val fit = agg.finish(buf.toArray)
       val localPred =
         if (cfg.discretize) fit.localPred
         else fit.intercept + fit.coefs.zip(zInst ++ catFeatures.map(_ => 1.0))
           .foldLeft(0.0) { case (acc, (c, z)) => acc + c * z }
-      rank(fit, localPred, allFeatures, keep)
+      rank(fit, localPred, allFeatures, keep, (a, b) => names(a).compareTo(names(b)) < 0)
     }.withName("lime_ridge_solve")
     val noZ = typedLit(Seq.empty[Double])
 
@@ -1124,15 +1142,7 @@ object Lime {
           .select(col("instance_id"), solve(buffer,
             if (nNum == 0) noZ else array((0 until nNum).map(j => col(s"__z$j")): _*)).as("expl"))
     }
-    // inline_outer, not inline: for an inner generator the optimizer
-    // infers a non-empty filter on `expl` and pushes it below the
-    // projection that solves, which then solves twice; expl always
-    // holds k >= 1 rows, so the two give the same rows. The result is
-    // instances·k rows: one partition sorted in place gives the total
-    // order without the sampling job and range exchange of a global sort.
-    fits.select(col("instance_id"), inline_outer(col("expl")))
-      .coalesce(1)
-      .sortWithinPartitions("instance_id", "rank")
+    explanations(fits, "instance_id")
   }
 
   /** Rejects duplicate ids and, in continuous mode, null numeric
@@ -1174,26 +1184,60 @@ object Lime {
       "needs every numeric value (discretized mode puts a null in bin 0)")
 
   /** The top `keep` features of one fit by |weight|, largest first under
-    * Spark's double ordering, ties by name: the order the output's
-    * `rank` numbers from 1.
+    * Spark's double ordering, ties by `tieBefore` on feature indices
+    * (by index unless given): the order the output's `rank` numbers
+    * from 1.
     */
-  private def rank(fit: RidgeFit, localPred: Double, names: Seq[String],
-                   keep: Int): Seq[ExplainedFeature] = {
-    val utf8 = names.map(UTF8String.fromString)
-    names.indices.sortWith { (a, b) =>
+  private def rank[N](fit: RidgeFit, localPred: Double, names: Int => N, keep: Int,
+                      tieBefore: (Int, Int) => Boolean = _ < _): Seq[ExplainedFeature[N]] =
+    fit.coefs.indices.sortWith { (a, b) =>
       val c = SQLOrderingUtil.compareDoubles(math.abs(fit.coefs(b)), math.abs(fit.coefs(a)))
-      if (c != 0) c < 0 else utf8(a).compareTo(utf8(b)) < 0
+      if (c != 0) c < 0 else tieBefore(a, b)
     }.take(keep).zipWithIndex.map { case (j, i) =>
       ExplainedFeature(i + 1, names(j), fit.coefs(j), fit.intercept, fit.r2, localPred)
     }
+
+  /** The tail of every explain path: one row per feature of each row's
+    * ranked `expl`, sorted by (id, rank) in one partition. inline_outer,
+    * not inline: for an inner generator the optimizer infers a non-empty
+    * filter on `expl` and pushes it below the projection that solves,
+    * which then solves twice. The outer form emits a row of nulls for an
+    * empty `expl`, so every solve keeps at least one feature.
+    */
+  private def explanations(fits: DataFrame, id: String): DataFrame =
+    fits.select(col(id), inline_outer(col("expl")))
+      .coalesce(1)
+      .sortWithinPartitions(id, "rank")
+
+  /** `fold` as the buffer column of rows keyed by `idHash`. */
+  private def foldSamples(fold: SampleFold, idHash: Column, row: Column): Column =
+    GraftColumnShim.column(FoldSamples(BoundValue(fold, ObjectType(fold.getClass)),
+      GraftColumnShim.expression(idHash), GraftColumnShim.expression(row)))
+
+  /** A text or image request over `rows`, one per document or image
+    * with its `doc_id`: each row's [[MaskFold]] buffer over the struct
+    * `mask`, solved and ranked with ties by index (its `names` are
+    * sorted), each feature named by `names` in the column `nameCol`.
+    */
+  private[lime] def explainMasks[N: TypeTag](rows: DataFrame, mask: Column, names: Column,
+                                             nameCol: String, cfg: LimeConfig): DataFrame = {
+    require(cfg.kFeatures >= 1, s"kFeatures must be >= 1, got ${cfg.kFeatures}")
+    val buffer = foldSamples(new MaskFold(cfg.nSamples, cfg.kernelWidth.getOrElse(25.0)),
+      xxhash64(lit(cfg.seed), col("doc_id")), mask)
+    val solve = udf { (buf: Seq[Double], names: Seq[N]) =>
+      val fit = new RidgeAggregator(names.size, cfg.lambda).finish(buf.toArray)
+      rank(fit, fit.localPred, names, cfg.kFeatures)
+    }.withName("lime_ridge_solve")
+    explanations(rows.select(col("doc_id").cast("long").as("doc_id"), solve(buffer, names).as("expl")),
+      "doc_id").withColumnRenamed("feature", nameCol)
   }
 
   /** The lattice path's buffer column: scores every lattice cell and
     * every instance once through `scoreFn`, binds them with the
     * request's statistics in a [[Lattice]], and folds each instance
-    * row with [[LatticeFold]]. None above [[LatticeGate]], or when a
-    * score is null or two ids share an RNG key: the request then keeps
-    * the fan-out path, whose sums treat those cases as they always did.
+    * row with it. None above [[LatticeGate]], or when a score is null or
+    * two ids share an RNG key: the request then keeps the fan-out path,
+    * whose sums treat those cases as they always did.
     *
     * `rows` are the stats collect's: the features, then the id and its
     * key `idHash`.
@@ -1252,8 +1296,6 @@ object Lime {
       instanceScores = order.map(i => y(cells + i)).toArray,
       // the fan-out's sqrt(exp(-d² / w²)) at each integer d² = mismatches
       weights = Array.tabulate(d + 1)(k => math.sqrt(StrictMath.exp(-k.toDouble / (width * width)))))
-    val inst = struct(names.map(col): _*)
-    Some(GraftColumnShim.column(LatticeFold(BoundValue(bound, ObjectType(classOf[Lattice])),
-      GraftColumnShim.expression(idHash), GraftColumnShim.expression(inst))))
+    Some(foldSamples(bound, idHash, struct(names.map(col): _*)))
   }
 }

@@ -1,7 +1,6 @@
 package graft.lime
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** LIME image explanations (Ribeiro et al. 2016 §3; public reference
@@ -29,14 +28,15 @@ import org.apache.spark.sql.functions._
   * over hash-signed pixel sums. Masking superpixel s replaces its
   * pixels with s's own mean (the public `hide_color=None` rule), so a
   * sample's score folds to Σ_s [keep_s ? c_s : m_s] with c_s / m_s
-  * precomputed per (image, superpixel) — the samples × superpixels
-  * fan-out never touches pixels again (O(images · S · nSamples) rows,
-  * pixel count only enters the one decode pass).
+  * precomputed per image in the one decode pass — pixels are never
+  * touched again.
   *
-  * Everything is deterministic: Lehmer-hash Bernoulli masks (Rng.u01,
-  * the lime_perturb idiom), driver-free hash signs, per-image ridge
-  * via the exact RidgeAggregator. No oracle (no portable SQL RNG) —
-  * LimeSpec grades determinism, schema, and planted-signal recovery.
+  * Everything is deterministic: counter-hash Bernoulli masks (Rng.u01
+  * over (seed, image, sample, superpixel)) and driver-free hash signs.
+  * Each image row folds its samples in-row ([[MaskFold]], as LimeText
+  * does): no samples × superpixels rows, no shuffle. No oracle (no
+  * portable SQL RNG) — LimeSpec grades determinism, schema,
+  * planted-signal recovery and a local RidgeAggregator recompute.
   */
 object LimeImage {
 
@@ -311,11 +311,11 @@ object LimeImage {
 
     // ONE decode pass: pixels → per-superpixel kept/masked
     // contributions (c_s = Σ sign·x over s's flat elements; m_s =
-    // Σ_channel mean_{s,c} · Σ sign over s's channel-c elements).
-    // Pixel count never appears downstream. The segmentation runs
-    // in-row on the decoded values (grid by default; slic() for real
-    // content-adaptive superpixels — both deterministic).
-    val perSpix = images.select(col("doc_id").cast("long"), col("payload"))
+    // Σ_channel mean_{s,c} · Σ sign over s's channel-c elements), one
+    // row per image. Pixel count never appears downstream. The
+    // segmentation runs in-row on the decoded values (grid by default;
+    // slic() for real content-adaptive superpixels — both deterministic).
+    val perImage = images.select(col("doc_id").cast("long"), col("payload"))
       .as[(Long, Array[Byte])]
       .flatMap { case (id, payload) =>
         val x = decode(payload)
@@ -329,81 +329,35 @@ object LimeImage {
         // a zero-byte payload contributes no segments and no rows —
         // the pre-seam behavior (nSeg was 0); without the guard
         // labels.max would throw a message-free empty.max
-        if (nPixels == 0) Seq.empty
-        else {
-        val labels = segment(x, side, channels)
-        val nSeg = labels.max + 1
-        val cs = new Array[Double](nSeg)
-        val sumSign = Array.ofDim[Double](nSeg, channels)
-        val sumX = Array.ofDim[Double](nSeg, channels)
-        val cnt = Array.ofDim[Int](nSeg, channels)
-        for (f <- x.indices) {
-          val p = f / channels; val c = f % channels
-          val s = labels(p)
-          cs(s) += pixelSign(f) * x(f)
-          sumSign(s)(c) += pixelSign(f)
-          sumX(s)(c) += x(f)
-          cnt(s)(c) += 1
-        }
-        (0 until nSeg).map { s =>
-          val masked = (0 until channels)
-            .map(c => sumX(s)(c) / cnt(s)(c) * sumSign(s)(c)).sum
-          (id, s, cs(s), masked, nSeg, x.length)
-        }
+        if (nPixels == 0) None
+        else Some {
+          val labels = segment(x, side, channels)
+          val nSeg = labels.max + 1
+          val cs = new Array[Double](nSeg)
+          val sumSign = Array.ofDim[Double](nSeg, channels)
+          val sumX = Array.ofDim[Double](nSeg, channels)
+          val cnt = Array.ofDim[Int](nSeg, channels)
+          for (f <- x.indices) {
+            val p = f / channels; val c = f % channels
+            val s = labels(p)
+            cs(s) += pixelSign(f) * x(f)
+            sumSign(s)(c) += pixelSign(f)
+            sumX(s)(c) += x(f)
+            cnt(s)(c) += 1
+          }
+          val masked = Array.tabulate(nSeg) { s =>
+            (0 until channels).map(c => sumX(s)(c) / cnt(s)(c) * sumSign(s)(c)).sum
+          }
+          (id, cs, masked, x.length)
         }
       }
       // n_vals is the FLAT element count (pixels × channels) — named
-      // so because the sigmoid normalization below is over flat
-      // elements, not pixels; for grayscale the two coincide
-      .toDF("doc_id", "spix", "c_kept", "c_masked", "n_seg", "n_vals")
-
-    // samples × superpixels fan-out; sample 0 is the unperturbed image
-    val sw = perSpix
-      .withColumn("sample_id", explode(sequence(lit(0), lit(cfg.nSamples - 1))))
-      .withColumn("keep",
-        when(col("sample_id") === 0, lit(1.0))
-          .otherwise((Rng.u01(lit(cfg.seed), col("doc_id"), col("sample_id"),
-            col("spix")) < 0.5).cast("double")))
-
-    val persample = sw.groupBy("doc_id", "sample_id", "n_seg", "n_vals")
-      .agg(
-        sum(col("keep") * col("c_kept") +
-          (lit(1.0) - col("keep")) * col("c_masked")).as("score_lin"),
-        sum(col("keep")).as("n_kept"),
-        array_sort(collect_list(struct(col("spix"), col("keep")))).as("zs"))
-      .withColumn("pred",
-        lit(1.0) / (lit(1.0) + exp(-col("score_lin") / sqrt(col("n_vals").cast("double")))))
-      // binary-mask cosine distance ×100 against kernel width 25 —
-      // the LimeText rule (itself the public implementation's)
-      .withColumn("dist",
-        (lit(1.0) - sqrt(col("n_kept") / col("n_seg").cast("double"))) * 100.0)
-      .withColumn("kweight", Lime.kernel(col("dist"), cfg.kernelWidth.getOrElse(25.0)))
-
-    val fits = persample
-      .select(col("doc_id"), expr("transform(zs, s -> s.keep)").as("z"),
-        col("pred").cast("double").as("y"), col("kweight").cast("double").as("w"),
-        col("n_seg"))
-      .as[(Long, Array[Double], Double, Double, Int)]
-      .groupByKey(_._1)
-      .flatMapGroups { (docId, it) =>
-        val rows = it.toArray
-        val d = rows.head._5
-        val agg = new RidgeAggregator(d, cfg.lambda)
-        var buf = agg.zero
-        rows.foreach { case (_, z, y, w, _) => buf = agg.reduce(buf, RidgeSample(z, y, w)) }
-        val fit = agg.finish(buf)
-        Iterator((docId, fit.coefs, fit.intercept, fit.r2, fit.localPred))
-      }
-      .toDF("doc_id", "coefs", "intercept", "r2", "local_pred")
-
-    val w = Window.partitionBy("doc_id").orderBy(abs(col("weight")).desc, col("spix"))
-    fits
-      .select(col("doc_id"), col("intercept"), col("r2"), col("local_pred"),
-        posexplode(col("coefs")))
-      .withColumnRenamed("col", "weight").withColumnRenamed("pos", "spix")
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= cfg.kFeatures)
-      .select("doc_id", "rank", "spix", "weight", "intercept", "r2", "local_pred")
-      .orderBy("doc_id", "rank")
+      // so because the sigmoid normalization is over flat elements, not
+      // pixels; for grayscale the two coincide
+      .toDF("doc_id", "c_kept", "c_masked", "n_vals")
+    // superpixels are tagged by index: the fold's row has no words
+    Lime.explainMasks[Int](perImage,
+      struct(lit(null).cast("array<string>"), col("c_kept"), col("c_masked"), col("n_vals")),
+      sequence(lit(0), size(col("c_kept")) - 1), "spix", cfg)
   }
 }

@@ -1,16 +1,17 @@
 package graft.lime
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** LIME for text (SURVEY.md §2.7 lime_explain_text).
   *
   * Public-algorithm semantics (marcotcr/lime lime_text.py): the
   * interpretable representation is presence/absence of each distinct
   * word; perturbed samples delete random word subsets; distance is
-  * cosine between the binary bag vectors (sample 0 = full document);
-  * kernel width 25; weighted ridge + top-K tail shared with tabular.
+  * cosine between the binary bag vectors (sample 0 = full document),
+  * ×100 as the public implementation scales it against its kernel width
+  * of 25 (unscaled, the kernel is near constant and locality is lost);
+  * weighted ridge + top-K tail shared with tabular.
   *
   * Word deletion here is an independent 0.5 keep-probability per
   * (doc, sample, word) from the counter-based RNG — a documented
@@ -19,7 +20,13 @@ import org.apache.spark.sql.expressions.Window
   *
   * The black box is a deterministic hash-sign logistic over kept
   * words — a stand-in scorer (no pretrained text model ships in this
-  * environment), swappable for any DataFrame => DataFrame scorer.
+  * environment): a kept word adds its sign, +1 when `xxhash64(word)` is
+  * even and −1 otherwise, and a deleted one adds nothing.
+  *
+  * Each document row regenerates its N samples' keep masks, scores,
+  * weighs and folds them in sample order in one expression
+  * ([[MaskFold]]): a request is one narrow projection over the
+  * documents, with no samples × words rows and no shuffle.
   */
 object LimeText {
 
@@ -31,69 +38,19 @@ object LimeText {
         array_sort(array_distinct(split(lower(trim(col(textCol))), " "))).as("vocab"))
       .withColumn("vsize", size(col("vocab")))
 
+  /** Output: (doc_id, rank, word, weight, intercept, r2, local_pred),
+    * kFeatures rows per document with a non-null text (fewer when it has
+    * fewer distinct words).
+    */
   def explainText(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       cfg: LimeConfig = LimeConfig(nSamples = 256, kFeatures = 10, kernelWidth = Some(25.0))): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-
-    val v = vocab(docs, idCol, textCol)
-    // fan out samples × words in one narrow stage
-    val samples = v
-      .withColumn("sample_id", explode(sequence(lit(0), lit(cfg.nSamples - 1))))
-    val sw = samples
-      .select(col("doc_id"), col("vsize"), col("sample_id"), posexplode(col("vocab")))
-      .withColumnRenamed("col", "word").withColumnRenamed("pos", "wpos")
-      .withColumn("keep",
-        when(col("sample_id") === 0, lit(1.0))
-          .otherwise((Rng.u01(lit(cfg.seed), col("doc_id"), col("sample_id"), col("word")) < 0.5).cast("double")))
-      // deterministic hash-sign word score for the stand-in black box
-      .withColumn("wsign",
-        when(pmod(xxhash64(col("word")), lit(2)) === 0, lit(1.0)).otherwise(lit(-1.0)))
-
-    // per (doc, sample): prediction, distance, and the binary z vector
-    val persample = sw.groupBy("doc_id", "sample_id", "vsize")
-      .agg(
-        sum(col("keep") * col("wsign")).as("score_lin"),
-        sum(col("keep")).as("n_kept"),
-        array_sort(collect_list(struct(col("wpos"), col("keep")))).as("zs"))
-      .withColumn("pred", lit(1.0) / (lit(1.0) + exp(-col("score_lin") / sqrt(col("vsize").cast("double")))))
-      // cosine(mask, ones) = sqrt(Σz/|V|); distance = (1 - cosine)·100 —
-      // the ×100 matches the public implementation, which scales cosine
-      // distance by 100 against its default kernel width of 25 (without
-      // it the kernel is ~constant and locality weighting is lost)
-      .withColumn("dist", (lit(1.0) - sqrt(col("n_kept") / col("vsize").cast("double"))) * 100.0)
-      .withColumn("kweight", Lime.kernel(col("dist"), cfg.kernelWidth.getOrElse(25.0)))
-
-    val fits = persample
-      .select(col("doc_id"), expr("transform(zs, s -> s.keep)").as("z"),
-        col("pred").cast("double").as("y"), col("kweight").cast("double").as("w"),
-        col("vsize"))
-      .as[(Long, Array[Double], Double, Double, Int)]
-      .groupByKey(_._1)
-      .flatMapGroups { (docId, it) =>
-        val rows = it.toArray
-        val d = rows.head._5
-        val agg = new RidgeAggregator(d, cfg.lambda)
-        var buf = agg.zero
-        rows.foreach { case (_, z, y, w, _) => buf = agg.reduce(buf, RidgeSample(z, y, w)) }
-        val fit = agg.finish(buf)
-        Iterator((docId, fit.coefs, fit.intercept, fit.r2, fit.localPred))
-      }
-      .toDF("doc_id", "coefs", "intercept", "r2", "local_pred")
-
-    val exploded = fits
-      .join(v.select("doc_id", "vocab"), "doc_id")
-      .select(col("doc_id"), col("intercept"), col("r2"), col("local_pred"),
-        posexplode(col("coefs")), col("vocab"))
-      .withColumn("word", element_at(col("vocab"), col("pos") + 1))
-      .withColumnRenamed("col", "weight")
-    val w = Window.partitionBy("doc_id").orderBy(abs(col("weight")).desc, col("word"))
-    exploded.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= cfg.kFeatures)
-      .select("doc_id", "rank", "word", "weight", "intercept", "r2", "local_pred")
-      .orderBy("doc_id", "rank")
+    val sign = transform(col("vocab"),
+      w => when(pmod(xxhash64(w), lit(2)) === 0, lit(1.0)).otherwise(lit(-1.0)))
+    Lime.explainMasks[String](vocab(docs, idCol, textCol).filter(col("vocab").isNotNull),
+      struct(col("vocab"), sign, array_repeat(lit(0.0), col("vsize")), col("vsize")),
+      col("vocab"), "word", cfg)
   }
 }

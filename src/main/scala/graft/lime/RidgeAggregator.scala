@@ -1,17 +1,18 @@
 package graft.lime
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** Per-instance weighted-ridge surrogate fit (SURVEY.md §2.7
   * lime_fit_ridge).
   *
   * Accumulates the normal equations XᵀWX and XᵀWy over one instance's
   * perturbation samples (X includes an unpenalized intercept column),
-  * then solves (XᵀWX + λI')β = XᵀWy by Cholesky in finish. The buffer
-  * is O(d'²) doubles, so map-side partial aggregation keeps the
-  * shuffle at O(instances · d'²) — the ×N sample fan-out never crosses
-  * a shuffle boundary (§7.5).
+  * then solves (XᵀWX + λI')β = XᵀWy by Cholesky in finish. The explain
+  * paths build the same buffer in the plan (the fan-out's built-in sums,
+  * [[Lime.ridgeBuffer]], or a per-row fold, [[NormalEquations]]) and
+  * call `finish` on it; `zero`/`reduce`/`merge` are the reference
+  * those buffers are pinned against.
   *
   * Matches the public LIME default surrogate: sklearn
   * Ridge(alpha=1.0, fit_intercept=True) over binary features with
@@ -31,7 +32,7 @@ case class RidgeFit(coefs: Seq[Double], intercept: Double, r2: Double, localPred
   */
 class RidgeAggregator(val d: Int, val lambda: Double,
                       val kSelect: Int = Int.MaxValue, val forward: Boolean = false)
-    extends Aggregator[RidgeSample, Array[Double], RidgeFit] {
+    extends Serializable {
 
   private val m = d + 1 // intercept column at index 0
   // buffer layout: [G: m*m | b: m | sw, swy, swyy]
@@ -39,9 +40,9 @@ class RidgeAggregator(val d: Int, val lambda: Double,
   private val bOff = m * m
   private val sOff = m * m + m
 
-  override def zero: Array[Double] = new Array[Double](m * m + m + 3)
+  def zero: Array[Double] = new Array[Double](m * m + m + 3)
 
-  override def reduce(buf: Array[Double], s: RidgeSample): Array[Double] = {
+  def reduce(buf: Array[Double], s: RidgeSample): Array[Double] = {
     val x = new Array[Double](m)
     x(0) = 1.0
     var i = 0
@@ -68,7 +69,7 @@ class RidgeAggregator(val d: Int, val lambda: Double,
     buf
   }
 
-  override def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
+  def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
     var i = 0
     while (i < a.length) { a(i) += b(i); i += 1 }
     a
@@ -100,7 +101,7 @@ class RidgeAggregator(val d: Int, val lambda: Double,
     (beta, buf(sOff + 2) - 2.0 * btB + btGb)
   }
 
-  override def finish(buf: Array[Double]): RidgeFit = {
+  def finish(buf: Array[Double]): RidgeFit = {
     val selected: Array[Int] =
       if (!forward || kSelect >= d) Array.range(0, m)
       else {
@@ -191,8 +192,48 @@ class RidgeAggregator(val d: Int, val lambda: Double,
     }
     new Array[Double](m) // degenerate: all-zero fit
   }
+}
 
-  override def bufferEncoder: Encoder[Array[Double]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
-  override def outputEncoder: Encoder[RidgeFit] = Encoders.product[RidgeFit]
+/** One row's normal equations folded in sample order into
+  * [[RidgeAggregator]]'s buffer layout [G: m·m | b: m | Σw, Σw·y, Σw·y·y]
+  * (m = d' + 1, x₀ = 1): every [[SampleFold]]'s inner loop, so it
+  * allocates nothing.
+  */
+private[lime] object NormalEquations {
+
+  def zero(m: Int): Array[Double] = new Array[Double](m * m + m + 3)
+
+  /** Adds sample (x, y, w) to G's upper triangle, b and the three sums,
+    * each term in `RidgeAggregator.reduce`'s multiply order.
+    */
+  def add(buf: Array[Double], x: Array[Double], y: Double, w: Double): Unit = {
+    val m = x.length
+    val bOff = m * m
+    var r = 0
+    while (r < m) {
+      val wr = w * x(r)
+      var c = r
+      while (c < m) { buf(r * m + c) += wr * x(c); c += 1 }
+      buf(bOff + r) += wr * y
+      r += 1
+    }
+    buf(bOff + m) += w
+    buf(bOff + m + 1) += w * y
+    buf(bOff + m + 2) += w * y * y
+  }
+
+  /** Mirrors G's upper triangle into its lower one, which `reduce` fills
+    * with the same terms: the result is its buffer bit for bit, and the
+    * fan-out's (Spark's `sum` adds a partial to 0.0 once more, a no-op on
+    * a sum that started at +0.0, which is never −0.0).
+    */
+  def close(buf: Array[Double], m: Int): ArrayData = {
+    var r = 0
+    while (r < m) {
+      var c = r + 1
+      while (c < m) { buf(c * m + r) = buf(r * m + c); c += 1 }
+      r += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(buf)
+  }
 }

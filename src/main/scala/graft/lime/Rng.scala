@@ -39,11 +39,15 @@ object Rng {
     * which hashes the id by its column type, and the chain continues
     * as xxhash64 does with an integer sample id and a string tag.
     */
-  def u01(idHash: Long, sample: Int, tag: UTF8String): Double = {
-    val h = XXH64.hashUnsafeBytes(tag.getBaseObject, tag.getBaseOffset, tag.numBytes,
-      XXH64.hashInt(sample, idHash))
-    ((h >>> 11).toDouble + 0.5) / 9007199254740992.0
-  }
+  def u01(idHash: Long, sample: Int, tag: UTF8String): Double =
+    unit(XXH64.hashUnsafeBytes(tag.getBaseObject, tag.getBaseOffset, tag.numBytes,
+      XXH64.hashInt(sample, idHash)))
+
+  /** [[u01]]'s scalar twin with an integer tag (an image's superpixel). */
+  def u01(idHash: Long, sample: Int, tag: Int): Double =
+    unit(XXH64.hashInt(tag, XXH64.hashInt(sample, idHash)))
+
+  private def unit(h: Long): Double = ((h >>> 11).toDouble + 0.5) / 9007199254740992.0
 
   private val A = Array(-3.969683028665376e+01, 2.209460984245205e+02, -2.759285104469687e+02,
     1.383577518672690e+02, -3.066479806614716e+01, 2.506628277459239e+00)

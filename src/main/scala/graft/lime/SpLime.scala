@@ -13,13 +13,13 @@ import org.apache.spark.sql.functions._
   */
 object SpLime {
 
-  /** @param explanations output of Lime.explainTabular / explainText:
-    *   must contain (instance_id, feature-ish column, weight)
+  /** @param explanations (instance_id, `featureCol`, weight) rows, as
+    *   Lime.explainTabular returns them; explainText's output fits once
+    *   its doc_id is named instance_id and `featureCol` = "word"
+    * @param wGate the local/distributed switch — private-default 1M
+    *   rows; the bench's artifact_scale_splime row passes 0 to time the
+    *   retained distributed rounds
     * @return picked (round, instance_id, marginal_gain)
-    */
-  /** wGate: the local/distributed switch — private-default 1M rows;
-    * the bench's artifact_scale_splime row passes 0 to time the
-    * retained distributed rounds.
     */
   def pick(explanations: DataFrame, b: Int,
            featureCol: String = "feature",

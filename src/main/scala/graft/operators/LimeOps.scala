@@ -33,27 +33,22 @@ object LimeOps {
     * the stats computation rather than a cache hit. */
   def clearStatsCache(): Unit = statsCache.clear()
 
-  /** Deterministic long instance id for lineitem rows, the one the
-    * oracle-checked rows and their SQL use. Not a key: the fixture
-    * repeats (l_orderkey, l_linenumber) pairs.
-    */
-  private def withId(df: DataFrame): DataFrame =
-    df.withColumn("instance_id", col("l_orderkey") * 10 + col("l_linenumber"))
-
-  /** The explain rows' instance id: (l_orderkey, l_linenumber,
+  /** The LIME rows' lineitem instance id: (l_orderkey, l_linenumber,
     * l_partkey) packed into one long, (l_orderkey·10 + l_linenumber)·10⁶
-    * + l_partkey. It is a key of the l_orderkey ≤ 20 rows at sf0.001,
-    * sf0.01 and sf0.1, and l_partkey < 10⁶ up to sf5; explainTabular
-    * rejects duplicate ids, so a scale where it stops being one fails
-    * by name.
+    * + l_partkey, which the oracle SQL builds as `idSql`. It is a key of
+    * the l_orderkey ≤ 20 rows at sf0.001, sf0.01 and sf0.1 (the fixture
+    * repeats (l_orderkey, l_linenumber) pairs, so the id needs
+    * l_partkey), and l_partkey < 10⁶ up to sf5; explainTabular rejects
+    * duplicate ids, so a scale where it stops being one fails by name.
     */
   private[graft] def withKey(df: DataFrame): DataFrame =
     df.withColumn("instance_id",
       (col("l_orderkey") * 10 + col("l_linenumber")) * 1000000L + col("l_partkey"))
 
-  private def instances(s: SparkSession, dir: String, maxOrderkey: Int,
-                        id: DataFrame => DataFrame = withId): DataFrame =
-    id(lineitem(s, dir).filter(col("l_orderkey") <= maxOrderkey))
+  private val idSql = "(l_orderkey * 10 + l_linenumber) * 1000000 + l_partkey AS instance_id"
+
+  private def instances(s: SparkSession, dir: String, maxOrderkey: Int): DataFrame =
+    withKey(lineitem(s, dir).filter(col("l_orderkey") <= maxOrderkey))
       .select((Seq("instance_id") ++ limeFeatures).map(col): _*)
 
   // ===== oracle-checked prefix =====
@@ -72,7 +67,7 @@ object LimeOps {
   def limeDiscretize(s: SparkSession, dir: String): DataFrame = {
     val li = lineitem(s, dir)
     val stats = statsFor(s, dir)
-    stats.foldLeft(withId(li)) { (df, st) =>
+    stats.foldLeft(withKey(li)) { (df, st) =>
       df.withColumn(s"${st.name}_bin", Lime.binOf(col(st.name), st.edges))
     }
       .select((Seq("instance_id") ++ limeFeatures.map(_ + "_bin")).map(col): _*)
@@ -87,7 +82,7 @@ object LimeOps {
     // only the edges are needed — skip fitStats' mean/std/bin passes
     val edges = Lime.exactQuantiles(li, Seq("l_extendedprice"),
       (1 until 10).map(_.toDouble / 10)).head.map(Lime.round6)
-    withId(li)
+    withKey(li)
       .withColumn("l_extendedprice_bin", Lime.binOf(col("l_extendedprice"), edges))
       .select("instance_id", "l_extendedprice_bin")
       .orderBy("instance_id")
@@ -96,7 +91,7 @@ object LimeOps {
   def limeScore(s: SparkSession, dir: String): DataFrame = {
     val li = lineitem(s, dir)
     val stats = statsFor(s, dir)
-    withId(li)
+    withKey(li)
       .withColumn("pred", round(Lime.logisticScore(stats, limeFeatures.map(col)), 6))
       .select("instance_id", "pred")
       .orderBy("instance_id")
@@ -270,15 +265,15 @@ object LimeOps {
     "ROUND(bt0 + bt1 + bt2 + bt3 + bt4, 6) AS local_pred")
 
   def limeFitRidge(s: SparkSession, dir: String): DataFrame =
-    Lime.explainTabular(instances(s, dir, 20, withKey), "instance_id", limeFeatures,
+    Lime.explainTabular(instances(s, dir, 20), "instance_id", limeFeatures,
       LimeConfig(nSamples = 256, kFeatures = 4))
 
   def limeSelectTopk(s: SparkSession, dir: String): DataFrame =
-    Lime.explainTabular(instances(s, dir, 20, withKey), "instance_id", limeFeatures,
+    Lime.explainTabular(instances(s, dir, 20), "instance_id", limeFeatures,
       LimeConfig(nSamples = 256, kFeatures = 2))
 
   def limeExplainTabular(s: SparkSession, dir: String): DataFrame =
-    Lime.explainTabular(instances(s, dir, 10, withKey), "instance_id", limeFeatures,
+    Lime.explainTabular(instances(s, dir, 10), "instance_id", limeFeatures,
       LimeConfig(nSamples = 512, kFeatures = 4))
 
   /** Mixed numeric + categorical explanation: l_returnflag /
@@ -338,7 +333,7 @@ object LimeOps {
     * drift apart.
     */
   private[graft] def spLimeExplanations(s: SparkSession, dir: String): DataFrame =
-    Lime.explainTabular(instances(s, dir, 10, withKey), "instance_id", limeFeatures,
+    Lime.explainTabular(instances(s, dir, 10), "instance_id", limeFeatures,
       LimeConfig(nSamples = 256, kFeatures = 4))
 
   /** Oracle-less companion to `sp_lime_pick` (`sp_lime_importance`):
@@ -432,7 +427,7 @@ object LimeOps {
          |  CASE WHEN sample_id = 0 THEN $f ELSE $bm END AS ${f}__val""".stripMargin
     }.mkString(",\n")
     s"""WITH inst AS (
-       |  SELECT l_orderkey * 10 + l_linenumber AS instance_id,
+       |  SELECT $idSql,
        |    ${feats.mkString(", ")}
        |  FROM lineitem WHERE l_orderkey <= $maxOrderkey
        |),
@@ -569,14 +564,14 @@ object LimeOps {
   val oracle: Map[String, String] = Map(
     "lime_stats_fit" -> s"SELECT * FROM (\n$statsCte\n) ORDER BY feature",
     "lime_discretize" ->
-      """WITH q AS (
+      s"""WITH q AS (
         |  SELECT ROUND(quantile_cont(l_quantity, 0.25), 6) AS qq1, ROUND(quantile_cont(l_quantity, 0.5), 6) AS qq2, ROUND(quantile_cont(l_quantity, 0.75), 6) AS qq3,
         |         ROUND(quantile_cont(l_extendedprice, 0.25), 6) AS eq1, ROUND(quantile_cont(l_extendedprice, 0.5), 6) AS eq2, ROUND(quantile_cont(l_extendedprice, 0.75), 6) AS eq3,
         |         ROUND(quantile_cont(l_discount, 0.25), 6) AS dq1, ROUND(quantile_cont(l_discount, 0.5), 6) AS dq2, ROUND(quantile_cont(l_discount, 0.75), 6) AS dq3,
         |         ROUND(quantile_cont(l_tax, 0.25), 6) AS tq1, ROUND(quantile_cont(l_tax, 0.5), 6) AS tq2, ROUND(quantile_cont(l_tax, 0.75), 6) AS tq3
         |  FROM lineitem
         |)
-        |SELECT l_orderkey * 10 + l_linenumber AS instance_id,
+        |SELECT $idSql,
         |  CASE WHEN l_quantity > qq3 THEN 3 WHEN l_quantity > qq2 THEN 2 WHEN l_quantity > qq1 THEN 1 ELSE 0 END AS l_quantity_bin,
         |  CASE WHEN l_extendedprice > eq3 THEN 3 WHEN l_extendedprice > eq2 THEN 2 WHEN l_extendedprice > eq1 THEN 1 ELSE 0 END AS l_extendedprice_bin,
         |  CASE WHEN l_discount > dq3 THEN 3 WHEN l_discount > dq2 THEN 2 WHEN l_discount > dq1 THEN 1 ELSE 0 END AS l_discount_bin,
@@ -588,7 +583,7 @@ object LimeOps {
       val chain = (9 to 1 by -1).map(i =>
         s"WHEN l_extendedprice > e$i THEN $i").mkString(" ")
       s"""WITH q AS (SELECT $edges FROM lineitem)
-         |SELECT l_orderkey * 10 + l_linenumber AS instance_id,
+         |SELECT $idSql,
          |  CASE $chain ELSE 0 END AS l_extendedprice_bin
          |FROM lineitem, q ORDER BY instance_id""".stripMargin
     },
@@ -596,7 +591,7 @@ object LimeOps {
     "lime_perturb" -> perturbOracleSql(8, 2),
     "lime_score" ->
       s"""WITH st AS ($scoreStatsBody)
-         |SELECT l_orderkey * 10 + l_linenumber AS instance_id,
+         |SELECT $idSql,
          |  ROUND(1.0 / (1.0 + EXP(-(${scoreLin("l_quantity", "l_extendedprice", "l_discount", "l_tax")}))), 6) AS pred
          |FROM lineitem, st ORDER BY instance_id""".stripMargin,
     // Full RNG + kernel + logistic replay closing over the moment

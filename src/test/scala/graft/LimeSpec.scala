@@ -5,6 +5,7 @@ import graft.lime.Lime.LimeConfig
 import graft.operators.LimeOps
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.unsafe.types.UTF8String
 
 class LimeSpec extends SparkSpec {
 
@@ -316,6 +317,154 @@ class LimeSpec extends SparkSpec {
     val e2 = LimeOps.limeExplainText(spark, dir).collect()
     assert(e1.length == e2.length && e1.nonEmpty)
     e1.zip(e2).foreach { case (a, b) => assert(a.getString(2) == b.getString(2)) }
+    // the stand-in adds +1 for each kept word whose xxhash64 is even and
+    // -1 for the others, so each returned word's weight has that sign
+    val s = spark
+    import s.implicits._
+    val sign = e1.map(_.getString(2)).distinct.toSeq.toDF("word")
+      .select(col("word"), when(pmod(xxhash64(col("word")), lit(2)) === 0, 1.0).otherwise(-1.0))
+      .as[(String, Double)].collect().toMap
+    e1.foreach { r =>
+      assert(math.signum(r.getDouble(3)) == sign(r.getString(2)),
+        s"doc ${r.getLong(0)}: word '${r.getString(2)}' has weight ${r.getDouble(3)}, " +
+          s"hash sign ${sign(r.getString(2))}")
+    }
+  }
+
+  test("explainText and explainImage on degenerate inputs: null, empty and all-space text, an empty image") {
+    val s = spark
+    import s.implicits._
+    // a null text has no words and gives no rows; an empty or all-space
+    // text splits to the one word "", and a run of spaces adds "" as a
+    // word. The expected values were computed with the ridge terms
+    // summed in another order, hence the tolerance.
+    val docs = Seq[(Long, String)]((1L, null), (2L, ""), (3L, "   "), (4L, "b a  b"), (5L, "x"))
+      .toDF("doc_id", "text")
+    val text = LimeText.explainText(docs, "doc_id", "text",
+      LimeConfig(nSamples = 64, kFeatures = 10, kernelWidth = Some(25.0))).collect()
+    def near(got: Double, want: Double) = math.abs(got - want) <= 1e-9 * math.abs(want)
+    val wantText = Seq(
+      (2L, 1, "", 0.0023015022632041533, 0.7286893851237656, 0.019822159409544682, 0.7309908873869697),
+      (3L, 1, "", 0.002528980492435602, 0.7284480181216845, 0.021770586647602896, 0.73097699861412),
+      (4L, 1, "", 0.11717789428969083, 0.5112456511338715, 0.9798898299320178, 0.6297043283719879),
+      (4L, 2, "a", 0.11608904449787709, 0.5112456511338715, 0.9798898299320178, 0.6297043283719879),
+      (4L, 3, "b", -0.1148082615494516, 0.5112456511338715, 0.9798898299320178, 0.6297043283719879),
+      (5L, 1, "x", -0.002453210876840807, 0.27147129508673706, 0.021121809823387183, 0.26901808420989626))
+    assert(text.length == wantText.length, text.mkString("\n"))
+    text.zip(wantText).foreach { case (r, (id, rank, word, w, b, r2, lp)) =>
+      assert(r.getLong(0) == id && r.getInt(1) == rank && r.getString(2) == word, s"$r")
+      assert(near(r.getDouble(3), w) && near(r.getDouble(4), b) && near(r.getDouble(5), r2) &&
+        near(r.getDouble(6), lp), s"$r")
+    }
+    // a zero-byte payload decodes to no pixels and gives no rows
+    val bb = java.nio.ByteBuffer.allocate(4 * 16).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    (0 until 16).foreach(i => bb.putFloat(i - 7.5f))
+    val images = Seq((1L, Array.emptyByteArray), (2L, bb.array())).toDF("doc_id", "payload")
+    assert(LimeImage.explainImage(images.filter(col("doc_id") === 1)).collect().isEmpty)
+    val image = LimeImage.explainImage(images).collect()
+    val wantImage = Seq(
+      (2L, 1, 0, -0.048945766827911234), (2L, 2, 1, 4.7951944440033096e-4),
+      (2L, 3, 3, -3.645364319372958e-4), (2L, 4, 2, -1.4589553099871745e-5))
+    assert(image.length == wantImage.length, image.mkString("\n"))
+    image.zip(wantImage).foreach { case (r, (id, rank, spix, w)) =>
+      assert(r.getLong(0) == id && r.getInt(1) == rank && r.getInt(2) == spix, s"$r")
+      assert(near(r.getDouble(3), w) && near(r.getDouble(4), 0.07282420289176901) &&
+        near(r.getDouble(5), 0.994640188135374) && near(r.getDouble(6), 0.02397882952322094), s"$r")
+    }
+  }
+
+  /** Local recompute of text and image explanations: each row's
+    * samples regenerated with the scalar RNG twins, scored by the
+    * stand-in and weighed by the kernel, reduced with RidgeAggregator in
+    * sample order and ranked by |weight|, ties by feature index. Returns
+    * (id, rank, feature, weight, intercept, r2, local_pred) rows. */
+  private def maskReference(id: Long, idHash: Long, tags: Seq[Any], kept: Seq[Double],
+                            masked: Seq[Double], n: Int, cfg: LimeConfig): Seq[Seq[Any]] = {
+    val d = kept.length
+    val width = cfg.kernelWidth.get
+    val agg = new RidgeAggregator(d, cfg.lambda)
+    var buf = agg.zero
+    for (smp <- 0 until cfg.nSamples) {
+      val z = tags.map {
+        case _ if smp == 0 => 1.0
+        case w: String => if (Rng.u01(idHash, smp, UTF8String.fromString(w)) < 0.5) 1.0 else 0.0
+        case j: Int => if (Rng.u01(idHash, smp, j) < 0.5) 1.0 else 0.0
+      }.toArray
+      var lin = 0.0
+      z.indices.foreach(j => lin += z(j) * kept(j) + (1.0 - z(j)) * masked(j))
+      val y = 1.0 / (1.0 + StrictMath.exp(-lin / math.sqrt(n.toDouble)))
+      val dist = (1.0 - math.sqrt(z.sum / d)) * 100.0
+      buf = agg.reduce(buf, RidgeSample(z, y, math.sqrt(StrictMath.exp(-dist * dist / (width * width)))))
+    }
+    val fit = agg.finish(buf)
+    (0 until d).sortBy(j => (-math.abs(fit.coefs(j)), j)).take(cfg.kFeatures).zipWithIndex.map {
+      case (j, i) => Seq(id, i + 1, tags(j), fit.coefs(j), fit.intercept, fit.r2, fit.localPred)
+    }
+  }
+
+  private def rowBits(rows: Seq[Seq[Any]]): Seq[Seq[Any]] = rows.map(_.map {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case x => x
+  })
+
+  test("explainText and explainImage equal a local RidgeAggregator recompute bit for bit, on any partitioning") {
+    val s = spark
+    import s.implicits._
+    // the integer-tag RNG twin the image fold draws with
+    val u = s.range(0, 300).select(xxhash64(lit(9L), col("id")), col("id").cast("int"),
+        Rng.u01(lit(9L), col("id"), (col("id") % 7).cast("int"), (col("id") % 16).cast("int")))
+      .as[(Long, Int, Double)].collect()
+    u.foreach { case (h, i, want) =>
+      assert(java.lang.Double.doubleToRawLongBits(Rng.u01(h, i % 7, i % 16)) ==
+        java.lang.Double.doubleToRawLongBits(want), s"id $i")
+    }
+
+    val textCfg = LimeConfig(nSamples = 64, kFeatures = 10, kernelWidth = Some(25.0))
+    val docs = Tables.documents(spark, dir).filter(col("doc_id") < 5).select("doc_id", "text")
+    val vocab = LimeText.vocab(docs, "doc_id", "text")
+      .select(col("doc_id"), col("vocab"), xxhash64(lit(textCfg.seed), col("doc_id")),
+        transform(col("vocab"), w => when(pmod(xxhash64(w), lit(2)) === 0, 1.0).otherwise(-1.0)))
+      .as[(Long, Seq[String], Long, Seq[Double])].collect()
+    val textWant = vocab.sortBy(_._1).toSeq.flatMap { case (id, words, h, sign) =>
+      maskReference(id, h, words, sign, sign.map(_ => 0.0), words.size, textCfg)
+    }
+    assert(textWant.nonEmpty)
+
+    val imageCfg = LimeConfig(nSamples = 128, kFeatures = 5, kernelWidth = Some(25.0))
+    val images = Tables.embeddings(spark, dir).filter(col("vec_id") < 5)
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].collect()
+      .map { case (id, v) =>
+        val bb = java.nio.ByteBuffer.allocate(4 * v.length).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        v.foreach(bb.putFloat)
+        (id, bb.array())
+      }.sortBy(_._1).toSeq
+    val imageWant = images.flatMap { case (id, payload) =>
+      val x = LimeImage.f32le(payload)
+      val labels = LimeImage.gridSegment(x, math.sqrt(x.length.toDouble).toInt, 1)
+      val nSeg = labels.max + 1
+      val kept = (0 until nSeg).map(sg => x.indices.filter(labels(_) == sg)
+        .foldLeft(0.0)((acc, p) => acc + LimeImage.pixelSign(p) * x(p)))
+      val masked = (0 until nSeg).map { sg =>
+        val ps = x.indices.filter(labels(_) == sg)
+        ps.foldLeft(0.0)((acc, p) => acc + x(p)) / ps.size *
+          ps.foldLeft(0.0)((acc, p) => acc + LimeImage.pixelSign(p))
+      }
+      val h = s.range(1).select(xxhash64(lit(imageCfg.seed), lit(id))).as[Long].head()
+      maskReference(id, h, 0 until nSeg, kept, masked, x.length, imageCfg)
+    }
+
+    for (parts <- Seq(1, 5); aqe <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      try {
+        val text = LimeText.explainText(
+          spark.createDataFrame(docs.rdd.repartition(parts), docs.schema), "doc_id", "text", textCfg)
+        assert(rowBits(text.collect().toSeq.map(_.toSeq)) == rowBits(textWant),
+          s"text, $parts partitions, AQE $aqe")
+        val image = LimeImage.explainImage(images.toDF("doc_id", "payload").repartition(parts), imageCfg)
+        assert(rowBits(image.collect().toSeq.map(_.toSeq)) == rowBits(imageWant),
+          s"image, $parts partitions, AQE $aqe")
+      } finally spark.conf.unset("spark.sql.adaptive.enabled")
+    }
   }
 
   test("explainImage: deterministic, recovers the dominant superpixel") {
@@ -537,8 +686,7 @@ class LimeSpec extends SparkSpec {
     // SAME (corpus-stats) perturb stream up to the quantization error —
     // the hash-trust bridge for lime_fit_ridge
     val li = graft.Tables.lineitem(spark, dir)
-    val inst = li.filter(col("l_orderkey") <= 2)
-      .withColumn("instance_id", col("l_orderkey") * 10 + col("l_linenumber"))
+    val inst = LimeOps.withKey(li.filter(col("l_orderkey") <= 2))
       .select((Seq("instance_id") ++ LimeOps.limeFeatures).map(col): _*)
     val moments = LimeOps.limeRidgeMoments(spark, dir).collect()
       .groupBy(_.getLong(0))

@@ -395,6 +395,12 @@ class PlanShapeSpec extends SparkSpec {
     assert(ran.size <= 1, s"the request ran jobs $ran")
   }
 
+  test("text and image explain requests: no exchange") {
+    // each document or image row folds its own samples in-row
+    pin("lime_explain_text", 0, 0)
+    pin("lime_image", 0, 0)
+  }
+
   test("continuous explainTabular with an MLlib scorer: one hash shuffle, no range sort, no broadcast") {
     spark.catalog.clearCache()
     val df = explainRequest(discretize = false)
