@@ -243,11 +243,15 @@ private[lime] case class ExplainedFeature[N](rank: Int, feature: N, weight: Doub
   * instance", proximity kernel sqrt(exp(-d²/w²)) with default width
   * 0.75·√d', weighted Ridge(α=1) surrogate, top-K features by |coef|.
   *
-  * Distribution strategy. Statistics come from one collect of the
-  * instance rows (O(features) per instance, fitted on the driver) and
-  * enter the plan as run-time values. The RNG is counter-based (see
-  * Rng), so every draw is a pure function of (seed, instance, sample,
-  * feature), independent of partition layout. Then one of two paths:
+  * Distribution strategy. Every request collects its instance set once
+  * (O(features) per instance; numeric features cast to double,
+  * categorical ones to string) and fits its statistics on the driver
+  * ([[fitStatsLocal]], [[fitCatStatsLocal]]); they enter the plan as
+  * run-time values. A null numeric value falls in bin 0 and counts
+  * toward its frequency, as in the corpus fit; a null category is a
+  * value of its own. The RNG is counter-based (see Rng), so every draw
+  * is a pure function of (seed, instance, sample, feature), independent
+  * of partition layout. Then one of two paths:
   *
   *  - Lattice (discretized mode, at most [[LatticeGate]] cells, i.e.
   *    ∏ bins × ∏ category counts). Every non-instance sample's scorer
@@ -341,37 +345,38 @@ object Lime {
   // products of scale-6 values overflow), and 19+19 stays at the 38 cap
   private val D6 = "decimal(19,6)"
 
-  /** Deterministic mean/std/bin-edges in one pass + bin stats in a
-    * second pass. Sums go through DECIMAL so partition order can't
-    * change results (SURVEY.md §7.4).
+  /** Deterministic mean/std, exact bin edges and per-bin stats. Sums
+    * go through DECIMAL so partition order can't change results
+    * (SURVEY.md §7.4).
     *
     * `nBins` = 4 gives the public quartile discretizer (default);
     * 10 gives the decile discretizer (`discretizer='decile'`).
+    *
+    * @param smallInput the instance set of an explain request (tens to
+    *   thousands of rows): collected once, numeric features cast to
+    *   double, and fitted on the driver ([[fitStatsLocal]]), with the
+    *   same values as the distributed fit. False for corpus-scale
+    *   tables, fitted by aggregate jobs over a cached projection.
     */
-  /** @param smallInput single-job `percentile` aggregate for the bin
-    *   edges instead of the distributed value-count CDF — same values
-    *   (identical interpolation formula), fewer jobs. Right for
-    *   explain-time instance sets (tens-to-thousands of rows); wrong
-    *   for corpus-level fits where the Percentile map-aggregate's
-    *   per-partition value→count maps dominate.
-    */
-  def fitStats(dfIn: DataFrame, features: Seq[String], nBins: Int = 4,
+  def fitStats(df: DataFrame, features: Seq[String], nBins: Int = 4,
                smallInput: Boolean = false): Seq[FeatureStats] = {
     require(nBins >= 2, s"nBins must be >= 2, got $nBins")
-    // The corpus fit runs FOUR whole-table aggregates (moments +
-    // sketch, below-counts, bracket census, bin stats); cache the
-    // pruned feature projection across them so passes 2-4 read the
-    // in-memory columns instead of re-scanning and re-decoding the
-    // source (features × 8 bytes per row — ~20 MB at bench scale).
-    // Values are unchanged: same rows, same expressions. The tiny
-    // explain-time fits (smallInput) skip the cache churn.
-    val df = if (smallInput) dfIn else dfIn.select(features.map(col): _*).cache()
-    try fitStatsInner(df, features, nBins, smallInput)
-    finally if (!smallInput) df.unpersist(blocking = false)
+    if (smallInput)
+      fitStatsLocal(df.select(features.map(col(_).cast("double")): _*).collect(), features, nBins)
+    else {
+      // The corpus fit runs FOUR whole-table aggregates (moments,
+      // sketch, below-counts + bracket census, bin stats); cache the
+      // pruned feature projection across them so passes 2-4 read the
+      // in-memory columns instead of re-scanning and re-decoding the
+      // source (features × 8 bytes per row — ~20 MB at bench scale).
+      // Values are unchanged: same rows, same expressions.
+      val cached = df.select(features.map(col): _*).cache()
+      try fitStatsInner(cached, features, nBins)
+      finally cached.unpersist(blocking = false)
+    }
   }
 
-  private def fitStatsInner(df: DataFrame, features: Seq[String], nBins: Int,
-                            smallInput: Boolean): Seq[FeatureStats] = {
+  private def fitStatsInner(df: DataFrame, features: Seq[String], nBins: Int): Seq[FeatureStats] = {
     def r6(v: Double): Double = round6(v)
     val ps = (1 until nBins).map(_.toDouble / nBins)
     // Exact mean/std in primitive LONG micro-units instead of decimal
@@ -404,35 +409,23 @@ object Lime {
         count(col(f)).as(s"${f}__nx"),
         count(m).as(s"${f}__nm"))
     } ++ Seq(count(lit(1)).as("__n"))
-    // smallInput: ONE fused aggregate job exactly as before (moments +
-    // exact percentile). Corpus path: the sketch's TypedImperativeAggregate
-    // would force the whole fused aggregate into interpreted
-    // ObjectHashAggregate — measured 1.32 s fused vs 0.62 s (codegen
-    // moments) + 0.63 s (sketch) SEPARATE at bench scale — so the two
-    // run as independent overlapped jobs instead (guide §2.6), with the
-    // shared projection cache populated once up front.
+    // The sketch's TypedImperativeAggregate would force a fused
+    // aggregate into interpreted ObjectHashAggregate — measured 1.32 s
+    // fused vs 0.62 s (codegen moments) + 0.63 s (sketch) SEPARATE at
+    // bench scale — so the two run as independent overlapped jobs
+    // (guide §2.6), with the shared projection cache populated once up
+    // front.
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val (r1, rSketch) =
-      if (smallInput) {
-        val pass1 = momentCols ++ features.map { f =>
-          // functions.percentile (exact), col(f)-based — no SQL-string
-          // interpolation, so quoted/exotic column names keep working
-          percentile(col(f), array(ps.map(lit): _*)).as(s"${f}__q")
-        }
-        val r = df.agg(pass1.head, pass1.tail: _*).head()
-        (r, r)
-      } else {
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        df.count() // build the cache once, not racily twice
-        val momentsF = Future(df.agg(momentCols.head, momentCols.tail: _*).head())
-        // bracket job (A): approx sketch + the non-null counts the
-        // read-off needs (exactQuantilesFromSketch reads `${f}__nx`)
-        val sketchCols = features.map(f => count(col(f)).as(s"${f}__nx")) ++
-          quantileSketchCols(features, ps)
-        val rs = df.agg(sketchCols.head, sketchCols.tail: _*).head()
-        (Await.result(momentsF, Duration.Inf), rs)
-      }
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    df.count() // build the cache once, not racily twice
+    val momentsF = Future(df.agg(momentCols.head, momentCols.tail: _*).head())
+    // bracket job (A): approx sketch + the non-null counts the
+    // read-off needs (exactQuantilesFromSketch reads `${f}__nx`)
+    val sketchCols = features.map(f => count(col(f)).as(s"${f}__nx")) ++
+      quantileSketchCols(features, ps)
+    val rSketch = df.agg(sketchCols.head, sketchCols.tail: _*).head()
+    val r1 = Await.result(momentsF, Duration.Inf)
     val n = r1.getAs[Long]("__n")
     val longSafe = n > 0 && features.forall { f =>
       val maxm = BigInt(math.max(r1.getAs[Long](s"${f}__maxm"), 1L))
@@ -477,15 +470,7 @@ object Lime {
         math.max(if (v.isNaN) 0.0 else v, 1e-12)
       }
     }
-    val edges =
-      if (smallInput)
-        features.map { f =>
-          val qs = r1.getAs[scala.collection.Seq[Double]](s"${f}__q")
-          require(qs != null && n > 0,
-            s"fitStats: feature $f has no non-null values")
-          qs.toVector.map(r6)
-        }
-      else exactQuantilesFromSketch(df, features, ps, rSketch).map(_.map(r6))
+    val edges = exactQuantilesFromSketch(df, features, ps, rSketch).map(_.map(r6))
 
     // Bin means go through the exact-integer firewall (exact per-bin
     // micro-unit sums → one double division), and bin frequencies were
@@ -745,13 +730,13 @@ object Lime {
     }
   }
 
-  /** Driver-side fitStats for explain-time instance sets (the
-    * explainTabular gate): the same arithmetic as the two smallInput
-    * aggregation jobs — exact HALF_UP scale-6 moment sums, the
-    * Percentile order-statistic interpolation, exact per-bin decimal
-    * sums — computed from ONE collected instance table instead of two
-    * whole-plan aggregate jobs per explanation query. Bit-identical
-    * for double feature columns (the gate checks the type).
+  /** [[fitStats]] on the driver, over an explain request's collected
+    * instance rows (feature j a double, or null, at position j): the
+    * arithmetic of the distributed fit — exact HALF_UP scale-6 moment
+    * sums, the Percentile order-statistic interpolation, exact per-bin
+    * decimal sums — and its null rule: a null value is left out of the
+    * sums and the edges, counts toward n, and falls in bin 0, whose
+    * frequency and mean divisor count it.
     */
   private[lime] def fitStatsLocal(rows: Array[org.apache.spark.sql.Row],
                                   features: Seq[String], nBins: Int): Seq[FeatureStats] = {
@@ -786,8 +771,10 @@ object Lime {
       }.toVector
       val binSum = Array.fill(nBins)(java.math.BigInteger.ZERO)
       val binCnt = new Array[Long](nBins)
+      binCnt(0) = n - vs.length
+      val edgeData = UnsafeArrayData.fromPrimitiveArray(edges.toArray)
       vs.foreach { v =>
-        val b = edges.count(e => v > e) // binOf: edges strictly below
+        val b = binIndex(v, edgeData)
         binSum(b) = binSum(b).add(m6(v))
         binCnt(b) += 1
       }
@@ -1021,9 +1008,13 @@ object Lime {
     * on a frame that holds only the feature columns, their `f__val`
     * twins and a row key.
     *
-    * Instance ids must be unique (one null id is an id) and, in
-    * continuous mode, no numeric feature may be null; a request that
-    * breaks either fails at build with [[InvalidInstancesException]].
+    * The instance set is collected once at build, numeric features cast
+    * to double and categorical ones to string: the statistics, the
+    * checks and the lattice path all read that collect, whatever the
+    * columns' types. Instance ids must be unique (one null id is an id)
+    * and, in continuous mode, no numeric feature may be null; a request
+    * that breaks either fails at build with [[InvalidInstancesException]].
+    * In discretized mode a null numeric value falls in bin 0.
     *
     * Output: (instance_id, rank, feature, weight, intercept, r2,
     * local_pred), kFeatures rows per instance.
@@ -1050,34 +1041,15 @@ object Lime {
       lattice: Boolean): DataFrame = {
     require(cfg.selection == "none" || cfg.kFeatures >= 1,
       s"kFeatures must be >= 1, got ${cfg.kFeatures}")
-    // Explain-time stats gate: instance sets are bounded by contract
-    // (tens-to-thousands of rows), so at or below the gate the stats
-    // come from ONE collect + the driver-side twins of the two
-    // smallInput aggregate jobs (bit-identical arithmetic; the type
-    // check keeps exotic fixture schemas on the distributed path).
-    // The collect also carries each id, for the uniqueness check, and
-    // its RNG key xxhash64(seed, id), for the lattice path.
-    val statsGate = 65536
-    val statCols = features ++ catFeatures
-    val localOk =
-      features.forall(f => instances.schema(f).dataType == DoubleType) &&
-      catFeatures.forall(f => instances.schema(f).dataType == StringType)
+    // The instance set is bounded by contract (tens to thousands of
+    // rows), so one collect of it serves the checks, the statistics and
+    // the lattice's RNG keys xxhash64(seed, id).
+    val featureCols = features.map(col(_).cast("double")) ++ catFeatures.map(col(_).cast("string"))
     val idHash = xxhash64(lit(cfg.seed), col(idCol))
-    val localRows =
-      if (localOk) instances.select(statCols.map(col) :+ col(idCol) :+ idHash: _*)
-        .limit(statsGate + 1).collect()
-      else Array.empty[Row]
-    val local = localOk && localRows.nonEmpty && localRows.length <= statsGate
-    if (local) checkInstances(localRows, idCol, features, cfg.discretize)
-    else checkInstances(instances, idCol, features, cfg.discretize)
-    val (stats, catStats) =
-      if (local)
-        (fitStatsLocal(localRows, features, cfg.nBins),
-          if (catFeatures.nonEmpty) fitCatStatsLocal(localRows, features.size, catFeatures)
-          else Nil)
-      else
-        (fitStats(instances, features, cfg.nBins, smallInput = true),
-          if (catFeatures.nonEmpty) fitCatStats(instances, catFeatures) else Nil)
+    val rows = instances.select(featureCols :+ col(idCol) :+ idHash: _*).collect()
+    checkInstances(rows, featureCols.size, idCol, features, cfg.discretize)
+    val stats = fitStatsLocal(rows, features, cfg.nBins)
+    val catStats = fitCatStatsLocal(rows, features.size, catFeatures)
     val allFeatures = features ++ catFeatures
     val d = allFeatures.size
     val width = cfg.kernelWidth.getOrElse(0.75 * math.sqrt(d))
@@ -1105,8 +1077,9 @@ object Lime {
     val noZ = typedLit(Seq.empty[Double])
 
     val fold =
-      if (lattice && local && cfg.discretize)
-        latticeFold(instances.sparkSession, localRows, stats, catStats, cfg, width, scoreFn, idHash)
+      if (lattice && cfg.discretize)
+        latticeFold(instances.sparkSession, rows, stats, catStats, cfg, width, scoreFn, idHash,
+          struct(featureCols: _*))
       else None
     val fits = fold match {
       case Some(f) =>
@@ -1146,12 +1119,11 @@ object Lime {
   }
 
   /** Rejects duplicate ids and, in continuous mode, null numeric
-    * features in the collected instance rows (features first, the id
-    * after the stats columns).
+    * features in the collected instance rows (the features first, the
+    * id at `idAt`).
     */
-  private def checkInstances(rows: Array[Row], idCol: String, features: Seq[String],
+  private def checkInstances(rows: Array[Row], idAt: Int, idCol: String, features: Seq[String],
                              discretize: Boolean): Unit = {
-    val idAt = rows.head.length - 2
     val seen = scala.collection.mutable.HashSet.empty[Any]
     rows.foreach { r =>
       val id = r.get(idAt) match { case b: Array[Byte] => b.toSeq; case v => v }
@@ -1160,21 +1132,6 @@ object Lime {
           "each instance needs its own id")
     }
     if (!discretize) features.indices.find(j => rows.exists(_.isNullAt(j))).foreach { j =>
-      throw nullNumeric(features(j))
-    }
-  }
-
-  /** [[checkInstances]] for an instance set past the stats collect: one
-    * aggregate job. */
-  private def checkInstances(instances: DataFrame, idCol: String, features: Seq[String],
-                             discretize: Boolean): Unit = {
-    val nulls = if (discretize) Nil else features.map(f => count(when(col(f).isNull, 1)))
-    val r = instances.agg(count(lit(1)), count_distinct(col(idCol)) +:
-      count(when(col(idCol).isNull, 1)) +: nulls: _*).head()
-    if (r.getLong(1) + math.min(r.getLong(2), 1L) < r.getLong(0))
-      throw new InvalidInstancesException(
-        s"explainTabular: `$idCol` holds duplicate instance ids; each instance needs its own id")
-    features.indices.find(j => nulls.nonEmpty && r.getLong(3 + j) > 0).foreach { j =>
       throw nullNumeric(features(j))
     }
   }
@@ -1240,12 +1197,13 @@ object Lime {
     * whose sums treat those cases as they always did.
     *
     * `rows` are the stats collect's: the features, then the id and its
-    * key `idHash`.
+    * key `idHash`; `instance` is the struct of each instance row's
+    * features, cast as they were collected.
     */
   private def latticeFold(spark: SparkSession, rows: Array[Row], stats: Seq[FeatureStats],
                           catStats: Seq[CatStats],
                           cfg: LimeConfig, width: Double, scoreFn: DataFrame => DataFrame,
-                          idHash: Column): Option[Column] = {
+                          idHash: Column, instance: Column): Option[Column] = {
     val radix = stats.map(_.binMeans.size) ++ catStats.map(_.values.size)
     val nCells = radix.foldLeft(1L)((n, r) => math.min(n * r, LatticeGate + 1L))
     val keys = rows.map(_.getLong(radix.size + 1))
@@ -1296,6 +1254,6 @@ object Lime {
       instanceScores = order.map(i => y(cells + i)).toArray,
       // the fan-out's sqrt(exp(-d² / w²)) at each integer d² = mismatches
       weights = Array.tabulate(d + 1)(k => math.sqrt(StrictMath.exp(-k.toDouble / (width * width)))))
-    Some(foldSamples(bound, idHash, struct(names.map(col): _*)))
+    Some(foldSamples(bound, idHash, instance))
   }
 }

@@ -32,15 +32,18 @@ object LimeText {
 
   import Lime.LimeConfig
 
-  /** vocab per doc: sorted distinct words with stable positions. */
+  /** vocab per doc: sorted distinct words with stable positions. A word
+    * is a lower-cased run of non-whitespace characters; a text with none
+    * has an empty vocab.
+    */
   def vocab(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol).as("doc_id"),
-        array_sort(array_distinct(split(lower(trim(col(textCol))), " "))).as("vocab"))
+        array_sort(array_distinct(filter(split(lower(col(textCol)), "\\s+"), _ =!= ""))).as("vocab"))
       .withColumn("vsize", size(col("vocab")))
 
   /** Output: (doc_id, rank, word, weight, intercept, r2, local_pred),
-    * kFeatures rows per document with a non-null text (fewer when it has
-    * fewer distinct words).
+    * kFeatures rows per document with at least one word (fewer when it
+    * has fewer distinct words); a null or blank text gives no rows.
     */
   def explainText(
       docs: DataFrame,
@@ -49,7 +52,7 @@ object LimeText {
       cfg: LimeConfig = LimeConfig(nSamples = 256, kFeatures = 10, kernelWidth = Some(25.0))): DataFrame = {
     val sign = transform(col("vocab"),
       w => when(pmod(xxhash64(w), lit(2)) === 0, lit(1.0)).otherwise(lit(-1.0)))
-    Lime.explainMasks[String](vocab(docs, idCol, textCol).filter(col("vocab").isNotNull),
+    Lime.explainMasks[String](vocab(docs, idCol, textCol).filter(col("vsize") > 0),
       struct(col("vocab"), sign, array_repeat(lit(0.0), col("vsize")), col("vsize")),
       col("vocab"), "word", cfg)
   }

@@ -272,7 +272,7 @@ class LimeSpec extends SparkSpec {
     assert(dup.select("instance_id").distinct().count() < dup.count())
     intercept[Lime.InvalidInstancesException](
       Lime.explainTabular(dup, "instance_id", feats, LimeConfig(nSamples = 16)))
-    // a non-double feature keeps the stats, and so the check, distributed
+    // an int-typed feature is collected as a double, and checked the same way
     val dupInt = li.select((Seq("instance_id", "l_linenumber") ++ feats.tail).map(col): _*)
     intercept[Lime.InvalidInstancesException](
       Lime.explainTabular(dupInt, "instance_id", "l_linenumber" +: feats.tail,
@@ -334,28 +334,21 @@ class LimeSpec extends SparkSpec {
   test("explainText and explainImage on degenerate inputs: null, empty and all-space text, an empty image") {
     val s = spark
     import s.implicits._
-    // a null text has no words and gives no rows; an empty or all-space
-    // text splits to the one word "", and a run of spaces adds "" as a
-    // word. The expected values were computed with the ridge terms
-    // summed in another order, hence the tolerance.
+    // a word is a run of non-whitespace: a null, empty or all-space text
+    // has no words and gives no rows, and a run of spaces separates
+    // words like one space. The expected values are maskReference's.
     val docs = Seq[(Long, String)]((1L, null), (2L, ""), (3L, "   "), (4L, "b a  b"), (5L, "x"))
       .toDF("doc_id", "text")
     val text = LimeText.explainText(docs, "doc_id", "text",
       LimeConfig(nSamples = 64, kFeatures = 10, kernelWidth = Some(25.0))).collect()
-    def near(got: Double, want: Double) = math.abs(got - want) <= 1e-9 * math.abs(want)
     val wantText = Seq(
-      (2L, 1, "", 0.0023015022632041533, 0.7286893851237656, 0.019822159409544682, 0.7309908873869697),
-      (3L, 1, "", 0.002528980492435602, 0.7284480181216845, 0.021770586647602896, 0.73097699861412),
-      (4L, 1, "", 0.11717789428969083, 0.5112456511338715, 0.9798898299320178, 0.6297043283719879),
-      (4L, 2, "a", 0.11608904449787709, 0.5112456511338715, 0.9798898299320178, 0.6297043283719879),
-      (4L, 3, "b", -0.1148082615494516, 0.5112456511338715, 0.9798898299320178, 0.6297043283719879),
-      (5L, 1, "x", -0.002453210876840807, 0.27147129508673706, 0.021121809823387183, 0.26901808420989626))
-    assert(text.length == wantText.length, text.mkString("\n"))
-    text.zip(wantText).foreach { case (r, (id, rank, word, w, b, r2, lp)) =>
-      assert(r.getLong(0) == id && r.getInt(1) == rank && r.getString(2) == word, s"$r")
-      assert(near(r.getDouble(3), w) && near(r.getDouble(4), b) && near(r.getDouble(5), r2) &&
-        near(r.getDouble(6), lp), s"$r")
-    }
+      Seq(4L, 1, "a", 0.14860762713949965, 0.4986452502210176, 0.9835263006800007, 0.49993185348992214),
+      Seq(4L, 2, "b", -0.14732102387059515, 0.4986452502210176, 0.9835263006800007, 0.49993185348992214),
+      Seq(5L, 1, "x", -0.002453210876840807, 0.27147129508673706, 0.021121809823387183, 0.26901808420989626))
+    assert(rowBits(text.toSeq.map(_.toSeq)) == rowBits(wantText), text.mkString("\n"))
+    // the image weights were computed with the ridge terms summed in
+    // another order, hence the tolerance
+    def near(got: Double, want: Double) = math.abs(got - want) <= 1e-9 * math.abs(want)
     // a zero-byte payload decodes to no pixels and gives no rows
     val bb = java.nio.ByteBuffer.allocate(4 * 16).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     (0 until 16).foreach(i => bb.putFloat(i - 7.5f))

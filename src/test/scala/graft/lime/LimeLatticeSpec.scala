@@ -127,6 +127,16 @@ class LimeLatticeSpec extends SparkSpec {
     }
   }
 
+  test("an int-typed numeric feature takes the lattice path and gives its double cast's rows") {
+    val numeric = "l_linenumber" +: feats.tail
+    val asInt = lineitems(10).select((Seq("instance_id") ++ numeric).map(col): _*)
+    val asDouble = asInt.withColumn("l_linenumber", col("l_linenumber").cast("double"))
+    val cfg = LimeConfig(nSamples = 256)
+    assert(samePaths(asInt, numeric, cfg, None) == 0, "the int-typed request shuffled")
+    assert(bits(Lime.explainTabular(asInt, "instance_id", numeric, cfg).collect()) ==
+      bits(Lime.explainTabular(asDouble, "instance_id", numeric, cfg).collect()))
+  }
+
   test("above the lattice gate (deciles: 10^4 cells) a request keeps the fan-out") {
     val cfg = LimeConfig(nSamples = 256, nBins = 10)
     assert(math.pow(cfg.nBins, feats.size) > Lime.LatticeGate)
