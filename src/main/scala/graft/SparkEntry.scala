@@ -6,9 +6,14 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.qAggHash(spark, "/root/testdata/sf0.001")
-  /** One entry per implemented operator from SURVEY.md §2.
+  /** Every registry query's builder, by name. Each operator module
+    * lists its queries as one `registry: Seq[Query]`: a name, a builder
+    * over (session, scale-factor directory), and an oracle that is
+    * either `Sql` (DuckDB runs it on the same parquet tables for the
+    * same rows) or `NoOracle` with the reason and what grades the
+    * query instead. Names are unique across modules.
     *
-    * Registry contract: a handful of builders `.cache()` an
+    * Cache contract: a handful of builders `.cache()` an
     * intermediate that two downstream branches share (q_tpch_q21's
     * per-pair flags, q_tpch_q11's per-part values, the repetition /
     * contam / simhash / minhash / IVF intermediates). The cached plans
@@ -21,11 +26,15 @@ object SparkEntry {
     * free at session exit.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ EventOps.queries ++ LlmData.queries ++ LimeOps.queries ++
-      LayoutOps.queries
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    registry.map { case (name, q) => name -> q.build }
+
+  /** The equivalent DuckDB SQL of every query whose record carries a
+    * `Sql` oracle; a `NoOracle` record states why it has none. */
   def oracleSql: Map[String, String] =
-    Relational.oracle ++ EventOps.oracle ++ LlmData.oracle ++ LimeOps.oracle ++
-      LayoutOps.oracle
+    registry.collect { case (name, Query(_, _, Sql(text))) => name -> text }
+
+  /** Every module's records by name; a name registered twice fails here. */
+  lazy val registry: Map[String, Query] = Query.index(
+    Relational.registry ++ EventOps.registry ++ LlmData.registry ++ LimeOps.registry ++
+      LayoutOps.registry)
 }

@@ -993,8 +993,8 @@ object Lime {
     */
   private[lime] val LatticeGate = 4096
 
-  /** An instance set [[explainTabular]] cannot explain: duplicate ids,
-    * or a null numeric feature in continuous mode. */
+  /** An instance set a LIME request cannot explain: duplicate ids, or
+    * (in [[explainTabular]]'s continuous mode) a null numeric feature. */
   class InvalidInstancesException(msg: String) extends IllegalArgumentException(msg)
 
   /** End-to-end tabular explanation:
@@ -1120,7 +1120,7 @@ object Lime {
 
   /** Rejects duplicate ids and, in continuous mode, null numeric
     * features in the collected instance rows (the features first, the
-    * id at `idAt`).
+    * id at `idAt`); with no `features`, only the ids are checked.
     */
   private def checkInstances(rows: Array[Row], idAt: Int, idCol: String, features: Seq[String],
                              discretize: Boolean): Unit = {
@@ -1128,7 +1128,7 @@ object Lime {
     rows.foreach { r =>
       val id = r.get(idAt) match { case b: Array[Byte] => b.toSeq; case v => v }
       if (!seen.add(id)) throw new InvalidInstancesException(
-        s"explainTabular: instance id $id appears more than once in `$idCol`; " +
+        s"LIME: instance id $id appears more than once in `$idCol`; " +
           "each instance needs its own id")
     }
     if (!discretize) features.indices.find(j => rows.exists(_.isNullAt(j))).foreach { j =>
@@ -1175,10 +1175,14 @@ object Lime {
     * with its `doc_id`: each row's [[MaskFold]] buffer over the struct
     * `mask`, solved and ranked with ties by index (its `names` are
     * sorted), each feature named by `names` in the column `nameCol`.
+    * Two rows with one `doc_id` fail at build with
+    * [[InvalidInstancesException]], checked on a collect of the ids.
     */
   private[lime] def explainMasks[N: TypeTag](rows: DataFrame, mask: Column, names: Column,
                                              nameCol: String, cfg: LimeConfig): DataFrame = {
     require(cfg.kFeatures >= 1, s"kFeatures must be >= 1, got ${cfg.kFeatures}")
+    checkInstances(rows.select(col("doc_id").cast("long")).collect(), 0, "doc_id", Nil,
+      cfg.discretize)
     val buffer = foldSamples(new MaskFold(cfg.nSamples, cfg.kernelWidth.getOrElse(25.0)),
       xxhash64(lit(cfg.seed), col("doc_id")), mask)
     val solve = udf { (buf: Seq[Double], names: Seq[N]) =>

@@ -289,6 +289,8 @@ object LimeImage {
   /** images: (doc_id bigint, payload binary). Output: per image the
     * top-k superpixels by |ridge weight| with intercept/r2/local_pred
     * — the lime_explain_text schema with `spix` in place of `word`.
+    * Two images with one doc_id fail at build with
+    * [[Lime.InvalidInstancesException]].
     *
     * `channels` declares the decoder's interleave (1 = grayscale,
     * 3 = RGB): segmentation stays SPATIAL (all channels of a pixel

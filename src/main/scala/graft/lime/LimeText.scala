@@ -43,7 +43,9 @@ object LimeText {
 
   /** Output: (doc_id, rank, word, weight, intercept, r2, local_pred),
     * kFeatures rows per document with at least one word (fewer when it
-    * has fewer distinct words); a null or blank text gives no rows.
+    * has fewer distinct words); a null or blank text gives no rows. Two
+    * documents with one id fail at build with
+    * [[Lime.InvalidInstancesException]].
     */
   def explainText(
       docs: DataFrame,

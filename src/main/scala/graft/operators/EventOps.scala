@@ -1205,8 +1205,9 @@ object EventOps {
       .limit(20)
   }
 
-  val oracle: Map[String, String] = Map(
-    "q_ev_sesspath" ->
+  /** This module's queries, each with its oracle (see [[Query]]). */
+  val registry: Seq[Query] = Seq(
+    Query("q_ev_sesspath", qEvSesspath, Sql(
       """WITH flagged AS (
         |  SELECT user_id, event_id, ts, event_type,
         |    CASE WHEN LAG(ts) OVER w IS NULL
@@ -1224,8 +1225,8 @@ object EventOps {
         |  FROM sessioned GROUP BY user_id, session_id
         |)
         |SELECT path, COUNT(*) AS n_sessions FROM paths GROUP BY path
-        |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin,
-    "q_ev_attribution" ->
+        |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin)),
+    Query("q_ev_attribution", qEvAttribution, Sql(
       """WITH e AS (
         |  SELECT event_id, ts, user_id, event_type FROM events
         |  WHERE event_type IN ('view', 'click', 'purchase')
@@ -1245,19 +1246,19 @@ object EventOps {
         |  touch_id, touch_type, touch_ts,
         |  epoch_us(ts) - epoch_us(touch_ts) AS gap_us,
         |  (touch_ts IS NOT NULL AND epoch_us(ts) - epoch_us(touch_ts) <= 604800000000) AS attributed
-        |FROM t WHERE event_type = 'purchase' ORDER BY purchase_id""".stripMargin,
-    "q_ev_retention" ->
+        |FROM t WHERE event_type = 'purchase' ORDER BY purchase_id""".stripMargin)),
+    Query("q_ev_retention", qEvRetention, Sql(
       """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day FROM events),
         |c AS (SELECT user_id, MIN(day) AS cohort_day FROM ev GROUP BY user_id)
         |SELECT c.cohort_day, date_diff('day', c.cohort_day, ev.day) AS day_offset,
         |  COUNT(DISTINCT ev.user_id) AS active_users
         |FROM ev JOIN c ON ev.user_id = c.user_id
         |WHERE date_diff('day', c.cohort_day, ev.day) <= 7
-        |GROUP BY 1, 2 ORDER BY cohort_day, day_offset""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY cohort_day, day_offset""".stripMargin)),
     // Exact long microseconds through the lag; doubles only in the
     // final rounded mean/quantiles (quantile_cont ≡ Spark percentile,
     // the q_agg_quantile-proven pair).
-    "q_ev_interarrival" ->
+    Query("q_ev_interarrival", qEvInterarrival, Sql(
       """WITH g AS (
         |  SELECT event_type,
         |    epoch_us(ts) - lag(epoch_us(ts))
@@ -1270,8 +1271,8 @@ object EventOps {
         |  ROUND(quantile_cont(gap_us, 0.75) / 1000000.0, 6) AS p75_gap_s,
         |  MAX(gap_us) AS max_gap_us
         |FROM g WHERE gap_us IS NOT NULL
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_ev_hourly" ->
+        |GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Query("q_ev_hourly", qEvHourly, Sql(
       """WITH h AS (
         |  SELECT event_type, EXTRACT(HOUR FROM ts) AS hour_of_day,
         |    COUNT(*) AS n_events, SUM(CAST(value AS DECIMAL(18,2))) AS vd
@@ -1280,8 +1281,8 @@ object EventOps {
         |SELECT event_type, hour_of_day, n_events,
         |  CAST(vd AS DOUBLE) AS sum_value,
         |  ROUND(n_events / CAST(SUM(n_events) OVER (PARTITION BY event_type) AS DOUBLE), 6) AS share
-        |FROM h ORDER BY event_type, hour_of_day""".stripMargin,
-    "q_ev_markov" ->
+        |FROM h ORDER BY event_type, hour_of_day""".stripMargin)),
+    Query("q_ev_markov", qEvMarkov, Sql(
       """WITH tr AS (
         |  SELECT event_type AS from_type,
         |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type
@@ -1292,11 +1293,11 @@ object EventOps {
         |)
         |SELECT from_type, to_type, n,
         |  ROUND(n / CAST(SUM(n) OVER (PARTITION BY from_type) AS DOUBLE), 6) AS prob
-        |FROM c ORDER BY from_type, to_type""".stripMargin,
+        |FROM c ORDER BY from_type, to_type""".stripMargin)),
     // The same explode-membership + two keyed aggregations;
     // quantile_cont ≡ percentile on the ≤7-row windows (dyadic
     // interpolation, exact); the flag compares unrounded doubles.
-    "q_ev_anomaly_mad" ->
+    Query("q_ev_anomaly_mad", qEvAnomalyMad, Sql(
       """WITH daily AS (
         |  SELECT event_type, date_trunc('day', ts) AS day, COUNT(*) AS n
         |  FROM events GROUP BY 1, 2
@@ -1326,7 +1327,7 @@ object EventOps {
         |FROM filled f
         |JOIN med d ON d.event_type = f.event_type AND d.anchor = f.day
         |JOIN mad a ON a.event_type = f.event_type AND a.anchor = f.day
-        |ORDER BY f.event_type, f.day""".stripMargin,
+        |ORDER BY f.event_type, f.day""".stripMargin)),
     // The three power-iteration rounds unrolled as CTE groups (the
     // PQ-Lloyd unroll precedent): per round, edge contributions
     // nano-quantize (HALF_UP int64) before the per-node sum so the
@@ -1335,7 +1336,7 @@ object EventOps {
     // identical double expression tree both engines (decimal literals
     // explicitly ::DOUBLE — DuckDB parses bare 0.15 as DECIMAL and
     // would divide in decimal arithmetic).
-    "q_graph_pagerank" -> {
+    Query("q_graph_pagerank", qGraphPagerank, Sql {
       def round(i: Int): String = {
         val p = s"r${i - 1}"
         s"""c$i AS (
@@ -1377,8 +1378,8 @@ object EventOps {
          |  ROUND(r3.rank, 6) AS pagerank
          |FROM r3 LEFT JOIN outd o ON r3.type = o.from_type
          |ORDER BY event_type""".stripMargin
-    },
-    "q_ev_anomaly" ->
+    }),
+    Query("q_ev_anomaly", qEvAnomaly, Sql(
       """WITH daily AS (
         |  SELECT event_type, date_trunc('day', ts) AS day, COUNT(*) AS n_events,
         |    SUM(CAST(value AS DECIMAL(18,2))) AS vd
@@ -1403,11 +1404,11 @@ object EventOps {
         |  FROM ms
         |)
         |SELECT event_type, day, n_events, v, mean7, std7, z, (ABS(z) >= 2) AS is_anomaly
-        |FROM z ORDER BY event_type, day""".stripMargin,
+        |FROM z ORDER BY event_type, day""".stripMargin)),
     // Same staircase weights (2^20 >> h) in exact BIGINT; DuckDB's
     // CAST(value AS DECIMAL(18,2)) mirrors d2 (the ev_tumble pairing),
     // and 1048576.0 multiplies/divides are exact power-of-two scalings.
-    "q_ev_decay" ->
+    Query("q_ev_decay", qEvDecay, Sql(
       """WITH mx AS (SELECT CAST(MAX(ts) AS DATE) AS as_of FROM events),
         |e AS (
         |  SELECT event_type,
@@ -1423,11 +1424,11 @@ object EventOps {
         |  ROUND(CAST(SUM(cents * wmi) AS BIGINT) / 104857600.0, 6) AS decayed_sum,
         |  ROUND(CAST(SUM(cents * wmi) AS BIGINT) /
         |    (1048576.0 * CAST(SUM(cents) AS BIGINT)), 6) AS decay_ratio
-        |FROM t GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM t GROUP BY event_type ORDER BY event_type""".stripMargin)),
     // The q_ev_session CTE (with event_type carried through) + distinct
     // basket table + the same pair join; lift/support close over exact
     // long products with one division each, associated as Spark.
-    "q_ev_cooccur" ->
+    Query("q_ev_cooccur", qEvCooccur, Sql(
       """WITH flagged AS (
         |  SELECT user_id, event_id, ts, event_type,
         |    CASE WHEN LAG(ts) OVER w IS NULL
@@ -1459,11 +1460,11 @@ object EventOps {
         |JOIN pt pa ON pr.type_a = pa.event_type
         |JOIN pt pb ON pr.type_b = pb.event_type
         |CROSS JOIN tot
-        |ORDER BY type_a, type_b""".stripMargin,
+        |ORDER BY type_a, type_b""".stripMargin)),
     // Gap-filled spine + windowed list + the SAME indexed power-of-two
     // fold (DuckDB lambda index is 1-based: k = len − i); closed-form
     // denominator; one double division at the end.
-    "q_ev_ewma" ->
+    Query("q_ev_ewma", qEvEwma, Sql(
       """WITH b AS (SELECT CAST(MIN(ts) AS DATE) AS lo, CAST(MAX(ts) AS DATE) AS hi FROM events),
         |daily AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS n_events,
@@ -1494,8 +1495,8 @@ object EventOps {
         |      list_transform(ws, (x, i) -> x * (CAST(1048576 AS BIGINT) >> (len(ws) - i)))),
         |      (a, b) -> a + b)
         |    / ((CAST(2097152 AS BIGINT) - (CAST(2097152 AS BIGINT) >> len(ws))) * 100.0), 6) AS ewma
-        |FROM win ORDER BY event_type, day""".stripMargin,
-    "q_ev_entropy" ->
+        |FROM win ORDER BY event_type, day""".stripMargin)),
+    Query("q_ev_entropy", qEvEntropy, Sql(
       """WITH counts AS (
         |  SELECT user_id, event_type, COUNT(*) AS c FROM events GROUP BY 1, 2
         |), t AS (
@@ -1506,19 +1507,19 @@ object EventOps {
         |)
         |SELECT user_id, CAST(MAX(n) AS BIGINT) AS n_events, COUNT(*) AS n_types,
         |  ROUND(-(CAST(SUM(term) AS BIGINT) / 1000000000.0) / MAX(n), 6) AS entropy
-        |FROM t GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_ev_tumble" ->
+        |FROM t GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    Query("q_ev_tumble", qEvTumble, Sql(
       """SELECT date_trunc('hour', ts) AS hour_start, event_type,
         |  COUNT(*) AS n_events, CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin,
-    "q_ev_gapfill" ->
+        |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin)),
+    Query("q_ev_gapfill", qEvGapfill, Sql(
       """WITH b AS (SELECT date_trunc('hour', MIN(ts)) AS lo, date_trunc('hour', MAX(ts)) AS hi FROM events),
         |spine AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS hour_start FROM b),
         |hourly AS (SELECT date_trunc('hour', ts) AS hour_start, COUNT(*) AS n_events FROM events GROUP BY 1)
         |SELECT s.hour_start, COALESCE(h.n_events, 0) AS n_events
         |FROM spine s LEFT JOIN hourly h USING (hour_start)
-        |ORDER BY hour_start""".stripMargin,
-    "q_ev_slide" ->
+        |ORDER BY hour_start""".stripMargin)),
+    Query("q_ev_slide", qEvSlide, Sql(
       """WITH expanded AS (
         |  SELECT make_timestamp((epoch_us(ts) // 900000000 - k) * 900000000) AS win_start,
         |    user_id, value, ts
@@ -1528,11 +1529,11 @@ object EventOps {
         |)
         |SELECT win_start, user_id, COUNT(*) AS n_events,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM expanded GROUP BY 1, 2 ORDER BY win_start, user_id""".stripMargin,
+        |FROM expanded GROUP BY 1, 2 ORDER BY win_start, user_id""".stripMargin)),
     // The q_ev_session CTEs + the DIRECT quadratic overlap join (the
     // oracle needs no bucket decomposition — same result set the
     // bucketed path dedupes to); exact long µs overlap.
-    "q_join_interval" ->
+    Query("q_join_interval", qJoinInterval, Sql(
       """WITH flagged AS (
         |  SELECT user_id, event_id, ts,
         |    CASE WHEN LAG(ts) OVER w IS NULL
@@ -1554,10 +1555,10 @@ object EventOps {
         |  LEAST(a.en, b.en) - GREATEST(a.st, b.st) AS overlap_us
         |FROM sess a JOIN sess b
         |  ON a.user_id < b.user_id AND a.st <= b.en AND b.st <= a.en
-        |ORDER BY user_a, session_a, user_b, session_b""".stripMargin,
+        |ORDER BY user_a, session_a, user_b, session_b""".stripMargin)),
     // The distinct (user, day) activity table + a 7-day trailing
     // membership join against the day spine; exact distinct counts.
-    "q_ev_active_users" ->
+    Query("q_ev_active_users", qEvActiveUsers, Sql(
       """WITH ud AS (
         |  SELECT DISTINCT date_trunc('day', ts) AS day, user_id FROM events
         |), dau AS (
@@ -1571,11 +1572,11 @@ object EventOps {
         |SELECT dau.day, dau.dau, wau.wau,
         |  ROUND(CAST(dau.dau AS DOUBLE) / wau.wau, 6) AS stickiness
         |FROM dau JOIN wau ON dau.day = wau.spine_day
-        |ORDER BY dau.day""".stripMargin,
+        |ORDER BY dau.day""".stripMargin)),
     // The same epoch-week integer arithmetic (portable, unlike
     // locale-sensitive week truncation); exact distinct counts, one
     // ROUND(6) IEEE division.
-    "q_ev_cohort" ->
+    Query("q_ev_cohort", qEvCohort, Sql(
       """WITH uw AS (
         |  SELECT DISTINCT user_id,
         |    epoch_us(date_trunc('day', ts)) // 604800000000 AS week FROM events
@@ -1591,20 +1592,20 @@ object EventOps {
         |SELECT m.cohort_week, m.week_offset, m.n_active, s.cohort_size,
         |  ROUND(CAST(m.n_active AS DOUBLE) / s.cohort_size, 6) AS retention
         |FROM m JOIN sizes s USING (cohort_week)
-        |ORDER BY cohort_week, week_offset""".stripMargin,
+        |ORDER BY cohort_week, week_offset""".stripMargin)),
     // quantile_cont ≡ percentile at the dyadic fractions on the same
     // parquet doubles.
-    "q_ev_value_bands" ->
+    Query("q_ev_value_bands", qEvValueBands, Sql(
       """SELECT event_type, date_trunc('day', ts) AS day, COUNT(*) AS n_events,
         |  ROUND(quantile_cont(value, 0.25), 6) AS p25,
         |  ROUND(quantile_cont(value, 0.5), 6) AS p50,
         |  ROUND(quantile_cont(value, 0.75), 6) AS p75
-        |FROM events GROUP BY 1, 2 ORDER BY event_type, day""".stripMargin,
+        |FROM events GROUP BY 1, 2 ORDER BY event_type, day""".stripMargin)),
     // The same Wilson expression tree over exact long counts; z is
     // the shared 16-digit literal.
     // Exact cumulative moments; the per-day 1/Lambda quantizes to
     // micro-unit longs BEFORE the running min (see qStatSprt).
-    "q_stat_sprt" ->
+    Query("q_stat_sprt", qStatSprt, Sql(
       """WITH ev AS (
         |  SELECT event_type, date_trunc('day', ts) AS day,
         |    CAST(user_id % 2 AS INTEGER) AS arm,
@@ -1655,8 +1656,8 @@ object EventOps {
         |  ROUND(CASE WHEN ok THEN dlt END, 6) AS delta,
         |  ROUND(CAST(avq AS DOUBLE) / 1e6, 6) AS always_valid_p,
         |  COALESCE(avq <= 50000, FALSE) AS signif
-        |FROM r ORDER BY event_type, day""".stripMargin,
-    "q_stat_wilson" ->
+        |FROM r ORDER BY event_type, day""".stripMargin)),
+    Query("q_stat_wilson", qStatWilson, Sql(
       """WITH d AS (
         |  SELECT date_trunc('day', ts) AS day, COUNT(*) AS n_events,
         |    CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_errors
@@ -1675,10 +1676,10 @@ object EventOps {
         |  ROUND((p + z * z / (2.0 * n) +
         |    z * SQRT(p * (1.0 - p) / n + z * z / (4.0 * n * n))) /
         |    (1.0 + z * z / n), 6) AS wilson_hi
-        |FROM m ORDER BY day""".stripMargin,
+        |FROM m ORDER BY day""".stripMargin)),
     // Same zero-filled (type, week) table and lag; growth NULL-gated
     // identically on a zero prior week.
-    "q_ev_wow" ->
+    Query("q_ev_wow", qEvWow, Sql(
       """WITH weekly AS (
         |  SELECT event_type,
         |    epoch_us(date_trunc('day', ts)) // 604800000000 AS week, COUNT(*) AS n
@@ -1697,10 +1698,10 @@ object EventOps {
         |SELECT event_type, week, n_events, prev_events,
         |  ROUND(CASE WHEN prev_events > 0
         |    THEN CAST(n_events - prev_events AS DOUBLE) / prev_events END, 6) AS wow_growth
-        |FROM l ORDER BY event_type, week""".stripMargin,
+        |FROM l ORDER BY event_type, week""".stripMargin)),
     // Same first-day reduction, zero-filled spine and exact long
     // cumulative window; one ROUND(6) share division.
-    "q_ev_adoption" ->
+    Query("q_ev_adoption", qEvAdoption, Sql(
       """WITH fd AS (
         |  SELECT user_id, MIN(date_trunc('day', ts)) AS day FROM events GROUP BY user_id
         |), daily AS (SELECT day, COUNT(*) AS n_new FROM fd GROUP BY day),
@@ -1716,10 +1717,10 @@ object EventOps {
         |  ROUND(CAST(SUM(n_new) OVER (ORDER BY day
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) /
         |    SUM(n_new) OVER (), 6) AS pct_of_total
-        |FROM f ORDER BY day""".stripMargin,
+        |FROM f ORDER BY day""".stripMargin)),
     // The same (user, week) reduction, keyed prior-week self-join and
     // zero-filled spine; exact long counts throughout.
-    "q_ev_lifecycle" ->
+    Query("q_ev_lifecycle", qEvLifecycle, Sql(
       """WITH uw AS (
         |  SELECT DISTINCT user_id,
         |    epoch_us(date_trunc('day', ts)) // 604800000000 AS week FROM events
@@ -1747,11 +1748,11 @@ object EventOps {
         |  COALESCE(c.n_churned, 0) AS n_churned
         |FROM spine s LEFT JOIN flags f ON f.week = s.week
         |LEFT JOIN churn c ON c.week = s.week
-        |ORDER BY s.week""".stripMargin,
+        |ORDER BY s.week""".stripMargin)),
     // Same ntile definition (equal buckets, earlier buckets take the
     // remainder) over the same deterministic order; exact long event
     // sums, shares as ROUND(6) IEEE divisions of the same exact sums.
-    "q_ev_power_users" ->
+    Query("q_ev_power_users", qEvPowerUsers, Sql(
       """WITH pu AS (
         |  SELECT user_id, COUNT(*) AS n_events FROM events GROUP BY user_id
         |), dec AS (
@@ -1767,10 +1768,10 @@ object EventOps {
         |  ROUND(CAST(SUM(n_events) OVER (ORDER BY decile
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) /
         |    SUM(n_events) OVER (), 6) AS cum_share
-        |FROM agg ORDER BY decile""".stripMargin,
+        |FROM agg ORDER BY decile""".stripMargin)),
     // The same zero-filled day spine and exact int64 moment sums; the
     // mean/variance/Fano divisions run on the same exact inputs.
-    "q_ev_burst" ->
+    Query("q_ev_burst", qEvBurst, Sql(
       """WITH b AS (
         |  SELECT date_trunc('day', MIN(ts)) AS lo, date_trunc('day', MAX(ts)) AS hi
         |  FROM events
@@ -1793,10 +1794,10 @@ object EventOps {
         |  ROUND((CAST(sum_sq AS DOUBLE) / n_days -
         |    (CAST(n_events AS DOUBLE) / n_days) * (CAST(n_events AS DOUBLE) / n_days)) /
         |    (CAST(n_events AS DOUBLE) / n_days), 6) AS fano
-        |FROM m ORDER BY event_type""".stripMargin,
+        |FROM m ORDER BY event_type""".stripMargin)),
     // The q_ev_session CTEs + day clipping + the same deterministic
     // sweep order; peak cast to BIGINT (DuckDB window SUM widens).
-    "q_ev_concurrency" ->
+    Query("q_ev_concurrency", qEvConcurrency, Sql(
       """WITH flagged AS (
         |  SELECT user_id, event_id, ts,
         |    CASE WHEN LAG(ts) OVER w IS NULL
@@ -1835,8 +1836,8 @@ object EventOps {
         |SELECT day,
         |  CAST(SUM(CASE WHEN delta = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
         |  CAST(MAX(run) AS BIGINT) AS peak_concurrent
-        |FROM runs GROUP BY day ORDER BY day""".stripMargin,
-    "q_ev_session" ->
+        |FROM runs GROUP BY day ORDER BY day""".stripMargin)),
+    Query("q_ev_session", qEvSession, Sql(
       """WITH flagged AS (
         |  SELECT user_id, event_id, ts,
         |    CASE WHEN LAG(ts) OVER w IS NULL
@@ -1853,14 +1854,14 @@ object EventOps {
         |  MIN(ts) AS session_start, MAX(ts) AS session_end,
         |  epoch_us(MAX(ts)) - epoch_us(MIN(ts)) AS duration_us
         |FROM sessioned GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
-    "q_ev_late_watermark" ->
+        |ORDER BY user_id, session_id""".stripMargin)),
+    Query("q_ev_late_watermark", qEvLateWatermark, Sql(
       """WITH wm AS (SELECT MAX(epoch_us(ts)) - 600000000 AS wm_us FROM events)
         |SELECT event_type,
         |  CAST(SUM(CASE WHEN epoch_us(ts) < wm_us THEN 1 ELSE 0 END) AS BIGINT) AS n_final,
         |  CAST(SUM(CASE WHEN epoch_us(ts) >= wm_us THEN 1 ELSE 0 END) AS BIGINT) AS n_late_mutable
-        |FROM events, wm GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_ev_funnel" ->
+        |FROM events, wm GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Query("q_ev_funnel", qEvFunnel, Sql(
       """WITH s1 AS (
         |  SELECT user_id, MIN(CASE WHEN event_type = 'signup' THEN ts END) AS signup_ts
         |  FROM events GROUP BY user_id
@@ -1875,8 +1876,8 @@ object EventOps {
         |)
         |SELECT user_id, signup_ts, click_ts, purchase_ts,
         |  (signup_ts IS NOT NULL AND click_ts IS NOT NULL AND purchase_ts IS NOT NULL) AS completed
-        |FROM s3 ORDER BY user_id""".stripMargin,
-    "q_ev_ctxjoin_outer" ->
+        |FROM s3 ORDER BY user_id""".stripMargin)),
+    Query("q_ev_ctxjoin_outer", qEvCtxjoinOuter, Sql(
       """SELECT p.user_id, p.event_id AS purchase_id,
         |  COUNT(c.ts) AS n_clicks, COUNT(c.ts) = 0 AS organic
         |FROM events p LEFT JOIN events c
@@ -1884,16 +1885,16 @@ object EventOps {
         | AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts < p.ts
         |WHERE p.event_type = 'purchase'
         |GROUP BY p.user_id, p.event_id
-        |ORDER BY p.user_id, purchase_id""".stripMargin,
-    "q_ev_ctxjoin" ->
+        |ORDER BY p.user_id, purchase_id""".stripMargin)),
+    Query("q_ev_ctxjoin", qEvCtxjoin, Sql(
       """SELECT p.user_id, p.event_id AS purchase_id, c.event_id AS click_id,
         |  (epoch_us(p.ts) - epoch_us(c.ts)) // 1000000 AS gap_s
         |FROM events p JOIN events c
         |  ON p.user_id = c.user_id
         | AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts < p.ts
         |WHERE p.event_type = 'purchase' AND c.event_type = 'click'
-        |ORDER BY p.user_id, purchase_id, click_id""".stripMargin,
-    "q_ev_funnel_time" ->
+        |ORDER BY p.user_id, purchase_id, click_id""".stripMargin)),
+    Query("q_ev_funnel_time", qEvFunnelTime, Sql(
       """WITH s1 AS (
         |  SELECT user_id, MIN(CASE WHEN event_type = 'signup' THEN ts END) AS signup_ts
         |  FROM events GROUP BY user_id
@@ -1917,50 +1918,12 @@ object EventOps {
         |SELECT step, COUNT(*) AS n_users,
         |  ROUND(quantile_cont(gap_us, 0.5) / 1000000.0, 6) AS med_s,
         |  ROUND(quantile_cont(gap_us, 0.9) / 1000000.0, 6) AS p90_s
-        |FROM gaps GROUP BY step ORDER BY step""".stripMargin,
-    "q_ev_dedup_stream" ->
+        |FROM gaps GROUP BY step ORDER BY step""".stripMargin)),
+    Query("q_ev_dedup_stream", qEvDedupStream, Sql(
       """SELECT user_id, event_type, event_id, ts FROM (
         |  SELECT user_id, event_type, event_id, ts,
         |    ROW_NUMBER() OVER (PARTITION BY user_id, event_type ORDER BY ts, event_id) AS rn
         |  FROM events
-        |) WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin
-  )
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ev_tumble" -> (qEvTumble _),
-    "q_ev_slide" -> (qEvSlide _),
-    "q_ev_gapfill" -> (qEvGapfill _),
-    "q_ev_session" -> (qEvSession _),
-    "q_ev_concurrency" -> (qEvConcurrency _),
-    "q_ev_active_users" -> (qEvActiveUsers _),
-    "q_ev_cohort" -> (qEvCohort _),
-    "q_ev_lifecycle" -> (qEvLifecycle _),
-    "q_ev_adoption" -> (qEvAdoption _),
-    "q_ev_wow" -> (qEvWow _),
-    "q_ev_value_bands" -> (qEvValueBands _),
-    "q_stat_sprt" -> (qStatSprt _),
-    "q_stat_wilson" -> (qStatWilson _),
-    "q_ev_power_users" -> (qEvPowerUsers _),
-    "q_ev_burst" -> (qEvBurst _),
-    "q_join_interval" -> (qJoinInterval _),
-    "q_ev_late_watermark" -> (qEvLateWatermark _),
-    "q_ev_funnel" -> (qEvFunnel _),
-    "q_ev_funnel_time" -> (qEvFunnelTime _),
-    "q_ev_ctxjoin" -> (qEvCtxjoin _),
-    "q_ev_ctxjoin_outer" -> (qEvCtxjoinOuter _),
-    "q_ev_dedup_stream" -> (qEvDedupStream _),
-    "q_ev_retention" -> (qEvRetention _),
-    "q_ev_anomaly" -> (qEvAnomaly _),
-    "q_ev_entropy" -> (qEvEntropy _),
-    "q_ev_decay" -> (qEvDecay _),
-    "q_ev_ewma" -> (qEvEwma _),
-    "q_ev_cooccur" -> (qEvCooccur _),
-    "q_ev_markov" -> (qEvMarkov _),
-    "q_graph_pagerank" -> (qGraphPagerank _),
-    "q_ev_anomaly_mad" -> (qEvAnomalyMad _),
-    "q_ev_sesspath" -> (qEvSesspath _),
-    "q_ev_hourly" -> (qEvHourly _),
-    "q_ev_interarrival" -> (qEvInterarrival _),
-    "q_ev_attribution" -> (qEvAttribution _)
+        |) WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin))
   )
 }

@@ -331,21 +331,22 @@ object LayoutOps {
 
   // ===== registry =====
 
-  val oracle: Map[String, String] = Map(
-    "q_join_bucketed" ->
+  /** This module's queries, each with its oracle (see [[Query]]). */
+  val registry: Seq[Query] = Seq(
+    Query("q_join_bucketed", qJoinBucketed, Sql(
       """SELECT c_mktsegment, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-    "q_scan_partition_prune" ->
+        |ORDER BY c_mktsegment""".stripMargin)),
+    Query("q_scan_partition_prune", qScanPartitionPrune, Sql(
       """SELECT c_nationkey, COUNT(*) AS n_cust,
         |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
         |FROM customer
         |WHERE c_nationkey IN (7, 11)
         |GROUP BY c_nationkey
-        |ORDER BY c_nationkey""".stripMargin,
-    "q_join_dpp" ->
+        |ORDER BY c_nationkey""".stripMargin)),
+    Query("q_join_dpp", qJoinDpp, Sql(
       """SELECT n_name, COUNT(*) AS n_cust,
         |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal,
         |  ROUND(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 6) AS avg_bal
@@ -354,19 +355,13 @@ object LayoutOps {
         |JOIN region ON n_regionkey = r_regionkey
         |WHERE r_name = 'ASIA'
         |GROUP BY n_name
-        |ORDER BY n_name""".stripMargin,
-    "q_scan_zorder" ->
+        |ORDER BY n_name""".stripMargin)),
+    Query("q_scan_zorder", qScanZorder, Sql(
       """SELECT COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         |  AND l_shipdate < TIMESTAMP '1996-07-01'
-        |  AND l_extendedprice BETWEEN 20000.0 AND 30000.0""".stripMargin)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_join_bucketed" -> (qJoinBucketed _),
-    "q_scan_partition_prune" -> (qScanPartitionPrune _),
-    "q_join_dpp" -> (qJoinDpp _),
-    "q_scan_zorder" -> (qScanZorder _))
+        |  AND l_extendedprice BETWEEN 20000.0 AND 30000.0""".stripMargin)))
 }

@@ -2262,9 +2262,9 @@ object LlmData {
     * fixture raw ADC alone measures recall ≈ 0.28; the re-rank stage
     * is what makes PQ honest there, exactly why the paper ships it.
     *
-    * Spec-graded (oracle=— like the rest of the ANN family): recall
-    * of ADC top-10 vs exact L2 top-10 ≥ 0.5 on the fixture, plus
-    * bit-identical determinism across two independent builds.
+    * Oracle-checked by a full DuckDB replay (`pqAnnOracleSql`); the
+    * spec adds recall of ADC top-10 vs exact L2 top-10 ≥ 0.5 on the
+    * fixture and bit-identical determinism across two builds.
     */
   def qEmbPqAnn(s: SparkSession, dir: String): DataFrame = {
     val n = parquetRowCount(s, s"$dir/embeddings.parquet")
@@ -3119,7 +3119,7 @@ object LlmData {
     * correlated fixture, planted by construction; on isotropic data
     * OPQ ≡ PQ up to ties, as the paper notes).
     *
-    * Spec-graded (oracle=— like the ANN family): bit-identical
+    * Spec-graded (no oracle): bit-identical
     * determinism across independent builds, recall vs exact L2 ≥ the
     * PQ row's bound, and recall(OPQ) ≥ recall(PQ) on the correlated
     * fixture with the measured delta recorded in BASELINE.md.
@@ -3157,10 +3157,10 @@ object LlmData {
     * O(probes·50) raw vectors (IVFADC+R, §VI). All picks are
     * (xxhash64, vec_id)-ordered — bit-deterministic.
     *
-    * Spec-graded (oracle=— like the ANN family): determinism + recall
-    * ≥ 0.5 vs exact L2 with the fixture's over-probed nProbe (half
-    * the cells, the qSimIvfAnn fixture rule; production probes a
-    * vanishing fraction).
+    * Oracle-checked by a full DuckDB replay (`ivfpqAnnOracleSql`); the
+    * spec adds determinism + recall ≥ 0.5 vs exact L2 with the
+    * fixture's over-probed nProbe (half the cells, the qSimIvfAnn
+    * fixture rule; production probes a vanishing fraction).
     */
   def qEmbIvfpqAnn(s: SparkSession, dir: String): DataFrame = {
     val n = parquetRowCount(s, s"$dir/embeddings.parquet")
@@ -3181,8 +3181,9 @@ object LlmData {
     * rebalances them (measured occupancy skew + recall vs the
     * hash-sampled baseline recorded in BASELINE.md). Downstream is
     * byte-identical to q_emb_ivfpq_ann: residual PQ codebook, keyed
-    * candidate scoring, exact re-rank. Spec-graded (oracle=— ANN
-    * family): determinism + recall floor + the skew comparison.
+    * candidate scoring, exact re-rank. Oracle-checked by the same
+    * replay (`ivfpqAnnOracleSql(lloydCoarse = true)`); the spec adds
+    * determinism + recall floor + the skew comparison.
     */
   def qEmbIvfpqLloyd(s: SparkSession, dir: String): DataFrame = {
     val n = parquetRowCount(s, s"$dir/embeddings.parquet")
@@ -3344,7 +3345,7 @@ object LlmData {
     * Cost over IVFADC: the O(model) pcaBasis pass + one compiled
     * MatVec per row — the OPQ-over-PQ delta, unchanged.
     *
-    * Spec-graded (oracle=— ANN family): determinism + absolute recall
+    * Spec-graded (no oracle): determinism + absolute recall
     * ≥ the unrotated IVFADC's on the correlated fixture.
     */
   def qEmbOpqIvfAnn(s: SparkSession, dir: String): DataFrame = {
@@ -6274,8 +6275,9 @@ object LlmData {
        |)""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "q_emb_quantize" ->
+  /** This module's queries, each with its oracle (see [[Query]]). */
+  val registry: Seq[Query] = Seq(
+    Query("q_emb_quantize", qEmbQuantize, Sql(
       """WITH e AS (
         |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings
         |), a AS (
@@ -6292,8 +6294,8 @@ object LlmData {
         |  CAST(CAST(SUM(ABS(qv)) AS HUGEINT) AS BIGINT) AS q_l1,
         |  CAST(MAX(ABS(qv)) AS BIGINT) AS q_max_abs,
         |  ROUND(CAST(SUM(CAST(ROUND(ABS(x - qv * scale), 9) AS DECIMAL(18,9))) AS DOUBLE), 6) AS err_l1
-        |FROM q GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-    "q_mm_features" ->
+        |FROM q GROUP BY vec_id ORDER BY vec_id""".stripMargin)),
+    Query("q_mm_features", qMmFeatures, Sql(
       """WITH e AS (
         |  SELECT vec_id, unnest(embedding) AS x FROM embeddings
         |)
@@ -6304,8 +6306,8 @@ object LlmData {
         |  CAST(MAX(x) AS DOUBLE) AS f1,
         |  CAST(COUNT(*) FILTER (WHERE x > 0) AS DOUBLE) AS f2,
         |  CAST(COUNT(*) FILTER (WHERE x < 0) AS DOUBLE) AS f3
-        |FROM e GROUP BY vec_id ORDER BY doc_id""".stripMargin,
-    "q_sample_split" ->
+        |FROM e GROUP BY vec_id ORDER BY doc_id""".stripMargin)),
+    Query("q_sample_split", qSampleSplit, Sql(
       s"""WITH $splitCensusCte, s AS (
         |  SELECT source, CAST(SUM(n_docs) AS BIGINT) AS src_docs
         |  FROM census GROUP BY 1
@@ -6313,12 +6315,12 @@ object LlmData {
         |SELECT census.source AS source, split, n_docs, n_chars,
         |  ROUND(CAST(n_docs AS DOUBLE) / src_docs, 6) AS share
         |FROM census JOIN s ON census.source = s.source
-        |ORDER BY census.source, split""".stripMargin,
-    "q_sample_hash" ->
+        |ORDER BY census.source, split""".stripMargin)),
+    Query("q_sample_hash", qSampleHash, Sql(
       """SELECT doc_id, lang, source, n_chars FROM documents
         |WHERE ((doc_id * 48271) % 2147483647) % 10 = 0
-        |ORDER BY doc_id""".stripMargin,
-    "q_dedup_crosssrc" -> s"""WITH $jaccardPairCtes
+        |ORDER BY doc_id""".stripMargin)),
+    Query("q_dedup_crosssrc", qDedupCrosssrc, Sql(s"""WITH $jaccardPairCtes
         |SELECT LEAST(da.source, db.source) AS src_lo,
         |  GREATEST(da.source, db.source) AS src_hi,
         |  COUNT(*) AS n_pairs, CAST(MAX(jac) AS DOUBLE) AS max_jac
@@ -6326,7 +6328,7 @@ object LlmData {
         |JOIN documents da ON a_id = da.doc_id
         |JOIN documents db ON b_id = db.doc_id
         |WHERE da.source <> db.source
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
     // Shares are exact-count IEEE divisions (bit-identical both
     // engines), so the |Δ| ranking is deterministic BEFORE rounding;
     // the oracle needs no bucket pre-cut (the two-phase cut is
@@ -6334,7 +6336,7 @@ object LlmData {
     // Shared-word terms + exclusive-mass ln2 correction, every summed
     // term nano-quantized (the chi2 firewall); ln 2 is the same
     // literal on both sides.
-    "q_text_js_div" ->
+    Query("q_text_js_div", qTextJsDiv, Sql(
       """WITH wc AS (
         |  SELECT source, w, COUNT(*) AS cnt FROM (
         |    SELECT source,
@@ -6362,18 +6364,18 @@ object LlmData {
         |     (CAST(SUM(tb_n) AS DOUBLE) + 0.6931471805599453 * (1000000000 - SUM(pb_n))))
         |    / 1e9, 6) AS js_div
         |FROM terms GROUP BY source_a, source_b
-        |ORDER BY source_a, source_b""".stripMargin,
+        |ORDER BY source_a, source_b""".stripMargin)),
     // Dyadic quartiles over exact long lengths (quantile_cont ≡
     // percentile at exact-binary f — the q_agg_quantile pair).
-    "q_text_length_profile" ->
+    Query("q_text_length_profile", qTextLengthProfile, Sql(
       """SELECT lang, COUNT(*) AS n_docs,
         |  ROUND(CAST(SUM(n_chars) AS DOUBLE) / COUNT(*), 6) AS mean_chars,
         |  ROUND(quantile_cont(n_chars, 0.25), 6) AS p25_chars,
         |  ROUND(quantile_cont(n_chars, 0.5), 6) AS p50_chars,
         |  ROUND(quantile_cont(n_chars, 0.75), 6) AS p75_chars,
         |  MAX(n_chars) AS max_chars
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "q_text_freq_drift" ->
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
+    Query("q_text_freq_drift", qTextFreqDrift, Sql(
       """WITH mxq AS (SELECT MAX(doc_id) AS mx FROM documents),
         |wc AS (
         |  SELECT w AS word,
@@ -6400,10 +6402,10 @@ object LlmData {
         |SELECT rnk, word, old_cnt, new_cnt,
         |  ROUND(old_share, 6) AS old_share, ROUND(new_share, 6) AS new_share,
         |  ROUND(new_share - old_share, 6) AS delta_share
-        |FROM r WHERE rnk <= 20 ORDER BY rnk""".stripMargin,
+        |FROM r WHERE rnk <= 20 ORDER BY rnk""".stripMargin)),
     // Exact integer counts over the shared tokenizer; ratios divide
     // the named BIGINT columns as doubles in the same order.
-    "q_text_hapax" ->
+    Query("q_text_hapax", qTextHapax, Sql(
       """WITH wc AS (
         |  SELECT source, w AS word, COUNT(*) AS cnt
         |  FROM (
@@ -6421,8 +6423,8 @@ object LlmData {
         |SELECT source, n_tokens, n_types, n_hapax,
         |  ROUND(CAST(n_types AS DOUBLE) / n_tokens, 6) AS type_token_ratio,
         |  ROUND(CAST(n_hapax AS DOUBLE) / n_types, 6) AS hapax_rate
-        |FROM agg ORDER BY source""".stripMargin,
-    "q_text_zipf" ->
+        |FROM agg ORDER BY source""".stripMargin)),
+    Query("q_text_zipf", qTextZipf, Sql(
 """WITH w AS (
         |  SELECT source, unnest(list_filter(string_split(lower(trim(text)), ' '), x -> x <> '')) AS word
         |  FROM documents
@@ -6445,8 +6447,8 @@ object LlmData {
         |SELECT source, CAST(n AS BIGINT) AS n_ranks,
         |  ROUND((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy) /
         |        (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx), 6) AS zipf_slope
-        |FROM s ORDER BY source""".stripMargin,
-    "q_sample_budget" ->
+        |FROM s ORDER BY source""".stripMargin)),
+    Query("q_sample_budget", qSampleBudget, Sql(
       """WITH d AS (
         |  SELECT doc_id, source,
         |    CAST(len(list_filter(string_split(lower(trim(text)), ' '), x -> x <> '')) AS BIGINT) AS ntok,
@@ -6459,11 +6461,11 @@ object LlmData {
         |  FROM d
         |)
         |SELECT doc_id, source, ntok, cum_before FROM c
-        |WHERE cum_before < 1000 ORDER BY doc_id""".stripMargin,
+        |WHERE cum_before < 1000 ORDER BY doc_id""".stripMargin)),
     // Same two keyed aggregations with the source-keyed join between
     // them; quantile_cont ≡ percentile on integer lengths; the flag
     // compares unrounded dyadic doubles.
-    "q_quality_length_mad" ->
+    Query("q_quality_length_mad", qQualityLengthMad, Sql(
       """WITH med AS (
         |  SELECT source, quantile_cont(n_chars, 0.5) AS med
         |  FROM documents GROUP BY source
@@ -6481,12 +6483,12 @@ object LlmData {
         |  ROUND(CAST(SUM(CASE WHEN abs(j.n_chars - j.med) > 3.0 * a.mad
         |      THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*), 6) AS outlier_share
         |FROM j JOIN mad a ON a.source = j.source
-        |GROUP BY j.source ORDER BY j.source""".stripMargin,
+        |GROUP BY j.source ORDER BY j.source""".stripMargin)),
     // Same double-Lehmer hash (the q_sample_split literal chain),
     // exact counts, one ROUND(6) share.
     // Nano-ln quantization on the O(vocab) weight table (the
     // langScores precedent); per-doc totals are exact long sums.
-    "q_sample_dsir" ->
+    Query("q_sample_dsir", qSampleDsir, Sql(
       """WITH w AS (
         |  SELECT doc_id, source, lang,
         |    unnest(string_split(lower(trim(text)), ' ')) AS word
@@ -6510,8 +6512,8 @@ object LlmData {
         |  (SUM(lwn) > 0) AS keep
         |FROM w2 JOIN wt USING (word)
         |GROUP BY doc_id, source, lang
-        |ORDER BY doc_id""".stripMargin,
-    "q_sample_kfold" ->
+        |ORDER BY doc_id""".stripMargin)),
+    Query("q_sample_kfold", qSampleKfold, Sql(
       """WITH d AS (
         |  SELECT ((doc_id * 48271) % 2147483647 * 48271) % 2147483647 % 5 AS fold,
         |    n_chars, lang
@@ -6524,10 +6526,10 @@ object LlmData {
         |)
         |SELECT fold, n_docs, total_chars, n_langs,
         |  ROUND(CAST(n_docs AS DOUBLE) / SUM(n_docs) OVER (), 6) AS share
-        |FROM c ORDER BY fold""".stripMargin,
+        |FROM c ORDER BY fold""".stripMargin)),
     // Same exact-moment stddev, micro-quantized weights, and
     // largest-remainder ranking with the source-name tie-break.
-    "q_sample_neyman" ->
+    Query("q_sample_neyman", qSampleNeyman, Sql(
       """WITH census AS (
         |  SELECT source, COUNT(*) AS n_docs,
         |    CAST(SUM(n_chars) AS BIGINT) AS sx,
@@ -6551,21 +6553,21 @@ object LlmData {
         |)
         |SELECT source, n_docs, std6, ROUND(a, 6) AS alloc_raw,
         |  CAST(fl + CASE WHEN rnk <= deficit THEN 1 ELSE 0 END AS BIGINT) AS n_alloc
-        |FROM s4 ORDER BY source""".stripMargin,
-    "q_sample_stratified" ->
+        |FROM s4 ORDER BY source""".stripMargin)),
+    Query("q_sample_stratified", qSampleStratified, Sql(
       """SELECT lang, rn, doc_id, n_chars FROM (
         |  SELECT lang, doc_id, n_chars,
         |    ROW_NUMBER() OVER (PARTITION BY lang
         |      ORDER BY (doc_id * 48271) % 2147483647, doc_id) AS rn
         |  FROM documents
-        |) WHERE rn <= 50 ORDER BY lang, rn""".stripMargin,
-    "q_text_winnow" -> s"$winnowFpSql\nSELECT doc_id, fp FROM fps ORDER BY doc_id, fp",
+        |) WHERE rn <= 50 ORDER BY lang, rn""".stripMargin)),
+    Query("q_text_winnow", qTextWinnow, Sql(s"$winnowFpSql\nSELECT doc_id, fp FROM fps ORDER BY doc_id, fp")),
     // Whole-text Horner hash recomputed via list_reduce over the same
     // per-codepoint ord codes as the winnow CTE (both engines agree on
     // ASCII after the '?' sanitation); min anchor LEFT-JOINed from the
     // shared fps CTE so short docs surface null exactly as array_min
     // of the kernel's empty anchor array does.
-    "q_text_fingerprint" ->
+    Query("q_text_fingerprint", qTextFingerprint, Sql(
       s"""$winnowFpSql
          |, mins AS (
          |  SELECT doc_id, CAST(MIN(fp) AS BIGINT) AS min_anchor FROM fps GROUP BY doc_id
@@ -6580,21 +6582,21 @@ object LlmData {
          |SELECT ft.doc_id AS doc_id, CAST(ft.fp AS BIGINT) AS fp,
          |  mins.min_anchor AS min_anchor
          |FROM ft LEFT JOIN mins ON ft.doc_id = mins.doc_id
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin)),
     // The banded path's exact verify is part of the query (SURVEY
     // §7.3), so the oracle is the exact-Jaccard pair set itself; band
     // recall on the fixture's qualifying pairs (all jac ≥ 0.818) is
     // 1 − 2·10⁻⁸ per pair under the deterministic 16 × 2 banding —
     // see qDedupMinhash.
-    "q_dedup_minhash" ->
+    Query("q_dedup_minhash", qDedupMinhash, Sql(
       s"""WITH $jaccardPairCtes
-         |SELECT a_id, b_id, jac FROM pairs ORDER BY a_id, b_id""".stripMargin,
+         |SELECT a_id, b_id, jac FROM pairs ORDER BY a_id, b_id""".stripMargin)),
     // Rebuilds the ENTIRE portable-simhash pipeline — per-word mixed
     // Karp-Rabin hashes, 60-bit vote signature, 15-bit chunk banding,
     // Hamming ≤ 15 verify — in exact int64 arithmetic, so the graded
     // contract is the full pair set, not a recall property. Constants
     // mirror TextKernels.simhashPortable (pinned by ExtensionsSpec).
-    "q_dedup_simhash" ->
+    Query("q_dedup_simhash", qDedupSimhash, Sql(
       """WITH w AS (
         |  SELECT doc_id,
         |    unnest(list_filter(string_split(regexp_replace(lower(trim(text)), '[^\x00-\x7f]', '?', 'g'), ' '), x -> x <> '')) AS word
@@ -6630,8 +6632,8 @@ object LlmData {
         |    OR (a.sh >> 30) & 32767 = (b.sh >> 30) & 32767
         |    OR (a.sh >> 45) & 32767 = (b.sh >> 45) & 32767)
         |  AND bit_count(xor(a.sh, b.sh)) <= 15
-        |ORDER BY a_id, b_id""".stripMargin,
-    "q_dedup_winnow" ->
+        |ORDER BY a_id, b_id""".stripMargin)),
+    Query("q_dedup_winnow", qDedupWinnow, Sql(
       s"""$winnowFpSql
          |, rare AS (
          |  SELECT fp FROM fps GROUP BY fp HAVING COUNT(*) <= ${Winnow.DfCap}
@@ -6642,19 +6644,19 @@ object LlmData {
          |FROM f a JOIN f b ON a.fp = b.fp AND a.doc_id < b.doc_id
          |GROUP BY a.doc_id, b.doc_id
          |HAVING COUNT(*) >= ${Winnow.MinShared}
-         |ORDER BY a_id, b_id""".stripMargin,
-    "q_text_tokcount" ->
+         |ORDER BY a_id, b_id""".stripMargin)),
+    Query("q_text_tokcount", qTextTokcount, Sql(
       """SELECT doc_id,
         |  len(list_filter(string_split(lower(trim(text)), ' '), x -> x <> '')) AS ws_tokens,
         |  len(regexp_extract_all(lower(trim(text)), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS bpe_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_dedup_exact" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    Query("q_dedup_exact", qDedupExact, Sql(
       """SELECT doc_id, lang, source, n_chars FROM (
         |  SELECT doc_id, lang, source, n_chars,
         |    ROW_NUMBER() OVER (PARTITION BY lower(trim(text)) ORDER BY doc_id) AS rn
         |  FROM documents
-        |) WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    "q_pack_sequences" ->
+        |) WHERE rn = 1 ORDER BY doc_id""".stripMargin)),
+    Query("q_pack_sequences", qPackSequences, Sql(
       """WITH d AS (
         |  SELECT doc_id, source,
         |    len(list_filter(string_split(lower(trim(text)), ' '), x -> x <> '')) AS n_words
@@ -6668,8 +6670,8 @@ object LlmData {
         |  CAST(SUM(n_words) AS BIGINT) AS total_words,
         |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc,
         |  ROUND(CAST(SUM(n_words) AS BIGINT) / 512.0, 6) AS fill_ratio
-        |FROM b GROUP BY source, bin ORDER BY source, bin""".stripMargin,
-    "q_quality_gopher" ->
+        |FROM b GROUP BY source, bin ORDER BY source, bin""".stripMargin)),
+    Query("q_quality_gopher", qQualityGopher, Sql(
       s"""SELECT doc_id, lang, n_words, mean_word_len, max_word_len, stopword_frac,
         |  (n_words BETWEEN 10 AND 100000 AND mean_word_len BETWEEN 2.0 AND 12.0
         |   AND max_word_len <= 30) AS keep
@@ -6684,24 +6686,24 @@ object LlmData {
         |      list_filter(string_split(lower(trim(text)), ' '), x -> x <> '') AS w
         |    FROM documents
         |  )
-        |) ORDER BY doc_id""".stripMargin,
-    "q_dedup_jaccard" ->
+        |) ORDER BY doc_id""".stripMargin)),
+    Query("q_dedup_jaccard", qDedupJaccard, Sql(
       s"""WITH $jaccardPairCtes
-        |SELECT a_id, b_id, jac FROM pairs ORDER BY a_id, b_id""".stripMargin,
+        |SELECT a_id, b_id, jac FROM pairs ORDER BY a_id, b_id""".stripMargin)),
     // the incremental screen's contract: exactly the full pair graph's
     // new-involving rows (the shard is the high id range, so that is
     // b_id > T)
-    "q_dedup_incremental" ->
+    Query("q_dedup_incremental", qDedupIncremental, Sql(
       s"""WITH $jaccardPairCtes,
         |mx AS (SELECT MAX(doc_id) AS m FROM documents)
         |SELECT a_id, b_id, jac FROM pairs, mx
         |WHERE b_id > m - CAST(FLOOR(m / 10.0) AS BIGINT)
-        |ORDER BY a_id, b_id""".stripMargin,
+        |ORDER BY a_id, b_id""".stripMargin)),
     // Exact containment over the same shingle CTEs as the Jaccard
     // family (DuckDB needs no candidate filter — the prefix filter is
     // the Spark side's scale optimization, provably lossless, so both
     // engines produce the identical verified pair set).
-    "q_dedup_contain" ->
+    Query("q_dedup_contain", qDedupContain, Sql(
       """WITH sh AS (
         |  SELECT doc_id,
         |    list_distinct(list_transform(generate_series(1, len(w) - 1),
@@ -6715,8 +6717,8 @@ object LlmData {
         |    ROUND(COUNT(*) * 1.0 / LEAST(ANY_VALUE(a.sz), ANY_VALUE(b.sz)), 6) AS containment
         |  FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
         |  GROUP BY a.doc_id, b.doc_id
-        |) WHERE containment >= 0.8 ORDER BY a_id, b_id""".stripMargin,
-    "q_dedup_apply" ->
+        |) WHERE containment >= 0.8 ORDER BY a_id, b_id""".stripMargin)),
+    Query("q_dedup_apply", qDedupApply, Sql(
       s"""WITH RECURSIVE $jaccardPairCtes,
         |$ccCtes, winners AS (
         |  SELECT doc_id FROM (
@@ -6734,17 +6736,17 @@ object LlmData {
         |  LEFT JOIN comp c ON c.node_id = d.doc_id
         |)
         |SELECT doc_id, (reason = 'keep') AS keep, reason FROM verdict
-        |ORDER BY doc_id""".stripMargin,
-    "q_dedup_cluster" ->
+        |ORDER BY doc_id""".stripMargin)),
+    Query("q_dedup_cluster", qDedupCluster, Sql(
       s"""WITH RECURSIVE $jaccardPairCtes,
         |$ccCtes
         |SELECT node_id AS doc_id, cluster_id,
         |  COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size
-        |FROM comp ORDER BY doc_id""".stripMargin,
+        |FROM comp ORDER BY doc_id""".stripMargin)),
     // The q_dedup_cluster closure + the gopher quality signals, with
     // the survivor pick's exact window order (quality DESC, n_words
     // DESC, doc_id) replayed per cluster.
-    "q_dedup_survivor" ->
+    Query("q_dedup_survivor", qDedupSurvivor, Sql(
       s"""WITH RECURSIVE $jaccardPairCtes,
         |$ccCtes,
         |q AS (
@@ -6771,11 +6773,11 @@ object LlmData {
         |SELECT r.doc_id, r.cluster_id, s.survivor_id, r.n_words, r.passes_quality,
         |  (r.doc_id = s.survivor_id) AS keep
         |FROM ranked r JOIN surv s ON r.cluster_id = s.cluster_id
-        |ORDER BY r.doc_id""".stripMargin,
+        |ORDER BY r.doc_id""".stripMargin)),
     // union of the text and embedding pair graphs, closed by the same
     // recursive-CTE components as q_dedup_cluster (inlined reading
     // `upairs` — `pairs` is the text CTE's name), verdict per doc
-    "q_dedup_multimodal" ->
+    Query("q_dedup_multimodal", qDedupMultimodal, Sql(
       s"""WITH RECURSIVE $jaccardPairCtes,
         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |ep AS (
@@ -6805,8 +6807,8 @@ object LlmData {
         |FROM documents d
         |LEFT JOIN comp ON comp.node_id = d.doc_id
         |LEFT JOIN sz ON sz.c = COALESCE(comp.cluster_id, d.doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-    "q_dedup_semantic" ->
+        |ORDER BY d.doc_id""".stripMargin)),
+    Query("q_dedup_semantic", qDedupSemantic, Sql(
       s"""WITH RECURSIVE v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |pairs AS (
         |  SELECT a_id, b_id FROM (
@@ -6824,10 +6826,10 @@ object LlmData {
         |FROM embeddings emb
         |LEFT JOIN comp ON comp.node_id = emb.vec_id
         |LEFT JOIN sz ON sz.c = COALESCE(comp.cluster_id, emb.vec_id)
-        |ORDER BY vec_id""".stripMargin,
+        |ORDER BY vec_id""".stripMargin)),
     // The q_dedup_embed pair CTE × the τ list; thresholds compare the
     // ROUNDED cosine both engines agreed on.
-    "q_dedup_threshold_sweep" ->
+    Query("q_dedup_threshold_sweep", qDedupThresholdSweep, Sql(
       """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |ep AS (
         |  SELECT a_id, b_id, cosine FROM (
@@ -6844,15 +6846,15 @@ object LlmData {
         |    SELECT tau, a_id AS id FROM x UNION ALL SELECT tau, b_id FROM x
         |  ) GROUP BY tau
         |) d ON c.tau = d.tau
-        |ORDER BY c.tau""".stripMargin,
-    "q_dedup_embed" ->
+        |ORDER BY c.tau""".stripMargin)),
+    Query("q_dedup_embed", qDedupEmbed, Sql(
       """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
         |SELECT a_id, b_id, cosine FROM (
         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
         |    ROUND(list_cosine_similarity(a.e, b.e), 6) AS cosine
         |  FROM v a JOIN v b ON a.vec_id < b.vec_id
-        |) WHERE cosine >= 0.4 ORDER BY a_id, b_id""".stripMargin,
-    "q_dedup_embed_incr" ->
+        |) WHERE cosine >= 0.4 ORDER BY a_id, b_id""".stripMargin)),
+    Query("q_dedup_embed_incr", qDedupEmbedIncr, Sql(
       """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |mx AS (SELECT MAX(vec_id) AS m FROM embeddings)
         |SELECT a_id, b_id, cosine FROM (
@@ -6861,15 +6863,15 @@ object LlmData {
         |  FROM v a JOIN v b ON a.vec_id < b.vec_id
         |), mx
         |WHERE cosine >= 0.4 AND b_id > m - CAST(FLOOR(m / 10.0) AS BIGINT)
-        |ORDER BY a_id, b_id""".stripMargin,
-    "q_sim_topk_cosine" -> topkCosineOracleSql,
+        |ORDER BY a_id, b_id""".stripMargin)),
+    Query("q_sim_topk_cosine", qSimTopkCosine, Sql(topkCosineOracleSql)),
     // Both graph replays joined on ids — see annRecallOracleSql.
-    "q_emb_ann_recall" -> annRecallOracleSql,
+    Query("q_emb_ann_recall", qEmbAnnRecall, Sql(annRecallOracleSql)),
     // Semantics-level oracle (plain N² join + window): the engine's
     // per-row broadcast top-k must equal rank-by-(rounded cosine, id).
     // The q_emb_knn rank-1 replay + two label joins; exact counts and
     // one rounded rate.
-    "q_emb_label_agreement" ->
+    Query("q_emb_label_agreement", qEmbLabelAgreement, Sql(
       """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |scored AS (
         |  SELECT a.vec_id, b.vec_id AS neighbor_id,
@@ -6887,10 +6889,10 @@ object LlmData {
         |FROM nn
         |JOIN embeddings la ON nn.vec_id = la.vec_id
         |JOIN embeddings lb ON nn.neighbor_id = lb.vec_id
-        |GROUP BY la.label ORDER BY la.label""".stripMargin,
+        |GROUP BY la.label ORDER BY la.label""".stripMargin)),
     // 16-word prefixes over the shared tokenizer; list slice ≡ Spark
     // slice(w, 1, 16) (both 1-based inclusive).
-    "q_text_prefix_dup" ->
+    Query("q_text_prefix_dup", qTextPrefixDup, Sql(
       """WITH d AS (
         |  SELECT doc_id, source,
         |    list_filter(string_split(lower(trim(text)), ' '), x -> x <> '') AS w
@@ -6903,11 +6905,11 @@ object LlmData {
         |  COUNT(DISTINCT source) AS n_sources,
         |  MIN(doc_id) AS first_doc
         |FROM p GROUP BY prefix HAVING COUNT(*) >= 2
-        |ORDER BY prefix""".stripMargin,
+        |ORDER BY prefix""".stripMargin)),
     // Same 32-bit word packing (1 << (i-1) summed over set bits —
     // bit 63 never used, so no sign/overflow divergence) and the same
     // (hamming, neighbor_id) deterministic order.
-    "q_emb_bitsketch" ->
+    Query("q_emb_bitsketch", qEmbBitsketch, Sql(
       """WITH sk AS (
         |  SELECT vec_id,
         |    CAST(list_sum(list_transform(generate_series(1, 32), i ->
@@ -6920,8 +6922,8 @@ object LlmData {
         |)
         |SELECT vec_id, w1, w2,
         |  CAST(bit_count(w1) + bit_count(w2) AS BIGINT) AS n_pos
-        |FROM sk ORDER BY vec_id""".stripMargin,
-    "q_emb_bitsketch_knn" ->
+        |FROM sk ORDER BY vec_id""".stripMargin)),
+    Query("q_emb_bitsketch_knn", qEmbBitsketchKnn, Sql(
       """WITH sk AS (
         |  SELECT vec_id,
         |    CAST(list_sum(list_transform(generate_series(1, 32), i ->
@@ -6941,8 +6943,8 @@ object LlmData {
         |  FROM scored
         |)
         |SELECT vec_id, neighbor_id, hamming, rnk FROM ranked WHERE rnk <= 5
-        |ORDER BY vec_id, rnk""".stripMargin,
-    "q_emb_knn" ->
+        |ORDER BY vec_id, rnk""".stripMargin)),
+    Query("q_emb_knn", qEmbKnn, Sql(
       """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |scored AS (
         |  SELECT a.vec_id, b.vec_id AS neighbor_id,
@@ -6953,8 +6955,8 @@ object LlmData {
         |  FROM scored
         |)
         |SELECT vec_id, neighbor_id, cosine, rnk FROM ranked WHERE rnk <= 5
-        |ORDER BY vec_id, rnk""".stripMargin,
-    "q_emb_norm_ops" ->
+        |ORDER BY vec_id, rnk""".stripMargin)),
+    Query("q_emb_norm_ops", qEmbNormOps, Sql(
       """WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |norms AS (
         |  SELECT vec_id, label,
@@ -6973,14 +6975,14 @@ object LlmData {
         |  FROM perdim GROUP BY label
         |)
         |SELECT byl.label AS label, n_vecs, avg_norm, centroid_norm
-        |FROM byl JOIN cen ON byl.label = cen.label ORDER BY byl.label""".stripMargin,
+        |FROM byl JOIN cen ON byl.label = cen.label ORDER BY byl.label""".stripMargin)),
     // Same decimal-sum centroid as q_emb_norm_ops; the distance sum
     // runs in index order with a prepended 0.0 accumulator, matching
     // Spark's aggregate(zip_with(...)) fold exactly, so d2 (and the
     // argmin tie order) are bit-identical across engines.
     // q_emb_assign's exact-decimal centroid CTE + cosine folds + the
     // nano-unit mean firewall; division chains associated as Spark.
-    "q_emb_silhouette" ->
+    Query("q_emb_silhouette", qEmbSilhouette, Sql(
       """WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |n AS (
         |  SELECT vec_id, label, e,
@@ -7018,8 +7020,8 @@ object LlmData {
         |  ROUND(CAST(SUM(own_n) AS BIGINT) / 1000000000.0 / COUNT(*), 6) AS mean_cos_own,
         |  ROUND(CAST(SUM(other_n) AS BIGINT) / 1000000000.0 / COUNT(*), 6) AS mean_cos_other,
         |  ROUND((CAST(SUM(own_n) AS BIGINT) - CAST(SUM(other_n) AS BIGINT)) / 1000000000.0 / COUNT(*), 6) AS separation
-        |FROM per GROUP BY label ORDER BY label""".stripMargin,
-    "q_emb_assign" ->
+        |FROM per GROUP BY label ORDER BY label""".stripMargin)),
+    Query("q_emb_assign", qEmbAssign, Sql(
       """WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |perdim AS (
         |  SELECT label, i, SUM(CAST(e[i] AS DECIMAL(18,9))) AS sx, COUNT(*) AS cnt
@@ -7040,13 +7042,13 @@ object LlmData {
         |  FROM d
         |)
         |SELECT vec_id, label, c_label AS assigned, ROUND(sqrt(d2), 6) AS dist
-        |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin,
+        |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin)),
     // Rebuilds the [M=8][K=16] codebook from subspace slices of the 16
     // smallest-vec_id vectors and re-derives every argmin: distances
     // fold prepend-0 left-to-right — bit-identical to the compiled
     // PqCodes kernel's accumulation — and ties order (d2, code), the
     // kernel's strict-< smaller-index rule.
-    "q_emb_pq_codes" ->
+    Query("q_emb_pq_codes", qEmbPqCodes, Sql(
       """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |cent AS (
         |  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code, e AS ce
@@ -7064,10 +7066,10 @@ object LlmData {
         |    ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2, code) AS rn
         |  FROM d
         |)
-        |SELECT vec_id, m, code FROM r WHERE rn = 1 ORDER BY vec_id, m""".stripMargin,
+        |SELECT vec_id, m, code FROM r WHERE rn = 1 ORDER BY vec_id, m""".stripMargin)),
     // Same engine-portable smallest-vec_id centroid pick; d2 is the
     // IVFADC path's own index-order IEEE fold, ties (d2, cell).
-    "q_emb_ivf_cells" ->
+    Query("q_emb_ivf_cells", qEmbIvfCells, Sql(
       """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |cent AS (SELECT vec_id AS cell, e AS cv FROM v ORDER BY vec_id LIMIT 16),
         |d AS (
@@ -7082,12 +7084,12 @@ object LlmData {
         |  FROM d
         |)
         |SELECT vec_id, cell, ROUND(d2, 6) AS cdist
-        |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin,
+        |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin)),
     // Cosine edition of the q_emb_ivf_cells replay: both fold operands
     // (dot and each norm) accumulate prepend-0 left-to-right — bit-
     // identical to the compiled dotF64 kernel — and sqrt/divide are
     // IEEE, so the argmax and its (ccos DESC, cell) tie rule match.
-    "q_sim_ivf_cells" ->
+    Query("q_sim_ivf_cells", qSimIvfCells, Sql(
       """WITH v0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |v AS (
         |  SELECT vec_id, e,
@@ -7109,12 +7111,12 @@ object LlmData {
         |  FROM d
         |)
         |SELECT vec_id, cell, ROUND(ccos, 6) AS ccos
-        |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin,
+        |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin)),
     // Two-level replay: coarse argmax over the 8 smallest-vec_id
     // centroids, fine centroids = the 8 smallest-vec_id members OF THE
     // VECTOR'S OWN CELL (join keyed on the cell, like the production
     // plan), fine argmax ties (c2cos DESC, c2_id).
-    "q_sim_ivf2_cells" ->
+    Query("q_sim_ivf2_cells", qSimIvf2Cells, Sql(
       """WITH v0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |v AS (
         |  SELECT vec_id, e,
@@ -7154,26 +7156,26 @@ object LlmData {
         |  FROM a2
         |)
         |SELECT vec_id, c1_id AS cell, c2_id AS list_id, ROUND(c2cos, 6) AS fcos
-        |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin,
+        |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin)),
     // Full trainer replay — see bpeOracleSql's scaladoc for the
     // delimited-string rewrite scheme and the byte-order tie contract.
-    "q_text_bpe" -> bpeOracleSql(BpeRounds),
+    Query("q_text_bpe", qTextBpe, Sql(bpeOracleSql(BpeRounds))),
     // Trainer replay + per-distinct-word re-apply — see
     // bpeApplyOracleSql.
-    "q_text_bpe_apply" -> bpeApplyOracleSql(BpeRounds),
+    Query("q_text_bpe_apply", qTextBpeApply, Sql(bpeApplyOracleSql(BpeRounds))),
     // Unrolled greedy-round replay — see mmrOracleSql.
-    "q_sim_mmr" -> mmrOracleSql(5),
+    Query("q_sim_mmr", qSimMmr, Sql(mmrOracleSql(5))),
     // Full end-to-end ANN replays (hash-sampled centroids via the
     // XxSql xxhash64 chain) — see ivfAnnOracleSql's section comment.
-    "q_sim_ivf_ann" -> ivfAnnOracleSql,
-    "q_sim_ivf2_ann" -> ivf2AnnOracleSql,
-    "q_emb_knn_ann" -> knnAnnOracleSql,
-    "q_emb_pq_ann" -> pqAnnOracleSql,
-    "q_emb_ivfpq_ann" -> ivfpqAnnOracleSql(lloydCoarse = false),
-    "q_emb_ivfpq_lloyd" -> ivfpqAnnOracleSql(lloydCoarse = true),
+    Query("q_sim_ivf_ann", qSimIvfAnn, Sql(ivfAnnOracleSql)),
+    Query("q_sim_ivf2_ann", qSimIvf2Ann, Sql(ivf2AnnOracleSql)),
+    Query("q_emb_knn_ann", qEmbKnnAnn, Sql(knnAnnOracleSql)),
+    Query("q_emb_pq_ann", qEmbPqAnn, Sql(pqAnnOracleSql)),
+    Query("q_emb_ivfpq_ann", qEmbIvfpqAnn, Sql(ivfpqAnnOracleSql(lloydCoarse = false))),
+    Query("q_emb_ivfpq_lloyd", qEmbIvfpqLloyd, Sql(ivfpqAnnOracleSql(lloydCoarse = true))),
     // Composes the tokenizer, quality rule, and exact-dup ranking the
     // pipeline's own operators use — same expressions, same windows.
-    "q_corpus_datacard" ->
+    Query("q_corpus_datacard", qCorpusDatacard, Sql(
       """WITH d AS (
         |  SELECT doc_id, source, lang, n_chars,
         |    len(list_filter(string_split(lower(trim(text)), ' '), x -> x <> '')) AS ntok,
@@ -7209,10 +7211,10 @@ object LlmData {
         |  ROUND(CAST(COALESCE(n_dup_text, 0) AS DOUBLE) / n_docs, 6) AS dup_rate
         |FROM base JOIN tl ON base.source = tl.source
         |LEFT JOIN dups ON base.source = dups.source
-        |ORDER BY base.source""".stripMargin,
+        |ORDER BY base.source""".stripMargin)),
     // Same O(sources) table + nano-unit term quantization; the share
     // and term expressions associate exactly as the Spark side.
-    "q_mix_kl" ->
+    Query("q_mix_kl", qMixKl, Sql(
       """WITH per AS (
         |  SELECT source, COUNT(*) AS n_docs,
         |    CAST(SUM(CAST(len(list_filter(string_split(lower(trim(text)), ' '), x -> x <> '')) AS BIGINT)) AS BIGINT) AS n_tokens
@@ -7231,10 +7233,10 @@ object LlmData {
         |  ROUND(share, 6) AS tok_share,
         |  ROUND(term_n / 1000000000.0, 6) AS kl_term,
         |  ROUND(CAST(SUM(term_n) OVER () AS BIGINT) / 1000000000.0, 6) AS kl_total
-        |FROM t3 ORDER BY source""".stripMargin,
+        |FROM t3 ORDER BY source""".stripMargin)),
     // Snake-stripe replay: same per-source rank window, same integer
     // round/position arithmetic, exact long token sums.
-    "q_pack_shards" ->
+    Query("q_pack_shards", qPackShards, Sql(
       """WITH d AS (
         |  SELECT doc_id, source,
         |    CAST(len(list_filter(string_split(lower(trim(text)), ' '), x -> x <> '')) AS BIGINT) AS ntok
@@ -7254,10 +7256,10 @@ object LlmData {
         |SELECT shard, n_docs, n_tokens,
         |  ROUND(n_tokens * 1.0 / t, 6) AS tok_share,
         |  ROUND(n_tokens * 8.0 / t, 6) AS balance
-        |FROM per CROSS JOIN tot ORDER BY shard""".stripMargin,
+        |FROM per CROSS JOIN tot ORDER BY shard""".stripMargin)),
     // The qEvEntropy nano-unit long firewall over per-doc word counts;
     // the two final divisions are associated exactly as the Spark side.
-    "q_text_entropy" ->
+    Query("q_text_entropy", qTextEntropy, Sql(
       """WITH counts AS (
         |  SELECT doc_id, word, COUNT(*) AS c FROM (
         |    SELECT doc_id, unnest(string_split(lower(trim(text)), ' ')) AS word
@@ -7274,10 +7276,10 @@ object LlmData {
         |  ROUND(CASE WHEN MAX(n) > 1
         |    THEN (-(CAST(SUM(term) AS BIGINT) / 1000000000.0) / MAX(n)) / LN(CAST(MAX(n) AS DOUBLE))
         |    ELSE 0.0 END, 6) AS norm_entropy
-        |FROM t GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM t GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
     // Incoming decile (doc_id > max − max/10) vs previous release:
     // per-source adds + exact-text dup-vs-previous via nt membership.
-    "q_corpus_diff" ->
+    Query("q_corpus_diff", qCorpusDiff, Sql(
       """WITH d AS (
         |  SELECT doc_id, source, lower(trim(text)) AS nt,
         |    CAST(len(list_filter(string_split(lower(trim(text)), ' '), x -> x <> '')) AS BIGINT) AS ntok
@@ -7305,10 +7307,10 @@ object LlmData {
         |FROM srcs LEFT JOIN pa ON srcs.source = pa.source
         |LEFT JOIN na ON srcs.source = na.source
         |LEFT JOIN dup ON srcs.source = dup.source
-        |ORDER BY srcs.source""".stripMargin,
+        |ORDER BY srcs.source""".stripMargin)),
     // q_sim_ivf_cells' cosine assignment + old/new occupancy split;
     // the shift subtracts the unrounded IEEE shares exactly as Spark.
-    "q_emb_centroid_shift" ->
+    Query("q_emb_centroid_shift", qEmbCentroidShift, Sql(
       """WITH v0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |v AS (
         |  SELECT vec_id, e,
@@ -7342,15 +7344,15 @@ object LlmData {
         |  ROUND(n_old * 1.0 / t_old, 6) AS share_old,
         |  ROUND(n_new * 1.0 / t_new, 6) AS share_new,
         |  ROUND(n_new * 1.0 / t_new - n_old * 1.0 / t_old, 6) AS shift
-        |FROM per CROSS JOIN tot ORDER BY cell""".stripMargin,
-    "q_text_tokens" ->
+        |FROM per CROSS JOIN tot ORDER BY cell""".stripMargin)),
+    Query("q_text_tokens", qTextTokens, Sql(
       s"""SELECT lang, COUNT(*) AS n_tokens, COUNT(DISTINCT word) AS n_distinct,
         |  ROUND(CAST(SUM(CAST(LENGTH(word) AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 6) AS avg_len
         |FROM (
         |  SELECT lang, unnest(string_split(lower(trim(text)), ' ')) AS word FROM documents
         |) WHERE word <> '' AND word NOT IN ($stopwordsInList)
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-    "q_text_tfidf" ->
+        |GROUP BY lang ORDER BY lang""".stripMargin)),
+    Query("q_text_tfidf", qTextTfidf, Sql(
       """WITH words AS (
         |  SELECT doc_id, source, unnest(string_split(lower(trim(text)), ' ')) AS word
         |  FROM documents
@@ -7367,15 +7369,15 @@ object LlmData {
         |  FROM scored
         |)
         |SELECT source, word, tf, df, score, rnk FROM ranked WHERE rnk <= 5
-        |ORDER BY source, rnk""".stripMargin,
-    "q_text_quality" ->
+        |ORDER BY source, rnk""".stripMargin)),
+    Query("q_text_quality", qTextQuality, Sql(
       """SELECT doc_id, lang, n_chars,
         |  len(w) AS n_words,
         |  ROUND(len(list_distinct(w)) / CAST(len(w) AS DOUBLE), 6) AS distinct_ratio,
         |  (n_chars BETWEEN 100 AND 450 AND lang IN ('en','es','de','fr') AND len(w) >= 20) AS passed
         |FROM (SELECT doc_id, lang, n_chars, string_split(lower(trim(text)), ' ') AS w FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-    "q_text_chunk" ->
+        |ORDER BY doc_id""".stripMargin)),
+    Query("q_text_chunk", qTextChunk, Sql(
       """WITH d AS (
         |  SELECT doc_id, list_filter(string_split(lower(trim(text)), ' '), x -> x <> '') AS ws
         |  FROM documents
@@ -7389,10 +7391,10 @@ object LlmData {
         |  chunk_id * 48 + 1 AS start_word,
         |  len(list_slice(ws, chunk_id * 48 + 1, chunk_id * 48 + 64)) AS n_chunk_words,
         |  array_to_string(list_slice(ws, chunk_id * 48 + 1, chunk_id * 48 + 64), ' ') AS chunk_text
-        |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
+        |FROM c ORDER BY doc_id, chunk_id""".stripMargin)),
     // Same q_text_chunk windows; cross-doc = min(doc)≠max(doc) over
     // the chunk-text group; per-doc rollup + zero-fill via doc spine.
-    "q_dedup_chunks" ->
+    Query("q_dedup_chunks", qDedupChunks, Sql(
       """WITH d AS (
         |  SELECT doc_id, list_filter(string_split(lower(trim(text)), ' '), x -> x <> '') AS ws
         |  FROM documents
@@ -7421,8 +7423,8 @@ object LlmData {
         |  ROUND(CASE WHEN COALESCE(n_chunks, 0) = 0 THEN 0.0
         |    ELSE COALESCE(n_dup_chunks, 0) * 1.0 / n_chunks END, 6) AS dup_chunk_frac
         |FROM documents LEFT JOIN per ON documents.doc_id = per.doc_id
-        |ORDER BY documents.doc_id""".stripMargin,
-    "q_text_novelty" ->
+        |ORDER BY documents.doc_id""".stripMargin)),
+    Query("q_text_novelty", qTextNovelty, Sql(
       """WITH w AS (
         |  SELECT doc_id, list_filter(string_split(lower(trim(text)), ' '), x -> x <> '') AS w
         |  FROM documents
@@ -7440,8 +7442,8 @@ object LlmData {
         |SELECT d.doc_id, COALESCE(n_tri, 0) AS n_tri, COALESCE(n_repeat, 0) AS n_repeat,
         |  ROUND(CASE WHEN COALESCE(n_tri, 0) = 0 THEN 1.0
         |        ELSE 1.0 - n_repeat * 1.0 / n_tri END, 6) AS novelty
-        |FROM documents d LEFT JOIN per USING (doc_id) ORDER BY d.doc_id""".stripMargin,
-    "q_mix_weights" ->
+        |FROM documents d LEFT JOIN per USING (doc_id) ORDER BY d.doc_id""".stripMargin)),
+    Query("q_mix_weights", qMixWeights, Sql(
       """WITH per AS (
         |  SELECT source, COUNT(*) AS n_docs,
         |    CAST(SUM(len(list_filter(string_split(lower(trim(text)), ' '), x -> x <> ''))) AS BIGINT) AS n_tokens
@@ -7450,12 +7452,12 @@ object LlmData {
         |SELECT source, n_docs, n_tokens,
         |  ROUND(n_tokens * 1.0 / t, 6) AS tok_share,
         |  ROUND(LEAST(t * 1.0 / (nsrc * n_tokens), 5.0), 6) AS weight
-        |FROM per, tot ORDER BY source""".stripMargin,
+        |FROM per, tot ORDER BY source""".stripMargin)),
     // floor(sqrt()) of a BIGINT is the identical long in both engines
     // (IEEE-754 sqrt is correctly rounded); the weight sum is exact
     // long arithmetic, so only the final ratios are doubles — the
     // q_mix_weights float firewall extended to a fractional power.
-    "q_mix_temperature" ->
+    Query("q_mix_temperature", qMixTemperature, Sql(
       """WITH per AS (
         |  SELECT source, COUNT(*) AS n_docs,
         |    CAST(SUM(len(list_filter(string_split(lower(trim(text)), ' '), x -> x <> ''))) AS BIGINT) AS n_tokens
@@ -7469,11 +7471,11 @@ object LlmData {
         |  ROUND(n_tokens * 1.0 / t, 6) AS raw_share,
         |  ROUND(aw * 1.0 / z, 6) AS temp_share,
         |  ROUND((aw * 1.0 / z) / (n_tokens * 1.0 / t), 6) AS boost
-        |FROM a, tot ORDER BY source""".stripMargin,
+        |FROM a, tot ORDER BY source""".stripMargin)),
     // Allocation arithmetic is exact int64 in both engines (// is
     // DuckDB's integer floor-div on BIGINT, div is Spark's); only the
     // final epochs ratio is a rounded double of two exact longs.
-    "q_mix_epochs" ->
+    Query("q_mix_epochs", qMixEpochs, Sql(
       """WITH per AS (
         |  SELECT source, COUNT(*) AS n_docs,
         |    CAST(SUM(len(list_filter(string_split(lower(trim(text)), ' '), x -> x <> ''))) AS BIGINT) AS n_tokens
@@ -7487,10 +7489,10 @@ object LlmData {
         |  10000000 * aw // z AS target_tokens,
         |  (10000000 * aw // z + n_tokens - 1) // n_tokens AS n_passes,
         |  ROUND((10000000 * aw // z) / CAST(n_tokens AS DOUBLE), 4) AS epochs
-        |FROM a, tot ORDER BY source""".stripMargin,
+        |FROM a, tot ORDER BY source""".stripMargin)),
     // Exact-decimal Σx / Σx² (order-free), doubles only in the final
     // identical ratios; dim is 0-based to match posexplode.
-    "q_emb_dim_stats" ->
+    Query("q_emb_dim_stats", qEmbDimStats, Sql(
       """WITH v AS (SELECT CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |x AS (
         |  SELECT i - 1 AS dim, CAST(e[i] AS DECIMAL(18,9)) AS xd
@@ -7501,11 +7503,11 @@ object LlmData {
         |  ROUND(CAST(SUM(xd * xd) AS DOUBLE) / COUNT(*) -
         |    (CAST(SUM(xd) AS DOUBLE) / COUNT(*)) * (CAST(SUM(xd) AS DOUBLE) / COUNT(*)), 6) AS var_v,
         |  CAST(MIN(xd) AS DOUBLE) AS min_v, CAST(MAX(xd) AS DOUBLE) AS max_v
-        |FROM x GROUP BY dim ORDER BY dim""".stripMargin,
+        |FROM x GROUP BY dim ORDER BY dim""".stripMargin)),
     // The pcaBasis covariance cell table: nano-unit longs, exact
     // HUGEINT pair sums, and the cov formula in the SAME double op
     // order as the Spark side (sp/1e18/n − (sxᵢ/1e9/n)·(sxⱼ/1e9/n))
-    "q_emb_whiten_cov" ->
+    Query("q_emb_whiten_cov", qEmbWhitenCov, Sql(
       """WITH raw AS (
         |  SELECT vec_id,
         |    unnest(range(len(embedding))) AS i,
@@ -7521,10 +7523,10 @@ object LlmData {
         |  ROUND(CAST(sp AS DOUBLE) / 1e18 / mi.n -
         |    (CAST(mi.sx AS DOUBLE) / 1e9 / mi.n) * (CAST(mj.sx AS DOUBLE) / 1e9 / mj.n), 6) + 0.0 AS cov
         |FROM p JOIN m mi ON mi.i = p.i JOIN m mj ON mj.i = p.j
-        |ORDER BY i, j""".stripMargin,
+        |ORDER BY i, j""".stripMargin)),
     // Centroid/fold arithmetic identical to q_emb_assign's proven CTEs
     // (k=1); μ/σ from exact decimal sums of the ROUNDED distances.
-    "q_emb_outlier" ->
+    Query("q_emb_outlier", qEmbOutlier, Sql(
       """WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |perdim AS (
         |  SELECT i, SUM(CAST(e[i] AS DECIMAL(18,9))) AS sx, COUNT(*) AS cnt
@@ -7546,11 +7548,11 @@ object LlmData {
         |)
         |SELECT vec_id, label, dist, ROUND(mu, 6) AS mu, ROUND(sigma, 6) AS sigma,
         |  (dist > mu + 2.0 * sigma) AS is_outlier
-        |FROM d CROSS JOIN m ORDER BY vec_id""".stripMargin,
+        |FROM d CROSS JOIN m ORDER BY vec_id""".stripMargin)),
     // Two-step Lehmer inclusion (see the builder's uniformity note);
     // the weight and the test value are deterministic doubles of
     // exact ints.
-    "q_sample_importance" ->
+    Query("q_sample_importance", qSampleImportance, Sql(
       """WITH d AS (
         |  SELECT doc_id, source, n_chars,
         |    ((doc_id * 48271) % 2147483647 * 48271) % 2147483647 AS h,
@@ -7559,11 +7561,11 @@ object LlmData {
         |)
         |SELECT doc_id, source, n_chars, ROUND(w, 6) AS weight,
         |  ROUND(h / 2147483647.0, 6) AS u
-        |FROM d WHERE h / 2147483647.0 < w ORDER BY doc_id""".stripMargin,
+        |FROM d WHERE h / 2147483647.0 < w ORDER BY doc_id""".stripMargin)),
     // Same exact-int-products-in-double + LN + ROUND(6) firewall as
     // q_text_tfidf; ranking on the ROUNDED pmi keeps the top-50
     // boundary deterministic in both engines.
-    "q_text_pmi" ->
+    Query("q_text_pmi", qTextPmi, Sql(
       """WITH d AS (
         |  SELECT doc_id, list_filter(string_split(lower(trim(text)), ' '), x -> x <> '') AS ws
         |  FROM documents
@@ -7586,10 +7588,10 @@ object LlmData {
         |  FROM f JOIN uni u1 ON f.w1 = u1.w JOIN uni u2 ON f.w2 = u2.w
         |  CROSS JOIN tt CROSS JOIN bt
         |), r AS (SELECT *, ROW_NUMBER() OVER (ORDER BY pmi DESC, bg) AS rnk FROM j)
-        |SELECT bg, cb, c1, c2, pmi, rnk FROM r WHERE rnk <= 50 ORDER BY rnk""".stripMargin,
+        |SELECT bg, cb, c1, c2, pmi, rnk FROM r WHERE rnk <= 50 ORDER BY rnk""".stripMargin)),
     // Same LN firewall as q_text_pmi: both ratio products are exact
     // int64-valued doubles, ranking on the ROUNDED score.
-    "q_text_keywords" ->
+    Query("q_text_keywords", qTextKeywords, Sql(
       """WITH d AS (
         |  SELECT source, list_filter(string_split(lower(trim(text)), ' '), x -> x <> '') AS ws
         |  FROM documents
@@ -7609,8 +7611,8 @@ object LlmData {
         |  FROM scored
         |)
         |SELECT source, w, csw, score, rnk FROM r WHERE rnk <= 5
-        |ORDER BY source, rnk""".stripMargin,
-    "q_text_vocab_coverage" ->
+        |ORDER BY source, rnk""".stripMargin)),
+    Query("q_text_vocab_coverage", qTextVocabCoverage, Sql(
       """WITH d AS (
         |  SELECT lang, list_filter(string_split(lower(trim(text)), ' '), x -> x <> '') AS ws
         |  FROM documents
@@ -7625,8 +7627,8 @@ object LlmData {
         |  CAST(SUM(CASE WHEN rnk <= 100 THEN cnt ELSE 0 END) AS BIGINT) AS topk_tokens,
         |  ROUND(CAST(SUM(CASE WHEN rnk <= 100 THEN cnt ELSE 0 END) AS DOUBLE) /
         |    CAST(SUM(cnt) AS BIGINT), 6) AS coverage
-        |FROM r GROUP BY lang ORDER BY lang""".stripMargin,
-    "q_stat_srm" ->
+        |FROM r GROUP BY lang ORDER BY lang""".stripMargin)),
+    Query("q_stat_srm", qStatSrm, Sql(
       s"""WITH $splitCensusCte, c2 AS (
         |  SELECT source, split, n_docs AS o FROM census
         |), s AS (
@@ -7646,8 +7648,8 @@ object LlmData {
         |SELECT source, n AS n_docs,
         |  ROUND(CAST(SUM(term_nano) AS DOUBLE) / 1000000000.0, 6) AS srm_chi2,
         |  ROUND(CAST(SUM(term_nano) AS DOUBLE) / 1000000000.0, 6) > 5.991 AS srm_detected
-        |FROM cells GROUP BY 1, 2 ORDER BY source""".stripMargin,
-    "q_stat_chi2" ->
+        |FROM cells GROUP BY 1, 2 ORDER BY source""".stripMargin)),
+    Query("q_stat_chi2", qStatChi2, Sql(
       """WITH d AS (SELECT source, lang FROM documents),
         |o AS (SELECT source, lang, COUNT(*) AS c FROM d GROUP BY 1, 2),
         |ns AS (SELECT source, COUNT(*) AS n_docs FROM d GROUP BY 1),
@@ -7669,8 +7671,8 @@ object LlmData {
         |)
         |SELECT source, n_docs,
         |  ROUND(CAST(SUM(term_nano) AS DOUBLE) / 1000000000.0, 6) AS chi2_contrib
-        |FROM cells GROUP BY 1, 2 ORDER BY source""".stripMargin,
-    "q_stat_ks_drift" ->
+        |FROM cells GROUP BY 1, 2 ORDER BY source""".stripMargin)),
+    Query("q_stat_ks_drift", qStatKsDrift, Sql(
       """WITH d AS (SELECT source, n_chars FROM documents),
         |sx AS (SELECT source, n_chars, COUNT(*) AS c FROM d GROUP BY 1, 2),
         |x AS (SELECT n_chars, COUNT(*) AS cx FROM d GROUP BY 1),
@@ -7696,13 +7698,13 @@ object LlmData {
         |    (CAST(n AS DOUBLE) * (nn - n))), 6) AS crit_005,
         |  ROUND(ks, 6) > ROUND(1.358 * SQRT(CAST(nn AS DOUBLE) /
         |    (CAST(n AS DOUBLE) * (nn - n))), 6) AS drifted
-        |FROM ks ORDER BY source""".stripMargin,
+        |FROM ks ORDER BY source""".stripMargin)),
     // regexp_full_match('[a-z]+') ≡ Spark's anchored rlike '^[a-z]+$'
     // Same per-doc signal expressions as the gopher/C4 oracles; the
     // census is exact integer counts + one rounded rate per rule, and
     // the unique-kill column gates on the same 8 booleans both engines
     // computed (see qQualityRulestats/qualityRules).
-    "q_quality_rulestats" -> {
+    Query("q_quality_rulestats", qQualityRulestats, Sql {
       val ruleSql = Seq(
         "gopher_word_count" -> "(NOT (len(w) BETWEEN 10 AND 100000))",
         "gopher_mean_word_len" ->
@@ -7737,8 +7739,8 @@ object LlmData {
          |)
          |$perRule
          |ORDER BY rule""".stripMargin
-    },
-    "q_quality_c4" ->
+    }),
+    Query("q_quality_c4", qQualityC4, Sql(
       """WITH d AS (
         |  SELECT doc_id, lower(trim(text)) AS nt,
         |    list_filter(string_split(lower(trim(text)), ' '), x -> x <> '') AS w
@@ -7754,43 +7756,43 @@ object LlmData {
         |SELECT doc_id, n_words, alpha_frac, has_brace, has_boiler,
         |  (n_words BETWEEN 5 AND 100000 AND alpha_frac >= 0.8
         |   AND NOT has_brace AND NOT has_boiler) AS keep
-        |FROM f ORDER BY doc_id""".stripMargin,
-    "q_src_csv" ->
+        |FROM f ORDER BY doc_id""".stripMargin)),
+    Query("q_src_csv", qSrcCsv, Sql(
       """SELECT lang, COUNT(*) AS n_docs,
         |  CAST(SUM(n_chars) AS BIGINT) AS total_chars,
         |  COUNT(DISTINCT source) AS n_sources,
         |  CAST(SUM(LENGTH(text)) AS BIGINT) AS total_text_len
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "q_src_jsonl" ->
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
+    Query("q_src_jsonl", qSrcJsonl, Sql(
       """SELECT source, COUNT(*) AS n_docs,
         |  CAST(SUM(n_chars) AS BIGINT) AS total_chars,
         |  MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc,
         |  CAST(SUM(LENGTH(text)) AS BIGINT) AS total_text_len
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin)),
     // Census over the parquet ORIGINAL — the text round-trip must
     // reproduce it byte-for-byte or the hash mismatches.
-    "q_src_text" ->
+    Query("q_src_text", qSrcText, Sql(
       """SELECT source, COUNT(*) AS n_docs,
         |  CAST(SUM(n_chars) AS BIGINT) AS total_chars,
         |  MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc,
         |  COUNT(DISTINCT lang) AS n_langs,
         |  CAST(SUM(LENGTH(text)) AS BIGINT) AS total_text_len
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    "q_src_orc" ->
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin)),
+    Query("q_src_orc", qSrcOrc, Sql(
       """SELECT lang, COUNT(*) AS n_docs,
         |  CAST(SUM(n_chars) AS BIGINT) AS total_chars,
         |  MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc,
         |  COUNT(DISTINCT source) AS n_sources,
         |  CAST(SUM(LENGTH(text)) AS BIGINT) AS total_text_len
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "q_src_avro" ->
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
+    Query("q_src_avro", qSrcAvro, Sql(
       """SELECT source, COUNT(*) AS n_docs,
         |  CAST(SUM(n_chars) AS BIGINT) AS total_chars,
         |  MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc,
         |  COUNT(DISTINCT lang) AS n_langs,
         |  CAST(SUM(LENGTH(text)) AS BIGINT) AS total_text_len
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    "q_text_repetition" ->
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin)),
+    Query("q_text_repetition", qTextRepetition, Sql(
       """WITH d AS (
         |  SELECT doc_id, list_filter(string_split(lower(trim(text)), ' '), x -> x <> '') AS ws
         |  FROM documents
@@ -7816,8 +7818,8 @@ object LlmData {
         |)
         |SELECT doc_id, n_words, top_word_frac, dup_bigram_frac,
         |  (top_word_frac <= 0.1 AND dup_bigram_frac <= 0.05) AS keep
-        |FROM fr ORDER BY doc_id""".stripMargin,
-    "q_text_contam" ->
+        |FROM fr ORDER BY doc_id""".stripMargin)),
+    Query("q_text_contam", qTextContam, Sql(
       """WITH d AS (
         |  SELECT doc_id, source, list_filter(string_split(lower(trim(text)), ' '), x -> x <> '') AS ws
         |  FROM documents
@@ -7839,8 +7841,8 @@ object LlmData {
         |FROM g c LEFT JOIN bench b ON c.ng = b.ng
         |WHERE c.source <> 'src0'
         |GROUP BY c.doc_id, c.source
-        |ORDER BY doc_id""".stripMargin,
-    "q_text_perplexity" ->
+        |ORDER BY doc_id""".stripMargin)),
+    Query("q_text_perplexity", qTextPerplexity, Sql(
       s"""WITH $bigramCte, docbg AS (
         |  SELECT doc_id, lang, bg, COUNT(*) AS occ FROM bigrams GROUP BY 1, 2, 3
         |), model AS (
@@ -7858,8 +7860,8 @@ object LlmData {
         |)
         |SELECT doc_id, lang, n_bigrams,
         |  ROUND(-(CAST(s AS DOUBLE) / 1000000000.0) / n_bigrams, 6) AS avg_nll
-        |FROM scored ORDER BY doc_id""".stripMargin,
-    "q_text_ppl_bucket" ->
+        |FROM scored ORDER BY doc_id""".stripMargin)),
+    Query("q_text_ppl_bucket", qTextPplBucket, Sql(
       s"""WITH $bigramCte, docbg AS (
         |  SELECT doc_id, lang, bg, COUNT(*) AS occ FROM bigrams GROUP BY 1, 2, 3
         |), model AS (
@@ -7891,8 +7893,8 @@ object LlmData {
         |  ROUND(CAST(SUM(CAST(ROUND(avg_nll * 1000000.0) AS BIGINT)) AS DOUBLE)
         |    / COUNT(*) / 1000000.0, 6) AS mean_nll
         |FROM ppl JOIN th ON ppl.lang = th.t_lang
-        |GROUP BY 1, 2 ORDER BY lang, bucket""".stripMargin,
-    "q_text_langid" ->
+        |GROUP BY 1, 2 ORDER BY lang, bucket""".stripMargin)),
+    Query("q_text_langid", qTextLangid, Sql(
       s"""WITH $bigramCte, model AS (
         |  SELECT lang AS m_lang, bg, COUNT(*) AS cnt FROM bigrams GROUP BY lang, bg
         |), totals AS (
@@ -7910,111 +7912,18 @@ object LlmData {
         |  FROM scored
         |)
         |SELECT lang, m_lang AS predicted, COUNT(*) AS n FROM best WHERE rnk = 1
-        |GROUP BY lang, m_lang ORDER BY lang, predicted""".stripMargin
-  )
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_sample_hash" -> (qSampleHash _),
-    "q_sample_split" -> (qSampleSplit _),
-    "q_sample_stratified" -> (qSampleStratified _),
-    "q_sample_budget" -> (qSampleBudget _),
-    "q_sample_neyman" -> (qSampleNeyman _),
-    "q_sample_dsir" -> (qSampleDsir _),
-    "q_sample_kfold" -> (qSampleKfold _),
-    "q_quality_length_mad" -> (qQualityLengthMad _),
-    "q_dedup_crosssrc" -> (qDedupCrosssrc _),
-    "q_text_zipf" -> (qTextZipf _),
-    "q_text_hapax" -> (qTextHapax _),
-    "q_text_freq_drift" -> (qTextFreqDrift _),
-    "q_text_length_profile" -> (qTextLengthProfile _),
-    "q_text_js_div" -> (qTextJsDiv _),
-    "q_text_tokcount" -> (qTextTokcount _),
-    "q_dedup_exact" -> (qDedupExact _),
-    "q_dedup_jaccard" -> (qDedupJaccard _),
-    "q_dedup_incremental" -> (qDedupIncremental _),
-    "q_dedup_contain" -> (qDedupContain _),
-    "q_dedup_cluster" -> (qDedupCluster _),
-    "q_dedup_survivor" -> (qDedupSurvivor _),
-    "q_dedup_apply" -> (qDedupApply _),
-    "q_dedup_multimodal" -> (qDedupMultimodal _),
-    "q_dedup_minhash" -> (qDedupMinhash _),
-    "q_dedup_simhash" -> (qDedupSimhash _),
-    "q_dedup_embed" -> (qDedupEmbed _),
-    "q_dedup_threshold_sweep" -> (qDedupThresholdSweep _),
-    "q_dedup_embed_incr" -> (qDedupEmbedIncr _),
-    "q_dedup_semantic" -> (qDedupSemantic _),
-    "q_sim_topk_cosine" -> (qSimTopkCosine _),
-    "q_sim_lsh_ann" -> (qSimLshAnn _),
-    "q_sim_ivf_ann" -> (qSimIvfAnn _),
-    "q_emb_ann_recall" -> (qEmbAnnRecall _),
-    "q_sim_ivf2_ann" -> (qSimIvf2Ann _),
-    "q_emb_norm_ops" -> (qEmbNormOps _),
-    "q_emb_assign" -> (qEmbAssign _),
-    "q_text_tokens" -> (qTextTokens _),
-    "q_text_bpe" -> (qTextBpe _),
-    "q_text_bpe_apply" -> (qTextBpeApply _),
-    "q_text_tfidf" -> (qTextTfidf _),
-    "q_text_quality" -> (qTextQuality _),
-    "q_text_langid" -> (qTextLangid _),
-    "q_text_perplexity" -> (qTextPerplexity _),
-    "q_text_ppl_bucket" -> (qTextPplBucket _),
-    "q_text_fingerprint" -> (qTextFingerprint _),
-    "q_text_winnow" -> (qTextWinnow _),
-    "q_dedup_winnow" -> (qDedupWinnow _),
-    "q_mm_features" -> (qMmFeatures _),
-    "q_emb_quantize" -> (qEmbQuantize _),
-    "q_pack_sequences" -> (qPackSequences _),
-    "q_quality_gopher" -> (qQualityGopher _),
-    "q_text_repetition" -> (qTextRepetition _),
-    "q_text_contam" -> (qTextContam _),
-    "q_text_chunk" -> (qTextChunk _),
-    "q_text_novelty" -> (qTextNovelty _),
-    "q_mix_weights" -> (qMixWeights _),
-    "q_mix_temperature" -> (qMixTemperature _),
-    "q_mix_epochs" -> (qMixEpochs _),
-    "q_src_csv" -> (qSrcCsv _),
-    "q_src_jsonl" -> (qSrcJsonl _),
-    "q_src_text" -> (qSrcText _),
-    "q_src_orc" -> (qSrcOrc _),
-    "q_src_avro" -> (qSrcAvro _),
-    "q_agg_approx_topk" -> (qAggApproxTopk _),
-    "q_emb_dim_stats" -> (qEmbDimStats _),
-    "q_text_pmi" -> (qTextPmi _),
-    "q_text_keywords" -> (qTextKeywords _),
-    "q_quality_c4" -> (qQualityC4 _),
-    "q_quality_rulestats" -> (qQualityRulestats _),
-    "q_emb_outlier" -> (qEmbOutlier _),
-    "q_sample_importance" -> (qSampleImportance _),
-    "q_emb_knn" -> (qEmbKnn _),
-    "q_emb_bitsketch" -> (qEmbBitsketch _),
-    "q_emb_bitsketch_knn" -> (qEmbBitsketchKnn _),
-    "q_emb_knn_ann" -> (qEmbKnnAnn _),
-    "q_emb_label_agreement" -> (qEmbLabelAgreement _),
-    "q_text_prefix_dup" -> (qTextPrefixDup _),
-    "q_agg_theta_sets" -> (qAggThetaSets _),
-    "q_text_vocab_coverage" -> (qTextVocabCoverage _),
-    "q_stat_ks_drift" -> (qStatKsDrift _),
-    "q_stat_chi2" -> (qStatChi2 _),
-    "q_stat_srm" -> (qStatSrm _),
-    "q_emb_pq_ann" -> (qEmbPqAnn _),
-    "q_emb_opq_ann" -> (qEmbOpqAnn _),
-    "q_emb_ivfpq_ann" -> (qEmbIvfpqAnn _),
-    "q_emb_ivfpq_lloyd" -> (qEmbIvfpqLloyd _),
-    "q_emb_opqivf_ann" -> (qEmbOpqIvfAnn _),
-    "q_emb_whiten_cov" -> (qEmbWhitenCov _),
-    "q_emb_whiten" -> (qEmbWhiten _),
-    "q_emb_pq_codes" -> (qEmbPqCodes _),
-    "q_emb_ivf_cells" -> (qEmbIvfCells _),
-    "q_sim_ivf_cells" -> (qSimIvfCells _),
-    "q_sim_ivf2_cells" -> (qSimIvf2Cells _),
-    "q_sim_mmr" -> (qSimMmr _),
-    "q_corpus_datacard" -> (qCorpusDatacard _),
-    "q_pack_shards" -> (qPackShards _),
-    "q_text_entropy" -> (qTextEntropy _),
-    "q_corpus_diff" -> (qCorpusDiff _),
-    "q_emb_centroid_shift" -> (qEmbCentroidShift _),
-    "q_dedup_chunks" -> (qDedupChunks _),
-    "q_emb_silhouette" -> (qEmbSilhouette _),
-    "q_mix_kl" -> (qMixKl _)
+        |GROUP BY lang, m_lang ORDER BY lang, predicted""".stripMargin)),
+    Query("q_sim_lsh_ann", qSimLshAnn,
+      NoOracle("MLlib LSH buckets are implementation-specific; LlmDataSpec grades recall")),
+    Query("q_agg_approx_topk", qAggApproxTopk,
+      NoOracle("sketch state and tie order are implementation-specific; ApproxAggSpec: exact counts")),
+    Query("q_agg_theta_sets", qAggThetaSets,
+      NoOracle("theta estimates are implementation-specific; ApproxAggSpec: within the theta RSE")),
+    Query("q_emb_opq_ann", qEmbOpqAnn,
+      NoOracle("ANN: LlmDataSpec grades determinism and recall (OPQ beats plain PQ)")),
+    Query("q_emb_opqivf_ann", qEmbOpqIvfAnn,
+      NoOracle("ANN: LlmDataSpec grades determinism and recall >= the unrotated IVFADC's")),
+    Query("q_emb_whiten", qEmbWhiten,
+      NoOracle("eigendecomposition; LlmDataSpec: determinism, descending spectrum, unit variance"))
   )
 }

@@ -1941,8 +1941,9 @@ object Relational {
       .orderBy("event_id")
   }
 
-  val oracle: Map[String, String] = Map(
-    "q_agg_corr" ->
+  /** This module's queries, each with its oracle (see [[Query]]). */
+  val registry: Seq[Query] = Seq(
+    Query("q_agg_corr", qAggCorr, Sql(
       """WITH t AS (
         |  SELECT l_returnflag, COUNT(*) AS n,
         |    CAST(SUM(CAST(l_quantity AS DECIMAL(19,6))) AS DOUBLE) AS sx,
@@ -1956,17 +1957,17 @@ object Relational {
         |  ROUND((CAST(n AS DOUBLE) * sxy - sx * sy) /
         |    SQRT((CAST(n AS DOUBLE) * sxx - sx * sx) * (CAST(n AS DOUBLE) * syy - sy * sy)), 6) AS corr_qty_price,
         |  ROUND((CAST(n AS DOUBLE) * sxy - sx * sy) / (CAST(n AS DOUBLE) * sxx - sx * sx), 6) AS slope_price_per_qty
-        |FROM t ORDER BY l_returnflag""".stripMargin,
-    "q_agg_hist" ->
+        |FROM t ORDER BY l_returnflag""".stripMargin)),
+    Query("q_agg_hist", qAggHist, Sql(
       """SELECT CAST(LEAST(FLOOR(l_extendedprice / 10000), 10) AS INT) AS bucket,
         |  COUNT(*) AS n_items,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-        |FROM lineitem GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "q_agg_salted" ->
+        |FROM lineitem GROUP BY 1 ORDER BY bucket""".stripMargin)),
+    Query("q_agg_salted", qAggSalted, Sql(
       """SELECT user_id, COUNT(*) AS n_events,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_tpch_q3" ->
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    Query("q_tpch_q3", qTpchQ3, Sql(
       """SELECT l_orderkey, o_orderdate,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -1974,8 +1975,8 @@ object Relational {
         |  AND o_orderdate < TIMESTAMP '1996-07-01'
         |  AND l_shipdate > TIMESTAMP '1996-07-01'
         |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q_tpch_q5" ->
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin)),
+    Query("q_tpch_q5", qTpchQ5, Sql(
       """SELECT n_name,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
         |  COUNT(*) AS n_lines
@@ -1985,8 +1986,8 @@ object Relational {
         |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
         |JOIN nation ON s_nationkey = n_nationkey
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-    "q_tpch_q10" ->
+        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin)),
+    Query("q_tpch_q10", qTpchQ10, Sql(
       """SELECT c_custkey, c_name, c_acctbal, n_name,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
         |FROM lineitem
@@ -1996,22 +1997,22 @@ object Relational {
         |WHERE l_returnflag = 'R'
         |  AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-04-01'
         |GROUP BY c_custkey, c_name, c_acctbal, n_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "q_tpch_q4" ->
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin)),
+    Query("q_tpch_q4", qTpchQ4, Sql(
       """SELECT o_orderpriority, COUNT(*) AS n_orders FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-07-01'
         |  AND EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey
         |                AND l_shipdate > o_orderdate + INTERVAL 90 DAY)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_tpch_q6" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
+    Query("q_tpch_q6", qTpchQ6, Sql(
       """SELECT
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
         |  COUNT(*) AS n_lines
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "q_tpch_q14" ->
+        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin)),
+    Query("q_tpch_q14", qTpchQ14, Sql(
       """SELECT
         |  ROUND(100.0 * CAST(SUM(CASE WHEN p_type LIKE 'PROMO%'
         |      THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))
@@ -2019,8 +2020,8 @@ object Relational {
         |    / CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE), 6) AS promo_share,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS total_revenue
         |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-09-01' AND l_shipdate < TIMESTAMP '1996-10-01'""".stripMargin,
-    "q_tpch_q18" ->
+        |WHERE l_shipdate >= TIMESTAMP '1996-09-01' AND l_shipdate < TIMESTAMP '1996-10-01'""".stripMargin)),
+    Query("q_tpch_q18", qTpchQ18, Sql(
       """WITH big AS (
         |  SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
         |  FROM lineitem GROUP BY l_orderkey HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) > 160
@@ -2028,8 +2029,8 @@ object Relational {
         |SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, total_qty
         |FROM big JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY total_qty DESC, o_orderkey LIMIT 100""".stripMargin,
-    "q_tpch_q7" ->
+        |ORDER BY total_qty DESC, o_orderkey LIMIT 100""".stripMargin)),
+    Query("q_tpch_q7", qTpchQ7, Sql(
       """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |  YEAR(l_shipdate) AS l_year,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
@@ -2043,8 +2044,8 @@ object Relational {
         |  AND n1.n_name IN ('NATION_1', 'NATION_2')
         |  AND n2.n_name IN ('NATION_1', 'NATION_2')
         |  AND n1.n_name <> n2.n_name
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "q_tpch_q8" ->
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
+    Query("q_tpch_q8", qTpchQ8, Sql(
       """SELECT YEAR(o_orderdate) AS o_year,
         |  ROUND(CAST(SUM(CASE WHEN sn.n_name = 'NATION_3'
         |      THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))
@@ -2061,8 +2062,8 @@ object Relational {
         |    JOIN nation cn ON c_nationkey = cn.n_nationkey
         |    JOIN region ON cn.n_regionkey = r_regionkey
         |    WHERE r_name = 'EUROPE')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_tpch_q15" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("q_tpch_q15", qTpchQ15, Sql(
       """WITH rev AS (
         |  SELECT l_suppkey,
         |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS total_rev
@@ -2073,8 +2074,8 @@ object Relational {
         |SELECT s_suppkey, s_name, total_rev
         |FROM rev JOIN supplier ON l_suppkey = s_suppkey
         |WHERE total_rev = (SELECT MAX(total_rev) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q_tpch_q21" ->
+        |ORDER BY s_suppkey""".stripMargin)),
+    Query("q_tpch_q21", qTpchQ21, Sql(
       """WITH li AS (
         |  SELECT l_orderkey, l_suppkey,
         |    (l_shipdate > o_orderdate + INTERVAL 60 DAY) AS late
@@ -2095,8 +2096,8 @@ object Relational {
         |JOIN per_order USING (l_orderkey)
         |JOIN supplier ON l_suppkey = s_suppkey
         |GROUP BY s_suppkey, s_name
-        |ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin,
-    "q_tpch_q17" ->
+        |ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin)),
+    Query("q_tpch_q17", qTpchQ17, Sql(
       """WITH pq AS (
         |  SELECT l_partkey AS pk, SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sq, COUNT(*) AS cq
         |  FROM lineitem GROUP BY 1
@@ -2105,8 +2106,8 @@ object Relational {
         |  COUNT(*) AS n_lines
         |FROM lineitem JOIN part ON p_partkey = l_partkey JOIN pq ON pk = l_partkey
         |WHERE p_type = 'SMALL' AND p_size <= 15
-        |  AND CAST(l_quantity AS DECIMAL(8,2)) * 2 * cq < sq""".stripMargin,
-    "q_tpch_q20" ->
+        |  AND CAST(l_quantity AS DECIMAL(8,2)) * 2 * cq < sq""".stripMargin)),
+    Query("q_tpch_q20", qTpchQ20, Sql(
       """WITH sp AS (
         |  SELECT l_suppkey, l_partkey,
         |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS sq
@@ -2118,15 +2119,15 @@ object Relational {
         |SELECT s_suppkey, s_name, s_acctbal
         |FROM supplier WHERE s_suppkey IN (
         |  SELECT l_suppkey FROM sp JOIN pt USING (l_partkey) WHERE sq * 2 > tq)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q_tpch_q13" ->
+        |ORDER BY s_suppkey""".stripMargin)),
+    Query("q_tpch_q13", qTpchQ13, Sql(
       """SELECT c_count, COUNT(*) AS custdist FROM (
         |  SELECT c_custkey, COUNT(o_orderkey) AS c_count
         |  FROM customer LEFT OUTER JOIN orders
         |    ON c_custkey = o_custkey AND o_orderpriority <> '4-NOT SPECIFIED'
         |  GROUP BY c_custkey
-        |) GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q_tpch_q22" ->
+        |) GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin)),
+    Query("q_tpch_q22", qTpchQ22, Sql(
       """WITH pos AS (
         |  SELECT SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS sbal, COUNT(*) AS cnt
         |  FROM customer WHERE c_acctbal > 0.0 AND c_nationkey IN (1, 5, 9, 13, 17, 21)
@@ -2139,8 +2140,8 @@ object Relational {
         |  AND NOT EXISTS (SELECT 1 FROM orders
         |                  WHERE o_custkey = c_custkey
         |                    AND o_orderdate >= TIMESTAMP '2000-01-01')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_tpch_q9" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("q_tpch_q9", qTpchQ9, Sql(
       """SELECT n_name AS nation, YEAR(o_orderdate) AS o_year,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))
         |    - CAST(p_retailprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_profit
@@ -2149,8 +2150,8 @@ object Relational {
         |JOIN nation ON s_nationkey = n_nationkey
         |JOIN orders ON l_orderkey = o_orderkey
         |WHERE p_name LIKE '%widget%'
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_tpch_q2" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("q_tpch_q2", qTpchQ2, Sql(
       """WITH cost AS (
         |  SELECT l_partkey, l_suppkey, MIN(CAST(l_extendedprice AS DECIMAL(18,2))) AS scost
         |  FROM lineitem GROUP BY 1, 2
@@ -2161,8 +2162,8 @@ object Relational {
         |JOIN supplier ON l_suppkey = s_suppkey
         |JOIN nation ON s_nationkey = n_nationkey
         |WHERE p_size >= 30 AND p_type = 'LARGE'
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100""".stripMargin,
-    "q_tpch_q11" ->
+        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100""".stripMargin)),
+    Query("q_tpch_q11", qTpchQ11, Sql(
       """WITH val AS (
         |  SELECT l_partkey,
         |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS v
@@ -2173,34 +2174,34 @@ object Relational {
         |), tot AS (SELECT CAST(SUM(v) AS DECIMAL(28,2)) AS tv, COUNT(*) AS cnt FROM val)
         |SELECT l_partkey AS p_key, CAST(v AS DOUBLE) AS part_value
         |FROM val, tot WHERE v * cnt > tv * 2
-        |ORDER BY part_value DESC, p_key""".stripMargin,
-    "q_tpch_q12" ->
+        |ORDER BY part_value DESC, p_key""".stripMargin)),
+    Query("q_tpch_q12", qTpchQ12, Sql(
       """SELECT l_linestatus AS linestatus,
         |  COUNT(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 END) AS high_line_count,
         |  COUNT(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 END) AS low_line_count
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE l_shipdate > o_orderdate + INTERVAL 60 DAY
         |  AND l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_tpch_q16" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("q_tpch_q16", qTpchQ16, Sql(
       """SELECT p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE p_brand <> 'Brand#1' AND p_type NOT LIKE 'PROMO%'
         |  AND p_size IN (1, 4, 9, 16, 25, 36, 49)
         |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 1000.0)
-        |GROUP BY 1, 2, 3 ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "q_tpch_q19" ->
+        |GROUP BY 1, 2, 3 ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin)),
+    Query("q_tpch_q19", qTpchQ19, Sql(
       """SELECT
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
         |  COUNT(*) AS n_lines
         |FROM lineitem JOIN part ON p_partkey = l_partkey
         |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 11)
         |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
+        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 30)""".stripMargin)),
     // Same 11-way stacked census: injective string keys for the
     // distinct counts (count is representation-independent), typed
     // numeric min/max, identical per-column null accounting.
-    "q_profile_table" ->
+    Query("q_profile_table", qProfileTable, Sql(
       """WITH st AS (
         |  SELECT 'l_orderkey' AS cname, CAST(l_orderkey AS DOUBLE) AS vnum, CAST(NULL AS VARCHAR) AS vstr FROM lineitem
         |  UNION ALL SELECT 'l_partkey', CAST(l_partkey AS DOUBLE), NULL FROM lineitem
@@ -2220,8 +2221,8 @@ object Relational {
         |  COUNT(*) - COUNT(vkey) AS n_null,
         |  COUNT(DISTINCT vkey) AS n_distinct,
         |  MIN(vnum) AS min_num, MAX(vnum) AS max_num
-        |FROM k GROUP BY cname ORDER BY cname""".stripMargin,
-    "q_agg_moments" ->
+        |FROM k GROUP BY cname ORDER BY cname""".stripMargin)),
+    Query("q_agg_moments", qAggMoments, Sql(
       """WITH p AS (
         |  SELECT l_returnflag, CAST(l_quantity AS DECIMAL(8,2)) AS x FROM lineitem
         |), sums AS (
@@ -2239,50 +2240,50 @@ object Relational {
         |    / POW(s2 / n - POW(s1 / n, 2), 1.5), 6) AS skewness,
         |  ROUND((s4 / n - 4 * (s1 / n) * (s3 / n) + 6 * POW(s1 / n, 2) * (s2 / n)
         |    - 3 * POW(s1 / n, 4)) / POW(s2 / n - POW(s1 / n, 2), 2) - 3, 6) AS kurtosis
-        |FROM sums ORDER BY l_returnflag""".stripMargin,
-    "q_scan_parquet" ->
-      "SELECT * FROM lineitem ORDER BY l_orderkey, l_linenumber",
-    "q_scan_prune" ->
+        |FROM sums ORDER BY l_returnflag""".stripMargin)),
+    Query("q_scan_parquet", qScanParquet, Sql(
+      "SELECT * FROM lineitem ORDER BY l_orderkey, l_linenumber")),
+    Query("q_scan_prune", qScanPrune, Sql(
       """SELECT l_orderkey, l_linenumber, l_shipdate, l_quantity FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_filter_pred" ->
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    Query("q_filter_pred", qFilterPred, Sql(
       """SELECT * FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
         |  AND (o_orderpriority LIKE '1%' OR o_orderpriority LIKE '2%')
         |  AND o_orderstatus IN ('F','O')
         |  AND (o_totalprice > 50000 OR o_orderstatus IS NOT DISTINCT FROM 'F')
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_project_expr" ->
+        |ORDER BY o_orderkey""".stripMargin)),
+    Query("q_project_expr", qProjectExpr, Sql(
       """SELECT l_orderkey, l_linenumber,
         |  CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS net_price,
         |  CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) * (1 + CAST(l_tax AS DECIMAL(18,2))) AS DOUBLE) AS charged,
         |  CASE WHEN l_quantity >= 30 THEN 'BULK' WHEN l_quantity >= 10 THEN 'MEDIUM' ELSE 'SMALL' END AS qty_band
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_join_bhj" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    Query("q_join_bhj", qJoinBhj, Sql(
       """SELECT p_brand, s_name,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
         |  COUNT(*) AS n_lines
         |FROM lineitem JOIN part ON l_partkey = p_partkey JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY p_brand, s_name ORDER BY p_brand, s_name""".stripMargin,
-    "q_join_smj" ->
+        |GROUP BY p_brand, s_name ORDER BY p_brand, s_name""".stripMargin)),
+    Query("q_join_smj", qJoinSmj, Sql(
       """SELECT o_orderpriority, COUNT(*) AS n_lines,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_join_shj" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
+    Query("q_join_shj", qJoinShj, Sql(
       """SELECT o_orderstatus, l_linestatus, COUNT(*) AS n_lines,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
         |WHERE o_orderstatus = 'F'
         |GROUP BY o_orderstatus, l_linestatus
-        |ORDER BY o_orderstatus, l_linestatus""".stripMargin,
-    "q_join_outer" ->
+        |ORDER BY o_orderstatus, l_linestatus""".stripMargin)),
+    Query("q_join_outer", qJoinOuter, Sql(
       """SELECT c_custkey, c_name, COUNT(o_orderkey) AS n_orders,
         |  CAST(COALESCE(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 0) AS DOUBLE) AS total_spent
         |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_custkey, c_name ORDER BY c_custkey""".stripMargin,
-    "q_join_full" ->
+        |GROUP BY c_custkey, c_name ORDER BY c_custkey""".stripMargin)),
+    Query("q_join_full", qJoinFull, Sql(
       """WITH a AS (
         |  SELECT o_custkey AS a_custkey, COUNT(*) AS a_orders,
         |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS a_spent
@@ -2298,22 +2299,22 @@ object Relational {
         |  COALESCE(b_orders, 0) AS orders_1996,
         |  COALESCE(b_spent, 0.0) AS spent_1996
         |FROM a FULL OUTER JOIN b ON a_custkey = b_custkey
-        |ORDER BY custkey""".stripMargin,
-    "q_join_semi" ->
+        |ORDER BY custkey""".stripMargin)),
+    Query("q_join_semi", qJoinSemi, Sql(
       """SELECT c_custkey, c_name, c_mktsegment FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-    "q_join_anti" ->
+        |ORDER BY c_custkey""".stripMargin)),
+    Query("q_join_anti", qJoinAnti, Sql(
       """SELECT p_partkey, p_name, p_brand FROM part
         |WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey)
-        |ORDER BY p_partkey""".stripMargin,
-    "q_join_theta_range" ->
+        |ORDER BY p_partkey""".stripMargin)),
+    Query("q_join_theta_range", qJoinThetaRange, Sql(
       """SELECT a.event_id AS a_id, b.event_id AS b_id,
         |  epoch_us(b.ts) - epoch_us(a.ts) AS gap_us
         |FROM events a JOIN events b ON a.user_id = b.user_id
         |  AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 5 MINUTE
-        |ORDER BY a_id, b_id""".stripMargin,
-    "q_join_asof" ->
+        |ORDER BY a_id, b_id""".stripMargin)),
+    Query("q_join_asof", qJoinAsof, Sql(
       """WITH tagged AS (
         |  SELECT user_id, ts, event_id, event_type,
         |    CASE WHEN event_type = 'view' THEN 0 ELSE 1 END AS prio,
@@ -2326,11 +2327,11 @@ object Relational {
         |  FROM tagged
         |)
         |SELECT event_id AS purchase_id, user_id, last_view_id AS prior_view_id
-        |FROM lv WHERE event_type = 'purchase' ORDER BY purchase_id""".stripMargin,
+        |FROM lv WHERE event_type = 'purchase' ORDER BY purchase_id""".stripMargin)),
     // The q_join_asof window carrying (view id, view ts); the 1-hour
     // tolerance gates on exact long µs, nulls/matched mirror Spark's
     // three-valued <= through COALESCE.
-    "q_join_asof_tol" ->
+    Query("q_join_asof_tol", qJoinAsofTol, Sql(
       """WITH tagged AS (
         |  SELECT user_id, ts, event_id, event_type,
         |    CASE WHEN event_type = 'view' THEN 0 ELSE 1 END AS prio,
@@ -2355,8 +2356,8 @@ object Relational {
         |  CASE WHEN gap0 <= 3600000000 THEN last_view_id END AS prior_view_id,
         |  CASE WHEN gap0 <= 3600000000 THEN gap0 END AS gap_us,
         |  COALESCE(gap0 <= 3600000000, FALSE) AS matched
-        |FROM g ORDER BY purchase_id""".stripMargin,
-    "q_join_asof_fwd" ->
+        |FROM g ORDER BY purchase_id""".stripMargin)),
+    Query("q_join_asof_fwd", qJoinAsofFwd, Sql(
       """WITH tagged AS (
         |  SELECT user_id, ts, event_id, event_type,
         |    CASE WHEN event_type = 'view' THEN 0 ELSE 1 END AS prio,
@@ -2369,8 +2370,8 @@ object Relational {
         |  FROM tagged
         |)
         |SELECT event_id AS purchase_id, user_id, next_view_id
-        |FROM nv WHERE event_type = 'purchase' ORDER BY purchase_id""".stripMargin,
-    "q_join_cross_topk" ->
+        |FROM nv WHERE event_type = 'purchase' ORDER BY purchase_id""".stripMargin)),
+    Query("q_join_cross_topk", qJoinCrossTopk, Sql(
       """WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |scored AS (
         |  SELECT p.vec_id AS probe_id, e.vec_id,
@@ -2381,8 +2382,8 @@ object Relational {
         |  FROM scored
         |)
         |SELECT probe_id, vec_id, cosine, rnk FROM ranked WHERE rnk <= 3
-        |ORDER BY probe_id, rnk""".stripMargin,
-    "q_agg_hash" ->
+        |ORDER BY probe_id, rnk""".stripMargin)),
+    Query("q_agg_hash", qAggHash, Sql(
       """SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -2394,26 +2395,26 @@ object Relational {
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_agg_distinct" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+    Query("q_agg_distinct", qAggDistinct, Sql(
       """SELECT c_mktsegment, COUNT(DISTINCT c_nationkey) AS n_nations, COUNT(*) AS n_customers,
         |  COUNT(DISTINCT (c_nationkey, c_mktsegment)) AS n_nation_seg
-        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q_agg_rollup" ->
+        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
+    Query("q_agg_rollup", qAggRollup, Sql(
       """SELECT COALESCE(r_name, 'ALL') AS region_name, COALESCE(n_name, 'ALL') AS nation_name,
         |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal, COUNT(*) AS n_cust
         |FROM customer JOIN nation ON c_nationkey = n_nationkey JOIN region ON n_regionkey = r_regionkey
         |GROUP BY ROLLUP (r_name, n_name)
-        |ORDER BY region_name, nation_name""".stripMargin,
-    "q_agg_pivot" ->
+        |ORDER BY region_name, nation_name""".stripMargin)),
+    Query("q_agg_pivot", qAggPivot, Sql(
       """SELECT CAST(ts AS DATE) AS day,
         |  CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
         |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error,
         |  CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
         |  CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
         |  CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view
-        |FROM events GROUP BY 1 ORDER BY day""".stripMargin,
-    "q_win_firstlast" ->
+        |FROM events GROUP BY 1 ORDER BY day""".stripMargin)),
+    Query("q_win_firstlast", qWinFirstLast, Sql(
       """SELECT user_id, first_type, last_type, second_type FROM (
         |  SELECT user_id,
         |    FIRST_VALUE(event_type) OVER w AS first_type,
@@ -2423,19 +2424,19 @@ object Relational {
         |  FROM events
         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |) WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "q_expr_stragg" ->
+        |) WHERE rn = 1 ORDER BY user_id""".stripMargin)),
+    Query("q_expr_stragg", qExprStragg, Sql(
       """SELECT l_returnflag, l_linestatus,
         |  string_agg(DISTINCT CAST(year(l_shipdate) AS VARCHAR), ',' ORDER BY CAST(year(l_shipdate) AS VARCHAR)) AS ship_years,
         |  COUNT(*) AS n_rows
-        |FROM lineitem GROUP BY 1, 2 ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_expr_scalar_subq" ->
+        |FROM lineitem GROUP BY 1, 2 ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+    Query("q_expr_scalar_subq", qExprScalarSubq, Sql(
       """SELECT o_orderkey, o_totalprice AS total_price,
         |  (SELECT MAX(l_extendedprice)
         |   FROM lineitem WHERE l_orderkey = o_orderkey) AS max_item_price
         |FROM orders
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_agg_grouping_sets" ->
+        |ORDER BY o_orderkey""".stripMargin)),
+    Query("q_agg_grouping_sets", qAggGroupingSets, Sql(
       """SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
         |  COALESCE(l_linestatus, 'ALL') AS linestatus,
         |  grouping(l_returnflag) AS g_rf, grouping(l_linestatus) AS g_ls,
@@ -2443,14 +2444,14 @@ object Relational {
         |  COUNT(*) AS n_rows
         |FROM lineitem
         |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        |ORDER BY returnflag, linestatus, g_rf, g_ls""".stripMargin,
-    "q_agg_cube" ->
+        |ORDER BY returnflag, linestatus, g_rf, g_ls""".stripMargin)),
+    Query("q_agg_cube", qAggCube, Sql(
       """SELECT COALESCE(l_returnflag, 'ALL') AS returnflag, COALESCE(l_linestatus, 'ALL') AS linestatus,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, COUNT(*) AS n_rows
         |FROM lineitem
         |GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY returnflag, linestatus""".stripMargin,
-    "q_stat_bootstrap" ->
+        |ORDER BY returnflag, linestatus""".stripMargin)),
+    Query("q_stat_bootstrap", qStatBootstrap, Sql(
       """WITH reps AS (
         |  SELECT c_mktsegment, b,
         |    CASE
@@ -2474,8 +2475,8 @@ object Relational {
         |  ROUND(quantile_cont(mean_b, 0.025), 6) AS ci_lo,
         |  ROUND(quantile_cont(mean_b, 0.975), 6) AS ci_hi,
         |  COUNT(*) AS n_reps
-        |FROM means GROUP BY 1 ORDER BY c_mktsegment""".stripMargin,
-    "q_stat_mannwhitney" ->
+        |FROM means GROUP BY 1 ORDER BY c_mktsegment""".stripMargin)),
+    Query("q_stat_mannwhitney", qStatMannWhitney, Sql(
       """WITH cust AS (
         |  SELECT c_mktsegment,
         |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
@@ -2513,10 +2514,10 @@ object Relational {
         |    SQRT(CAST(n1 AS DOUBLE) * (nn - n1) / 3.0 *
         |      (CAST(nn + 1 AS DOUBLE) - CAST(tiesum AS DOUBLE) /
         |        (CAST(nn AS DOUBLE) * (nn - 1)))), 6)) > 1.96 AS significant
-        |FROM rs CROSS JOIN tot ORDER BY c_mktsegment""".stripMargin,
+        |FROM rs CROSS JOIN tot ORDER BY c_mktsegment""".stripMargin)),
     // Same integer rank cutoffs (no percentile interpolation) over
     // the same deterministic order; exact decimal sums both sides.
-    "q_agg_trimmed" ->
+    Query("q_agg_trimmed", qAggTrimmed, Sql(
       """WITH r AS (
         |  SELECT l_returnflag, CAST(l_extendedprice AS DECIMAL(18,2)) AS x,
         |    ROW_NUMBER() OVER (PARTITION BY l_returnflag
@@ -2530,10 +2531,10 @@ object Relational {
         |  ROUND(CAST(SUM(CASE WHEN rn > k AND rn <= n - k THEN x
         |      ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)
         |    / SUM(CASE WHEN rn > k AND rn <= n - k THEN 1 ELSE 0 END), 6) AS trimmed_mean
-        |FROM f GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM f GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
     // Same epoch-day integers, ntile definition and tie-breaks;
     // exact decimal monetary sums, one ROUND(6) division.
-    "q_seg_rfm" ->
+    Query("q_seg_rfm", qSegRfm, Sql(
       """WITH pc AS (
         |  SELECT o_custkey, MAX(epoch_us(o_orderdate)) AS last_us,
         |    COUNT(*) AS frequency,
@@ -2553,10 +2554,10 @@ object Relational {
         |SELECT r_score, f_score, m_score, COUNT(*) AS n_customers,
         |  CAST(SUM(frequency) AS BIGINT) AS n_orders,
         |  ROUND(CAST(SUM(monetary) AS DOUBLE) / COUNT(*), 6) AS avg_monetary
-        |FROM sc GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
+        |FROM sc GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
     // Same (type, user) exact reduction and delta-method chain;
     // z is the shared 16-digit literal, every double op identical.
-    "q_stat_ratio_delta" ->
+    Query("q_stat_ratio_delta", qStatRatioDelta, Sql(
       """WITH pu AS (
         |  SELECT event_type, user_id,
         |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS x,
@@ -2588,16 +2589,16 @@ object Relational {
         |  ROUND(se, 6) AS se_delta,
         |  ROUND(r - (1.959963984540054::DOUBLE) * se, 6) AS ci_lo,
         |  ROUND(r + (1.959963984540054::DOUBLE) * se, 6) AS ci_hi
-        |FROM t ORDER BY event_type""".stripMargin,
+        |FROM t ORDER BY event_type""".stripMargin)),
     // Plain COUNT(DISTINCT) — pinning the bitmap path EXACT.
-    "q_agg_bitmap_distinct" ->
+    Query("q_agg_bitmap_distinct", qAggBitmapDistinct, Sql(
       """SELECT event_type,
         |  COUNT(DISTINCT user_id) AS n_distinct_users,
         |  COUNT(*) AS n_events
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
     // Same (type, user)-keyed exact-decimal reduction and the ONE
     // shared z-sum literal; every double op closes identically.
-    "q_stat_power" ->
+    Query("q_stat_power", qStatPower, Sql(
       """WITH pu AS (
         |  SELECT event_type, user_id,
         |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS x
@@ -2622,10 +2623,10 @@ object Relational {
         |    SQRT(vr * ((1.0::DOUBLE) / n1 + (1.0::DOUBLE) / n2)), 6) AS mde_abs,
         |  ROUND((2.8015852181129683::DOUBLE) *
         |    SQRT(vr * ((1.0::DOUBLE) / n1 + (1.0::DOUBLE) / n2)) / mean, 6) AS mde_rel
-        |FROM m ORDER BY event_type""".stripMargin,
+        |FROM m ORDER BY event_type""".stripMargin)),
     // Same O(2) exact-decimal arm census; every double op closes over
     // the same exact sums (theta/rho2 NULL-guarded identically).
-    "q_stat_cuped" ->
+    Query("q_stat_cuped", qStatCuped, Sql(
       """WITH ev AS (
         |  SELECT user_id,
         |    epoch_us(date_trunc('day', ts)) // 86400000000 AS day_idx,
@@ -2667,8 +2668,8 @@ object Relational {
         |  ROUND(CASE WHEN var_x > 0.0 THEN cov_xy / var_x END, 6) AS theta,
         |  ROUND(CASE WHEN var_x > 0.0 AND var_y > 0.0
         |    THEN cov_xy * cov_xy / (var_x * var_y) END, 6) AS rho2
-        |FROM m ORDER BY arm""".stripMargin,
-    "q_stat_ttest" ->
+        |FROM m ORDER BY arm""".stripMargin)),
+    Query("q_stat_ttest", qStatTtest, Sql(
       """WITH census AS (
         |  SELECT c_mktsegment, COUNT(*) AS n,
         |    SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS sx,
@@ -2692,8 +2693,8 @@ object Relational {
         |    SQRT(((CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / n) / (n - 1.0)) / n
         |       + ((CAST(ss2 AS DOUBLE) - CAST(s2 AS DOUBLE) * CAST(s2 AS DOUBLE) / n2) / (n2 - 1.0)) / n2), 6)) > 1.96
         |    AS significant
-        |FROM t ORDER BY c_mktsegment""".stripMargin,
-    "q_agg_stats" -> {
+        |FROM t ORDER BY c_mktsegment""".stripMargin)),
+    Query("q_agg_stats", qAggStats, Sql {
       def st(c: String, p: String): String =
         s"""  ROUND(CAST(SUM(CAST($c AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 6) AS ${p}_avg,
            |  ROUND(SQRT((CAST(SUM(CAST($c AS DECIMAL(18,2)) * CAST($c AS DECIMAL(18,2))) AS DOUBLE)
@@ -2706,20 +2707,20 @@ object Relational {
          |${st("l_discount", "disc")},
          |${st("l_tax", "tax")}
          |FROM lineitem""".stripMargin
-    },
-    "q_agg_quantile" ->
+    }),
+    Query("q_agg_quantile", qAggQuantile, Sql(
       """SELECT l_returnflag,
         |  ROUND(quantile_cont(l_quantity, 0.25), 6) AS q1,
         |  ROUND(quantile_cont(l_quantity, 0.5), 6) AS q2,
         |  ROUND(quantile_cont(l_quantity, 0.75), 6) AS q3,
         |  COUNT(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_agg_mode_freq" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Query("q_agg_mode_freq", qAggModeFreq, Sql(
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt,
         |  ROUND(COUNT(*) / SUM(COUNT(*)) OVER (), 6) AS pct
         |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_win_zscore_peer" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+    Query("q_win_zscore_peer", qWinZscorePeer, Sql(
       """WITH t AS (
         |  SELECT c_nationkey, c_custkey, CAST(c_acctbal AS DECIMAL(18,2)) AS v
         |  FROM customer
@@ -2743,8 +2744,8 @@ object Relational {
         |)
         |SELECT c_nationkey, rnk, c_custkey,
         |  CAST(v AS DOUBLE) AS acctbal, ROUND(zz, 6) AS z
-        |FROM r WHERE rnk <= 3 ORDER BY c_nationkey, rnk""".stripMargin,
-    "q_agg_gini" ->
+        |FROM r WHERE rnk <= 3 ORDER BY c_nationkey, rnk""".stripMargin)),
+    Query("q_agg_gini", qAggGini, Sql(
       """WITH t AS (
         |  SELECT c_mktsegment, CAST(c_acctbal AS DECIMAL(18,2)) AS v, c_custkey
         |  FROM customer
@@ -2759,8 +2760,8 @@ object Relational {
         |      (CAST(COUNT(*) AS DOUBLE) * CAST(SUM(v) AS DOUBLE)) -
         |      CAST(COUNT(*) + 1 AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6)
         |  END AS gini
-        |FROM r GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q_agg_wmedian" ->
+        |FROM r GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
+    Query("q_agg_wmedian", qAggWeightedMedian, Sql(
       """WITH t AS (
         |  SELECT l_returnflag, l_extendedprice, l_orderkey, l_linenumber,
         |    CAST(l_quantity AS DECIMAL(18,2)) AS w
@@ -2777,22 +2778,22 @@ object Relational {
         |  CAST(MIN(l_extendedprice) AS DOUBLE) AS wmedian,
         |  CAST(ANY_VALUE(totw) AS DOUBLE) AS tot_weight
         |FROM c WHERE cumw * 2 >= totw
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_win_rank" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Query("q_win_rank", qWinRank, Sql(
       """SELECT * FROM (
         |  SELECT o_orderkey, o_orderpriority, o_totalprice,
         |    RANK() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC) AS rnk,
         |    DENSE_RANK() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC) AS drnk,
         |    ROW_NUMBER() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey) AS rn
         |  FROM orders
-        |) WHERE rnk <= 50 ORDER BY o_orderpriority, rn""".stripMargin,
-    "q_win_topk_group" ->
+        |) WHERE rnk <= 50 ORDER BY o_orderpriority, rn""".stripMargin)),
+    Query("q_win_topk_group", qWinTopkGroup, Sql(
       """SELECT * FROM (
         |  SELECT p_brand, p_partkey, p_name, p_retailprice,
         |    ROW_NUMBER() OVER (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey) AS rnk
         |  FROM part
-        |) WHERE rnk <= 3 ORDER BY p_brand, rnk""".stripMargin,
-    "q_win_movavg" ->
+        |) WHERE rnk <= 3 ORDER BY p_brand, rnk""".stripMargin)),
+    Query("q_win_movavg", qWinMovavg, Sql(
       """WITH daily AS (
         |  SELECT CAST(l_shipdate AS DATE) AS day,
         |    SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS revenue
@@ -2802,23 +2803,23 @@ object Relational {
         |  ROUND(CAST(SUM(revenue) OVER w AS DOUBLE) / COUNT(*) OVER w, 6) AS movavg7
         |FROM daily
         |WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-        |ORDER BY day""".stripMargin,
-    "q_win_lag_lead" ->
+        |ORDER BY day""".stripMargin)),
+    Query("q_win_lag_lead", qWinLagLead, Sql(
       """SELECT user_id, event_id, ts,
         |  epoch_us(ts) - epoch_us(LAG(ts, 1) OVER w) AS gap_prev_us,
         |  epoch_us(LEAD(ts, 1) OVER w) - epoch_us(ts) AS gap_next_us
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q_win_range_interval" ->
+        |ORDER BY user_id, event_id""".stripMargin)),
+    Query("q_win_range_interval", qWinRangeInterval, Sql(
       """SELECT event_id, user_id, ts,
         |  COUNT(*) OVER w AS events_last_hour,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS value_last_hour
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
         |  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-    "q_win_cumsum" ->
+        |ORDER BY event_id""".stripMargin)),
+    Query("q_win_cumsum", qWinCumsum, Sql(
       """WITH daily AS (
         |  SELECT l_returnflag, CAST(l_shipdate AS DATE) AS day,
         |    SUM(CAST(l_quantity AS DECIMAL(18,2))) AS day_qty
@@ -2827,31 +2828,31 @@ object Relational {
         |SELECT l_returnflag, day, CAST(day_qty AS DOUBLE) AS day_qty,
         |  CAST(SUM(day_qty) OVER (PARTITION BY l_returnflag ORDER BY day
         |    RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cum_qty
-        |FROM daily ORDER BY l_returnflag, day""".stripMargin,
-    "q_win_ntile_pctrank" ->
+        |FROM daily ORDER BY l_returnflag, day""".stripMargin)),
+    Query("q_win_ntile_pctrank", qWinNtilePctrank, Sql(
       """SELECT c_custkey, c_acctbal,
         |  NTILE(4) OVER (ORDER BY c_acctbal, c_custkey) AS quartile,
         |  ROUND(PERCENT_RANK() OVER (ORDER BY c_acctbal), 6) AS pct_rank
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q_sort_limit" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin)),
+    Query("q_sort_limit", qSortLimit, Sql(
       """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
-        |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 20""".stripMargin,
-    "q_union_all" ->
+        |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 20""".stripMargin)),
+    Query("q_union_all", qUnionAll, Sql(
       """SELECT o_orderkey, 'y1995' AS tag, o_totalprice FROM orders WHERE year(o_orderdate) = 1995
         |UNION ALL
         |SELECT o_orderkey, 'y2000' AS tag, o_totalprice FROM orders WHERE year(o_orderdate) = 2000
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_intersect" ->
+        |ORDER BY o_orderkey""".stripMargin)),
+    Query("q_intersect", qIntersect, Sql(
       """SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
         |INTERSECT
         |SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-        |ORDER BY o_custkey""".stripMargin,
-    "q_except" ->
+        |ORDER BY o_custkey""".stripMargin)),
+    Query("q_except", qExcept, Sql(
       """SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
         |EXCEPT
         |SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-        |ORDER BY o_custkey""".stripMargin,
-    "q_expr_string" ->
+        |ORDER BY o_custkey""".stripMargin)),
+    Query("q_expr_string", qExprString, Sql(
       """SELECT p_partkey,
         |  UPPER(p_name) AS name_upper,
         |  LOWER(p_brand) AS brand_lower,
@@ -2861,8 +2862,8 @@ object Relational {
         |  string_split(p_name, ' ')[1] AS first_word,
         |  regexp_extract(p_type, '^(\w+)', 1) AS type_head,
         |  LENGTH(p_name) AS name_len
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q_expr_date" ->
+        |FROM part ORDER BY p_partkey""".stripMargin)),
+    Query("q_expr_date", qExprDate, Sql(
       """SELECT o_orderkey,
         |  year(o_orderdate) AS yr,
         |  month(o_orderdate) AS mo,
@@ -2870,8 +2871,8 @@ object Relational {
         |  date_diff('day', CAST(o_orderdate AS DATE), DATE '2002-01-01') AS days_to_2002,
         |  CAST(o_orderdate AS DATE) + 30 AS plus30,
         |  last_day(CAST(o_orderdate AS DATE)) AS month_end
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_expr_math" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
+    Query("q_expr_math", qExprMath, Sql(
       """SELECT p_partkey,
         |  ROUND(p_retailprice, 1) AS price_r1,
         |  CAST(FLOOR(p_retailprice) AS BIGINT) AS price_floor,
@@ -2882,12 +2883,12 @@ object Relational {
         |  ROUND(LN(p_retailprice), 6) AS price_ln,
         |  ROUND(EXP(p_size / 25.0), 6) AS size_exp,
         |  CAST(SIGN(p_retailprice - 1000) AS INTEGER) AS price_sign
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q_expr_json" ->
+        |FROM part ORDER BY p_partkey""".stripMargin)),
+    Query("q_expr_json", qExprJson, Sql(
       """SELECT event_type, COUNT(*) AS n, CAST(SUM(k) AS BIGINT) AS sum_k FROM (
         |  SELECT event_type, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k FROM events
-        |) WHERE k > 50 GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_expr_array" ->
+        |) WHERE k > 50 GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Query("q_expr_array", qExprArray, Sql(
       """SELECT vec_id,
         |  len(embedding) AS dim,
         |  CAST(embedding[1] AS DOUBLE) AS first_val,
@@ -2895,111 +2896,26 @@ object Relational {
         |  CAST(embedding[3] AS DOUBLE) AS head_3,
         |  CAST(list_max(embedding) AS DOUBLE) AS max_val,
         |  ROUND(list_sum(CAST(embedding AS DOUBLE[])), 6) AS sum_val
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "q_expr_map" ->
+        |FROM embeddings ORDER BY vec_id""".stripMargin)),
+    Query("q_expr_map", qExprMap, Sql(
       """WITH c AS (
         |  SELECT user_id, event_type, COUNT(*) AS cnt FROM events GROUP BY user_id, event_type
         |)
         |SELECT user_id,
         |  string_agg(event_type || ':' || cnt, ',' ORDER BY event_type) AS type_counts
-        |FROM c GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_expr_cond_null" ->
+        |FROM c GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    Query("q_expr_cond_null", qExprCondNull, Sql(
       """SELECT l_orderkey, l_linenumber,
         |  COALESCE(NULLIF(l_returnflag, 'N'), 'NONE') AS flag_or_none,
         |  COALESCE(NULLIF(l_discount, 0.0), -1.0) AS disc_or_neg,
         |  ISNAN(CAST('NaN' AS DOUBLE) * l_tax) AS nan_probe,
         |  COALESCE(NULLIF(l_linestatus, 'F'), 'DONE') AS status_nvl
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin
-  )
-
-  /** Registry consumed by SparkEntry. */
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_scan_parquet" -> (qScanParquet _),
-    "q_scan_prune" -> (qScanPrune _),
-    "q_filter_pred" -> (qFilterPred _),
-    "q_project_expr" -> (qProjectExpr _),
-    "q_join_bhj" -> (qJoinBhj _),
-    "q_join_smj" -> (qJoinSmj _),
-    "q_join_shj" -> (qJoinShj _),
-    "q_join_outer" -> (qJoinOuter _),
-    "q_join_full" -> (qJoinFull _),
-    "q_join_semi" -> (qJoinSemi _),
-    "q_agg_approx_quantile" -> (qAggApproxQuantile _),
-    "q_agg_hll_sketch" -> (qAggHllSketch _),
-    "q_join_anti" -> (qJoinAnti _),
-    "q_join_theta_range" -> (qJoinThetaRange _),
-    "q_join_asof" -> (qJoinAsof _),
-    "q_join_asof_tol" -> (qJoinAsofTol _),
-    "q_join_asof_fwd" -> (qJoinAsofFwd _),
-    "q_join_cross_topk" -> (qJoinCrossTopk _),
-    "q_agg_hash" -> (qAggHash _),
-    "q_agg_distinct" -> (qAggDistinct _),
-    "q_agg_approx_distinct" -> (qAggApproxDistinct _),
-    "q_agg_rollup" -> (qAggRollup _),
-    "q_agg_pivot" -> (qAggPivot _),
-    "q_win_firstlast" -> (qWinFirstLast _),
-    "q_expr_stragg" -> (qExprStragg _),
-    "q_expr_scalar_subq" -> (qExprScalarSubq _),
-    "q_agg_grouping_sets" -> (qAggGroupingSets _),
-    "q_agg_cube" -> (qAggCube _),
-    "q_agg_stats" -> (qAggStats _),
-    "q_stat_ttest" -> (qStatTtest _),
-    "q_agg_trimmed" -> (qAggTrimmed _),
-    "q_seg_rfm" -> (qSegRfm _),
-    "q_stat_cuped" -> (qStatCuped _),
-    "q_stat_power" -> (qStatPower _),
-    "q_agg_bitmap_distinct" -> (qAggBitmapDistinct _),
-    "q_stat_ratio_delta" -> (qStatRatioDelta _),
-    "q_stat_mannwhitney" -> (qStatMannWhitney _),
-    "q_stat_bootstrap" -> (qStatBootstrap _),
-    "q_agg_quantile" -> (qAggQuantile _),
-    "q_agg_mode_freq" -> (qAggModeFreq _),
-    "q_agg_wmedian" -> (qAggWeightedMedian _),
-    "q_agg_gini" -> (qAggGini _),
-    "q_win_zscore_peer" -> (qWinZscorePeer _),
-    "q_agg_corr" -> (qAggCorr _),
-    "q_agg_hist" -> (qAggHist _),
-    "q_agg_salted" -> (qAggSalted _),
-    "q_tpch_q3" -> (qTpchQ3 _),
-    "q_tpch_q4" -> (qTpchQ4 _),
-    "q_tpch_q5" -> (qTpchQ5 _),
-    "q_tpch_q6" -> (qTpchQ6 _),
-    "q_tpch_q10" -> (qTpchQ10 _),
-    "q_tpch_q7" -> (qTpchQ7 _),
-    "q_tpch_q8" -> (qTpchQ8 _),
-    "q_tpch_q14" -> (qTpchQ14 _),
-    "q_tpch_q15" -> (qTpchQ15 _),
-    "q_tpch_q21" -> (qTpchQ21 _),
-    "q_tpch_q17" -> (qTpchQ17 _),
-    "q_tpch_q20" -> (qTpchQ20 _),
-    "q_tpch_q13" -> (qTpchQ13 _),
-    "q_tpch_q22" -> (qTpchQ22 _),
-    "q_tpch_q9" -> (qTpchQ9 _),
-    "q_tpch_q2" -> (qTpchQ2 _),
-    "q_tpch_q11" -> (qTpchQ11 _),
-    "q_tpch_q12" -> (qTpchQ12 _),
-    "q_tpch_q16" -> (qTpchQ16 _),
-    "q_tpch_q19" -> (qTpchQ19 _),
-    "q_agg_moments" -> (qAggMoments _),
-    "q_profile_table" -> (qProfileTable _),
-    "q_tpch_q18" -> (qTpchQ18 _),
-    "q_win_rank" -> (qWinRank _),
-    "q_win_topk_group" -> (qWinTopkGroup _),
-    "q_win_movavg" -> (qWinMovavg _),
-    "q_win_lag_lead" -> (qWinLagLead _),
-    "q_win_range_interval" -> (qWinRangeInterval _),
-    "q_win_cumsum" -> (qWinCumsum _),
-    "q_win_ntile_pctrank" -> (qWinNtilePctrank _),
-    "q_sort_limit" -> (qSortLimit _),
-    "q_union_all" -> (qUnionAll _),
-    "q_intersect" -> (qIntersect _),
-    "q_except" -> (qExcept _),
-    "q_expr_string" -> (qExprString _),
-    "q_expr_date" -> (qExprDate _),
-    "q_expr_math" -> (qExprMath _),
-    "q_expr_json" -> (qExprJson _),
-    "q_expr_array" -> (qExprArray _),
-    "q_expr_map" -> (qExprMap _),
-    "q_expr_cond_null" -> (qExprCondNull _)
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    Query("q_agg_approx_quantile", qAggApproxQuantile,
+      NoOracle("GK sketch estimates are implementation-specific; ApproxAggSpec: GK rank bound")),
+    Query("q_agg_hll_sketch", qAggHllSketch,
+      NoOracle("sketch internals are implementation-specific; ApproxAggSpec: merged == direct")),
+    Query("q_agg_approx_distinct", qAggApproxDistinct,
+      NoOracle("HLL estimates are implementation-specific; ApproxAggSpec: within 5% of exact"))
   )
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.Row
+import scala.util.control.NonFatal
 
 /** SURVEY.md §5.5: every declared query must produce identical results
   * under different `spark.sql.shuffle.partitions` — the guard against
@@ -72,7 +73,7 @@ class DeterminismSpec extends SparkSpec {
         val diff = rowsMatch(run(3), run(11), tol)
         diff.map(d => s"$name: $d")
       } catch {
-        case e: Throwable => Some(s"$name: threw ${e.getMessage}")
+        case NonFatal(e) => Some(s"$name: threw ${e.getClass.getName}: ${e.getMessage}")
       } finally s.conf.set("spark.sql.shuffle.partitions", "4")
     }
     assert(failures.isEmpty, failures.mkString("\n"))

@@ -279,6 +279,20 @@ class LimeSpec extends SparkSpec {
         LimeConfig(nSamples = 16)))
   }
 
+  test("explainText and explainImage reject duplicate document ids at build") {
+    val s = spark
+    import s.implicits._
+    val cfg = LimeConfig(nSamples = 64, kFeatures = 3, kernelWidth = Some(25.0))
+    val docs = Seq((1L, "red fox"), (1L, "blue whale jumps")).toDF("doc_id", "text")
+    val e = intercept[Lime.InvalidInstancesException](
+      LimeText.explainText(docs, "doc_id", "text", cfg))
+    assert(e.getMessage.contains("instance id 1 "), e.getMessage)
+    val bb = java.nio.ByteBuffer.allocate(4 * 16).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    (0 until 16).foreach(i => bb.putFloat(i - 7.5f))
+    val images = Seq((2L, bb.array()), (2L, bb.array())).toDF("doc_id", "payload")
+    intercept[Lime.InvalidInstancesException](LimeImage.explainImage(images))
+  }
+
   test("continuous mode rejects a null numeric feature at build, by name") {
     val feats = LimeOps.limeFeatures
     val inst = LimeOps.withKey(Tables.lineitem(spark, dir).filter(col("l_orderkey") <= 5))
