@@ -1,6 +1,6 @@
 package graft.lime
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnShim, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnShim, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
@@ -18,8 +18,14 @@ import scala.reflect.runtime.universe.TypeTag
   * once per task into a field instead of writing it into the source.
   * Plans that differ only in these values generate identical Java and
   * share one compiled class.
+  *
+  * A named value holds one statistic of an explain request (its `name`,
+  * e.g. `edges:l_tax`, says which; see `Lime.statValues`): a
+  * [[RequestTemplate]] holds it empty and binds each request's value by
+  * that name. An unnamed value is a constant of the code that built it.
   */
-private[lime] case class BoundValue(value: Any, dataType: DataType) extends LeafExpression {
+private[lime] case class BoundValue(value: Any, dataType: DataType, name: String = "")
+    extends LeafExpression {
   override def nullable: Boolean = false
   override def eval(input: InternalRow): Any = value
   // Independent of the value: subexpression elimination orders the
@@ -278,6 +284,24 @@ private[lime] case class ExplainedFeature[N](rank: Int, feature: N, weight: Doub
   * alike: one call per row solves the ridge system and ranks the
   * features, and the output comes back as a single partition sorted by
   * (id, rank) — the total order, with no range exchange.
+  *
+  * Request templates. A tabular request's plans (the instance collect,
+  * the lattice scoring and the result) differ from request to request
+  * only in their data, so each is analyzed once per request shape and
+  * cached as a [[RequestTemplate]]: at most
+  * [[RequestTemplate.MaxTemplates]] of them over all sessions. The
+  * shape is the session and its SQL conf, the `scoreFn` instance for
+  * the plans that call it (both by reference, held weakly; None is the
+  * demo scorer's), `idCol`, the
+  * features, the config, the instances' schema and the plan. A later
+  * request of the shape binds its instance plan, its lattice rows and
+  * its statistics (each BoundValue by name, [[statValues]]) into the
+  * template: it does not call `scoreFn`, run MLlib's transforms or
+  * analyze a plan, and gets the rows a cold build gives, bit for bit.
+  * A caller that makes a new `scoreFn` per request builds the plans
+  * that call it on every request. A scorer whose plan reads more than
+  * its input gets no template and is called on every request (see
+  * [[explainTabular]]).
   */
 object Lime {
 
@@ -828,9 +852,11 @@ object Lime {
     * numpy searchsorted(side='left') used by the public discretizer.
     * A null x falls in bin 0.
     */
-  def binOf(x: Column, edges: Seq[Double]): Column =
+  def binOf(x: Column, edges: Seq[Double]): Column = binOf(x, bound(edges))
+
+  private def binOf(x: Column, edges: Column): Column =
     GraftColumnShim.column(BinIndex(GraftColumnShim.expression(x.cast("double")),
-      GraftColumnShim.expression(bound(edges))))
+      GraftColumnShim.expression(edges)))
 
   /** [[binOf]] for one value: one past the highest edge that x exceeds
     * (0 when none does), under the comparison Catalyst's `>` makes on
@@ -848,14 +874,33 @@ object Lime {
   private def bound(v: Double): Column =
     GraftColumnShim.column(BoundValue(v, DoubleType))
 
-  private def bound(vs: Seq[Double]): Column =
-    GraftColumnShim.column(BoundValue(UnsafeArrayData.fromPrimitiveArray(vs.toArray),
-      ArrayType(DoubleType, containsNull = false)))
+  private def bound(vs: Seq[Double]): Column = GraftColumnShim.column(doubles(vs))
 
-  private def boundStrings(vs: Seq[String]): Column =
-    GraftColumnShim.column(BoundValue(
-      new GenericArrayData(vs.map(UTF8String.fromString).toArray[Any]),
-      ArrayType(StringType, containsNull = vs.contains(null))))
+  private def doubles(vs: Seq[Double], name: String = ""): BoundValue =
+    BoundValue(UnsafeArrayData.fromPrimitiveArray(vs.toArray),
+      ArrayType(DoubleType, containsNull = false), name)
+
+  /** One request's statistics as named run-time values, the names its
+    * plans' [[BoundValue]]s carry: per numeric feature f its bin edges
+    * `edges:f`, bin means `binMeans:f`, cumulative bin frequencies
+    * `cumFreqs:f`, `mean:f`, `std:f` and z-score divisor `scale:f` (std
+    * floored at 1e-12); per categorical feature f its values
+    * `values:cat:f` (null-tolerant, whether or not a null is among
+    * them, so the plan's types do not depend on the data) and
+    * cumulative frequencies `cumFreqs:cat:f`.
+    */
+  private def statValues(stats: Seq[FeatureStats], catStats: Seq[CatStats]): Map[String, BoundValue] =
+    (stats.flatMap { st =>
+      Seq(doubles(st.edges, s"edges:${st.name}"), doubles(st.binMeans, s"binMeans:${st.name}"),
+        doubles(st.binCumFreqs, s"cumFreqs:${st.name}"),
+        BoundValue(st.mean, DoubleType, s"mean:${st.name}"),
+        BoundValue(st.std, DoubleType, s"std:${st.name}"),
+        BoundValue(math.max(st.std, 1e-12), DoubleType, s"scale:${st.name}"))
+    } ++ catStats.flatMap { cs =>
+      Seq(BoundValue(new GenericArrayData(cs.values.map(UTF8String.fromString).toArray[Any]),
+          ArrayType(StringType, containsNull = true), s"values:cat:${cs.name}"),
+        doubles(cs.cumFreqs, s"cumFreqs:cat:${cs.name}"))
+    }).map(b => b.name -> b).toMap
 
   /** Bin or category drawn by a uniform `u`: the lowest index i with
     * u < cumFreqs(i), or the last index when there is none, under the
@@ -868,9 +913,9 @@ object Lime {
     i
   }
 
-  private def draw(u: Column, cumFreqs: Seq[Double]): Column =
+  private def draw(u: Column, cumFreqs: Column): Column =
     GraftColumnShim.column(DrawIndex(GraftColumnShim.expression(u),
-      GraftColumnShim.expression(bound(cumFreqs))))
+      GraftColumnShim.expression(cumFreqs)))
 
   /** Proximity kernel π(d) = sqrt(exp(-d²/w²)) (public impl form). */
   def kernel(dist: Column, width: Double): Column =
@@ -883,9 +928,14 @@ object Lime {
   val demoCoefs: Seq[Double] = Seq(0.8, -0.5, 1.2, -0.7)
   val demoIntercept: Double = 0.1
 
-  def logisticScore(stats: Seq[FeatureStats], values: Seq[Column]): Column = {
-    val lin = stats.zip(values).zip(demoCoefs).foldLeft(lit(demoIntercept): Column) {
-      case (acc, ((st, v), b)) => acc + lit(b) * (v - bound(st.mean)) / bound(math.max(st.std, 1e-12))
+  def logisticScore(stats: Seq[FeatureStats], values: Seq[Column]): Column =
+    logistic(stats.map(st => (bound(st.mean), bound(math.max(st.std, 1e-12)))), values)
+
+  /** [[logisticScore]] with each feature's (mean, z-score divisor) given
+    * as columns. */
+  private def logistic(centres: Seq[(Column, Column)], values: Seq[Column]): Column = {
+    val lin = centres.zip(values).zip(demoCoefs).foldLeft(lit(demoIntercept): Column) {
+      case (acc, (((mean, scale), v), b)) => acc + lit(b) * (v - mean) / scale
     }
     lit(1.0) / (lit(1.0) + exp(-lin))
   }
@@ -916,6 +966,16 @@ object Lime {
     */
   def perturb(instances: DataFrame, idCol: String, stats: Seq[FeatureStats], cfg: LimeConfig,
               catStats: Seq[CatStats] = Nil): DataFrame = {
+    checkTabular(cfg, stats.size + catStats.size)
+    perturb(instances, idCol, stats.map(_.name), catStats.map(_.name), cfg, statValues(stats, catStats))
+  }
+
+  /** [[perturb]] over the features `numeric` and `categorical`, each
+    * statistic the value of its name in `values` ([[statValues]]). */
+  private def perturb(instances: DataFrame, idCol: String, numeric: Seq[String],
+                      categorical: Seq[String], cfg: LimeConfig,
+                      values: Map[String, BoundValue]): DataFrame = {
+    def v(name: String): Column = GraftColumnShim.column(values(name))
     val base = instances.withColumn("sample_id", explode(sequence(lit(0), lit(cfg.nSamples - 1))))
     val sample0 = col("sample_id") === 0
     // Per feature: the drawn column, then the columns derived from it,
@@ -924,35 +984,34 @@ object Lime {
     // z = 1 iff the sampled value equals the instance's (public LIME
     // categorical semantics). The sampled value itself is the score
     // input.
-    val categorical = catStats.map { cs =>
-      val u = Rng.u01(lit(cfg.seed), col(idCol), col("sample_id"), lit("cat:" + cs.name))
-      val sampled = element_at(boundStrings(cs.values), draw(u, cs.cumFreqs) + 1)
-      (s"${cs.name}__val" -> when(sample0, col(cs.name).cast("string")).otherwise(sampled),
-        Seq(s"${cs.name}__z" ->
-          (col(s"${cs.name}__val") <=> col(cs.name).cast("string")).cast("double")))
+    val cats = categorical.map { f =>
+      val u = Rng.u01(lit(cfg.seed), col(idCol), col("sample_id"), lit("cat:" + f))
+      val sampled = element_at(v(s"values:cat:$f"), draw(u, v(s"cumFreqs:cat:$f")) + 1)
+      (s"${f}__val" -> when(sample0, col(f).cast("string")).otherwise(sampled),
+        Seq(s"${f}__z" -> (col(s"${f}__val") <=> col(f).cast("string")).cast("double")))
     }
-    val numeric =
+    val nums =
       if (cfg.discretize)
-        stats.map { st =>
-          val u = Rng.u01(lit(cfg.seed), col(idCol), col("sample_id"), lit(st.name))
-          val instBin = binOf(col(st.name), st.edges)
-          val bin = col(s"${st.name}__bin")
-          (s"${st.name}__bin" -> when(sample0, instBin).otherwise(draw(u, st.binCumFreqs)),
-            Seq(s"${st.name}__z" -> (bin === instBin).cast("double"),
-              s"${st.name}__val" ->
-                when(sample0, col(st.name)).otherwise(element_at(bound(st.binMeans), bin + 1))))
+        numeric.map { f =>
+          val u = Rng.u01(lit(cfg.seed), col(idCol), col("sample_id"), lit(f))
+          val instBin = binOf(col(f), v(s"edges:$f"))
+          val bin = col(s"${f}__bin")
+          (s"${f}__bin" -> when(sample0, instBin).otherwise(draw(u, v(s"cumFreqs:$f"))),
+            Seq(s"${f}__z" -> (bin === instBin).cast("double"),
+              s"${f}__val" ->
+                when(sample0, col(f)).otherwise(element_at(v(s"binMeans:$f"), bin + 1))))
         }
       else
         // continuous mode: gaussian around the instance, z-scored
         // interpretable representation; sample 0 stays the instance
-        stats.zipWithIndex.map { case (st, j) =>
+        numeric.zipWithIndex.map { case (f, j) =>
           val g = Rng.gaussian(lit(cfg.seed), col(idCol) * lit(1000003L) + col("sample_id"), lit(j))
-          val v = col(s"${st.name}__val")
-          (s"${st.name}__val" -> when(sample0, col(st.name)).otherwise(col(st.name) + g * bound(st.std)),
-            Seq(s"${st.name}__bin" -> binOf(v, st.edges),
-              s"${st.name}__z" -> (v - bound(st.mean)) / bound(math.max(st.std, 1e-12))))
+          val x = col(s"${f}__val")
+          (s"${f}__val" -> when(sample0, col(f)).otherwise(col(f) + g * v(s"std:$f")),
+            Seq(s"${f}__bin" -> binOf(x, v(s"edges:$f")),
+              s"${f}__z" -> (x - v(s"mean:$f")) / v(s"scale:$f")))
         }
-    val layers = categorical ++ numeric
+    val layers = cats ++ nums
     val drawn = base.select(col("*") +: layers.map { case ((n, c), _) => c.as(n) }: _*)
     drawn.select(base.columns.map(quoted) ++ layers.flatMap { case ((n, _), derived) =>
       quoted(n) +: derived.map { case (dn, c) => c.as(dn) }
@@ -1008,6 +1067,17 @@ object Lime {
     * on a frame that holds only the feature columns, their `f__val`
     * twins and a row key.
     *
+    * `scoreFn` is called once per request shape (see "Request
+    * templates" above), by the shape's first request, and the plan it
+    * returns is reused for every later request of that shape. So it
+    * must be lazy: what it computes from its input must stay in the
+    * plan (an action on its input sees only the first request's rows),
+    * and what it reads besides its input (a model, a registered
+    * function) is read once; to score with a changed model, pass a new
+    * function. A scorer whose plan reads anything besides its input (a
+    * second relation, a round trip through `df.rdd`, a checkpoint, its
+    * input twice) is called on every request instead.
+    *
     * The instance set is collected once at build, numeric features cast
     * to double and categorical ones to string: the statistics, the
     * checks and the lattice path all read that collect, whatever the
@@ -1039,60 +1109,78 @@ object Lime {
       scoreFnOpt: Option[DataFrame => DataFrame],
       catFeatures: Seq[String],
       lattice: Boolean): DataFrame = {
-    require(cfg.selection == "none" || cfg.kFeatures >= 1,
-      s"kFeatures must be >= 1, got ${cfg.kFeatures}")
+    val allFeatures = features ++ catFeatures
+    val d = allFeatures.size
+    checkTabular(cfg, d)
+    // the plans that call scoreFn key on it, the others do not
+    val spark = instances.sparkSession
+    val shape = RequestTemplate.Shape(new RequestTemplate.Ref(spark), spark.conf.getAll, None,
+      idCol, features, catFeatures, cfg, instances.schema)
+    val scored = shape.copy(scorer = scoreFnOpt.map(new RequestTemplate.Ref(_)))
+    def request(input: DataFrame, key: RequestTemplate.Shape, part: String,
+                values: Map[String, BoundValue])(build: DataFrame => DataFrame) =
+      RequestTemplate.request(input, key.copy(part = part), values)(build)
     // The instance set is bounded by contract (tens to thousands of
     // rows), so one collect of it serves the checks, the statistics and
     // the lattice's RNG keys xxhash64(seed, id).
     val featureCols = features.map(col(_).cast("double")) ++ catFeatures.map(col(_).cast("string"))
     val idHash = xxhash64(lit(cfg.seed), col(idCol))
-    val rows = instances.select(featureCols :+ col(idCol) :+ idHash: _*).collect()
+    val rows = request(instances, shape, "collect", Map.empty) { inst =>
+      inst.select(featureCols :+ col(idCol) :+ idHash: _*)
+    }.collect()
     checkInstances(rows, featureCols.size, idCol, features, cfg.discretize)
     val stats = fitStatsLocal(rows, features, cfg.nBins)
     val catStats = fitCatStatsLocal(rows, features.size, catFeatures)
-    val allFeatures = features ++ catFeatures
-    val d = allFeatures.size
+    val values = statValues(stats, catStats)
+    def v(name: String): Column = GraftColumnShim.column(values(name))
     val width = cfg.kernelWidth.getOrElse(0.75 * math.sqrt(d))
     val scoreFn = scoreFnOpt.getOrElse { df: DataFrame =>
-      df.withColumn("pred", logisticScore(stats, features.map(f => col(s"${f}__val"))))
+      df.withColumn("pred", logistic(features.map(f => (v(s"mean:$f"), v(s"scale:$f"))),
+        features.map(f => col(s"${f}__val"))))
     }
 
-    val fwd = cfg.selection == "forward_selection" ||
-      (cfg.selection == "auto" && d <= 6)
-    val agg = new RidgeAggregator(d, cfg.lambda,
-      if (fwd) cfg.kFeatures else Int.MaxValue, fwd)
-    val keep = if (cfg.selection == "none") d else cfg.kFeatures
-    // In continuous mode the instance's interpretable vector is its
-    // z-scored values (categorical entries 1.0), not all-ones, so the
-    // aggregator's localPred (= beta-sum) becomes intercept + beta . z.
-    val names = allFeatures.map(UTF8String.fromString)
-    val solve = udf { (buf: Seq[Double], zInst: Seq[Double]) =>
-      val fit = agg.finish(buf.toArray)
-      val localPred =
-        if (cfg.discretize) fit.localPred
-        else fit.intercept + fit.coefs.zip(zInst ++ catFeatures.map(_ => 1.0))
-          .foldLeft(0.0) { case (acc, (c, z)) => acc + c * z }
-      rank(fit, localPred, allFeatures, keep, (a, b) => names(a).compareTo(names(b)) < 0)
-    }.withName("lime_ridge_solve")
+    // built only when a template is: a bound request reuses its template's
+    lazy val solve = {
+      val fwd = cfg.selection == "forward_selection" ||
+        (cfg.selection == "auto" && d <= 6)
+      val agg = new RidgeAggregator(d, cfg.lambda,
+        if (fwd) cfg.kFeatures else Int.MaxValue, fwd)
+      val keep = if (cfg.selection == "none") d else cfg.kFeatures
+      // In continuous mode the instance's interpretable vector is its
+      // z-scored values (categorical entries 1.0), not all-ones, so the
+      // aggregator's localPred (= beta-sum) becomes intercept + beta . z.
+      val names = allFeatures.map(UTF8String.fromString)
+      udf { (buf: Seq[Double], zInst: Seq[Double]) =>
+        val fit = agg.finish(buf.toArray)
+        val localPred =
+          if (cfg.discretize) fit.localPred
+          else fit.intercept + fit.coefs.zip(zInst ++ catFeatures.map(_ => 1.0))
+            .foldLeft(0.0) { case (acc, (c, z)) => acc + c * z }
+        rank(fit, localPred, allFeatures, keep, (a, b) => names(a).compareTo(names(b)) < 0)
+      }.withName("lime_ridge_solve")
+    }
     val noZ = typedLit(Seq.empty[Double])
 
     val fold =
       if (lattice && cfg.discretize)
-        latticeFold(instances.sparkSession, rows, stats, catStats, cfg, width, scoreFn, idHash,
-          struct(featureCols: _*))
+        latticeFold(rows, stats, catStats, cfg, width, (schema, cells) =>
+          request(spark.createDataFrame(java.util.Arrays.asList(cells: _*), schema),
+            scored, "scores", values)(scoreFn(_).select(col("__cell"), col("pred").cast("double"))))
       else None
-    val fits = fold match {
+    fold match {
       case Some(f) =>
-        instances.select(col(idCol).as("instance_id"), solve(f, noZ).as("expl"))
-      case None =>
-        val scored = scoreFn(perturb(instances, idCol, stats, cfg, catStats))
+        request(instances, shape, "lattice", values + (f.name -> f)) { inst =>
+          explanations(inst.select(col(idCol).as("instance_id"),
+            solve(foldSamples(f, idHash, struct(featureCols: _*)), noZ).as("expl")), "instance_id")
+        }
+      case None => request(instances, scored, "fan-out", values) { inst =>
+        val scored = scoreFn(perturb(inst, idCol, features, catFeatures, cfg, values))
         // distance in the interpretable space: binary rep → d² = Σ(1 - z)
         // (instance row is all-ones); continuous rep → scaled euclidean
         // to the instance
         val dist2 =
           if (cfg.discretize) allFeatures.map(f => lit(1.0) - col(s"${f}__z")).reduce(_ + _)
-          else (stats.map(st =>
-            pow((col(s"${st.name}__val") - col(st.name)) / bound(math.max(st.std, 1e-12)), 2)) ++
+          else (features.map(f => pow((col(s"${f}__val") - col(f)) / v(s"scale:$f"), 2)) ++
             catFeatures.map(f => lit(1.0) - col(s"${f}__z"))).reduce(_ + _)
         val weighted = scored.select(col(idCol).as("instance_id"), col("sample_id"),
           array(allFeatures.map(f => col(s"${f}__z")): _*).as("z"),
@@ -1107,15 +1195,48 @@ object Lime {
         // numeric z_instance entry rides the ridge aggregate as sample
         // 0's z (a plain double each, which keeps the aggregate
         // hash-based) instead of a join back to `instances`.
-        val nNum = if (cfg.discretize) 0 else stats.size
+        val nNum = if (cfg.discretize) 0 else features.size
         val zInst = (0 until nNum).map(j =>
           min_by(col("z").getItem(j), col("sample_id")).as(s"__z$j"))
-        weighted.groupBy(col("instance_id"))
+        explanations(weighted.groupBy(col("instance_id"))
           .agg(bufSums.head, bufSums.tail ++ zInst: _*)
           .select(col("instance_id"), solve(buffer,
-            if (nNum == 0) noZ else array((0 until nNum).map(j => col(s"__z$j")): _*)).as("expl"))
+            if (nNum == 0) noZ else array((0 until nNum).map(j => col(s"__z$j")): _*)).as("expl")),
+          "instance_id")
+      }
     }
-    explanations(fits, "instance_id")
+  }
+
+  /** The feature selections `explainTabular` implements. */
+  private val tabularSelections = Seq("highest_weights", "forward_selection", "none", "auto")
+
+  private def reject(field: String, rule: String, got: Any) =
+    throw new IllegalArgumentException(s"LimeConfig.$field must be $rule, got $got")
+
+  /** Rejects a config LIME cannot honour, naming the field: a sample
+    * count below 1, a kernel width that is not finite and positive, a
+    * negative ridge penalty, a feature selection the path does not
+    * implement (`selections`), or fewer than one feature to keep.
+    */
+  private def checkConfig(cfg: LimeConfig, selections: Seq[String]): Unit = {
+    if (cfg.nSamples < 1) reject("nSamples", ">= 1", cfg.nSamples)
+    cfg.kernelWidth.foreach { w =>
+      if (!(w > 0 && !w.isInfinite)) reject("kernelWidth", "finite and > 0", w)
+    }
+    if (!(cfg.lambda >= 0)) reject("lambda", ">= 0", cfg.lambda)
+    if (!selections.contains(cfg.selection))
+      reject("selection", selections.mkString("one of ", ", ", ""), cfg.selection)
+    if (cfg.selection != "none" && cfg.kFeatures < 1) reject("kFeatures", ">= 1", cfg.kFeatures)
+  }
+
+  /** [[checkConfig]] for a tabular request over `d` features, which
+    * also bins them: fewer than 2 bins, or no feature at all (d′ = 0
+    * makes the default width 0), is rejected too. */
+  private def checkTabular(cfg: LimeConfig, d: Int): Unit = {
+    checkConfig(cfg, tabularSelections)
+    if (cfg.nBins < 2) reject("nBins", ">= 2", cfg.nBins)
+    if (d < 1) throw new IllegalArgumentException(
+      "LIME: features and catFeatures are both empty; a request needs at least one feature")
   }
 
   /** Rejects duplicate ids and, in continuous mode, null numeric
@@ -1166,10 +1287,11 @@ object Lime {
       .coalesce(1)
       .sortWithinPartitions(id, "rank")
 
-  /** `fold` as the buffer column of rows keyed by `idHash`. */
-  private def foldSamples(fold: SampleFold, idHash: Column, row: Column): Column =
-    GraftColumnShim.column(FoldSamples(BoundValue(fold, ObjectType(fold.getClass)),
-      GraftColumnShim.expression(idHash), GraftColumnShim.expression(row)))
+  /** `fold`, a bound [[SampleFold]], as the buffer column of rows keyed
+    * by `idHash`. */
+  private def foldSamples(fold: BoundValue, idHash: Column, row: Column): Column =
+    GraftColumnShim.column(FoldSamples(fold, GraftColumnShim.expression(idHash),
+      GraftColumnShim.expression(row)))
 
   /** A text or image request over `rows`, one per document or image
     * with its `doc_id`: each row's [[MaskFold]] buffer over the struct
@@ -1180,11 +1302,12 @@ object Lime {
     */
   private[lime] def explainMasks[N: TypeTag](rows: DataFrame, mask: Column, names: Column,
                                              nameCol: String, cfg: LimeConfig): DataFrame = {
-    require(cfg.kFeatures >= 1, s"kFeatures must be >= 1, got ${cfg.kFeatures}")
+    // text and image LIME fit every feature and keep the top kFeatures
+    checkConfig(cfg, Seq("highest_weights"))
     checkInstances(rows.select(col("doc_id").cast("long")).collect(), 0, "doc_id", Nil,
       cfg.discretize)
-    val buffer = foldSamples(new MaskFold(cfg.nSamples, cfg.kernelWidth.getOrElse(25.0)),
-      xxhash64(lit(cfg.seed), col("doc_id")), mask)
+    val buffer = foldSamples(BoundValue(new MaskFold(cfg.nSamples, cfg.kernelWidth.getOrElse(25.0)),
+      ObjectType(classOf[MaskFold])), xxhash64(lit(cfg.seed), col("doc_id")), mask)
     val solve = udf { (buf: Seq[Double], names: Seq[N]) =>
       val fit = new RidgeAggregator(names.size, cfg.lambda).finish(buf.toArray)
       rank(fit, fit.localPred, names, cfg.kFeatures)
@@ -1193,21 +1316,20 @@ object Lime {
       "doc_id").withColumnRenamed("feature", nameCol)
   }
 
-  /** The lattice path's buffer column: scores every lattice cell and
-    * every instance once through `scoreFn`, binds them with the
-    * request's statistics in a [[Lattice]], and folds each instance
-    * row with it. None above [[LatticeGate]], or when a score is null or
+  /** The lattice path's fold: scores every lattice cell and every
+    * instance once through `score` (the scorer over the rows of a
+    * local relation of the schema it is given), and binds them with
+    * the request's statistics in a [[Lattice]], the BoundValue named
+    * `lattice`. None above [[LatticeGate]], or when a score is null or
     * two ids share an RNG key: the request then keeps the fan-out path,
     * whose sums treat those cases as they always did.
     *
     * `rows` are the stats collect's: the features, then the id and its
-    * key `idHash`; `instance` is the struct of each instance row's
-    * features, cast as they were collected.
+    * key `idHash`.
     */
-  private def latticeFold(spark: SparkSession, rows: Array[Row], stats: Seq[FeatureStats],
-                          catStats: Seq[CatStats],
-                          cfg: LimeConfig, width: Double, scoreFn: DataFrame => DataFrame,
-                          idHash: Column, instance: Column): Option[Column] = {
+  private def latticeFold(rows: Array[Row], stats: Seq[FeatureStats], catStats: Seq[CatStats],
+                          cfg: LimeConfig, width: Double,
+                          score: (StructType, Seq[Row]) => DataFrame): Option[BoundValue] = {
     val radix = stats.map(_.binMeans.size) ++ catStats.map(_.values.size)
     val nCells = radix.foldLeft(1L)((n, r) => math.min(n * r, LatticeGate + 1L))
     val keys = rows.map(_.getLong(radix.size + 1))
@@ -1236,9 +1358,7 @@ object Lime {
     val schema = StructType((names ++ names.map(_ + "__val")).zipWithIndex.map { case (f, j) =>
       StructField(f, if (j % d < nNum) DoubleType else StringType)
     } :+ StructField("__cell", IntegerType, nullable = false))
-    val scored = scoreFn(spark.createDataFrame(
-        java.util.Arrays.asList(cellRows ++ instRows: _*), schema))
-      .select(col("__cell"), col("pred").cast("double")).collect()
+    val scored = score(schema, cellRows ++ instRows).collect()
     val y = new Array[Double](cells + rows.length)
     val have = new java.util.BitSet(y.length)
     scored.foreach { r =>
@@ -1258,6 +1378,6 @@ object Lime {
       instanceScores = order.map(i => y(cells + i)).toArray,
       // the fan-out's sqrt(exp(-d² / w²)) at each integer d² = mismatches
       weights = Array.tabulate(d + 1)(k => math.sqrt(StrictMath.exp(-k.toDouble / (width * width)))))
-    Some(foldSamples(bound, idHash, instance))
+    Some(BoundValue(bound, ObjectType(classOf[Lattice]), "lattice"))
   }
 }

@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 /** SP-LIME submodular pick (KDD 2016 §4, Algorithm 2).
   *
   * Greedily selects B instances maximizing coverage of global feature
-  * importance I_j = sqrt(Σ_i |W_ij|). Each of the B rounds is one
-  * small aggregation job over the explanation matrix DataFrame; driver
-  * state is the covered-feature set and picked ids — O(B + d'), never
-  * O(instances), so the loop scales to any instance count.
+  * importance I_j = sqrt(Σ_i |W_ij|). At or below `wGate` rows of the
+  * explanation matrix W (the default path), W is collected once and
+  * the B rounds run on the driver: O(instances·d') driver state. Above
+  * it, each round is one small aggregation job over W as a DataFrame,
+  * and driver state is the covered-feature set and picked ids —
+  * O(B + d'), never O(instances).
   */
 object SpLime {
 

@@ -293,6 +293,74 @@ class LimeSpec extends SparkSpec {
     intercept[Lime.InvalidInstancesException](LimeImage.explainImage(images))
   }
 
+  /** The instances of the config-rule cases: a few fixture rows. */
+  private def fewInstances =
+    LimeOps.withKey(Tables.lineitem(spark, dir).filter(col("l_orderkey") <= 3))
+      .select((Seq("instance_id") ++ LimeOps.limeFeatures.take(3)).map(col): _*)
+
+  /** Asserts that explaining `fewInstances` under `cfg`, in both
+    * sampling modes, fails at build with a message naming `field`. */
+  private def rejects(field: String, cfg: LimeConfig,
+                      features: Seq[String] = LimeOps.limeFeatures.take(3)): Unit =
+    for (discretize <- Seq(true, false)) {
+      val e = intercept[IllegalArgumentException](Lime.explainTabular(fewInstances, "instance_id",
+        features, cfg.copy(discretize = discretize)))
+      assert(e.getMessage.contains(field), e.getMessage)
+    }
+
+  test("explainTabular rejects nSamples < 1 by name") {
+    rejects("LimeConfig.nSamples", LimeConfig(nSamples = 0))
+  }
+
+  test("explainTabular rejects a kernel width that is not finite and positive by name") {
+    for (w <- Seq(0.0, -1.0, Double.NaN, Double.PositiveInfinity))
+      rejects("LimeConfig.kernelWidth", LimeConfig(nSamples = 16, kernelWidth = Some(w)))
+  }
+
+  test("explainTabular rejects a negative ridge lambda by name") {
+    rejects("LimeConfig.lambda", LimeConfig(nSamples = 16, lambda = -1))
+  }
+
+  test("explainTabular rejects nBins < 2 by name") {
+    rejects("LimeConfig.nBins", LimeConfig(nSamples = 16, nBins = 1))
+  }
+
+  test("explainTabular rejects an unknown feature selection by name") {
+    rejects("LimeConfig.selection", LimeConfig(nSamples = 16, selection = "forward"))
+  }
+
+  test("explainTabular rejects a request over no features by name") {
+    rejects("features", LimeConfig(nSamples = 16), features = Nil)
+  }
+
+  test("explainText and explainImage reject a feature selection other than highest_weights") {
+    val s = spark
+    import s.implicits._
+    val docs = Seq((1L, "red fox"), (2L, "blue whale jumps")).toDF("doc_id", "text")
+    val bb = java.nio.ByteBuffer.allocate(4 * 16).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    (0 until 16).foreach(i => bb.putFloat(i - 7.5f))
+    val images = Seq((2L, bb.array())).toDF("doc_id", "payload")
+    for (sel <- Seq("forward_selection", "none", "auto")) {
+      val cfg = LimeConfig(nSamples = 64, kFeatures = 3, kernelWidth = Some(25.0), selection = sel)
+      val e = intercept[IllegalArgumentException](LimeText.explainText(docs, "doc_id", "text", cfg))
+      assert(e.getMessage.contains("LimeConfig.selection"), e.getMessage)
+      val f = intercept[IllegalArgumentException](LimeImage.explainImage(images, cfg = cfg))
+      assert(f.getMessage.contains("LimeConfig.selection"), f.getMessage)
+    }
+  }
+
+  test("explainText and explainImage take any nBins: they do not bin") {
+    val s = spark
+    import s.implicits._
+    val cfg = LimeConfig(nSamples = 64, kFeatures = 3, kernelWidth = Some(25.0), nBins = 1)
+    val docs = Seq((1L, "red fox"), (2L, "blue whale jumps")).toDF("doc_id", "text")
+    assert(LimeText.explainText(docs, "doc_id", "text", cfg).collect().nonEmpty)
+    val bb = java.nio.ByteBuffer.allocate(4 * 16).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    (0 until 16).foreach(i => bb.putFloat(i - 7.5f))
+    val images = Seq((2L, bb.array())).toDF("doc_id", "payload")
+    assert(LimeImage.explainImage(images, cfg = cfg).collect().nonEmpty)
+  }
+
   test("continuous mode rejects a null numeric feature at build, by name") {
     val feats = LimeOps.limeFeatures
     val inst = LimeOps.withKey(Tables.lineitem(spark, dir).filter(col("l_orderkey") <= 5))

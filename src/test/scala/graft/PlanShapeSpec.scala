@@ -395,6 +395,23 @@ class PlanShapeSpec extends SparkSpec {
     assert(ran.size <= 1, s"the request ran jobs $ran")
   }
 
+  test("a repeat discretized explainTabular request: 0 jobs and 0 scoreFn calls to build, at most 1 job to run") {
+    val local = spark.createDataFrame(explainInstances.collect().toSeq.asJava,
+      explainInstances.schema)
+    var calls = 0
+    val counting: DataFrame => DataFrame = { df => calls += 1; mllibScorer(df) }
+    def request(): DataFrame = Lime.explainTabular(local, "instance_id", LimeOps.limeFeatures,
+      LimeConfig(nSamples = 64), Some(counting))
+    request().collect()
+    val first = calls
+    var df: DataFrame = null
+    val built = jobsOf { df = request() }
+    assert(built.isEmpty, s"building the repeat request ran jobs $built")
+    assert(calls == first, s"the repeat request called scoreFn ${calls - first} times")
+    val ran = jobsOf(df.collect())
+    assert(ran.size <= 1, s"the repeat request ran jobs $ran")
+  }
+
   test("text and image explain requests: no exchange") {
     // each document or image row folds its own samples in-row
     pin("lime_explain_text", 0, 0)
