@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, ObjectType, StringType, StructField, StructType}
@@ -263,8 +263,8 @@ private[lime] case class ExplainedFeature[N](rank: Int, feature: N, weight: Doub
   *    ∏ bins × ∏ category counts). Every non-instance sample's scorer
   *    input is a lattice cell: a bin mean per numeric feature and a
   *    value per categorical one. The cells and the instance rows are
-  *    scored once, as one local relation the optimizer evaluates on
-  *    the driver without a job, and bound in a [[Lattice]]. Each
+  *    scored once, on the driver and without a job (see "Request
+  *    templates" below), and bound in a [[Lattice]]. Each
   *    instance row then regenerates its N samples' draws in one
   *    expression ([[FoldSamples]]), looks up each score by the cell's
   *    mixed-radix code, and folds the kernel-weighted normal equations
@@ -285,22 +285,31 @@ private[lime] case class ExplainedFeature[N](rank: Int, feature: N, weight: Doub
   * features, and the output comes back as a single partition sorted by
   * (id, rank) — the total order, with no range exchange.
   *
-  * Request templates. A tabular request's plans (the instance collect,
-  * the lattice scoring and the result) differ from request to request
-  * only in their data, so each is analyzed once per request shape and
+  * Request templates. A tabular request's parts (the instance collect,
+  * the lattice scores and the result) differ from request to request
+  * only in their data, so each is made once per request shape and
   * cached as a [[RequestTemplate]]: at most
   * [[RequestTemplate.MaxTemplates]] of them over all sessions. The
   * shape is the session and its SQL conf, the `scoreFn` instance for
-  * the plans that call it (both by reference, held weakly; None is the
-  * demo scorer's), `idCol`, the
-  * features, the config, the instances' schema and the plan. A later
-  * request of the shape binds its instance plan, its lattice rows and
-  * its statistics (each BoundValue by name, [[statValues]]) into the
-  * template: it does not call `scoreFn`, run MLlib's transforms or
-  * analyze a plan, and gets the rows a cold build gives, bit for bit.
-  * A caller that makes a new `scoreFn` per request builds the plans
-  * that call it on every request. A scorer whose plan reads more than
-  * its input gets no template and is called on every request (see
+  * the parts that call it (both by reference, held weakly; None is the
+  * demo scorer's), `idCol`, the features, the config, the instances'
+  * schema and the part. The instance collect and the result are
+  * analyzed plans: a later request binds its instance plan and its
+  * statistics (each BoundValue by name, [[statValues]]) into them, and
+  * reads the collect's rows through the deserializer its first request
+  * resolved. The lattice scores are a held evaluator: the scorer's
+  * projections, evaluated on the driver as the optimizer's
+  * local-relation rule evaluates them on a cold build. A later request
+  * passes its cells and instances to it as rows and gets their scores
+  * back, with its named statistics read by name: no DataFrame,
+  * analyzer, optimizer, code generation or job. So a later request
+  * does not call `scoreFn`, run MLlib's transforms or analyze a plan,
+  * and gets the rows a cold build gives, bit for bit. A caller that
+  * makes a new `scoreFn` per request builds the parts that call it on
+  * every request. A scorer whose plan reads more than its input gets no
+  * template and is called on every request; one whose plan is more than
+  * deterministic projections of its input gets no held evaluator, and
+  * its lattice scores are built and collected on every request (see
   * [[explainTabular]]).
   */
 object Lime {
@@ -1076,7 +1085,12 @@ object Lime {
     * function) is read once; to score with a changed model, pass a new
     * function. A scorer whose plan reads anything besides its input (a
     * second relation, a round trip through `df.rdd`, a checkpoint, its
-    * input twice) is called on every request instead.
+    * input twice) is called on every request instead. The lattice
+    * scores of later requests are evaluated without Catalyst only when
+    * the scorer's plan is deterministic projections of its input and
+    * nothing else (no filter, join, sort, random value or UDF marked
+    * nondeterministic): any other plan is built and collected on every
+    * request, with the same result.
     *
     * The instance set is collected once at build, numeric features cast
     * to double and categorical ones to string: the statistics, the
@@ -1125,9 +1139,9 @@ object Lime {
     // the lattice's RNG keys xxhash64(seed, id).
     val featureCols = features.map(col(_).cast("double")) ++ catFeatures.map(col(_).cast("string"))
     val idHash = xxhash64(lit(cfg.seed), col(idCol))
-    val rows = request(instances, shape, "collect", Map.empty) { inst =>
+    val rows = RequestTemplate.rows(instances, shape.copy(part = "collect")) { inst =>
       inst.select(featureCols :+ col(idCol) :+ idHash: _*)
-    }.collect()
+    }
     checkInstances(rows, featureCols.size, idCol, features, cfg.discretize)
     val stats = fitStatsLocal(rows, features, cfg.nBins)
     val catStats = fitCatStatsLocal(rows, features.size, catFeatures)
@@ -1164,8 +1178,8 @@ object Lime {
     val fold =
       if (lattice && cfg.discretize)
         latticeFold(rows, stats, catStats, cfg, width, (schema, cells) =>
-          request(spark.createDataFrame(java.util.Arrays.asList(cells: _*), schema),
-            scored, "scores", values)(scoreFn(_).select(col("__cell"), col("pred").cast("double"))))
+          RequestTemplate.scores(spark, schema, cells, scored.copy(part = "scores"), values)(
+            scoreFn(_).select(col("__cell"), col("pred").cast("double"))))
       else None
     fold match {
       case Some(f) =>
@@ -1317,8 +1331,9 @@ object Lime {
   }
 
   /** The lattice path's fold: scores every lattice cell and every
-    * instance once through `score` (the scorer over the rows of a
-    * local relation of the schema it is given), and binds them with
+    * instance once through `score` (the scorer's (`__cell`, score) rows
+    * for the rows it is given, in Catalyst's form, of the schema it is
+    * given), and binds them with
     * the request's statistics in a [[Lattice]], the BoundValue named
     * `lattice`. None above [[LatticeGate]], or when a score is null or
     * two ids share an RNG key: the request then keeps the fan-out path,
@@ -1329,7 +1344,7 @@ object Lime {
     */
   private def latticeFold(rows: Array[Row], stats: Seq[FeatureStats], catStats: Seq[CatStats],
                           cfg: LimeConfig, width: Double,
-                          score: (StructType, Seq[Row]) => DataFrame): Option[BoundValue] = {
+                          score: (StructType, Seq[InternalRow]) => Seq[InternalRow]): Option[BoundValue] = {
     val radix = stats.map(_.binMeans.size) ++ catStats.map(_.values.size)
     val nCells = radix.foldLeft(1L)((n, r) => math.min(n * r, LatticeGate + 1L))
     val keys = rows.map(_.getLong(radix.size + 1))
@@ -1337,31 +1352,35 @@ object Lime {
     val cells = nCells.toInt
     val nNum = stats.size
     val d = radix.size
-    // scorer input: each cell's per-feature bin mean or category value
-    // (mixed-radix digits, the first feature most significant), then
-    // each instance's own values; `__cell` keys the scores
+    val catValues = catStats.map(_.values.map(UTF8String.fromString).toArray).toArray
+    // scorer input, in Catalyst's form (doubles, strings as UTF8String):
+    // each cell's per-feature bin mean or category value (mixed-radix
+    // digits, the first feature most significant), then each instance's
+    // own values; the int `__cell` keys the scores
+    def row(vals: Array[Any], cell: Int): InternalRow = new GenericInternalRow(vals ++ vals :+ cell)
     val cellRows = (0 until cells).map { code =>
       val vals = new Array[Any](d)
       var rest = code
       for (j <- d - 1 to 0 by -1) {
         val b = rest % radix(j)
-        vals(j) = if (j < nNum) stats(j).binMeans(b) else catStats(j - nNum).values(b)
+        vals(j) = if (j < nNum) stats(j).binMeans(b) else catValues(j - nNum)(b)
         rest /= radix(j)
       }
-      Row.fromSeq(vals.toSeq ++ vals :+ code)
+      row(vals, code)
     }
     val instRows = rows.indices.map { i =>
-      val vals = (0 until d).map(rows(i).get)
-      Row.fromSeq(vals ++ vals :+ (cells + i))
+      row(Array.tabulate[Any](d)(j => rows(i).get(j) match {
+        case s: String => UTF8String.fromString(s)
+        case v => v
+      }), cells + i)
     }
     val names = stats.map(_.name) ++ catStats.map(_.name)
     val schema = StructType((names ++ names.map(_ + "__val")).zipWithIndex.map { case (f, j) =>
       StructField(f, if (j % d < nNum) DoubleType else StringType)
     } :+ StructField("__cell", IntegerType, nullable = false))
-    val scored = score(schema, cellRows ++ instRows).collect()
     val y = new Array[Double](cells + rows.length)
     val have = new java.util.BitSet(y.length)
-    scored.foreach { r =>
+    score(schema, cellRows ++ instRows).foreach { r =>
       if (!r.isNullAt(1)) { y(r.getInt(0)) = r.getDouble(1); have.set(r.getInt(0)) }
     }
     if (have.cardinality() < y.length) return None
@@ -1371,7 +1390,7 @@ object Lime {
       tags = (stats.map(_.name) ++ catStats.map("cat:" + _.name)).map(UTF8String.fromString).toArray,
       edges = stats.map(st => arrayData(st.edges)).toArray,
       cumFreqs = (stats.map(_.binCumFreqs) ++ catStats.map(_.cumFreqs)).map(arrayData).toArray,
-      catValues = catStats.map(_.values.map(UTF8String.fromString).toArray).toArray,
+      catValues = catValues,
       radix = radix.toArray,
       scores = y.take(cells),
       keys = order.map(keys).toArray,

@@ -1,10 +1,11 @@
 package graft.lime
 
 import org.apache.spark.ml.Transformer
-import org.apache.spark.ml.feature.VectorAssembler
+import org.apache.spark.ml.feature.GraftAssemblerShim
 import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** Bridge from an MLlib model to the LIME `scoreFn` hook.
   *
@@ -35,9 +36,16 @@ object LimeMllib {
     val stashed = df.select(df.columns.filter(_ != featuresCol).map { c =>
       if (orig.contains(c)) col(s"${c}__val").as(c) else Lime.quoted(c)
     } ++ features.map(f => col(f).as(orig(f))): _*)
-    val assembled = new VectorAssembler()
-      .setInputCols(features.toArray).setOutputCol(featuresCol)
-      .transform(stashed)
+    // VectorAssembler's vector, by its own function, in a deterministic
+    // UDF: the assembler marks its UDF nondeterministic, and a
+    // nondeterministic scorer's lattice scores are planned per request
+    // (see Lime.explainTabular)
+    val assemble = GraftAssemblerShim.assemble(features.size)
+    val args = features.map { f =>
+      if (stashed.schema(f).dataType == DoubleType) Lime.quoted(f) else Lime.quoted(f).cast(DoubleType)
+    }
+    val assembled = stashed.select(col("*"),
+      udf((r: Row) => assemble(r.toSeq)).apply(struct(args: _*)).as(featuresCol))
     val scored = model.transform(assembled)
     val pred = probabilityIndex match {
       case Some(i) => element_at(vector_to_array(col("probability")), i + 1)

@@ -119,6 +119,11 @@ object ScaleOps {
       .withColumn("__slice", spark_partition_id())
       .cache()
     retained.add(sliced)
+    // Eviction does not know whether a slice's lazy consumer has run:
+    // RetainedCap + 1 calls before the first call's result is
+    // materialized unpersist that slice, so its consumer recomputes the
+    // sliced table when it runs, and the "evaluated exactly once"
+    // guarantee above does not hold for it.
     while (retained.size > RetainedCap) {
       val oldest = retained.poll()
       if (oldest != null) oldest.unpersist(false)

@@ -1,13 +1,21 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.optimizer.RewriteWithExpression
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.StructType
 
-/** Bridge for building Columns from custom Catalyst expressions, and
-  * DataFrames from analyzed plans: `ExpressionUtils` and
-  * `Dataset.ofRows` are private[sql] in Spark 4, so the accessors live
-  * in this package. No Spark internals are modified.
+/** Bridge for building Columns from custom Catalyst expressions and
+  * DataFrames from analyzed plans or Catalyst rows, and for collecting
+  * a DataFrame's Catalyst rows: `ExpressionUtils`, `Dataset.ofRows`,
+  * the session state and the active-session scope are private[sql] in
+  * Spark 4, so the accessors live in this package. No Spark internals
+  * are modified.
   */
 object GraftColumnShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -22,4 +30,42 @@ object GraftColumnShim {
     plan.setAnalyzed()
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
   }
+
+  /** The local relation `createDataFrame` makes of external rows, over
+    * rows already in Catalyst's form. */
+  def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** `df.collect()` without its Row deserializer: the same action (one
+    * SQL execution, metrics reset), returning the plan's own rows. */
+  def collectInternal(df: DataFrame): Array[InternalRow] = {
+    val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan.resetMetrics()
+      qe.executedPlan.executeCollect()
+    }
+  }
+
+  /** The deserializer `df.collect()` resolves for its rows, with the
+    * session's analyzer. Not thread-safe: it reuses one row. */
+  def rowDeserializer(df: DataFrame): InternalRow => Row = {
+    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
+    ExpressionEncoder(df.schema)
+      .resolveAndBind(df.queryExecution.analyzed.output, spark.sessionState.analyzer)
+      .createDeserializer()
+  }
+
+  /** An analyzed plan as the optimizer hands it to its first
+    * local-relation batch: finish-analysis rewrites (runtime-replaceable
+    * expressions replaced, current time fixed, aliases and hints gone)
+    * and `With` expressions rewritten, in `spark`'s conf. */
+  def finishAnalysis(spark: SparkSession, plan: LogicalPlan): LogicalPlan =
+    withActive(spark)(RewriteWithExpression(
+      spark.asInstanceOf[classic.SparkSession].sessionState.optimizer.FinishAnalysis(plan)))
+
+  /** `body` with `spark` the thread's active session, as the optimizer
+    * runs its rules. */
+  def withActive[T](spark: SparkSession)(body: => T): T =
+    spark.asInstanceOf[classic.SparkSession].withActive(body)
 }

@@ -254,20 +254,32 @@ class LimeTemplateSpec extends SparkSpec {
   }
 
   test("4 concurrent requests give the cold answer") {
-    val (a, b) = pair(feats)
-    val sets = Seq(a, b, a.filter(col("instance_id") % 3 =!= 0), b.filter(col("instance_id") % 2 === 1))
-    val explain = explainer(feats, LimeConfig(nSamples = 256), Some(mllibScorer))
-    val cold = sets.map { inst => RequestTemplate.clear(spark); bits(explain(inst).collect()) }
-    RequestTemplate.clear(spark)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val got = Await.result(Future.sequence(sets.map(inst =>
-        Future(bits(explain(inst).collect())))), Duration(5, "min"))
-      assert(got == cold, "a concurrent request differs from its cold build")
-    } finally pool.shutdown()
+    val cfg = LimeConfig(nSamples = 256)
+    // the MLlib scorer's UDFs, the demo scorer's named values, and
+    // string cells, each through one held evaluator
+    for ((cols, explain) <- Seq(
+         (feats, explainer(feats, cfg, Some(mllibScorer))),
+         (feats, explainer(feats, cfg)),
+         (feats.take(2) ++ cats, explainer(feats.take(2), cfg.copy(kFeatures = 3), Some(catScorer), cats)))) {
+      val (a, b) = pair(cols)
+      val sets = Seq(a, b, a.filter(col("instance_id") % 3 =!= 0), b.filter(col("instance_id") % 2 === 1))
+      val cold = sets.map { inst => RequestTemplate.clear(spark); bits(explain(inst).collect()) }
+      RequestTemplate.clear(spark)
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.duration.Duration
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      try {
+        // twice: the first round may build the shape's templates
+        // concurrently, the second binds into them
+        for (_ <- 1 to 2) {
+          val got = Await.result(Future.sequence(sets.map(inst =>
+            Future(bits(explain(inst).collect())))), Duration(5, "min"))
+          assert(got == cold, "a concurrent request differs from its cold build")
+        }
+        assert(RequestTemplate.cached(spark).exists(_.isInstanceOf[RequestTemplate.Scores]))
+      } finally pool.shutdown()
+    }
   }
 
   test("the cache holds no instance row, lattice row or Lattice, and at most MaxTemplates") {
@@ -277,10 +289,37 @@ class LimeTemplateSpec extends SparkSpec {
       Some(catScorer), cats).collect()
     Lime.explainTabular(local(a), "instance_id", feats.take(2),
       LimeConfig(nSamples = 64, discretize = false), Some(catScorer), cats).collect()
-    val plans = RequestTemplate.cached(spark).map(_.held)
-    // the discretized request's collect, scores and lattice; the
+    // the demo scorer: its own scores, which read named values
+    Lime.explainTabular(local(a), "instance_id", feats.take(2), LimeConfig(nSamples = 64),
+      None, cats).collect()
+    val parts = RequestTemplate.cached(spark)
+    // the discretized requests' collect, lattice and two scores; the
     // continuous one's collect and fan-out
-    assert(plans.size == 5, s"${plans.size} templates")
+    assert(parts.size == 6, s"${parts.size} templates")
+    val plans = parts.collect {
+      case p: RequestTemplate.Plan => p.held
+      case r: RequestTemplate.Rows => r.plan.held
+    }
+    val evaluators = parts.collect { case e: RequestTemplate.Scores => e.held }
+    assert(plans.size == 4 && evaluators.size == 2,
+      s"${plans.size} plans and ${evaluators.size} evaluators")
+    // an evaluator holds expressions only: no plan, so no cell row; no
+    // named value (each reads its request's by name, during the
+    // request); no Lattice
+    evaluators.foreach { case (exprs, values) =>
+      assert(values.isEmpty, s"values ${values.keys.mkString(", ")} held after the request")
+      exprs.foreach(_.foreach {
+        case b: BoundValue if b.name.nonEmpty => fail(s"${b.name} held in an evaluator")
+        case b: BoundValue => assert(!b.value.isInstanceOf[Lattice], "a Lattice held in an evaluator")
+        case p: org.apache.spark.sql.catalyst.expressions.PlanExpression[_] =>
+          fail(s"a plan held in an evaluator: $p")
+        case l: org.apache.spark.sql.catalyst.expressions.Literal =>
+          assert(!l.value.isInstanceOf[org.apache.spark.sql.catalyst.InternalRow], s"a row held in $l")
+        case _ =>
+      })
+    }
+    assert(evaluators.exists(_._1.exists(_.exists(_.isInstanceOf[RequestTemplate.BoundName]))),
+      "the demo scorer's evaluator reads no named value")
     plans.foreach { p =>
       // no relation but the empty slot, so no path to a session or a file
       p.collectLeaves() match {
@@ -301,5 +340,60 @@ class LimeTemplateSpec extends SparkSpec {
         Some(fresh), cats).collect()
     }
     assert(held <= RequestTemplate.MaxTemplates)
+  }
+
+  /** Effective runs of the optimizer's local-relation rule in `body`,
+    * from Catalyst's rule metering (all sessions of the JVM). */
+  private def localRelationRuns(body: => Unit): Long = {
+    def runs: Long = org.apache.spark.sql.catalyst.rules.RuleExecutor.dumpTimeSpent().linesIterator
+      .find(_.trim.startsWith("org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"))
+      .map(_.trim.split("\\s+")).map(t => t(t.length - 3).toLong).getOrElse(0L)
+    val before = runs
+    body
+    runs - before
+  }
+
+  test("a warm bound request's scores never reach Catalyst: no local relation is optimized") {
+    val (a, b) = pair(feats)
+    val out = java.nio.file.Files.createTempDirectory("lime-template").toString
+    try {
+      a.write.parquet(s"$out/a"); b.write.parquet(s"$out/b")
+      val (pa, pb) = (spark.read.parquet(s"$out/a"), spark.read.parquet(s"$out/b"))
+      for (scorer <- Seq(Some(mllibScorer), None)) {
+        RequestTemplate.clear(spark)
+        val explain = explainer(feats, LimeConfig(nSamples = 128), scorer)
+        // the cold request scores its lattice through the optimizer
+        assert(localRelationRuns(explain(pa)) > 0, "the cold request optimized no local relation")
+        assert(RequestTemplate.cached(spark).exists(_.isInstanceOf[RequestTemplate.Scores]))
+        var warm: DataFrame = null
+        val runs = localRelationRuns { warm = explain(pb) }
+        assert(runs == 0, s"the warm request's build optimized a local relation $runs times")
+        RequestTemplate.clear(spark)
+        assert(bits(warm.collect()) == bits(explain(pb).collect()), "a warm request differs from cold")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+  }
+
+  test("a scorer plan with a non-Project node or a nondeterministic expression gets no evaluator") {
+    val (a, _) = pair(feats.take(2) ++ cats)
+    val b = a.filter(col("instance_id") % 2 === 0)
+    val nondeterministic = udf((p: Double) => p).asNondeterministic()
+    val scorers: Seq[DataFrame => DataFrame] = Seq(
+      df => catScorer(df.filter(col("__cell") >= 0)),
+      df => catScorer(df).withColumn("pred", col("pred") + rand(7) * 1e-9),
+      df => catScorer(df).withColumn("pred", nondeterministic(col("pred"))))
+    for (scorer <- scorers) {
+      RequestTemplate.clear(spark)
+      val explain = explainer(feats.take(2), LimeConfig(nSamples = 256, kFeatures = 3), Some(scorer), cats)
+      assert(explain(a).collect().nonEmpty)
+      assert(!RequestTemplate.cached(spark).exists(_.isInstanceOf[RequestTemplate.Scores]),
+        "the scorer's plan got an evaluator")
+      // the scores are built per request: the collect and lattice are held
+      assert(RequestTemplate.shapes(spark) - RequestTemplate.cached(spark).size == 1)
+      val bound = explain(b).collect()
+      RequestTemplate.clear(spark)
+      assert(bound.nonEmpty && bits(bound) == bits(explain(b).collect()),
+        "a bound request differs from its cold build")
+    }
   }
 }
