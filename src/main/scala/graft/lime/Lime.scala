@@ -296,13 +296,13 @@ private[lime] case class ExplainedFeature[N](rank: Int, feature: N, weight: Doub
   * schema and the part. The instance collect and the result are
   * analyzed plans: a later request binds its instance plan and its
   * statistics (each BoundValue by name, [[statValues]]) into them, and
-  * reads the collect's rows through the deserializer its first request
-  * resolved. The lattice scores are a held evaluator: the scorer's
-  * projections, evaluated on the driver as the optimizer's
-  * local-relation rule evaluates them on a cold build. A later request
-  * passes its cells and instances to it as rows and gets their scores
-  * back, with its named statistics read by name: no DataFrame,
-  * analyzer, optimizer, code generation or job. So a later request
+  * turns the collect's Catalyst rows into Rows by a converter of their
+  * schema, not the encoder the analyzer resolves. The lattice scores
+  * are a held evaluator: the scorer's projections, evaluated on the
+  * driver as the optimizer's local-relation rule evaluates them on a
+  * cold build. A later request passes its cells and instances to it as
+  * rows and gets their scores back, with its named statistics read by
+  * name: no DataFrame, analyzer, optimizer, code generation or job. So a later request
   * does not call `scoreFn`, run MLlib's transforms or analyze a plan,
   * and gets the rows a cold build gives, bit for bit. A caller that
   * makes a new `scoreFn` per request builds the parts that call it on
@@ -1139,9 +1139,9 @@ object Lime {
     // the lattice's RNG keys xxhash64(seed, id).
     val featureCols = features.map(col(_).cast("double")) ++ catFeatures.map(col(_).cast("string"))
     val idHash = xxhash64(lit(cfg.seed), col(idCol))
-    val rows = RequestTemplate.rows(instances, shape.copy(part = "collect")) { inst =>
+    val rows = GraftColumnShim.collectRows(request(instances, shape, "collect", Map.empty) { inst =>
       inst.select(featureCols :+ col(idCol) :+ idHash: _*)
-    }
+    })
     checkInstances(rows, featureCols.size, idCol, features, cfg.discretize)
     val stats = fitStatsLocal(rows, features, cfg.nBins)
     val catStats = fitCatStatsLocal(rows, features.size, catFeatures)

@@ -36,16 +36,17 @@ object LimeMllib {
     val stashed = df.select(df.columns.filter(_ != featuresCol).map { c =>
       if (orig.contains(c)) col(s"${c}__val").as(c) else Lime.quoted(c)
     } ++ features.map(f => col(f).as(orig(f))): _*)
-    // VectorAssembler's vector, by its own function, in a deterministic
-    // UDF: the assembler marks its UDF nondeterministic, and a
-    // nondeterministic scorer's lattice scores are planned per request
-    // (see Lime.explainTabular)
+    // VectorAssembler's vector and column metadata, by its own function
+    // and rule, in a deterministic UDF: the assembler marks its UDF
+    // nondeterministic, and a nondeterministic scorer's lattice scores
+    // are planned per request (see Lime.explainTabular)
     val assemble = GraftAssemblerShim.assemble(features.size)
     val args = features.map { f =>
       if (stashed.schema(f).dataType == DoubleType) Lime.quoted(f) else Lime.quoted(f).cast(DoubleType)
     }
     val assembled = stashed.select(col("*"),
-      udf((r: Row) => assemble(r.toSeq)).apply(struct(args: _*)).as(featuresCol))
+      udf((r: Row) => assemble(r.toSeq)).apply(struct(args: _*))
+        .as(featuresCol, GraftAssemblerShim.metadata(featuresCol, features.map(stashed.schema(_)))))
     val scored = model.transform(assembled)
     val pred = probabilityIndex match {
       case Some(i) => element_at(vector_to_array(col("probability")), i + 1)

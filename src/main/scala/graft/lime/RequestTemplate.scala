@@ -1,7 +1,7 @@
 package graft.lime
 
 import graft.lime.Lime.LimeConfig
-import org.apache.spark.sql.{DataFrame, GraftColumnShim, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, AttributeReference, Expression, InterpretedMutableProjection, LeafExpression, Unevaluable}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -12,15 +12,12 @@ import scala.jdk.CollectionConverters._
 /** One part of an explain request, made once per request shape, by its
   * first request, and used by every later request of that shape. It
   * keeps no instance, no lattice row and no statistic of the request
-  * that made it. There are three kinds:
+  * that made it. There are two kinds:
   *  - [[RequestTemplate.Plan]]: the request's analyzed plan, with its
   *    input replaced by a local relation of its output with no rows
   *    (the slot) and every named [[BoundValue]] emptied. A later request
   *    binds its input plan into the slot and its values by name, so it
   *    neither rebuilds its plan nor runs the analyzer.
-  *  - [[RequestTemplate.Rows]]: a Plan that a request collects (the
-  *    instance collect), with the Row deserializer its first collect
-  *    resolved.
   *  - [[RequestTemplate.Scores]]: the lattice scores, a held evaluator.
   *    The scorer's plan above the slot must be deterministic
   *    projections, and nothing else; they are evaluated on the driver
@@ -54,16 +51,6 @@ private[lime] object RequestTemplate {
 
     /** The cached plan, for specs. */
     private[lime] def held: LogicalPlan = plan
-  }
-
-  /** A collected Plan, its rows read through one deserializer, which
-    * reuses a row and so serves one request at a time. */
-  final class Rows private[RequestTemplate] (val plan: Plan, rowOf: InternalRow => Row)
-      extends RequestTemplate {
-    def collect(spark: SparkSession, fill: LogicalPlan): Array[Row] = {
-      val rows = GraftColumnShim.collectInternal(plan.bind(spark, fill, Map.empty))
-      rowOf.synchronized(rows.map(rowOf))
-    }
   }
 
   /** The scores of a lattice request: the scorer's projections, bottom
@@ -178,19 +165,6 @@ private[lime] object RequestTemplate {
       hold(shape, plan(built.queryExecution.analyzed, input.queryExecution.analyzed))
       built
   }
-
-  /** [[request]] with no named values, collected. */
-  def rows(input: DataFrame, shape: Shape)(build: DataFrame => DataFrame): Array[Row] =
-    lookup(shape) match {
-      case Some(Some(t: Rows)) => t.collect(input.sparkSession, input.queryExecution.analyzed)
-      case Some(_) => build(input).collect()
-      case None =>
-        val built = build(input)
-        val rowOf = GraftColumnShim.rowDeserializer(built)
-        hold(shape, plan(built.queryExecution.analyzed, input.queryExecution.analyzed)
-          .map(new Rows(_, rowOf)))
-        GraftColumnShim.collectInternal(built).map(rowOf)
-    }
 
   /** The scores `build` makes of a local relation of `rows` (of
     * `schema`), with each named BoundValue taken from `values`: the

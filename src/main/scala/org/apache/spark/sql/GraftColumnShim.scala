@@ -1,7 +1,6 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.optimizer.RewriteWithExpression
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
@@ -47,13 +46,13 @@ object GraftColumnShim {
     }
   }
 
-  /** The deserializer `df.collect()` resolves for its rows, with the
-    * session's analyzer. Not thread-safe: it reuses one row. */
-  def rowDeserializer(df: DataFrame): InternalRow => Row = {
-    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
-    ExpressionEncoder(df.schema)
-      .resolveAndBind(df.queryExecution.analyzed.output, spark.sessionState.analyzer)
-      .createDeserializer()
+  /** `df.collect()`'s rows, made from the plan's own rows by a converter
+    * of `df`'s schema (in its session's conf, as `collect`'s encoder is)
+    * instead of the deserializer `collect` resolves with the analyzer.
+    * The converter is made per call and keeps no row between rows. */
+  def collectRows(df: DataFrame): Array[Row] = {
+    val toRow = withActive(df.sparkSession)(CatalystTypeConverters.createToScalaConverter(df.schema))
+    collectInternal(df).map(toRow(_).asInstanceOf[Row])
   }
 
   /** An analyzed plan as the optimizer hands it to its first

@@ -5,8 +5,10 @@ import graft.lime.Lime.LimeConfig
 import graft.operators.LimeOps
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.classification.LogisticRegression
-import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.ml.attribute.NumericAttribute
+import org.apache.spark.ml.feature.{GraftAssemblerShim, StandardScaler, VectorAssembler, VectorSlicer}
+import org.apache.spark.ml.regression.LinearRegression
+import org.apache.spark.sql.{DataFrame, GraftColumnShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -282,6 +284,68 @@ class LimeTemplateSpec extends SparkSpec {
     }
   }
 
+  test("a cold request and warm requests of one shape, run concurrently, give their cold answers") {
+    val explain = explainer(feats, LimeConfig(nSamples = 256), Some(mllibScorer))
+    val (a, b) = pair(feats)
+    val cold = Seq(a, b).map { inst => RequestTemplate.clear(spark); bits(explain(inst).collect()) }
+    // a's rows, read slowly: its cold request still collects them while
+    // the warm requests bind into the templates it has already held
+    val slow = udf { (id: Long) => Thread.sleep(20); id >= 0 }
+    val slowA = a.filter(slow(col("instance_id")))
+    RequestTemplate.clear(spark)
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val first = Future(bits(explain(slowA).collect()))
+      while (RequestTemplate.shapes(spark) == 0 && !first.isCompleted) Thread.sleep(1)
+      val warm = Seq.fill(3)(Future {
+        val got = Seq.newBuilder[Seq[Seq[Any]]]
+        var n = 0
+        while (n < 2 || !first.isCompleted) { got += bits(explain(b).collect()); n += 1 }
+        got.result()
+      })
+      assert(Await.result(first, Duration(5, "min")) == cold.head, "the cold request differs")
+      val answers = warm.flatMap(Await.result(_, Duration(5, "min")))
+      assert(answers.forall(_ == cold(1)), "a warm request differs from its cold build")
+    } finally pool.shutdown()
+  }
+
+  test("the instance collect's rows equal Dataset.collect's for each id type") {
+    val base = lineitems(1, 10)
+    for (id <- Seq(col("instance_id"), col("instance_id").cast("int"), col("l_returnflag"),
+         col("l_extendedprice").cast("decimal(12,2)"), col("l_shipdate"),
+         col("l_shipdate").cast("timestamp"), col("l_linestatus").cast("binary"), array(col("l_orderkey")))) {
+      val df = base.select(feats.map(col(_).cast("double")) :+ id.as("id") :+ xxhash64(lit(7), id): _*)
+      val (got, want) = (GraftColumnShim.collectRows(df).toSeq, df.collect().toSeq)
+      assert(got.nonEmpty && got == want, s"${df.schema("id").dataType}: the rows differ")
+    }
+  }
+
+  test("the MLlib bridge's features column is VectorAssembler's: vector and attributes") {
+    val names = Seq("a", "b", "c")
+    val df = spark.range(0, 40).select(col("id").as("instance_id"),
+      (col("id") * 0.5).as("a"), (col("id") % 3).cast("int").as("b"), (col("id") % 5).cast("double").as("c"))
+      .select(col("*"), (col("a") + 1.0).as("a__val"), (col("b") + 1).as("b__val"),
+        col("c").as("c__val", NumericAttribute.defaultAttr.withName("own").withMin(0.0).toMetadata()),
+        (col("instance_id") % 2).cast("double").as("label"))
+    // the frame the bridge hands the model: each f__val in as f
+    val swapped = df.select(col("instance_id"), col("a__val").as("a"), col("b__val").as("b"),
+      col("c__val").as("c"), col("label"))
+    val asm = new VectorAssembler().setInputCols(names.toArray).setOutputCol("features")
+    assert(GraftAssemblerShim.metadata("features", names.map(swapped.schema(_))) ==
+      asm.transform(swapped).schema("features").metadata)
+    // a model that finds its features by name in the attributes
+    val model = new Pipeline().setStages(Array(
+      new VectorSlicer().setInputCol("features").setOutputCol("sliced").setNames(Array("c", "a")),
+      new LinearRegression().setFeaturesCol("sliced").setMaxIter(5))).fit(asm.transform(swapped))
+    val got = LimeMllib.scoreFn(model, names, probabilityIndex = None)(df)
+      .select("instance_id", "pred").collect()
+    val want = model.transform(asm.transform(swapped)).select("instance_id", "prediction").collect()
+    assert(got.nonEmpty && bits(got) == bits(want), "the model scores differently through the bridge")
+  }
+
   test("the cache holds no instance row, lattice row or Lattice, and at most MaxTemplates") {
     RequestTemplate.clear(spark)
     val (a, _) = pair(feats.take(2) ++ cats)
@@ -296,10 +360,7 @@ class LimeTemplateSpec extends SparkSpec {
     // the discretized requests' collect, lattice and two scores; the
     // continuous one's collect and fan-out
     assert(parts.size == 6, s"${parts.size} templates")
-    val plans = parts.collect {
-      case p: RequestTemplate.Plan => p.held
-      case r: RequestTemplate.Rows => r.plan.held
-    }
+    val plans = parts.collect { case p: RequestTemplate.Plan => p.held }
     val evaluators = parts.collect { case e: RequestTemplate.Scores => e.held }
     assert(plans.size == 4 && evaluators.size == 2,
       s"${plans.size} plans and ${evaluators.size} evaluators")
