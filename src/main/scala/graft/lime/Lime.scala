@@ -1,8 +1,8 @@
 package graft.lime
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnShim, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BinaryExpression, BoundReference, Expression, InterpretedOrdering, LeafExpression, SortOrder, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
@@ -87,15 +87,7 @@ private[lime] case class BinIndex(left: Expression, right: Expression) extends B
     copy(left = l, right = r)
 }
 
-/** A request's per-row ridge fold: regenerates one row's samples from
-  * the counter RNG, scores and weighs them, and returns the row's ridge
-  * buffer, summed in sample order ([[NormalEquations]]).
-  */
-private[lime] trait SampleFold extends Serializable {
-  def fold(idHash: Long, row: AnyRef): ArrayData
-}
-
-/** [[SampleFold.fold]] as one expression over (the bound fold, the row's
+/** [[MaskFold.fold]] as one expression over (the bound fold, the row's
   * `xxhash64(seed, id)`, its input).
   */
 private[lime] case class FoldSamples(first: Expression, second: Expression, third: Expression)
@@ -103,7 +95,7 @@ private[lime] case class FoldSamples(first: Expression, second: Expression, thir
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
   override def nullSafeEval(f: Any, idHash: Any, row: Any): Any =
-    f.asInstanceOf[SampleFold].fold(idHash.asInstanceOf[Long], row.asInstanceOf[AnyRef])
+    f.asInstanceOf[MaskFold].fold(idHash.asInstanceOf[Long], row.asInstanceOf[InternalRow])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (f, h, r) => s"$f.fold($h, $r)")
@@ -122,6 +114,7 @@ private[lime] case class FoldSamples(first: Expression, second: Expression, thir
   *
   * Features are numeric (`edges.length` of them, binned) then
   * categorical; `radix(j)` is feature j's number of bins or values.
+  * The lattice is immutable: instances fold on it concurrently.
   */
 private[lime] final class Lattice(
     nSamples: Int,
@@ -133,16 +126,15 @@ private[lime] final class Lattice(
     scores: Array[Double],
     keys: Array[Long],
     instanceScores: Array[Double],
-    weights: Array[Double]) extends SampleFold {
+    weights: Array[Double]) {
 
   /** The ridge buffer of the instance whose id hashes to `idHash` and
-    * whose feature values are the struct `row` (numeric as doubles, then
+    * whose feature values lead the row `inst` (numeric as doubles, then
     * categorical as strings). Sample s draws feature j's bin or value
     * from `Rng.u01(idHash, s, tags(j))` as perturb does, so its z vector
     * and lattice cell are perturb's; sample 0 is the instance.
     */
-  def fold(idHash: Long, row: AnyRef): ArrayData = {
-    val inst = row.asInstanceOf[InternalRow]
+  def fold(idHash: Long, inst: InternalRow): ArrayData = {
     val nNum = edges.length
     val d = radix.length
     val m = d + 1
@@ -197,10 +189,9 @@ private[lime] final class Lattice(
   * operation Catalyst compiles it to, in Catalyst's order: the same bits
   * as those formulas written as Column expressions.
   */
-private[lime] final class MaskFold(nSamples: Int, width: Double) extends SampleFold {
+private[lime] final class MaskFold(nSamples: Int, width: Double) extends Serializable {
 
-  def fold(idHash: Long, row: AnyRef): ArrayData = {
-    val r = row.asInstanceOf[InternalRow]
+  def fold(idHash: Long, r: InternalRow): ArrayData = {
     val kept = r.getArray(1).toDoubleArray()
     val masked = r.getArray(2).toDoubleArray()
     val n = r.getInt(3).toDouble
@@ -264,37 +255,40 @@ private[lime] case class ExplainedFeature[N](rank: Int, feature: N, weight: Doub
   *    input is a lattice cell: a bin mean per numeric feature and a
   *    value per categorical one. The cells and the instance rows are
   *    scored once, on the driver and without a job (see "Request
-  *    templates" below), and bound in a [[Lattice]]. Each
-  *    instance row then regenerates its N samples' draws in one
-  *    expression ([[FoldSamples]]), looks up each score by the cell's
-  *    mixed-radix code, and folds the kernel-weighted normal equations
-  *    in sample order ([[NormalEquations]]), bit-identical to the
-  *    fan-out's sums. The request is a narrow projection over the
-  *    instance rows: no ×N rows, no exchange, one job. This relies on
-  *    the `scoreFn` contract: a deterministic row-wise function of the
-  *    `f__val` columns.
+  *    templates" below), and bound in a [[Lattice]]. Each collected
+  *    instance row then regenerates its N samples' draws
+  *    ([[Lattice.fold]]), looks up each score by the cell's mixed-radix
+  *    code, and folds the kernel-weighted normal equations in sample
+  *    order ([[NormalEquations]]), bit-identical to the fan-out's sums;
+  *    its fit is solved and ranked there too. The instances fold in
+  *    parallel on the driver, on the JVM's common fork-join pool, and
+  *    the result is a local relation of their rows: no ×N rows, no
+  *    exchange, no job. This relies on the `scoreFn` contract: a
+  *    deterministic row-wise function of the `f__val` columns.
   *  - Fan-out (above the gate, and continuous mode). One narrow stage
   *    perturbs, scores and weights instances × N rows, and one shuffle
   *    on instance_id aggregates the ridge buffers with map-side
   *    partials, so shuffled bytes are O(instances·d'²), not
   *    O(instances·N). A request runs as two jobs.
   *
-  * Text and image requests take the lattice path's shape, their
-  * stand-in black boxes scored in-row ([[MaskFold]]). Every path ends
+  * Text and image requests fold each row's samples in-row, in one
+  * expression ([[FoldSamples]]), their stand-in black boxes scored
+  * there ([[MaskFold]]). The fan-out, text and image requests end
   * alike: one call per row solves the ridge system and ranks the
   * features, and the output comes back as a single partition sorted by
-  * (id, rank) — the total order, with no range exchange.
+  * (id, rank) — the total order, with no range exchange. The lattice
+  * path's rows come in that order too.
   *
   * Request templates. A tabular request's parts (the instance collect,
-  * the lattice scores and the result) differ from request to request
-  * only in their data, so each is made once per request shape and
-  * cached as a [[RequestTemplate]]: at most
+  * the lattice scores and the fan-out's result) differ from request to
+  * request only in their data, so each is made once per request shape
+  * and cached as a [[RequestTemplate]]: at most
   * [[RequestTemplate.MaxTemplates]] of them over all sessions. The
   * shape is the session and its SQL conf, the `scoreFn` instance for
   * the parts that call it (both by reference, held weakly; None is the
   * demo scorer's), `idCol`, the features, the config, the instances'
-  * schema and the part. The instance collect and the result are
-  * analyzed plans: a later request binds its instance plan and its
+  * schema and the part. The instance collect and the fan-out's result
+  * are analyzed plans: a later request binds its instance plan and its
   * statistics (each BoundValue by name, [[statValues]]) into them, and
   * turns the collect's Catalyst rows into Rows by a converter of their
   * schema, not the encoder the analyzer resolves. The lattice scores
@@ -310,7 +304,8 @@ private[lime] case class ExplainedFeature[N](rank: Int, feature: N, weight: Doub
   * template and is called on every request; one whose plan is more than
   * deterministic projections of its input gets no held evaluator, and
   * its lattice scores are built and collected on every request (see
-  * [[explainTabular]]).
+  * [[explainTabular]]). A lattice request's result is no template: it
+  * is made of the request's own rows, at build.
   */
 object Lime {
 
@@ -838,6 +833,7 @@ object Lime {
       x.length - y.length
     }
     catFeatures.zipWithIndex.map { case (f, ci) =>
+      require(rows.nonEmpty, s"fitCatStats: feature $f has no values")
       val counts = scala.collection.mutable.HashMap.empty[Option[String], Long]
       rows.foreach { r =>
         val v = if (r.isNullAt(offset + ci)) None else Some(r.get(offset + ci).toString)
@@ -1101,7 +1097,11 @@ object Lime {
     * In discretized mode a null numeric value falls in bin 0.
     *
     * Output: (instance_id, rank, feature, weight, intercept, r2,
-    * local_pred), kFeatures rows per instance.
+    * local_pred), kFeatures rows per instance, sorted by (instance_id,
+    * rank). A lattice-path result (discretized, at most [[LatticeGate]]
+    * cells) holds its rows: they are computed at build, and the result
+    * does not read `instances` again. A fan-out result is a plan over
+    * `instances`, read each time it runs.
     */
   def explainTabular(
       instances: DataFrame,
@@ -1139,9 +1139,11 @@ object Lime {
     // the lattice's RNG keys xxhash64(seed, id).
     val featureCols = features.map(col(_).cast("double")) ++ catFeatures.map(col(_).cast("string"))
     val idHash = xxhash64(lit(cfg.seed), col(idCol))
-    val rows = GraftColumnShim.collectRows(request(instances, shape, "collect", Map.empty) { inst =>
+    val collect = request(instances, shape, "collect", Map.empty) { inst =>
       inst.select(featureCols :+ col(idCol) :+ idHash: _*)
-    })
+    }
+    val internal = GraftColumnShim.collectInternal(collect)
+    val rows = GraftColumnShim.toRows(collect, internal)
     checkInstances(rows, featureCols.size, idCol, features, cfg.discretize)
     val stats = fitStatsLocal(rows, features, cfg.nBins)
     val catStats = fitCatStatsLocal(rows, features.size, catFeatures)
@@ -1153,27 +1155,27 @@ object Lime {
         features.map(f => col(s"${f}__val"))))
     }
 
-    // built only when a template is: a bound request reuses its template's
-    lazy val solve = {
+    // one instance's fit from its ridge buffer and, in continuous mode,
+    // its numeric z entries, ranked
+    def solver: (Array[Double], Seq[Double]) => Seq[ExplainedFeature[String]] = {
       val fwd = cfg.selection == "forward_selection" ||
         (cfg.selection == "auto" && d <= 6)
       val agg = new RidgeAggregator(d, cfg.lambda,
         if (fwd) cfg.kFeatures else Int.MaxValue, fwd)
       val keep = if (cfg.selection == "none") d else cfg.kFeatures
-      // In continuous mode the instance's interpretable vector is its
-      // z-scored values (categorical entries 1.0), not all-ones, so the
-      // aggregator's localPred (= beta-sum) becomes intercept + beta . z.
       val names = allFeatures.map(UTF8String.fromString)
-      udf { (buf: Seq[Double], zInst: Seq[Double]) =>
-        val fit = agg.finish(buf.toArray)
+      (buf, zInst) => {
+        val fit = agg.finish(buf)
+        // In continuous mode the instance's interpretable vector is its
+        // z-scored values (categorical entries 1.0), not all-ones, so the
+        // aggregator's localPred (= beta-sum) becomes intercept + beta . z.
         val localPred =
           if (cfg.discretize) fit.localPred
           else fit.intercept + fit.coefs.zip(zInst ++ catFeatures.map(_ => 1.0))
             .foldLeft(0.0) { case (acc, (c, z)) => acc + c * z }
         rank(fit, localPred, allFeatures, keep, (a, b) => names(a).compareTo(names(b)) < 0)
-      }.withName("lime_ridge_solve")
+      }
     }
-    val noZ = typedLit(Seq.empty[Double])
 
     val fold =
       if (lattice && cfg.discretize)
@@ -1183,10 +1185,8 @@ object Lime {
       else None
     fold match {
       case Some(f) =>
-        request(instances, shape, "lattice", values + (f.name -> f)) { inst =>
-          explanations(inst.select(col(idCol).as("instance_id"),
-            solve(foldSamples(f, idHash, struct(featureCols: _*)), noZ).as("expl")), "instance_id")
-        }
+        val solve = solver
+        latticeExplanations(spark, internal, d, collect.schema(d), f, solve(_, Nil))
       case None => request(instances, scored, "fan-out", values) { inst =>
         val scored = scoreFn(perturb(inst, idCol, features, catFeatures, cfg, values))
         // distance in the interpretable space: binary rep → d² = Σ(1 - z)
@@ -1212,10 +1212,14 @@ object Lime {
         val nNum = if (cfg.discretize) 0 else features.size
         val zInst = (0 until nNum).map(j =>
           min_by(col("z").getItem(j), col("sample_id")).as(s"__z$j"))
+        val solve = solver
+        val solveUdf = udf((buf: Seq[Double], z: Seq[Double]) => solve(buf.toArray, z))
+          .withName("lime_ridge_solve")
         explanations(weighted.groupBy(col("instance_id"))
           .agg(bufSums.head, bufSums.tail ++ zInst: _*)
-          .select(col("instance_id"), solve(buffer,
-            if (nNum == 0) noZ else array((0 until nNum).map(j => col(s"__z$j")): _*)).as("expl")),
+          .select(col("instance_id"), solveUdf(buffer,
+            if (nNum == 0) typedLit(Seq.empty[Double])
+            else array((0 until nNum).map(j => col(s"__z$j")): _*)).as("expl")),
           "instance_id")
       }
     }
@@ -1289,23 +1293,49 @@ object Lime {
       ExplainedFeature(i + 1, names(j), fit.coefs(j), fit.intercept, fit.r2, localPred)
     }
 
-  /** The tail of every explain path: one row per feature of each row's
-    * ranked `expl`, sorted by (id, rank) in one partition. inline_outer,
-    * not inline: for an inner generator the optimizer infers a non-empty
-    * filter on `expl` and pushes it below the projection that solves,
-    * which then solves twice. The outer form emits a row of nulls for an
-    * empty `expl`, so every solve keeps at least one feature.
+  /** The tail of the fan-out and of text and image requests: one row
+    * per feature of each row's ranked `expl`, sorted by (id, rank) in
+    * one partition. inline_outer, not inline: for an inner generator the
+    * optimizer infers a non-empty filter on `expl` and pushes it below
+    * the projection that solves, which then solves twice. The outer form
+    * emits a row of nulls for an empty `expl`, so every solve keeps at
+    * least one feature.
     */
   private def explanations(fits: DataFrame, id: String): DataFrame =
     fits.select(col(id), inline_outer(col("expl")))
       .coalesce(1)
       .sortWithinPartitions(id, "rank")
 
-  /** `fold`, a bound [[SampleFold]], as the buffer column of rows keyed
-    * by `idHash`. */
-  private def foldSamples(fold: BoundValue, idHash: Column, row: Column): Column =
-    GraftColumnShim.column(FoldSamples(fold, GraftColumnShim.expression(idHash),
-      GraftColumnShim.expression(row)))
+  /** The columns after the id of every tabular result, as the fan-out's
+    * `inline_outer` of its ranked fits gives them: nullable. */
+  private val explainedFields = Seq("rank" -> IntegerType, "feature" -> StringType,
+    "weight" -> DoubleType, "intercept" -> DoubleType, "r2" -> DoubleType,
+    "local_pred" -> DoubleType).map { case (n, t) => StructField(n, t) }
+
+  /** The lattice path's result: each instance of `rows` (the instance
+    * collect's: the features, then at `at` the id, of field `id`, then
+    * its RNG key) folded on `lattice`, and its fit ranked by `solve`, in
+    * parallel over instances on the common fork-join pool. The rows are
+    * the fan-out's, in its order (by id under Catalyst's ascending,
+    * nulls-first ordering, then rank) and in its schema, held in a local
+    * relation: collecting it runs no job. */
+  private def latticeExplanations(spark: SparkSession, rows: Array[InternalRow], at: Int,
+                                  id: StructField, lattice: Lattice,
+                                  solve: Array[Double] => Seq[ExplainedFeature[String]]): DataFrame = {
+    val fits = new Array[Seq[ExplainedFeature[String]]](rows.length)
+    // instances are independent: the order they fold in changes no bit
+    java.util.stream.IntStream.range(0, rows.length).parallel().forEach { i =>
+      fits(i) = solve(lattice.fold(rows(i).getLong(at + 1), rows(i)).toDoubleArray())
+    }
+    val byId = new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(at, id.dataType, nullable = true), Ascending)))
+    val out = rows.indices.sortWith((a, b) => byId.compare(rows(a), rows(b)) < 0).flatMap { i =>
+      val idValue = InternalRow.copyValue(rows(i).get(at, id.dataType))
+      fits(i).map(e => InternalRow(idValue, e.rank, UTF8String.fromString(e.feature), e.weight,
+        e.intercept, e.r2, e.local_pred))
+    }
+    GraftColumnShim.localFrame(spark, StructType(id.copy(name = "instance_id") +: explainedFields), out)
+  }
 
   /** A text or image request over `rows`, one per document or image
     * with its `doc_id`: each row's [[MaskFold]] buffer over the struct
@@ -1320,8 +1350,9 @@ object Lime {
     checkConfig(cfg, Seq("highest_weights"))
     checkInstances(rows.select(col("doc_id").cast("long")).collect(), 0, "doc_id", Nil,
       cfg.discretize)
-    val buffer = foldSamples(BoundValue(new MaskFold(cfg.nSamples, cfg.kernelWidth.getOrElse(25.0)),
-      ObjectType(classOf[MaskFold])), xxhash64(lit(cfg.seed), col("doc_id")), mask)
+    val buffer = GraftColumnShim.column(FoldSamples(
+      BoundValue(new MaskFold(cfg.nSamples, cfg.kernelWidth.getOrElse(25.0)), ObjectType(classOf[MaskFold])),
+      GraftColumnShim.expression(xxhash64(lit(cfg.seed), col("doc_id"))), GraftColumnShim.expression(mask)))
     val solve = udf { (buf: Seq[Double], names: Seq[N]) =>
       val fit = new RidgeAggregator(names.size, cfg.lambda).finish(buf.toArray)
       rank(fit, fit.localPred, names, cfg.kFeatures)
@@ -1333,9 +1364,8 @@ object Lime {
   /** The lattice path's fold: scores every lattice cell and every
     * instance once through `score` (the scorer's (`__cell`, score) rows
     * for the rows it is given, in Catalyst's form, of the schema it is
-    * given), and binds them with
-    * the request's statistics in a [[Lattice]], the BoundValue named
-    * `lattice`. None above [[LatticeGate]], or when a score is null or
+    * given), and binds them with the request's statistics in a
+    * [[Lattice]]. None above [[LatticeGate]], or when a score is null or
     * two ids share an RNG key: the request then keeps the fan-out path,
     * whose sums treat those cases as they always did.
     *
@@ -1344,7 +1374,7 @@ object Lime {
     */
   private def latticeFold(rows: Array[Row], stats: Seq[FeatureStats], catStats: Seq[CatStats],
                           cfg: LimeConfig, width: Double,
-                          score: (StructType, Seq[InternalRow]) => Seq[InternalRow]): Option[BoundValue] = {
+                          score: (StructType, Seq[InternalRow]) => Seq[InternalRow]): Option[Lattice] = {
     val radix = stats.map(_.binMeans.size) ++ catStats.map(_.values.size)
     val nCells = radix.foldLeft(1L)((n, r) => math.min(n * r, LatticeGate + 1L))
     val keys = rows.map(_.getLong(radix.size + 1))
@@ -1386,7 +1416,7 @@ object Lime {
     if (have.cardinality() < y.length) return None
     val order = keys.indices.sortBy(keys(_))
     def arrayData(xs: Seq[Double]): ArrayData = UnsafeArrayData.fromPrimitiveArray(xs.toArray)
-    val bound = new Lattice(cfg.nSamples,
+    Some(new Lattice(cfg.nSamples,
       tags = (stats.map(_.name) ++ catStats.map("cat:" + _.name)).map(UTF8String.fromString).toArray,
       edges = stats.map(st => arrayData(st.edges)).toArray,
       cumFreqs = (stats.map(_.binCumFreqs) ++ catStats.map(_.cumFreqs)).map(arrayData).toArray,
@@ -1396,7 +1426,6 @@ object Lime {
       keys = order.map(keys).toArray,
       instanceScores = order.map(i => y(cells + i)).toArray,
       // the fan-out's sqrt(exp(-d² / w²)) at each integer d² = mismatches
-      weights = Array.tabulate(d + 1)(k => math.sqrt(StrictMath.exp(-k.toDouble / (width * width)))))
-    Some(BoundValue(bound, ObjectType(classOf[Lattice]), "lattice"))
+      weights = Array.tabulate(d + 1)(k => math.sqrt(StrictMath.exp(-k.toDouble / (width * width))))))
   }
 }

@@ -196,8 +196,8 @@ class RidgeAggregator(val d: Int, val lambda: Double,
 
 /** One row's normal equations folded in sample order into
   * [[RidgeAggregator]]'s buffer layout [G: m·m | b: m | Σw, Σw·y, Σw·y·y]
-  * (m = d' + 1, x₀ = 1): every [[SampleFold]]'s inner loop, so it
-  * allocates nothing.
+  * (m = d' + 1, x₀ = 1): the inner loop of [[Lattice.fold]] and
+  * [[MaskFold.fold]], so it allocates nothing.
   */
 private[lime] object NormalEquations {
 

@@ -46,13 +46,14 @@ object GraftColumnShim {
     }
   }
 
-  /** `df.collect()`'s rows, made from the plan's own rows by a converter
-    * of `df`'s schema (in its session's conf, as `collect`'s encoder is)
-    * instead of the deserializer `collect` resolves with the analyzer.
-    * The converter is made per call and keeps no row between rows. */
-  def collectRows(df: DataFrame): Array[Row] = {
+  /** `rows`, collected from `df`'s plan ([[collectInternal]]), as the
+    * Rows of `df.collect()`: made by a converter of `df`'s schema (in its
+    * session's conf, as `collect`'s encoder is) instead of the
+    * deserializer `collect` resolves with the analyzer. The converter is
+    * made per call and keeps no row between rows. */
+  def toRows(df: DataFrame, rows: Array[InternalRow]): Array[Row] = {
     val toRow = withActive(df.sparkSession)(CatalystTypeConverters.createToScalaConverter(df.schema))
-    collectInternal(df).map(toRow(_).asInstanceOf[Row])
+    rows.map(toRow(_).asInstanceOf[Row])
   }
 
   /** An analyzed plan as the optimizer hands it to its first

@@ -357,9 +357,10 @@ class PlanShapeSpec extends SparkSpec {
     LimeOps.withKey(Tables.lineitem(spark, dir).filter(col("l_orderkey") <= 10))
       .select((Seq("instance_id") ++ LimeOps.limeFeatures).map(col): _*)
 
-  private def explainRequest(discretize: Boolean, inst: DataFrame = explainInstances): DataFrame =
+  private def explainRequest(discretize: Boolean, inst: DataFrame = explainInstances,
+                             nBins: Int = 4): DataFrame =
     Lime.explainTabular(inst, "instance_id", LimeOps.limeFeatures,
-      LimeConfig(nSamples = 64, discretize = discretize), Some(mllibScorer))
+      LimeConfig(nSamples = 64, discretize = discretize, nBins = nBins), Some(mllibScorer))
 
   private def initialPlan(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
     case a: AdaptiveSparkPlanExec => a.initialPlan
@@ -412,6 +413,19 @@ class PlanShapeSpec extends SparkSpec {
     assert(ran.size <= 1, s"the repeat request ran jobs $ran")
   }
 
+  test("collecting a discretized explainTabular result runs 0 jobs: local and parquet instances") {
+    // the lattice path folds, solves and ranks at build: its result is
+    // a local relation of the explained rows
+    val local = spark.createDataFrame(explainInstances.collect().toSeq.asJava,
+      explainInstances.schema)
+    for (inst <- Seq(local, explainInstances); request <- Seq("cold", "repeat")) {
+      val df = explainRequest(discretize = true, inst)
+      var rows = 0
+      val ran = jobsOf { rows = df.collect().length }
+      assert(rows > 0 && ran.isEmpty, s"collecting the $request result ran jobs $ran")
+    }
+  }
+
   test("text and image explain requests: no exchange") {
     // each document or image row folds its own samples in-row
     pin("lime_explain_text", 0, 0)
@@ -440,13 +454,17 @@ class PlanShapeSpec extends SparkSpec {
     assert(projects <= 18, s"$projects Projects in the analyzed plan")
   }
 
+  // Below the lattice gate a discretized request solves on the driver,
+  // so no plan holds its solve; at deciles (10^4 cells) it is above the
+  // gate and keeps the fan-out.
   for (discretize <- Seq(true, false)) {
-    val mode = if (discretize) "discretized" else "continuous"
+    val mode = if (discretize) "discretized (deciles)" else "continuous"
 
     test(s"$mode explainTabular evaluates the ridge solve once per instance") {
       // an inner generator's inferred non-empty filter would sit below
       // the projection that solves, and solve a second time
-      val solves = explainRequest(discretize).queryExecution.optimizedPlan.flatMap(
+      val solves = explainRequest(discretize, nBins = if (discretize) 10 else 4)
+        .queryExecution.optimizedPlan.flatMap(
         _.expressions.flatMap(_.collect {
           case u: ScalaUDF if u.udfName.contains("lime_ridge_solve") => u
         }))

@@ -53,6 +53,7 @@ class LimeLatticeSpec extends SparkSpec {
 
   private def bits(rows: Array[Row]): Seq[Seq[Any]] = rows.toSeq.map(_.toSeq.map {
     case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case b: Array[Byte] => b.toSeq
     case x => x
   })
 
@@ -141,6 +142,34 @@ class LimeLatticeSpec extends SparkSpec {
     val cfg = LimeConfig(nSamples = 256, nBins = 10)
     assert(math.pow(cfg.nBins, feats.size) > Lime.LatticeGate)
     assert(samePaths(instances, feats, cfg, None) == 1, "expected the fan-out's ridge shuffle")
+  }
+
+  test("lattice path equals the fan-out in rows and schema for each id type, a null and a NaN id") {
+    val id = col("instance_id")
+    val first = id === instances.agg(min("instance_id")).head().getLong(0)
+    val ids = Seq(id, coalesce(id, lit(-1L)), id.cast("int"), id.cast("string"),
+      (id / 4).cast("decimal(20,2)"), date_add(lit("2020-01-01").cast("date"),
+        (id / 1000000).cast("int") * 1000 + (id % 1000).cast("int")),
+      timestamp_seconds(id), id.cast("string").cast("binary"), array(id, id % 3),
+      when(first, lit(Double.NaN)).otherwise(id.cast("double")),
+      when(first, lit(null).cast("long")).otherwise(id),
+      when(first, lit(null).cast("string")).otherwise(id.cast("string")))
+    val sets = ids.map(instances.withColumn("instance_id", _))
+    assert(sets.map(_.schema("instance_id").nullable).toSet == Set(true, false))
+    // samePaths: equal schemas (names, types, nullability) and rows
+    for (inst <- sets) assert(samePaths(inst, feats, LimeConfig(nSamples = 128, kFeatures = 3), None) == 0,
+      s"${inst.schema("instance_id")}: the lattice path shuffled")
+  }
+
+  test("an empty instance set fails at build on both paths with the same error") {
+    val empty = catInstances.filter(lit(false))
+    for ((numeric, catFeatures) <- Seq((feats.take(2), cats), (Nil, cats))) {
+      val errors = Seq(true, false).map { lattice =>
+        intercept[IllegalArgumentException](Lime.explainTabular(empty, "instance_id", numeric,
+          LimeConfig(nSamples = 16), None, catFeatures, lattice)).getMessage
+      }
+      assert(errors.distinct.size == 1 && errors.head.contains("has no"), s"$errors")
+    }
   }
 
   test("the lattice path scores each lattice cell and each instance exactly once") {

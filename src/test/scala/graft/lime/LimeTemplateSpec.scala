@@ -218,14 +218,14 @@ class LimeTemplateSpec extends SparkSpec {
       (col("id") % 3).cast("double").as("b"))
     assert(Lime.explainTabular(inst, "instance_id", Seq("a", "b"), LimeConfig(nSamples = 64),
       Some(LimeMllib.scoreFn(model, Seq("a", "b")))).collect().nonEmpty)
-    assert(RequestTemplate.cached(s2).size == 3)
+    assert(RequestTemplate.cached(s2).size == 2)
     new java.lang.ref.WeakReference(s2)
   }
 
   test("a dropped session whose templates reach it is freed after MaxTemplates newer shapes") {
     RequestTemplate.clear(spark)
     val session = explainInNewSession()
-    // two shapes (collect, lattice) per config
+    // two shapes (collect, scores) per config: MaxTemplates in all
     val (a, _) = pair(feats)
     (1 to RequestTemplate.MaxTemplates / 2).foreach { n =>
       explainer(feats, LimeConfig(nSamples = 16, seed = n))(local(a)).collect()
@@ -240,7 +240,8 @@ class LimeTemplateSpec extends SparkSpec {
     RequestTemplate.clear(spark)
     val (a, _) = pair(feats)
     val b = a.filter(col("instance_id") % 2 === 0)
-    val explain = explainer(feats, LimeConfig(nSamples = 128), Some(mllibScorer))
+    // the fan-out's result is a template; the lattice path's is not
+    val explain = explainer(feats, LimeConfig(nSamples = 128), Some(mllibScorer), lattice = false)
     val (x, y) = (explain(a), explain(b))
     assert(x.queryExecution.analyzed.output.map(_.exprId) ==
       y.queryExecution.analyzed.output.map(_.exprId))
@@ -253,6 +254,15 @@ class LimeTemplateSpec extends SparkSpec {
     // and on column references, the self-join form
     assert(x.join(y, x("instance_id") === y("instance_id") && x("rank") === y("rank"))
       .count() == yr.length)
+    // two lattice results, each a local relation of its own rows
+    val lattice = explainer(feats, LimeConfig(nSamples = 128), Some(mllibScorer))
+    val (p, q) = (lattice(a), lattice(b))
+    val (pr, qr) = (p.collect(), q.collect())
+    assert(bits(p.union(q).collect()) == bits(pr ++ qr))
+    assert(p.join(q.select(col("instance_id"), col("rank"), col("weight").as("w_b")),
+      Seq("instance_id", "rank")).collect().length == qr.length && qr.length > 0)
+    assert(p.join(q, p("instance_id") === q("instance_id") && p("rank") === q("rank"))
+      .count() == qr.length)
   }
 
   test("4 concurrent requests give the cold answer") {
@@ -318,7 +328,7 @@ class LimeTemplateSpec extends SparkSpec {
          col("l_extendedprice").cast("decimal(12,2)"), col("l_shipdate"),
          col("l_shipdate").cast("timestamp"), col("l_linestatus").cast("binary"), array(col("l_orderkey")))) {
       val df = base.select(feats.map(col(_).cast("double")) :+ id.as("id") :+ xxhash64(lit(7), id): _*)
-      val (got, want) = (GraftColumnShim.collectRows(df).toSeq, df.collect().toSeq)
+      val (got, want) = (GraftColumnShim.toRows(df, GraftColumnShim.collectInternal(df)).toSeq, df.collect().toSeq)
       assert(got.nonEmpty && got == want, s"${df.schema("id").dataType}: the rows differ")
     }
   }
@@ -357,12 +367,12 @@ class LimeTemplateSpec extends SparkSpec {
     Lime.explainTabular(local(a), "instance_id", feats.take(2), LimeConfig(nSamples = 64),
       None, cats).collect()
     val parts = RequestTemplate.cached(spark)
-    // the discretized requests' collect, lattice and two scores; the
-    // continuous one's collect and fan-out
-    assert(parts.size == 6, s"${parts.size} templates")
+    // the discretized requests' collect and two scores; the continuous
+    // one's collect and fan-out
+    assert(parts.size == 5, s"${parts.size} templates")
     val plans = parts.collect { case p: RequestTemplate.Plan => p.held }
     val evaluators = parts.collect { case e: RequestTemplate.Scores => e.held }
-    assert(plans.size == 4 && evaluators.size == 2,
+    assert(plans.size == 3 && evaluators.size == 2,
       s"${plans.size} plans and ${evaluators.size} evaluators")
     // an evaluator holds expressions only: no plan, so no cell row; no
     // named value (each reads its request's by name, during the
@@ -449,7 +459,7 @@ class LimeTemplateSpec extends SparkSpec {
       assert(explain(a).collect().nonEmpty)
       assert(!RequestTemplate.cached(spark).exists(_.isInstanceOf[RequestTemplate.Scores]),
         "the scorer's plan got an evaluator")
-      // the scores are built per request: the collect and lattice are held
+      // the scores are built per request: the collect is held
       assert(RequestTemplate.shapes(spark) - RequestTemplate.cached(spark).size == 1)
       val bound = explain(b).collect()
       RequestTemplate.clear(spark)
