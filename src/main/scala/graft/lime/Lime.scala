@@ -1327,10 +1327,12 @@ object Lime {
     java.util.stream.IntStream.range(0, rows.length).parallel().forEach { i =>
       fits(i) = solve(lattice.fold(rows(i).getLong(at + 1), rows(i)).toDoubleArray())
     }
-    val byId = new InterpretedOrdering(Seq(
-      SortOrder(BoundReference(at, id.dataType, nullable = true), Ascending)))
+    val idRef = BoundReference(at, id.dataType, nullable = true)
+    val byId = new InterpretedOrdering(Seq(SortOrder(idRef, Ascending)))
+    // the fan-out's grouping writes -0.0 as 0.0 and every NaN as one NaN
+    val idOut = GraftColumnShim.normalizeFloats(idRef)
     val out = rows.indices.sortWith((a, b) => byId.compare(rows(a), rows(b)) < 0).flatMap { i =>
-      val idValue = InternalRow.copyValue(rows(i).get(at, id.dataType))
+      val idValue = InternalRow.copyValue(idOut.eval(rows(i)))
       fits(i).map(e => InternalRow(idValue, e.rank, UTF8String.fromString(e.feature), e.weight,
         e.intercept, e.r2, e.local_pred))
     }

@@ -2,7 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.optimizer.RewriteWithExpression
+import org.apache.spark.sql.catalyst.optimizer.{NormalizeFloatingNumbers, RewriteWithExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -35,6 +35,10 @@ object GraftColumnShim {
   def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** `e` with its float and double values (nested ones too) written as
+    * grouping writes them: -0.0 as 0.0 and every NaN as one NaN. */
+  def normalizeFloats(e: Expression): Expression = NormalizeFloatingNumbers.normalize(e)
 
   /** `df.collect()` without its Row deserializer: the same action (one
     * SQL execution, metrics reset), returning the plan's own rows. */

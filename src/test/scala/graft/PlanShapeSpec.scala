@@ -418,7 +418,7 @@ class PlanShapeSpec extends SparkSpec {
     // a local relation of the explained rows
     val local = spark.createDataFrame(explainInstances.collect().toSeq.asJava,
       explainInstances.schema)
-    for (inst <- Seq(local, explainInstances); request <- Seq("cold", "repeat")) {
+    for (inst <- Seq(local, explainInstances); request <- Seq("first", "repeat")) {
       val df = explainRequest(discretize = true, inst)
       var rows = 0
       val ran = jobsOf { rows = df.collect().length }

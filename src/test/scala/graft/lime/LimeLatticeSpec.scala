@@ -144,7 +144,7 @@ class LimeLatticeSpec extends SparkSpec {
     assert(samePaths(instances, feats, cfg, None) == 1, "expected the fan-out's ridge shuffle")
   }
 
-  test("lattice path equals the fan-out in rows and schema for each id type, a null and a NaN id") {
+  test("lattice path equals the fan-out in rows and schema for each id type, a null, a NaN and a -0.0 id") {
     val id = col("instance_id")
     val first = id === instances.agg(min("instance_id")).head().getLong(0)
     val ids = Seq(id, coalesce(id, lit(-1L)), id.cast("int"), id.cast("string"),
@@ -152,6 +152,9 @@ class LimeLatticeSpec extends SparkSpec {
         (id / 1000000).cast("int") * 1000 + (id % 1000).cast("int")),
       timestamp_seconds(id), id.cast("string").cast("binary"), array(id, id % 3),
       when(first, lit(Double.NaN)).otherwise(id.cast("double")),
+      when(first, lit(-0.0)).otherwise(id.cast("double")),
+      when(first, lit(java.lang.Double.longBitsToDouble(0x7ff8000000000001L))).otherwise(id.cast("double")),
+      when(first, array(lit(-0.0))).otherwise(array(id.cast("double"))),
       when(first, lit(null).cast("long")).otherwise(id),
       when(first, lit(null).cast("string")).otherwise(id.cast("string")))
     val sets = ids.map(instances.withColumn("instance_id", _))
