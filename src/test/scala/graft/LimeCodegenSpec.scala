@@ -60,8 +60,9 @@ class LimeCodegenSpec extends SparkSpec {
 
   for (discretize <- Seq(true, false)) {
     // below the lattice gate a discretized result is a local relation,
-    // with no generated code; at deciles (10^4 cells) it keeps the fan-out
-    val mode = if (discretize) "discretized (deciles)" else "continuous"
+    // with no generated code; the discretized case runs at deciles
+    // (10^4 cells), above the gate, where it keeps the fan-out
+    val mode = if (discretize) "discretized" else "continuous"
 
     test(s"$mode explainTabular: two requests generate identical source") {
       val cfg = LimeConfig(nSamples = 64, discretize = discretize, nBins = if (discretize) 10 else 4)

@@ -455,10 +455,10 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   // Below the lattice gate a discretized request solves on the driver,
-  // so no plan holds its solve; at deciles (10^4 cells) it is above the
-  // gate and keeps the fan-out.
+  // so no plan holds its solve; the discretized case runs at deciles
+  // (10^4 cells), above the gate, where it keeps the fan-out.
   for (discretize <- Seq(true, false)) {
-    val mode = if (discretize) "discretized (deciles)" else "continuous"
+    val mode = if (discretize) "discretized" else "continuous"
 
     test(s"$mode explainTabular evaluates the ridge solve once per instance") {
       // an inner generator's inferred non-empty filter would sit below
